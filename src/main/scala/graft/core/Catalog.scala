@@ -164,7 +164,7 @@ object Catalog {
         ttl = Option(ttl).map(_.trim).filter(_.nonEmpty),
         declaredEngine = Option(engineSpec).map(_.trim).filter(e =>
           e.nonEmpty && normalizeEngine(e) != e).getOrElse(""))
-      materialize(spark, t).foreach(_.createOrReplaceTempView(name))
+      register(spark, t)
       attached(name) = t
       t
     case _ =>
@@ -526,7 +526,8 @@ object Catalog {
     * changed) endpoint — RENAME TABLE moves owned storage and the old
     * DataFrame still lists the old files. */
   def register(spark: SparkSession, t: AttachedTable): Unit =
-    materialize(spark, t).foreach(_.createOrReplaceTempView(t.name))
+    materialize(spark, t).foreach(
+      org.apache.spark.sql.graft.FunctionShim.replaceTempView(spark, t.name, _))
 
   /** Re-materialize every catalog-recorded table as a view in THIS
     * session. The service executes each HTTP request in a fresh
@@ -538,29 +539,29 @@ object Catalog {
     * unreadable is skipped — its own next use fails loudly, unrelated
     * queries are unaffected. */
   def ensureSessionViews(spark: SparkSession, mentionedIn: String): Unit = {
-    // only entries the request TEXT mentions (macro-substituted by the
-    // caller): re-materializing every absent entry would pay a remote
-    // read per attached table per request; a name substring
-    // false-positive just registers an unused view
-    val text = mentionedIn.toLowerCase
-    attached.values.foreach { t =>
-      if (text.contains(t.name.toLowerCase) && !spark.catalog.tableExists(t.name)) {
-        try materialize(spark, t).foreach(_.createOrReplaceTempView(t.name))
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
-    }
+    // only entries the request TEXT names (macro-substituted by the
+    // caller): re-materializing every absent entry would pay a read per
+    // attached table per request
+    def named(n: String): Boolean = mentions(mentionedIn, n)
+    // the session catalog directly: `spark.catalog.tableExists` runs the
+    // analyzer and throws inside for an absent name (~1 ms each)
+    val catalog = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.catalog
+    def exists(n: String): Boolean =
+      if (n.contains('.')) spark.catalog.tableExists(n) // qualified: parse it
+      else catalog.getTempView(n).isDefined ||
+        catalog.tableExists(org.apache.spark.sql.catalyst.TableIdentifier(n))
+    def replay(t: AttachedTable): Unit =
+      try register(spark, t) catch { case scala.util.control.NonFatal(_) => () }
+    attached.values.foreach { t => if (named(t.name) && !exists(t.name)) replay(t) }
     // a mentioned DICTIONARY pulls its source table in — dictGet
     // rewrites to a subquery over the source, which the request text
     // never names
     Dictionaries.all.foreach { d =>
-      if (text.contains(d.name.toLowerCase) &&
-          !spark.catalog.tableExists(d.sourceTable))
+      if (named(d.name) && !exists(d.sourceTable))
         attached.get(d.sourceTable)
           .orElse(attached.values.find(_.name.equalsIgnoreCase(d.sourceTable)))
-          .foreach { t =>
-            try materialize(spark, t).foreach(_.createOrReplaceTempView(t.name))
-            catch { case scala.util.control.NonFatal(_) => () }
-          }
+          .foreach(replay)
     }
     // materialized views outlive requests like tables do: a mentioned
     // view first materializes its TARGET (a catalog table the request
@@ -568,25 +569,25 @@ object Catalog {
     // insert into a view's SOURCE likewise pulls the target in so the
     // trigger can append (fireMatViews runs INSERT INTO <target>)
     MatViews.all.foreach { v =>
-      val mentioned = text.contains(v.name.toLowerCase) ||
-        text.contains(v.source.toLowerCase)
-      if (mentioned) {
-        if (!spark.catalog.tableExists(v.target))
+      if (named(v.name) || named(v.source)) {
+        if (!exists(v.target))
           attached.get(v.target)
             .orElse(attached.values.find(_.name.equalsIgnoreCase(v.target)))
-            .foreach { t =>
-              try materialize(spark, t).foreach(_.createOrReplaceTempView(t.name))
-              catch { case scala.util.control.NonFatal(_) => () }
-            }
-        if (!spark.catalog.tableExists(v.name)) {
-          try {
-            if (spark.catalog.tableExists(v.target))
-              spark.table(v.target).createOrReplaceTempView(v.name)
-          } catch { case scala.util.control.NonFatal(_) => () }
-        }
+            .foreach(replay)
+        if (!exists(v.name) && exists(v.target))
+          try spark.table(v.target).createOrReplaceTempView(v.name)
+          catch { case scala.util.control.NonFatal(_) => () }
       }
     }
   }
+
+  /** True when `text` names `name` as a WHOLE identifier — bare,
+    * backtick- or double-quoted, or `db.`-qualified, any case. A
+    * substring match would pull `lineitem` in for `lineitem_mt` and
+    * `part` for `l_partkey`, paying a resolution per false hit. */
+  def mentions(text: String, name: String): Boolean =
+    ("(?i)(?<!\\w)" + java.util.regex.Pattern.quote(name) + "(?!\\w)").r
+      .findFirstIn(text).isDefined
 
   /** Build the DataFrame a catalog entry reads — the ONE resolution
     * used both at ATTACH time and by [[ensureSessionViews]] replay
@@ -626,11 +627,8 @@ object Catalog {
         else Some(spark.createDataFrame(
           spark.sparkContext.emptyRDD[Row], ChSchemaParser.parse(t.schemaDdl)))
       case _ =>
-        t.endpoint.map { ep =>
-          if (t.schemaDdl.nonEmpty)
-            spark.read.schema(ChSchemaParser.parse(t.schemaDdl)).parquet(ep)
-          else spark.read.parquet(ep)
-        }
+        t.endpoint.map(Tables.readParquet(spark, _,
+          Option(t.schemaDdl).filter(_.nonEmpty).map(ChSchemaParser.parse)))
     }
   }
 

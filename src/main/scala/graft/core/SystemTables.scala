@@ -66,15 +66,17 @@ object SystemTables {
 
   private val log = new java.util.concurrent.ConcurrentLinkedQueue[QueryLogEntry]()
   private val starts = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
-  @volatile private var installed: Set[Int] = Set.empty
+  @volatile private var installedOn: org.apache.spark.SparkContext = null
 
-  /** Install the SQL-execution listener once per session. */
+  /** Install the SQL-execution listener once per SparkContext — the
+    * listener bus is shared by every session, so a listener per session
+    * would log each execution once per session that touched `system.*`. */
   def install(spark: SparkSession): Unit = {
-    val id = System.identityHashCode(spark)
-    if (installed.contains(id)) return
+    val sc = spark.sparkContext
+    if (installedOn eq sc) return
     synchronized {
-      if (installed.contains(id)) return
-      spark.sparkContext.addSparkListener(new SparkListener {
+      if (installedOn eq sc) return
+      sc.addSparkListener(new SparkListener {
         override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
           case s: SparkListenerSQLExecutionStart =>
             starts.put(s.executionId, s.time)
@@ -85,7 +87,7 @@ object SystemTables {
           case _ =>
         }
       })
-      installed += id
+      installedOn = sc
     }
   }
 

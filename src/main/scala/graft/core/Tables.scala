@@ -1,6 +1,12 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QualifiedTableName
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.graft.FunctionShim
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the TESTDATA star schema (see /root/repo/TESTDATA.md).
   *
@@ -18,47 +24,38 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Schema per parquet path, keyed by a content signature (mtimes +
-    * lengths from one readdir): `spark.read.parquet` re-INFERS the
-    * schema on every call — a footer read plus FileIndex construction
-    * measured at ~70 ms of the ~157 ms per-query floor on the sf10
-    * fixture (r15 `FloorProbe`; DuckDB answers the whole query in
-    * 1–13 ms). A metastore amortizes exactly this cost once per table;
-    * this cache is that, process-wide — StructType is a pure value,
-    * safe across sessions. A changed file invalidates by signature. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, org.apache.spark.sql.types.StructType)]()
+  /** One process-wide resolution per local parquet endpoint: the
+    * schema and the file listing, keyed by path + the schema-shaping
+    * confs + any declared schema, validated by a content signature.
+    * `spark.read.parquet` re-infers the schema (a footer read) and
+    * re-lists the files on every call — ~25 ms per table, paid by every
+    * door session's view replay. A metastore resolves a table once;
+    * this is that. Entries hold only a StructType and Hadoop
+    * FileStatuses, never a session. */
+  private final case class Resolved(
+      sig: String, dataSchema: StructType, files: Array[FileStatus])
+  private val resolved = new java.util.concurrent.ConcurrentHashMap[String, Resolved]()
+  private val ResolvedMax = 256
 
-  /** Recursive (name, length, mtime) digest — partitioned datasets
-    * change in NESTED subdirs the top-level listing can't see, and a
-    * summed `length + mtime` is collision-prone (review r15); an MD5
-    * over the full entry list is order-stable and cheap (readdirs on
-    * the driver; non-local paths never reach this cache).
-    *
-    * Known caveats (advisor r16), both bounded and documented rather
-    * than plugged:
-    *   - mtime granularity: a file rewritten with IDENTICAL length
-    *     inside the same filesystem mtime tick yields the same
-    *     signature and serves the stale cached schema — the schema,
-    *     not data (data is re-read every query), and only until the
-    *     next real mtime change;
-    *   - walk cost: on a deep partitioned tree the recursive readdir
-    *     can exceed the ~70 ms of inference it saves, so the signature
-    *     itself is memoized per path for [[SigTtlMs]] — a hot query
-    *     loop pays one walk per TTL window, and a dataset swapped
-    *     within the window is picked up at most [[SigTtlMs]] late
-    *     (schema only, and the projection-style fingerprint gates
-    *     stay exact because they never read this cache). */
-  private val SigTtlMs = 2000L
-  private val sigMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
+  /** Confs parquet schema inference reads — a session that sets one
+    * must never see a schema inferred under another value. */
+  private val InferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.caseSensitive")
 
+  /** Recursive (name, length, mtime) digest over the endpoint — re-walked
+    * on EVERY read (µs for a flat table), so a file added, removed or
+    * rewritten under the path is seen by the very next read. Caveat: a
+    * rewrite with identical length inside one mtime tick keeps the old
+    * signature. Symlinked directories are followed once (cycle guard by
+    * canonical path). */
   private def contentSig(f: java.io.File): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    // cycle guard by CANONICAL path (review r15, twice): skipping
-    // symlinks outright left the cache blind to changes behind a
-    // `current -> dataset` pointer; a visited set follows them safely
     val seen = scala.collection.mutable.Set.empty[String]
     def walk(x: java.io.File): Unit = {
       md.update(
@@ -76,65 +73,58 @@ object Tables {
     md.digest().map("%02x".format(_)).mkString
   }
 
-  /** Analyzed relation per (session, path, signature) — the second
-    * half of the metastore this cache stands in for (r18; VERDICT r17
-    * next #1). `spark.read.schema(s).parquet(path)` still pays a fresh
-    * `InMemoryFileIndex` DIRECTORY LISTING plus relation resolution on
-    * every call (~15 ms/query on the sf10 fixture, measured by
-    * ConstProbe after JIT warmth — the largest single slice of the
-    * q1/q3 per-query constant). A real metastore lists once and serves
-    * the cached file index until the table version changes; this map
-    * is that, keyed by the SAME content signature as the schema cache,
-    * so a changed file rebuilds the relation. The entry pins the
-    * session (the relation's FileIndex holds it), hence the session
-    * UUID in the key and the size bound: short-lived per-request door
-    * sessions at most add entries until the bound clears them.
-    *
-    * Staleness window: within [[SigTtlMs]] a rewritten file can serve
-    * a stale FILE LISTING (not just a stale schema) — acceptable for
-    * this choke point's callers, which read the immutable testdata
-    * star schema; the SQL write paths (CTAS/INSERT/mutations) never
-    * route through here. */
-  private val relationCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)]()
-  private val RelationCacheMax = 256
+  /** Serves a resolved listing to one session's `InMemoryFileIndex`
+    * (no re-listing); on a miss it records what the index listed. */
+  private final class Listing(root: Path, @volatile var files: Array[FileStatus])
+      extends FileStatusCache {
+    override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+      if (p == root) Option(files) else None
+    override def putLeafFiles(p: Path, fs: Array[FileStatus]): Unit =
+      if (p == root) files = fs
+    override def invalidateAll(): Unit = files = null
+  }
 
-  /** `spark.read.parquet` with the inference AND the per-query file
-    * listing skipped when the cached content signature still matches.
-    * Non-local paths fall back to plain inference. */
-  def readParquetCached(spark: SparkSession, path: String): DataFrame = {
+  /** `spark.read.parquet(path)` (or `.schema(s)` first) through the
+    * resolution cache. Each session builds its OWN relation over the
+    * shared schema and listing — its SQLConf shapes the scan — and keeps
+    * it in Spark's per-session table-relation cache, so repeat reads in
+    * one session return one relation instance (the identity
+    * [[graft.plans.ScanRelations]] keys planned scans by) and the
+    * relation dies with its session. Non-local and glob paths read
+    * plainly. */
+  def readParquet(spark: SparkSession, path: String,
+      schema: Option[StructType] = None): DataFrame = {
+    def plain = schema.fold(spark.read)(spark.read.schema).parquet(path)
     val f = new java.io.File(path.stripPrefix("file:").stripPrefix("//"))
-    if (!f.exists()) spark.read.parquet(path)
-    else {
-      val now = System.currentTimeMillis()
-      val memo = sigMemo.get(path)
-      val sig =
-        if (memo != null && now - memo._1 < SigTtlMs) memo._2
-        else {
-          val s = contentSig(f)
-          sigMemo.put(path, (now, s))
-          s
-        }
-      // per-SESSION key (the relation pins its session)
-      val relKey =
-        org.apache.spark.sql.graft.FunctionShim.sessionUUID(spark) + "|" + path
-      val rHit = relationCache.get(relKey)
-      if (rHit != null && rHit._1 == sig)
-        return org.apache.spark.sql.graft.FunctionShim.ofRows(spark, rHit._2)
-      val hit = schemaCache.get(path)
-      val schema =
-        if (hit != null && hit._1 == sig) hit._2
-        else {
-          val s = spark.read.parquet(path).schema
-          schemaCache.put(path, (sig, s))
-          s
-        }
-      val df = spark.read.schema(schema).parquet(path)
-      if (relationCache.size >= RelationCacheMax) relationCache.clear()
-      relationCache.put(relKey, (sig, df.queryExecution.analyzed))
-      df
+    if (!f.exists() || path.exists("*?[{".contains(_))) return plain
+    val sig = contentSig(f)
+    val key = (path +: schema.fold("")(_.json) +:
+      InferenceConfs.map(spark.conf.getOption(_).getOrElse(""))).mkString("|")
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val relKey = QualifiedTableName("graft", "parquet", s"$key|$sig")
+    val catalog = session.sessionState.catalog
+    val cached = catalog.getCachedTable(relKey)
+    if (cached != null) return FunctionShim.ofRows(spark, cached)
+    val hp = new Path(path)
+    val root = hp.getFileSystem(session.sessionState.newHadoopConf()).makeQualified(hp)
+    val hit = Option(resolved.get(key)).filter(_.sig == sig)
+    val listing = new Listing(root, hit.map(_.files).orNull)
+    val index = new InMemoryFileIndex(spark, Seq(root), Map.empty, schema, listing)
+    val dataSchema = hit.map(_.dataSchema).orElse {
+      val resolver = session.sessionState.conf.resolver
+      schema.map(s => StructType(s.filterNot(c =>
+          index.partitionSchema.exists(p => resolver(p.name, c.name)))))
+        .orElse(new ParquetFileFormat().inferSchema(spark, Map.empty, index.allFiles()))
+        .map(FunctionShim.asNullable)
+    }.getOrElse(return plain) // nothing to infer from: Spark's own error
+    if (hit.isEmpty && listing.files != null) {
+      if (resolved.size >= ResolvedMax) resolved.clear()
+      resolved.put(key, Resolved(sig, dataSchema, listing.files))
     }
+    val plan = LogicalRelation(HadoopFsRelation(index, index.partitionSchema,
+      dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
+    catalog.cacheTable(relKey, plan)
+    FunctionShim.ofRows(spark, plan)
   }
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -148,7 +138,7 @@ object Tables {
     // division would lose precision at 1.7e18); NTZ→LTZ under the UTC
     // session zone re-tags the same wall-clock instant.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = readParquetCached(spark, s"$dir/$name.parquet")
+    val df = readParquet(spark, s"$dir/$name.parquet")
     df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(org.apache.spark.sql.types.LongType) =>
         df.withColumn("ts", org.apache.spark.sql.functions.expr("timestamp_micros(ts DIV 1000)"))
@@ -166,8 +156,9 @@ object Tables {
 
   /** Record the testdata tables in the CATALOG, not just this session's
     * temp views, so the service doors' per-request isolated sessions
-    * resolve them — `ensureSessionViews` re-materializes catalog
-    * entries per request, while plain temp views never cross sessions
+    * resolve them — `ensureSessionViews` replays catalog entries per
+    * request over the [[readParquet]] resolution this probe warms, while
+    * plain temp views never cross sessions
     * (r13 finding: `Serve <dir>` answered /hc but a fresh request
     * couldn't see lineitem). `events` registers only when its physical
     * timestamp type is plain-readable — the nanos-normalizing [[load]]
@@ -177,7 +168,7 @@ object Tables {
     names.foreach { n =>
       val ep = s"$dir/$n.parquet"
       val readable =
-        try { spark.read.parquet(ep).schema; true }
+        try { readParquet(spark, ep).schema; true }
         catch { case scala.util.control.NonFatal(_) => false }
       if (readable)
         Catalog.update(Catalog.AttachedTable(n, "", Nil, Some(ep)))

@@ -19,8 +19,6 @@ import graft.functions.CityHash64Expr
   */
 object ChFunctions {
 
-  @volatile private var registered: Set[Int] = Set.empty
-
   /** hostName()'s answer, resolved once — getLocalHost can take ms
     * per call and builders run during every query's analysis. */
   private lazy val cachedHostName: String =
@@ -30,13 +28,14 @@ object ChFunctions {
   /** Idempotent per-session registration (runtime path — works on any
     * already-built session, e.g. the driver harness's own). The
     * config-time path is [[GraftExtensions]], which injects the same
-    * [[builders]] through `SparkSessionExtensions`. */
-  def register(spark: SparkSession): Unit = {
-    val id = System.identityHashCode(spark)
-    if (registered.contains(id)) return
+    * [[builders]] through `SparkSessionExtensions`. Idempotence is read
+    * off the session's own registry — no process-wide set of session
+    * ids to grow per door session or to collide. */
+  def register(spark: SparkSession): Unit =
     synchronized {
-      if (registered.contains(id)) return
-      builders.foreach { case (name, b) => FunctionShim.register(spark, name, b) }
+      builders.foreach { case (name, b) =>
+        if (!FunctionShim.sessionHas(spark, name)) FunctionShim.register(spark, name, b)
+      }
       // the optimizer surface rides the same registration choke point:
       // any session that can resolve the dialect also answers global
       // count/min/max from parquet footers (graft.plans.FooterAggregates)
@@ -47,9 +46,7 @@ object ChFunctions {
       // vectorized sum(pmod(cityHash64(*), m)) fold (r18)
       FunctionShim.addOptimization(spark, graft.plans.HashScanRewrite(spark))
       FunctionShim.addStrategy(spark, graft.plans.DriverMergeStrategy)
-      registered += id
     }
-  }
 
   /** Every ClickHouse-named function as (name, native-expression
     * builder) — the single source both registration paths share. */

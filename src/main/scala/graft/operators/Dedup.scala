@@ -164,6 +164,8 @@ object Dedup {
       .select(col("_id"), col("_st").getField("sig").as("_sig"))
   }
 
+  private val stringFormWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
+
   /** Banded-LSH candidate pairs: split the signature into `bands` bands,
     * hash each band, shuffle once on (band index, band hash), and emit
     * intra-bucket pairs. This is the scale path: the only join key is the
@@ -184,9 +186,10 @@ object Dedup {
     }
     // advisor r19: the two forms produce DIFFERENT band-hash values
     // (within-run joins are consistent either way) — log the dispatch
-    // so a caller mixing persisted old-form hashes with fresh ones can
-    // see which lane computed theirs
-    if (numHashes <= 0)
+    // (once per process: every string-form call takes this path) so a
+    // caller mixing persisted old-form hashes with fresh ones can see
+    // which lane computed theirs
+    if (numHashes <= 0 && stringFormWarned.compareAndSet(false, true))
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"lshCandidates: signature column '$signatureCol' carries no " +
           s"$MetaNumHashes metadata — using the dynamic (string-form) " +

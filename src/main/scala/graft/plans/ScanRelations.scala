@@ -143,8 +143,8 @@ private[plans] object ScanRelations {
     * measured ~30 ms of BitmapDistinctRewrite's time per query
     * (PlanPhases probe), ALL of it identical work on a repeated shape.
     *
-    * Keyed by the `HadoopFsRelation` instance's identity: Tables'
-    * relation cache serves ONE instance per (session, path, content
+    * Keyed by the `HadoopFsRelation` instance's identity:
+    * `Tables.readParquet` serves ONE instance per (session, path, content
     * signature), so a data change produces a NEW instance and this
     * cache misses — the identity IS the invalidation. Plans built
     * outside that cache (fresh `spark.read` per query) get fresh

@@ -144,9 +144,8 @@ class QueryService(spark: SparkSession) {
     var progress = true
     while (progress) {
       progress = false
-      val lower = need.toLowerCase
       graft.core.MatViews.allPlain.foreach { case (n, select) =>
-        if (lower.contains(n.toLowerCase) && !spark.catalog.tableExists(n)) {
+        if (graft.core.Catalog.mentions(need, n) && !spark.catalog.tableExists(n)) {
           graft.core.Catalog.ensureSessionViews(spark, select)
           try {
             ChSql.sql(spark, select, req.macros).createOrReplaceTempView(n)

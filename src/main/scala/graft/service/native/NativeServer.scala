@@ -421,25 +421,33 @@ class NativeServer(spark: SparkSession, port: Int = 0,
     worker.setDaemon(true)
     worker.start()
     try {
-      while (worker.isAlive) {
+      // the socket is read only until the worker's EndOfStream is out:
+      // the client may pipeline its NEXT Query right behind it while the
+      // worker still runs its cleanup, and that packet belongs to the
+      // connection loop. Checked under the write lock EndOfStream is
+      // sent under, so no read can slip in after it.
+      def nextPacket(): Option[Long] = outLock.synchronized {
+        if (!sentEos && in.available() > 0) Some(NativeWire.readVarUInt(in))
+        else None
+      }
+      while (worker.isAlive && !sentEos) {
         worker.join(50)
-        if (worker.isAlive && in.available() > 0) {
-          NativeWire.readVarUInt(in) match {
-            case ClientCancel if !cancelled =>
-              cancelled = true
-              // future jobs of this per-query group die too (a
-              // driver-merge fallback must not outlive the Cancel)
-              session.sparkContext.cancelJobGroupAndFutureJobs(group)
-            case ClientCancel => ()
-            case ClientPing =>
-              outLock.synchronized {
-                NativeWire.writeVarUInt(out, ServerPong); out.flush()
-              }
-            case other => throw new IllegalArgumentException(
-              s"native protocol: unexpected packet $other during query")
-          }
+        if (worker.isAlive) nextPacket().foreach {
+          case ClientCancel if !cancelled =>
+            cancelled = true
+            // future jobs of this per-query group die too (a
+            // driver-merge fallback must not outlive the Cancel)
+            session.sparkContext.cancelJobGroupAndFutureJobs(group)
+          case ClientCancel => ()
+          case ClientPing =>
+            outLock.synchronized {
+              NativeWire.writeVarUInt(out, ServerPong); out.flush()
+            }
+          case other => throw new IllegalArgumentException(
+            s"native protocol: unexpected packet $other during query")
         }
       }
+      worker.join()
     } catch {
       // the watch loop dying (protocol error, broken socket) must not
       // leak a running query — nobody is left to read its result

@@ -158,6 +158,27 @@ object FunctionShim {
       .collect()
   }
 
+  /** `StructType.asNullable` (private[spark]) — every file-source
+    * relation's data schema is nullable, whatever the footers declare. */
+  def asNullable(s: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = s.asNullable
+
+  /** `df.createOrReplaceTempView(name)` without eagerly executing a
+    * `CreateViewCommand` (a QueryExecution plus a SQL execution per
+    * view, ~3 ms): the same temporary-view relation that command builds
+    * for a DataFrame, put straight into the session catalog. */
+  def replaceTempView(spark: SparkSession, name: String,
+      df: org.apache.spark.sql.DataFrame): Unit = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val catalog = session.sessionState.catalog
+    val plan = df.queryExecution.analyzed
+    catalog.createTempView(name,
+      org.apache.spark.sql.execution.command.ViewHelper.createTemporaryViewRelation(
+        org.apache.spark.sql.catalyst.TableIdentifier(name), session,
+        replace = true, catalog.getRawTempView, None, plan, plan, Nil),
+      overrideIfExists = true)
+  }
+
   /** Wrap an analyzed/analyzable logical plan as a `DataFrame`
     * (`Dataset.ofRows` is `private[sql]`). The dictionary-code
     * aggregation rewrite ([[graft.plans.DictAggRewrite]]) uses this to

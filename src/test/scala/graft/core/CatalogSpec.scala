@@ -101,4 +101,35 @@ class CatalogSpec extends AnyFunSuite {
       Catalog.attach(spark, "ATTACH TABLE nonsense")
     }
   }
+
+  test("view replay matches WHOLE identifiers: bare, quoted and db.-qualified names") {
+    Seq("lineitem", "`lineitem`", "\"lineitem\"", "default.lineitem",
+        "`default`.`lineitem`", "LINEITEM", "(lineitem)").foreach { spelled =>
+      assert(Catalog.mentions(s"SELECT count() FROM $spelled WHERE 1", "lineitem"), spelled)
+    }
+    assert(Catalog.mentions("lineitem", "lineitem"))
+    // a longer identifier that merely CONTAINS the name does not name it
+    assert(!Catalog.mentions("SELECT count() FROM lineitem_mt", "lineitem"))
+    assert(!Catalog.mentions("SELECT sum(l_partkey) FROM li", "part"))
+    assert(!Catalog.mentions("SELECT 1 FROM mylineitem", "lineitem"))
+  }
+
+  test("view replay registers only the tables a request names") {
+    def written(rows: Long): String = {
+      val p = java.nio.file.Files.createTempDirectory("graft_mv").toString + "/t.parquet"
+      spark.range(rows).write.parquet(p)
+      p
+    }
+    Catalog.update(Catalog.AttachedTable("part_mv", "", Nil, Some(written(200))))
+    Catalog.update(Catalog.AttachedTable("nation_mv", "", Nil, Some(written(25))))
+    try {
+      val s = spark.newSession()
+      Catalog.ensureSessionViews(s, "SELECT count() FROM `nation_mv` WHERE part_mv_x = 1")
+      assert(s.catalog.tableExists("nation_mv"))
+      assert(!s.catalog.tableExists("part_mv"))
+      Catalog.ensureSessionViews(s, "SELECT count() FROM default.part_mv")
+      assert(s.catalog.tableExists("part_mv"))
+      assert(s.table("part_mv").count() == 200L)
+    } finally { Catalog.detach("part_mv"); Catalog.detach("nation_mv") }
+  }
 }

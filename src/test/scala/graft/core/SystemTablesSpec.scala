@@ -115,4 +115,16 @@ class SystemTablesSpec extends AnyFunSuite {
     assert(ChSql.sql(spark,
       "SELECT name FROM system.tables WHERE name = 'sys_tbl_t'").collect().isEmpty)
   }
+
+  test("query log: fresh sessions touching system.* do not multiply entries") {
+    (1 to 4).foreach { _ =>
+      ChSql.sql(spark.newSession(), "SELECT dummy FROM system.one").collect()
+    }
+    spark.sql("SELECT 'logged once'").collect()
+    Thread.sleep(500) // listener events are async
+    val counts = SystemTables.queryLog(spark).groupBy("execution_id").count()
+      .collect().map(_.getLong(1))
+    assert(counts.nonEmpty && counts.forall(_ == 1L),
+      s"an execution was logged ${counts.max} times")
+  }
 }

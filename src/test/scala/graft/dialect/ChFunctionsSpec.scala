@@ -1798,4 +1798,22 @@ class ChFunctionsSpec extends AnyFunSuite {
     assert(err.getMessage.contains("capture group"))
     assert(one("SELECT extractAllGroups(CAST(NULL AS STRING), '(a)')") == null)
   }
+
+  test("register: many fresh sessions all resolve the dialect functions") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    (1 to 40).foreach { i =>
+      val s = spark.newSession()
+      val reg = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sessionState.functionRegistry
+      ChFunctions.register(s)
+      // idempotence is read off the session's own registry: a function
+      // missing there (a session built without the extensions) is
+      // registered again, never skipped on a remembered session id
+      Seq("cityHash64", "uniq").foreach(n => reg.dropFunction(FunctionIdentifier(n)))
+      ChFunctions.register(s)
+      val r = s.sql(s"SELECT cityHash64('a') = cityHash64('a'), uniq(x) " +
+        s"FROM VALUES ($i), ($i), (${i + 1}) AS t(x)").collect().head
+      assert(r.getBoolean(0) && r.getLong(1) == 2L, s"session $i")
+    }
+  }
 }

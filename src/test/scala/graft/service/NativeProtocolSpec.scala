@@ -715,4 +715,19 @@ class NativeProtocolSpec extends AnyFunSuite {
       } finally c.close()
     }
   }
+
+  test("a kept-alive connection answers 200 back-to-back queries without a failure") {
+    // the client sends each query the moment EndOfStream arrives — right
+    // into the window where the server's query worker is still cleaning
+    // up; the watch loop must leave that packet to the connection loop
+    withServer { port =>
+      val c = new NativeClient("127.0.0.1", port)
+      try {
+        (1 to 200).foreach { i =>
+          val r = c.query(s"SELECT $i AS i")
+          assert(r.rows == Seq(Seq(i)), s"query $i")
+        }
+      } finally c.close()
+    }
+  }
 }
