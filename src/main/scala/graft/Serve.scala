@@ -15,6 +15,7 @@ object Serve {
     val spark = SparkSession.builder()
       .appName("graft-serve")
       .master(s"local[$cpus]")
+      .config(graft.core.Engine.doorConf)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()

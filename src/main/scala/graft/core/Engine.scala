@@ -22,6 +22,25 @@ object Engine {
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors())
 
+  /** Fixed settings of every SparkContext that serves the doors
+    * (`graft.Serve`, [[session]], the test session). Not options: each
+    * door request runs on its own `newSession()`, and these are what
+    * must hold for every one of them.
+    *
+    *  - Artifact isolation off. With it on (Spark's default), every
+    *    `newSession()` gets its own artifact class loader, and
+    *    `CodeGenerator.compile` caches by (context class loader, code),
+    *    so each request re-ran Janino on every whole-stage class and
+    *    then ran the fresh classes cold, before the JIT had seen them.
+    *    graft never adds per-session artifacts (no `addArtifact`), so
+    *    sharing the loader changes nothing else; SET, temp-view and
+    *    function-registry isolation stay per session.
+    *  - UTC session time, so `toDateTime('…')` and friends evaluate the
+    *    same on every host. */
+  val doorConf: Map[String, String] = Map(
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.session.timeZone" -> "UTC")
+
   def session(
       appName: String = "graft",
       cores: Int = defaultCores,
@@ -29,11 +48,11 @@ object Engine {
     val b = SparkSession.builder()
       .appName(appName)
       .master(s"local[$cores]")
+      .config(doorConf)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
       // Bound task-memory pages: Spark's heap-proportional default
       // (up to 64MB/page) makes short interactive tasks zero-fill tens
       // of GB under a large driver heap (see Bench.scala measurement)

@@ -70,12 +70,15 @@ object MinHashKernel {
   }
 
   /** Maximal `\S+` runs as UTF8String tokens — byte-identical to
-    * `regexp_extract_all(text, "\\S+", 0)` (r20, guide §1.2 per-task
-    * work: the regex machinery costs ~2× a plain byte scan on the
-    * bench corpus — R20Probe tokab). Java's default `\s` is exactly
-    * the six ASCII whitespace bytes of [[isWs]], which never occur
-    * inside UTF-8 multibyte sequences, so the byte-level scan
-    * tokenizes identically for any UTF-8 input. Empty/all-whitespace
+    * `regexp_extract_all(text, "\\S+", 0)` on valid UTF-8 (r20, guide
+    * §1.2 per-task work: the regex machinery costs ~2× a plain byte
+    * scan on the bench corpus — R20Probe tokab). Java's default `\s`
+    * is exactly the six ASCII whitespace bytes of [[isWs]], which never
+    * occur inside UTF-8 multibyte sequences, so the byte-level scan
+    * finds the same token boundaries for any input. On malformed UTF-8
+    * the tokens differ: this scan copies the raw bytes, while the regex
+    * form decodes to a Java string first and emits U+FFFD for each
+    * invalid sequence (WordsSpec pins both). Empty/all-whitespace
     * text → empty array (the regex form's no-match case); tokens are
     * COPIES (never views of the reusable scan buffers). */
   def words(text: UTF8String): org.apache.spark.sql.catalyst.util.GenericArrayData = {
@@ -213,7 +216,8 @@ case class WordCountExpr(child: Expression) extends Expression {
 
 /** [[MinHashKernel.words]] as a codegen'd expression — the `\S+`
   * tokenizer of the retrieval/text operators without the regex
-  * machinery (bit-identical output; null text → null). */
+  * machinery (bit-identical output on valid UTF-8, raw bytes kept on
+  * malformed input; null text → null). */
 case class WordsExpr(child: Expression) extends Expression {
 
   override def children: Seq[Expression] = Seq(child)

@@ -66,9 +66,11 @@ object Ivf {
     // iteration (r20 optimization round; guide §5 — caching is worth it
     // exactly when a frame is reused across actions and recompute costs
     // more). Unpersisted before returning (the OpCache contract for
-    // operator-internal state the operator itself releases).
+    // operator-internal state the operator itself releases). A single
+    // pass reads the projection once, so it skips the cache: the
+    // persist would only add its materialization cost.
     val vecs = emb.select(col(vecCol).as("_v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    if (iters > 1) vecs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       (0 until iters).foreach { _ =>
         val assigned = vecs.select(
@@ -88,7 +90,7 @@ object Ivf {
           }
         }
       }
-    } finally vecs.unpersist(blocking = false)
+    } finally if (iters > 1) vecs.unpersist(blocking = false)
     centroids
   }
 

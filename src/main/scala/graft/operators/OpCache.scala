@@ -51,9 +51,10 @@ object OpCache {
   * `spark.sql.exchange.reuse` (default true) to serve identical
   * self-join subtrees from ONE shuffle. With it disabled — or under a
   * canonicalization miss — the operators stay CORRECT (every
-  * computation is deterministic), but the corpus scan+kernel silently
-  * runs once per consumer (up to 4× in minHashDupPairs). Advisor r19:
-  * make that config dependency visible instead of silent. */
+  * computation is deterministic up to floating-point summation order;
+  * see lexicalCosinePairs), but the corpus scan+kernel silently runs
+  * once per consumer (up to 4× in minHashDupPairs). Advisor r19: make
+  * that config dependency visible instead of silent. */
 private[operators] object ExchangeReuse {
   private val warned =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()

@@ -219,7 +219,10 @@ object Retrieval {
     // defect the r19 round measured as a net loss in four sibling
     // operators (q5/q6/q7/q8). Requires spark.sql.exchange.reuse
     // (default true); with it disabled the plan stays correct, just
-    // derives the posting list once per side.
+    // derives the posting list once per side. Then each side sums its
+    // own `_n` window of doubles in shuffle-fetch order, so the two
+    // sides' `_w` can differ in the last ulp, and a pair whose `cos`
+    // sits on `minCosine` to within rounding can flip.
     val unit = w
       .withColumn("_n", sqrt(sum(col("tfidf") * col("tfidf")).over(byDoc)))
       .filter(col("_n") > 0) // docs whose every term was pruned (or all-zero idf)

@@ -197,11 +197,13 @@ object TextAnalysis {
     * TOTAL is a scalar aggregate attached as a broadcast cross-join
     * (the same pattern bm25's stats row uses) — the former
     * `sum(...).over()` unpartitioned window pulled the whole vocabulary
-    * to ONE partition, and a 100 TB web corpus's distinct-token
-    * vocabulary is billions of rows (r20 optimization round; the
-    * scalar's aggregation reuses the vocabulary aggregate's own
-    * exchange, so the corpus still tokenizes once per action). Returns
-    * (idCol, n_scored_words, logprob_sum). */
+    * to ONE partition (r20 optimization round; the scalar's aggregation
+    * reuses the vocabulary aggregate's own exchange, so the corpus
+    * still tokenizes once per action). The per-word probabilities are
+    * still `broadcast()` to the join, so the vocabulary must fit in
+    * driver and executor memory: fine for a curated corpus, not for a
+    * web-scale one whose distinct-token vocabulary runs to billions of
+    * rows. Returns (idCol, n_scored_words, logprob_sum). */
   def unigramLogProb(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val words = df.select(col(idCol).as("_id"),
       explode(TextAnalysis.words(col(textCol))).as("_w"))

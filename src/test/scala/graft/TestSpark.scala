@@ -8,8 +8,8 @@ object TestSpark {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-test")
+      .config(graft.core.Engine.doorConf)
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
       .config("spark.sql.extensions", "graft.dialect.GraftExtensions")

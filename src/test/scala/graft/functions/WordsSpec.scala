@@ -5,9 +5,11 @@ import org.apache.spark.sql.graft.FunctionShim
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The r20 byte-scan tokenizer must be BIT-IDENTICAL to
-  * `regexp_extract_all(text, "\\S+", 0)` — the retrieval/text operators
-  * swapped it in purely for speed, so any divergence is a silent
-  * answer change across q92/q111/q112/q126 and the quality filters. */
+  * `regexp_extract_all(text, "\\S+", 0)` on valid UTF-8 — the
+  * retrieval/text operators swapped it in purely for speed, so any
+  * divergence is a silent answer change across q92/q111/q112/q126 and
+  * the quality filters. Malformed UTF-8 is the one pinned difference:
+  * the same tokens, with raw bytes where the regex form has U+FFFD. */
 class WordsSpec extends AnyFunSuite {
   private lazy val spark = graft.TestSpark.spark
 
@@ -35,6 +37,20 @@ class WordsSpec extends AnyFunSuite {
       .collect()
     assert(mismatches.isEmpty,
       mismatches.take(5).map(_.toString).mkString("\n"))
+  }
+
+  test("words() keeps malformed UTF-8 bytes raw; the regex form emits U+FFFD") {
+    // "a\xFFb c\xE2 \xC3": a stray byte, then two truncated sequences,
+    // the last at the end of the text
+    val t = expr("cast(unhex('61FF622063E220C3') AS STRING)")
+    def hexes(tokens: org.apache.spark.sql.Column) =
+      transform(tokens, x => hex(x.cast("binary")))
+    val row = spark.range(1).select(
+      hexes(wordsCol(t)),
+      hexes(regexp_extract_all(t, lit("\\S+"), lit(0)))).collect().head
+    // same token boundaries; words() copies the input bytes untouched
+    assert(row.getSeq[String](0) == Seq("61FF62", "63E2", "C3"))
+    assert(row.getSeq[String](1) == Seq("61EFBFBD62", "63EFBFBD", "EFBFBD"))
   }
 
   test("words() null text yields null, like the regex form") {
