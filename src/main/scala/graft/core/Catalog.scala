@@ -208,8 +208,11 @@ object Catalog {
     * variant. Non-Replicated spellings pass through verbatim. */
   def normalizeEngine(spec: String): String = spec.trim match {
     case ReplicatedSpecRe(family, args) =>
+      // top-level commas: quoted args ('/zk/{layer}-{shard}/t') and the
+      // SummingMergeTree `((a, b))` tuple stay whole
       val as = Option(args).filter(_.nonEmpty)
-        .map(splitTopLevelArgs).getOrElse(Nil)
+        .map(graft.dialect.SqlLex(_).splitTopLevel(',').map(_.trim))
+        .getOrElse(Nil)
       // the replication pair is always two leading quoted strings;
       // anything else is already a family argument (argless
       // Replicated DDL relies on server-config defaults)
@@ -218,27 +221,6 @@ object Catalog {
         else as
       if (rest.isEmpty) family else s"$family(${rest.mkString(", ")})"
     case other => other
-  }
-
-  /** Split an engine-argument list on TOP-LEVEL commas — respects
-    * single-quoted strings ('/zk/{layer}-{shard}/t') and one paren
-    * nesting level (the SummingMergeTree `((a, b))` tuple). */
-  private def splitTopLevelArgs(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0; var q = false
-    s.foreach { c =>
-      c match {
-        case '\'' => q = !q; cur.append(c)
-        case '(' if !q => depth += 1; cur.append(c)
-        case ')' if !q => depth -= 1; cur.append(c)
-        case ',' if !q && depth == 0 =>
-          out += cur.toString.trim; cur.clear()
-        case _ => cur.append(c)
-      }
-    }
-    if (cur.toString.trim.nonEmpty) out += cur.toString.trim
-    out.toSeq
   }
 
   private val ReplacingRe =

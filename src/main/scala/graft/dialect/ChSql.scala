@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.FunctionShim
 
 import graft.sources.Sources
-import graft.types.ChSchemaParser
 
 /** The ClickHouse-SQL front door (SURVEY §4 "dialect front door"): a
   * string pre-pass that converts the CH query shapes the reference
@@ -24,6 +23,10 @@ import graft.types.ChSchemaParser
   *   - table functions in FROM — `s3(…)`, `s3Cluster(…)`, `url(…)`,
   *     `urlCluster(…)`, `file(…)` — rewritten to temp views backed by
   *     [[graft.sources.Sources]] (S1-S4; `…_test.go:42-70`, `run.sh:17`).
+  *
+  * Comments are removed once, at the statement's entry ([[statement]]);
+  * every pass asks [[SqlLex]] which characters are code, so no rewrite
+  * fires inside a literal or quoted identifier.
   *
   * A pre-pass (vs an injected parser) is deliberate: it composes with
   * any session, including ones the driver harness builds, and the
@@ -59,10 +62,15 @@ object ChSql {
   def rewrite(
       spark: SparkSession,
       sql: String,
-      macros: Map[String, String] = defaultMacros): Rewritten = {
-    val m = substituteMacros(sql, macros)
-    val noCluster = stripGlobal(stripOnCluster(m))
-    val (body0, settings) = extractSettings(stripFormat(noCluster))
+      macros: Map[String, String] = defaultMacros): Rewritten =
+    rewriteStatement(spark, statement(sql, macros), macros)
+
+  /** [[rewrite]] of a text that already went through [[statement]]. */
+  private def rewriteStatement(
+      spark: SparkSession,
+      stmt: String,
+      macros: Map[String, String]): Rewritten = {
+    val (body0, settings) = extractSettings(stripFormat(stripGlobal(stmt)))
     val body = stripFormat(body0) // FORMAT may precede or follow SETTINGS
     // CH clause rewrites fire per SELECT level: recurse into
     // parenthesized subqueries first (their own "top level"), then the
@@ -89,32 +97,33 @@ object ChSql {
     val dated = rewriteDateAddSub(rewriteDateDiff(parametric))
     val deconflicted = rewriteConflictingFunctions(dated)
     val sys = rewriteSystemTables(deconflicted)
-    // the service path calls rewrite()+finish() directly (never sql()),
-    // so system view registration must live HERE or `FROM system.*`
-    // resolves only through one of the two front doors
-    if (sys.toLowerCase.contains("system_")) {
-      graft.core.SystemTables.registerViews(spark)
+    // system views register HERE, the one place every statement's
+    // rewrite passes through
+    val lower = sys.toLowerCase
+    if (lower.contains("system_")) {
+      graft.core.SystemTables.registerViews(spark,
+        macros.getOrElse("cluster", "graft"))
       // parts is metadata-FETCHING (http for remote endpoints): build it
       // only for queries that actually name it
-      if (sys.toLowerCase.contains("system_parts"))
+      if (lower.contains("system_parts"))
         graft.core.SystemTables.registerParts(spark)
       // projections: registry mutates via ALTER statements — register
       // fresh per referencing query, like parts
-      if (sys.toLowerCase.contains("system_projections"))
+      if (lower.contains("system_projections"))
         graft.core.SystemTables.registerProjections(spark)
       // tables: the catalog mutates via ATTACH/CTAS/DROP — same story
-      if (sys.toLowerCase.contains("system_tables"))
+      if (lower.contains("system_tables"))
         graft.core.SystemTables.registerTables(spark)
-      if (sys.toLowerCase.contains("system_dictionaries"))
+      if (lower.contains("system_dictionaries"))
         graft.core.SystemTables.registerDictionaries(spark)
       // processes: the live-query registry mutates per request
-      if (sys.toLowerCase.contains("system_processes"))
+      if (lower.contains("system_processes"))
         graft.core.SystemTables.registerProcesses(spark)
       // settings: values mutate with every SET — register fresh
-      if (sys.toLowerCase.contains("system_settings"))
+      if (lower.contains("system_settings"))
         graft.core.SystemTables.registerSettings(spark)
       // quotas: budgets and live window counters — same story
-      if (sys.toLowerCase.contains("system_quota"))
+      if (lower.contains("system_quota"))
         graft.core.SystemTables.registerQuotas(spark)
     }
     val rewritten = rewriteTableFunctions(spark, sys)
@@ -123,6 +132,7 @@ object ChSql {
   }
 
   private val SubSelectPrefix = """(?is)^(SELECT|WITH)\b""".r
+  private val SubqueryOpen = """(?i)\(\s*(?:SELECT|WITH)\b""".r
 
   /** The per-SELECT-level clause passes, applied to a SUBQUERY body
     * (each body is its own "top level" for the depth-0 matchers). WITH
@@ -139,32 +149,23 @@ object ChSql {
     * Innermost first, so a pass that wraps its input in a new subquery
     * never gets re-entered. */
   def rewriteSubqueryClauses(sql: String): String = {
+    // only a parenthesized SELECT/WITH body changes
+    if (SubqueryOpen.findFirstIn(sql).isEmpty) return sql
+    val lx = SqlLex(sql)
     val out = new StringBuilder
     var i = 0
-    var inQuote = false
     while (i < sql.length) {
       val c = sql.charAt(i)
-      // same quoting model as matchParen/quoteStateAfter: a backslash
-      // inside a literal escapes the next char, so '\'' does not close
-      // the literal — desync here let a '(' inside a string be taken as
-      // a subquery opener (advisor r8)
-      if (inQuote && c == '\\' && i + 1 < sql.length) {
-        out.append(c).append(sql.charAt(i + 1)); i += 2
-      }
-      else if (inQuote) { out.append(c); if (c == '\'') inQuote = false; i += 1 }
-      else if (c == '\'') { out.append(c); inQuote = true; i += 1 }
-      else if (c == '(') {
-        val end = matchParen(sql, i)
-        if (end > 0) {
-          val inner = sql.substring(i + 1, end)
-          val rewrittenInner = rewriteSubqueryClauses(inner)
-          val finished =
-            if (SubSelectPrefix.findFirstIn(inner.trim).isDefined)
-              subqueryClausePasses(rewrittenInner)
-            else rewrittenInner
-          out.append('(').append(finished).append(')')
-          i = end + 1
-        } else { out.append(c); i += 1 }
+      val end = if (c == '(' && lx.isCode(i)) lx.matchParen(i) else -1
+      if (end > 0) {
+        val inner = sql.substring(i + 1, end)
+        val rewrittenInner = rewriteSubqueryClauses(inner)
+        val finished =
+          if (SubSelectPrefix.findFirstIn(inner.trim).isDefined)
+            subqueryClausePasses(rewrittenInner)
+          else rewrittenInner
+        out.append('(').append(finished).append(')')
+        i = end + 1
       } else { out.append(c); i += 1 }
     }
     out.toString
@@ -201,7 +202,7 @@ object ChSql {
     * ORDER BY stays in the text — [[graft.operators.Fill]] re-sorts
     * after inserting the grid rows anyway). */
   def extractWithFill(sql: String): (String, Option[FillSpec]) = {
-    val m = topLevelMatches(sql, WithFillRe).headOption.getOrElse(return (sql, None))
+    val m = SqlLex(sql).topLevelMatches(WithFillRe).headOption.getOrElse(return (sql, None))
     val interp = Option(m.group(5)).toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
       .map { item =>
@@ -234,12 +235,13 @@ object ChSql {
   /** CH `LIMIT offset, n` (MySQL-style) → `LIMIT n OFFSET offset`. */
   private val LimitOffsetRe = """(?i)\bLIMIT\s+(\d+)\s*,\s*(\d+)\b""".r
   private[dialect] def rewriteLimitOffset(sql: String): String =
-    replaceQuoteAware(sql, LimitOffsetRe)(m =>
+    SqlLex(sql).replace(LimitOffsetRe)(m =>
       Some(s"LIMIT ${m.group(2)} OFFSET ${m.group(1)}"))
   private val OrderByRe = """(?i)\bORDER\s+BY\b""".r
   private val TailLimitRe = """(?i)\bLIMIT\s+(\d+)\s*$""".r
 
   private val QualifyRe = """(?i)\bQUALIFY\b""".r
+  private val QualifyTailRe = """(?i)\b(?:ORDER\s+BY|LIMIT)\b""".r
 
   /** CH/modern-SQL `QUALIFY <pred>` — post-window filtering — rewrites
     * to a subquery + WHERE: `SELECT … QUALIFY p [ORDER BY …] [LIMIT n]`
@@ -249,23 +251,15 @@ object ChSql {
     * qualify-on-alias; window functions repeated verbatim in the
     * predicate would re-plan anyway. */
   def rewriteQualify(sql: String): String = {
-    val hit = QualifyRe.findAllMatchIn(sql)
-      .find(m => !insideQuote(sql, m.start) && depthAt(sql, m.start) == 0)
-    if (hit.isEmpty) return sql
-    val m = hit.get
+    val lx = SqlLex(sql)
+    val m = lx.topLevelMatches(QualifyRe).headOption.getOrElse(return sql)
     val head = sql.substring(0, m.start).trim
-    val rest = sql.substring(m.end)
     // the predicate runs to a trailing top-level ORDER BY / LIMIT, if any
-    val tailKw = Seq("ORDER\\s+BY", "LIMIT").flatMap { kw =>
-      ("(?i)\\b" + kw + "\\b").r.findAllMatchIn(rest)
-        .filter(x => !insideQuote(rest, x.start) && depthAt(rest, x.start) == 0)
-        .map(_.start).toSeq
-    }.sorted.headOption
-    val (pred, tail) = tailKw match {
-      case Some(i) => (rest.substring(0, i).trim, " " + rest.substring(i).trim)
-      case None => (rest.trim, "")
-    }
-    s"SELECT * FROM ($head) __qf WHERE $pred$tail"
+    val end = lx.topLevelMatches(QualifyTailRe, m.end).headOption
+      .map(_.start).getOrElse(sql.length)
+    val tail = sql.substring(end).trim
+    s"SELECT * FROM ($head) __qf WHERE ${sql.substring(m.end, end).trim}" +
+      (if (tail.isEmpty) "" else " " + tail)
   }
 
   /** CH `… ORDER BY o LIMIT n BY cols [LIMIT m]` — first n rows per
@@ -275,23 +269,18 @@ object ChSql {
     * BY is required — CH without one takes arbitrary engine order,
     * which a deterministic engine should refuse, not emulate. */
   def rewriteLimitBy(sql: String): String = {
-    val hit = LimitByRe.findAllMatchIn(sql)
-      .find(m => !insideQuote(sql, m.start) && depthAt(sql, m.start) == 0)
-    if (hit.isEmpty) return sql
-    val m = hit.get
+    val lx = SqlLex(sql)
+    val m = lx.topLevelMatches(LimitByRe).headOption.getOrElse(return sql)
     val n = m.group(1).toInt
-    val ob = OrderByRe.findAllMatchIn(sql.substring(0, m.start))
-      .filter(x => !insideQuote(sql, x.start) && depthAt(sql, x.start) == 0)
-      .toSeq.lastOption.getOrElse(throw new IllegalArgumentException(
+    val ob = lx.topLevelMatches(OrderByRe).filter(_.end <= m.start)
+      .lastOption.getOrElse(throw new IllegalArgumentException(
         "LIMIT n BY requires an explicit ORDER BY (ClickHouse without " +
           "one returns arbitrary engine order)"))
     val head = sql.substring(0, ob.start).trim
     val order = sql.substring(ob.end, m.start).trim
-    val rest = sql.substring(m.end)
-    val (cols, tail) = TailLimitRe.findFirstMatchIn(rest) match {
-      case Some(t) if !insideQuote(rest, t.start) && depthAt(rest, t.start) == 0 =>
-        (rest.substring(0, t.start).trim, s" LIMIT ${t.group(1)}")
-      case _ => (rest.trim, "")
+    val (cols, tail) = lx.topLevelMatches(TailLimitRe, m.end).headOption match {
+      case Some(t) => (sql.substring(m.end, t.start).trim, s" LIMIT ${t.group(1)}")
+      case None => (sql.substring(m.end).trim, "")
     }
     s"SELECT * EXCEPT (__rn) FROM (SELECT *, row_number() OVER " +
       s"(PARTITION BY $cols ORDER BY $order) AS __rn FROM ($head) __lb) __lbq " +
@@ -308,7 +297,7 @@ object ChSql {
     * claimed before the registry is consulted. Quote-aware like the
     * other passes. */
   def rewriteDateDiff(sql: String): String =
-    replaceQuoteAware(sql, DateDiffCall)(
+    SqlLex(sql).replace(DateDiffCall)(
       m => Some(s"timestampdiff(${m.group(1).toUpperCase},"))
 
   private val DateAddSubCall =
@@ -324,7 +313,7 @@ object ChSql {
     * builtin would mis-take the CH reading — on a dialect session the
     * CH reading wins by design.) */
   def rewriteDateAddSub(sql: String): String =
-    replaceQuoteAware(sql, DateAddSubCall) { m =>
+    SqlLex(sql).replace(DateAddSubCall) { m =>
       val unit = Option(m.group(2)).getOrElse(m.group(3)).toLowerCase
       val target =
         if (m.group(1).toLowerCase.contains("sub")) "chDateSub" else "chDateAdd"
@@ -362,7 +351,7 @@ object ChSql {
     case class AccBracket(primary: Int) extends Open  // '[' converted to element_at(
     val out = new StringBuilder(sql.length + 32)
     val stack = scala.collection.mutable.Stack.empty[Open]
-    var q = false
+    val lx = SqlLex(sql)
     var lastSignificant: Char = 0
     var primaryStart = -1 // start (in `out`) of the last complete primary expression
     var sawSpace = false  // whitespace since the last significant char
@@ -370,21 +359,17 @@ object ChSql {
     var i = 0
     while (i < sql.length) {
       val c = sql.charAt(i)
-      if (q) {
-        out.append(c)
-        if (c == '\\' && i + 1 < sql.length) { out.append(sql.charAt(i + 1)); i += 1 }
-        else if (c == '\'') { q = false; lastSignificant = '\'' }
+      if (!lx.isCode(i)) {
+        // a literal or quoted identifier is one primary, copied verbatim
+        // (a quoted name after `.` continues the qualified primary)
+        if (c == '\'' || lastSignificant != '.') primaryStart = out.length
+        var j = i
+        while (j < sql.length && !lx.isCode(j)) j += 1
+        out.append(sql.substring(i, j))
+        lastSignificant = if (c == '\'') '\'' else '`'
+        word.clear()
+        i = j - 1 // the loop's step lands on the run's end
       } else c match {
-        case '\'' =>
-          primaryStart = out.length; out.append(c); q = true; word.clear()
-        case '`' =>
-          // backticked identifier: copy verbatim to the closing tick
-          if (lastSignificant != '.') primaryStart = out.length
-          out.append(c)
-          var j = i + 1
-          while (j < sql.length && sql.charAt(j) != '`') { out.append(sql.charAt(j)); j += 1 }
-          if (j < sql.length) { out.append('`'); i = j }
-          lastSignificant = '`'; word.clear()
         case '(' =>
           val p =
             if (lastSignificant.isLetterOrDigit || lastSignificant == '_' ||
@@ -451,22 +436,18 @@ object ChSql {
           // `arr [1]` both separate with a space
           out.append(c)
       }
-      if (c.isWhitespace) { if (!q) sawSpace = true }
-      else sawSpace = false
+      sawSpace = c.isWhitespace
       i += 1
     }
     out.toString
   }
 
   def rewriteSystemTables(sql: String): String = {
-    val noFanout = replaceQuoteAware(sql, ClusterAllReplicas)(m => Some(m.group(1)))
-    replaceQuoteAware(noFanout, SystemDot)(
+    val noFanout = SqlLex(sql).replace(ClusterAllReplicas)(m => Some(m.group(1)))
+    SqlLex(noFanout).replace(SystemDot)(
       m => Some(s"system_${m.group(1).toLowerCase}"))
   }
 
-  /** Run a CH-dialect query end-to-end on this session. Handles DDL-ish
-    * statements (ATTACH TABLE → catalog registration) as well as
-    * queries; system.* tables resolve to the synthetic views. */
   private val ExplainPrefix =
     """(?is)^\s*EXPLAIN(?:\s+(?:AST|SYNTAX|QUERY\s+TREE|PLAN|PIPELINE|ESTIMATE))?\s+(SELECT|WITH)\b""".r
 
@@ -480,73 +461,102 @@ object ChSql {
       """FLUSH\s+LOGS|DROP\s+(?:MARK|UNCOMPRESSED|QUERY)\s+CACHE|""" +
       """RELOAD\s+FUNCTIONS)\s*$""").r
 
-  def sql(spark: SparkSession, query: String,
-      macros: Map[String, String] = defaultMacros): DataFrame = {
-    ChFunctions.register(spark)
-    val m = stripOnCluster(substituteMacros(query, macros))
+  /** Run one CH-dialect statement on this session: DDL, DML and
+    * introspection verbs route to their handlers, everything else runs
+    * through [[rewrite]] + [[finish]]. Returns the frame and the
+    * statement's SETTINGS. The one dispatch chain — [[sql]] and the
+    * service doors both come through here; the session must already
+    * carry the dialect functions ([[ChFunctions.register]]). */
+  def run(spark: SparkSession, query: String,
+      macros: Map[String, String] = defaultMacros)
+      : (DataFrame, Map[String, String]) = {
+    import spark.implicits._
+    val m = statement(query, macros)
+    def done(df: DataFrame) = (df, Map.empty[String, String])
     if (graft.core.Catalog.isAttach(m)) {
-      import spark.implicits._
       val t = graft.core.Catalog.attach(spark, m)
-      return Seq((t.name, "attached")).toDF("table", "status")
+      return done(Seq((t.name, "attached")).toDF("table", "status"))
     }
     // write statements: INSERT INTO '<path>'/FUNCTION file(…) SELECT …,
     // CREATE TABLE … AS SELECT … — routed through Sinks (S11)
-    if (ChWrites.isWrite(m)) return ChWrites.run(spark, m, macros)
+    if (ChWrites.isWrite(m)) return done(ChWrites.run(spark, m, macros))
     // projection DDL: ALTER TABLE … ADD/MATERIALIZE/DROP PROJECTION
-    if (ProjectionSql.isProjection(m)) return ProjectionSql.run(spark, m)
+    if (ProjectionSql.isProjection(m)) return done(ProjectionSql.run(spark, m))
     // OPTIMIZE TABLE … [FINAL]: compact the table's parquet layout
-    if (OptimizeSql.isOptimize(m)) return OptimizeSql.run(spark, m)
+    if (OptimizeSql.isOptimize(m)) return done(OptimizeSql.run(spark, m))
     // mutations: ALTER TABLE … DELETE/UPDATE WHERE, DELETE FROM …,
     // TRUNCATE TABLE
-    if (MutateSql.isMutation(m)) return MutateSql.run(spark, m, macros)
+    if (MutateSql.isMutation(m)) return done(MutateSql.run(spark, m, macros))
     // schema evolution: ALTER TABLE … ADD/DROP/MODIFY/RENAME COLUMN,
     // RENAME TABLE
-    if (AlterSchemaSql.isAlterSchema(m)) return AlterSchemaSql.run(spark, m)
+    if (AlterSchemaSql.isAlterSchema(m)) return done(AlterSchemaSql.run(spark, m))
     // dictionaries: CREATE/DROP DICTIONARY (dictGet calls rewrite in
     // the query pipeline)
-    if (DictionarySql.isDictionary(m)) return DictionarySql.run(spark, m)
+    if (DictionarySql.isDictionary(m)) return done(DictionarySql.run(spark, m))
     // introspection: SHOW CREATE TABLE (session-view DDL
     // reconstruction), SHOW TABLES [LIKE], DESCRIBE TABLE (CH's
     // seven-column shape), EXISTS TABLE
-    if (ShowSql.isIntrospection(m)) return ShowSql.run(spark, m)
+    if (ShowSql.isIntrospection(m)) return done(ShowSql.run(spark, m))
     // lifecycle: DROP TABLE (deletes CTAS-owned storage) / DETACH TABLE
-    if (DropSql.isDrop(m)) return DropSql.run(spark, m)
+    if (DropSql.isDrop(m)) return done(DropSql.run(spark, m))
     // operator verbs over the live-query registry
-    if (KillSql.isKill(m)) return KillSql.run(spark, m)
+    if (KillSql.isKill(m)) return done(KillSql.run(spark, m))
     // access entities: CREATE/DROP QUOTA, SHOW QUOTAS (enforced at
     // QueryService admission — graft.service.Quotas)
-    if (QuotaSql.isQuota(m)) return QuotaSql.run(spark, m)
+    if (QuotaSql.isQuota(m)) return done(QuotaSql.run(spark, m))
     // CH `SYSTEM …` maintenance statements: accepted no-ops with a
     // status row — this engine has no background loops to poke
     // (dictionaries are always live, logs flush synchronously, merges
     // only run via OPTIMIZE), so the correct response to a client
     // replaying its CH runbook is "done", not a parse error
     SystemStmtRe.findFirstMatchIn(m).foreach { sm =>
-      import spark.implicits._
-      return Seq((sm.group(1).trim, "noop"))
-        .toDF("statement", "status")
+      return done(Seq((sm.group(1).trim, "noop")).toDF("statement", "status"))
     }
     // CH `EXPLAIN [mode] SELECT …` returns the plan as result rows; the
     // Spark rendition explains the rewritten query's physical plan (all
     // CH modes map to the one plan Spark has — the Catalyst one)
     ExplainPrefix.findFirstMatchIn(m).foreach { mm =>
-      import spark.implicits._
-      val inner = sql(spark, m.substring(mm.start(1)), macros)
-      return inner.queryExecution.explainString(
+      val inner = run(spark, m.substring(mm.start(1)), macros)._1
+      return done(inner.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        .linesIterator.toSeq.toDF("explain")
+        .linesIterator.toSeq.toDF("explain"))
     }
-    val r = rewrite(spark, query, macros)
+    val r = rewriteStatement(spark, m, macros)
     applySettings(spark, r.settings)
-    if (r.sql.toLowerCase.contains("system_")) {
-      graft.core.SystemTables.registerViews(spark,
-        macros.getOrElse("cluster", "graft"))
-      if (r.sql.toLowerCase.contains("system_parts"))
-        graft.core.SystemTables.registerParts(spark)
-      // (no projections/tables twin here: rewrite() above already
-      // registered them for this very query — review finding)
-    }
-    finish(spark, r)
+    (finish(spark, r), r.settings)
+  }
+
+  /** [[run]]'s frame, on a session this call registers the dialect
+    * functions on. */
+  def sql(spark: SparkSession, query: String,
+      macros: Map[String, String] = defaultMacros): DataFrame = {
+    ChFunctions.register(spark)
+    run(spark, query, macros)._1
+  }
+
+  /** The text every dispatch check and rewrite pass sees: macros
+    * substituted, comments removed ([[stripComments]]), `ON CLUSTER`
+    * stripped. The caller's original text is what the query log,
+    * `system.processes` and the journal keep. */
+  def statement(query: String, macros: Map[String, String] = defaultMacros): String =
+    stripOnCluster(stripComments(substituteMacros(query, macros)))
+
+  private val FormatName = """(?i)\bFORMAT\s+[A-Za-z][A-Za-z0-9]*""".r
+  private val SelectHead = """(?is)\s*(?:SELECT|WITH)\b.*""".r
+
+  /** Turn every comment into one space. An INSERT's inline data — what
+    * follows its `FORMAT <name>` when that is not a SELECT — is data,
+    * not SQL, and passes through byte for byte. */
+  def stripComments(sql: String): String = {
+    if (!SqlLex.mayHaveComments(sql)) return sql
+    val lx = SqlLex(sql)
+    val head = lx.skipBlank()
+    val dataStart =
+      if (!sql.regionMatches(true, head, "INSERT", 0, 6)) sql.length
+      else lx.codeMatches(FormatName, head).find(f => lx.depth(f.start) == 0)
+        .filterNot(f => SelectHead.matches(sql.substring(f.end)))
+        .map(_.end).getOrElse(sql.length)
+    lx.stripComments(dataStart)
   }
 
   // ---- individual passes (each unit-testable) ----
@@ -557,7 +567,7 @@ object ChSql {
   private val OnCluster = """(?i)\s+ON\s+CLUSTER\s+('[^']*'|`[^`]*`|\S+)""".r
 
   def stripOnCluster(sql: String): String =
-    replaceQuoteAware(sql, OnCluster)(_ => Some(""))
+    SqlLex(sql).replace(OnCluster)(_ => Some(""))
 
   // CH `GLOBAL JOIN` / `GLOBAL IN` force the right side to the
   // initiator before distributing — Spark's planner owns distribution
@@ -566,27 +576,23 @@ object ChSql {
     """(?i)\bGLOBAL\s+(?=((LEFT|RIGHT|FULL|INNER|CROSS|ANY|ALL|SEMI|ANTI|OUTER)\s+)*JOIN\b|IN\s*\(|NOT\s+IN\s*\()""".r
 
   def stripGlobal(sql: String): String =
-    replaceQuoteAware(sql, GlobalModifier)(_ => Some(""))
+    SqlLex(sql).replace(GlobalModifier)(_ => Some(""))
 
   /** Find a TRAILING top-level `SETTINGS k=v, …` clause and strip it.
     * "Top-level" means outside parens/quotes — `SETTINGS` inside a
     * `disk(…)` spec or a string literal is untouched. */
   def extractSettings(sql: String): (String, Map[String, String]) = {
-    val idx = lastTopLevelKeyword(sql, "settings")
+    val idx = SqlLex(sql).lastTopLevelKeyword("settings")
     if (idx < 0) return (sql, Map.empty)
     val tail = sql.substring(idx + "settings".length)
-    val pairs = splitOutsideQuotes(tail, ',').map(_.trim).filter(_.nonEmpty)
+    val pairs = SqlLex(tail).splitTopLevel(',').map(_.trim).filter(_.nonEmpty)
     val kv = pairs.flatMap { p =>
       val eq = p.indexOf('=')
       if (eq <= 0) None
       else {
         val k = p.substring(0, eq).trim
-        val v = p.substring(eq + 1).trim.stripSuffix(";").trim
-        val unq =
-          if (v.startsWith("'") && v.endsWith("'") && v.length >= 2)
-            v.substring(1, v.length - 1)
-          else v
-        if (k.matches("[A-Za-z_][A-Za-z0-9_.]*")) Some(k -> unq) else None
+        val v = unquote(p.substring(eq + 1).trim.stripSuffix(";").trim)
+        if (k.matches("[A-Za-z_][A-Za-z0-9_.]*")) Some(k -> v) else None
       }
     }
     // only strip when the entire tail parses as a settings list
@@ -638,51 +644,16 @@ object ChSql {
 
   /** The output format a statement requests — a trailing `FORMAT f`,
     * either after or before a trailing SETTINGS clause (both orders are
-    * legal CH). None when absent. */
-  def requestedFormat(sql: String): Option[String] = {
-    val noCluster = stripOnCluster(sql)
-    TrailingFormatName.findFirstMatchIn(noCluster).map(_.group(1)).orElse {
-      val (body0, settings) = extractSettings(noCluster)
+    * legal CH). None when absent. `stmt` is [[statement]] text. */
+  def requestedFormat(stmt: String): Option[String] = {
+    TrailingFormatName.findFirstMatchIn(stmt).map(_.group(1)).orElse {
+      val (body0, settings) = extractSettings(stmt)
       if (settings.isEmpty) None
       else TrailingFormatName.findFirstMatchIn(body0).map(_.group(1))
     }
   }
 
   // ---- CH FROM-clause modifiers: FINAL, SAMPLE, ARRAY JOIN, PREWHERE ----
-
-  /** Generic quote-aware rewrite loop: `repl` returns Some(replacement
-    * text) for a match to rewrite, None to leave it untouched. Quote
-    * parity is carried across consumed prefixes like [[replaceFnName]]. */
-  private[dialect] def replaceQuoteAware(
-      sql: String,
-      re: scala.util.matching.Regex)(
-      repl: scala.util.matching.Regex.Match => Option[String]): String = {
-    val out = new StringBuilder
-    var cur = sql
-    var carry = false
-    var m = re.findFirstMatchIn(cur)
-    while (m.isDefined) {
-      val mm = m.get
-      val r = if (insideQuote(cur, mm.start, carry)) None else repl(mm)
-      r match {
-        case Some(t) => out.append(cur.substring(0, mm.start)).append(t)
-        case None => out.append(cur.substring(0, mm.end))
-      }
-      carry = quoteStateAfter(cur, mm.end, carry)
-      cur = cur.substring(mm.end)
-      m = re.findFirstMatchIn(cur)
-    }
-    out.append(cur)
-    out.toString
-  }
-
-  /** All top-level (outside quotes, paren depth 0) matches of `re`. */
-  private def topLevelMatches(
-      s: String,
-      re: scala.util.matching.Regex): Seq[scala.util.matching.Regex.Match] =
-    re.findAllMatchIn(s)
-      .filter(m => !insideQuote(s, m.start) && depthAt(s, m.start) == 0)
-      .toSeq
 
   // the alias slot uses a negative lookahead so neither FINAL itself nor
   // a following clause keyword is ever parsed as the table alias
@@ -713,7 +684,7 @@ object ChSql {
     if (c.contains("(") || c.contains("`")) c else s"`$c`"
 
   def stripFinal(sql: String): String =
-    replaceQuoteAware(sql, FromFinal) { m =>
+    SqlLex(sql).replace(FromFinal) { m =>
       val tref = m.group(2).trim
       val toks = tref.split("\\s+").filterNot(_.equalsIgnoreCase("AS"))
       val table = toks.head
@@ -869,7 +840,7 @@ object ChSql {
     * should not fake it. Tables without a declared sampling key refuse
     * too, matching CH's "Illegal SAMPLE" error. */
   def rewriteSample(sql: String): String =
-    replaceQuoteAware(sql, SampleRe) { m =>
+    SqlLex(sql).replace(SampleRe) { m =>
       val table = m.group(1)
       val key = graft.core.Catalog.lookup(table).flatMap(_.sampleBy)
         .getOrElse(throw new IllegalArgumentException(
@@ -917,22 +888,19 @@ object ChSql {
     * arr AS __aj_src_0 FROM t`) and the element keeps the original
     * name. Non-column expressions must carry an explicit AS alias. */
   def rewriteArrayJoin(sql: String): String = {
-    val hit = topLevelMatches(sql, ArrayJoinRe).headOption.getOrElse(return sql)
+    val lx = SqlLex(sql)
+    val hit = lx.topLevelMatches(ArrayJoinRe).headOption.getOrElse(return sql)
     val isLeft = hit.group(1) != null
-    val from = topLevelMatches(sql.substring(0, hit.start), FromKw).lastOption
+    val from = lx.topLevelMatches(FromKw).filter(_.end <= hit.start).lastOption
       .getOrElse(throw new IllegalArgumentException("ARRAY JOIN without FROM"))
     val baseRef = sql.substring(from.end, hit.start).trim
-    val clauseEnd = ClauseKw.findAllMatchIn(sql)
-      .find(m => m.start >= hit.end && !insideQuote(sql, m.start) &&
-        depthAt(sql, m.start) == 0)
+    val clauseEnd = lx.topLevelMatches(ClauseKw, hit.end).headOption
       .map(_.start).getOrElse(sql.length)
-    val items = ChSchemaParser.splitTopLevel(sql.substring(hit.end, clauseEnd), ',')
+    val items = SqlLex(sql.substring(hit.end, clauseEnd)).splitTopLevel(',')
       .map(_.trim).filter(_.nonEmpty)
     require(items.nonEmpty, "ARRAY JOIN with no array expressions")
     val parsed = items.map { it =>
-      AsSep.findAllMatchIn(it)
-        .filter(m => !insideQuote(it, m.start) && depthAt(it, m.start) == 0)
-        .toSeq.lastOption match {
+      SqlLex(it).topLevelMatches(AsSep).lastOption match {
         case Some(a) =>
           AjItem(it.substring(0, a.start).trim, it.substring(a.end).trim, bare = false)
         case None =>
@@ -975,10 +943,9 @@ object ChSql {
     * + parquet row-group pruning already do to any WHERE conjunct — so
     * the rewrite merges it: `PREWHERE p WHERE w` → `WHERE (p) AND (w)`. */
   def rewritePrewhere(sql: String): String = {
-    val m = topLevelMatches(sql, PrewhereRe).headOption.getOrElse(return sql)
-    val nextKw = ClauseKw.findAllMatchIn(sql)
-      .find(k => k.start >= m.end && !insideQuote(sql, k.start) &&
-        depthAt(sql, k.start) == 0)
+    val lx = SqlLex(sql)
+    val m = lx.topLevelMatches(PrewhereRe).headOption.getOrElse(return sql)
+    val nextKw = lx.topLevelMatches(ClauseKw, m.end).headOption
     val condEnd = nextKw.map(_.start).getOrElse(sql.length)
     val cond = sql.substring(m.end, condEnd).trim
     require(cond.nonEmpty, "PREWHERE with no condition")
@@ -986,9 +953,7 @@ object ChSql {
       if (tail.isEmpty) head else head + " " + tail
     val merged = nextKw match {
       case Some(k) if k.group(1).equalsIgnoreCase("where") =>
-        val wEnd = ClauseKw.findAllMatchIn(sql)
-          .find(x => x.start >= k.end && !insideQuote(sql, x.start) &&
-            depthAt(sql, x.start) == 0)
+        val wEnd = lx.topLevelMatches(ClauseKw, k.end).headOption
           .map(_.start).getOrElse(sql.length)
         val wcond = sql.substring(k.end, wEnd).trim
         glue(sql.substring(0, m.start) + s"WHERE ($cond) AND ($wcond)",
@@ -1007,12 +972,9 @@ object ChSql {
     * sets semantics; CH renders the same row as a separate totals
     * block). Only the TOP-LEVEL group-by is rewritten. */
   def rewriteWithTotals(sql: String): String = {
-    val tot = WithTotals.findAllMatchIn(sql)
-      .find(m => !insideQuote(sql, m.start) && depthAt(sql, m.start) == 0)
-      .getOrElse(return sql)
-    val gb = GroupBy.findAllMatchIn(sql.substring(0, tot.start)).toSeq
-      .filter(m => !insideQuote(sql, m.start) && depthAt(sql, m.start) == 0)
-      .lastOption
+    val lx = SqlLex(sql)
+    val tot = lx.topLevelMatches(WithTotals).headOption.getOrElse(return sql)
+    val gb = lx.topLevelMatches(GroupBy).filter(_.end <= tot.start).lastOption
       .getOrElse(throw new IllegalArgumentException(
         "WITH TOTALS without a matching GROUP BY"))
     val cols = sql.substring(gb.end, tot.start).trim
@@ -1021,30 +983,10 @@ object ChSql {
       sql.substring(tot.end)
   }
 
-  /** Paren depth at position `pos` (quote-aware). */
-  private def depthAt(s: String, pos: Int): Int = {
-    var depth = 0
-    var inQuote = false
-    var i = 0
-    while (i < pos) {
-      val c = s.charAt(i)
-      if (inQuote) {
-        if (c == '\\') i += 1 else if (c == '\'') inQuote = false
-      } else c match {
-        case '\'' => inQuote = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-      }
-      i += 1
-    }
-    depth
-  }
-
   private val ZeroArgCount = """(?i)\bcount\s*\(\s*\)""".r
 
   def zeroArgCount(sql: String): String =
-    replaceQuoteAware(sql, ZeroArgCount)(_ => Some("count(*)"))
+    SqlLex(sql).replace(ZeroArgCount)(_ => Some("count(*)"))
 
   /** CH names that collide with standard Spark functions are resolved
     * HERE, in the dialect pre-pass, instead of shadowing the session's
@@ -1053,76 +995,55 @@ object ChSql {
     * `instr` (same argument order, same 1-based/0-absent contract).
     * Spark's own `any` (boolean aggregate) and `position(substr IN
     * str)` keep working for non-dialect queries on the same session. */
-  def rewriteConflictingFunctions(sql: String): String = {
-    val renamed = replaceFnName(sql, "any", "any_value")
+  def rewriteConflictingFunctions(sql: String): String =
+    FnRenames.foldLeft(sql) { case (s, (re, to, veto)) =>
+      val lx = SqlLex(s)
+      lx.replace(re) { m =>
+        val argEnd = lx.matchParen(m.end - 1)
+        val vetoed = argEnd > 0 && veto.exists(v =>
+          SqlLex(s.substring(m.end, argEnd)).topLevelMatches(v).nonEmpty)
+        if (vetoed) None else Some(to + "(")
+      }
+    }
+
+  /** `from(` → `to(` renames (word-bounded, code only), applied in
+    * order; a call whose argument list holds a top-level match of the
+    * veto pattern keeps its name. */
+  private def fnRename(from: String, to: String, veto: String = null) =
+    (("(?i)\\b" + from + "\\s*\\(").r, to, Option(veto).map(_.r))
+
+  private val FnRenames = Seq(
+    fnRename("any", "any_value"),
     // CH `transform(x, [from], [to], default)` value remap collides with
     // Spark's higher-order array transform(arr, x -> …): only calls
     // WITHOUT a top-level lambda arrow are CH's remap form.
-    val remapped = replaceFnName(renamed, "transform", "chTransform",
-      skipArgs = args => "->".r.findAllMatchIn(args)
-        .exists(m => !insideQuote(args, m.start) && depthAt(args, m.start) == 0))
+    fnRename("transform", "chTransform", "->"),
     // CH xxHash64/xxHash32 are reference XXH at seed 0; Spark's
     // builtin xxhash64 (seed 42, non-spec tail) must keep working on
     // non-dialect queries, so the CH spelling renames to the ch-prefixed
     // registrations here instead of shadowing the registry.
-    val xx = replaceFnName(
-      replaceFnName(remapped, "xxHash64", "chXxHash64"),
-      "xxHash32", "chXxHash32")
+    fnRename("xxHash64", "chXxHash64"),
+    fnRename("xxHash32", "chXxHash32"),
     // CH `extract(s, re)` regex collides with ANSI EXTRACT(field FROM
     // ts), which Spark parses into a registry call to `extract` —
     // shadowing the registry would break the standard spelling on every
     // dialect session (judge r7 #1). Only calls WITHOUT a top-level
     // FROM keyword are CH's regex form; EXTRACT(YEAR FROM ts) stays
     // with Spark's builtin.
-    val ext = replaceFnName(xx, "extract", "chExtract",
-      skipArgs = args => """(?i)\bFROM\b""".r.findAllMatchIn(args)
-        .exists(m => !insideQuote(args, m.start) && depthAt(args, m.start) == 0))
+    fnRename("extract", "chExtract", """(?i)\bFROM\b"""),
     // CH monthName returns the FULL English name ('April'); Spark's
     // builtin monthname abbreviates ('Apr') — letting the builtin
     // resolve would be silently different, so the dialect session
     // reroutes to the full-name registration.
-    val mn = replaceFnName(ext, "monthName", "chMonthName")
+    fnRename("monthName", "chMonthName"),
     // CH version() reports the server's CH-style version; Spark's
     // builtin returns the Spark build string — dialect queries reroute
     // to the ch-prefixed registration (r19b).
-    val ver = replaceFnName(mn, "version", "chVersion")
+    fnRename("version", "chVersion"),
     // `position(substr IN str)` is ANSI syntax Spark parses natively —
     // rewriting it would produce invalid `instr(substr IN str)`; only
     // the CH two-argument spelling is renamed.
-    replaceFnName(ver, "position", "instr",
-      skipArgs = args => """(?i)\bIN\b""".r.findAllMatchIn(args)
-        .exists(m => !insideQuote(args, m.start) && depthAt(args, m.start) == 0))
-  }
-
-  /** Rename `from(` → `to(` outside string literals, word-bounded.
-    * `skipArgs` (given the raw argument-list text) can veto a rewrite.
-    * Quote parity is carried across consumed prefixes (`carry`): a match
-    * found INSIDE a literal leaves the remainder starting mid-quote, and
-    * re-scanning it with fresh state would misclassify later matches. */
-  private def replaceFnName(
-      sql: String,
-      from: String,
-      to: String,
-      skipArgs: String => Boolean = _ => false): String = {
-    val re = ("(?i)\\b" + from + "\\s*\\(").r
-    val out = new StringBuilder
-    var cur = sql
-    var carry = false
-    var m = re.findFirstMatchIn(cur)
-    while (m.isDefined) {
-      val mm = m.get
-      val argEnd = matchParen(cur, mm.end - 1)
-      val skip = insideQuote(cur, mm.start, carry) ||
-        (argEnd > 0 && skipArgs(cur.substring(mm.end, argEnd)))
-      if (skip) out.append(cur.substring(0, mm.end))
-      else out.append(cur.substring(0, mm.start)).append(to).append("(")
-      carry = quoteStateAfter(cur, mm.end, carry)
-      cur = cur.substring(mm.end)
-      m = re.findFirstMatchIn(cur)
-    }
-    out.append(cur)
-    out.toString
-  }
+    fnRename("position", "instr", """(?i)\bIN\b"""))
 
   private val ParametricAgg =
     """(?i)\b(quantileExactWeighted|quantileExactState|quantileExactMerge|quantilesExact|quantileExact|quantilesTiming|quantilesTDigest|quantileTDigest|quantileDeterministic|quantileTiming|quantileGK|quantiles|quantile|topKWeighted|topK|uniqUpTo|uniqCombined64|uniqCombined|groupArraySorted|groupArraySample|groupArrayLast|histogram|largestTriangleThreeBuckets|lttb|exponentialMovingAverage|groupConcat|[A-Za-z][A-Za-z0-9]*Resample|windowFunnel|sequenceMatch|sequenceCount)\s*\(""".r
@@ -1132,42 +1053,21 @@ object ChSql {
     * use (e.g. `quantileExact(0.5)(x)` → `quantileExact(x, 0.5)`).
     * Plain `f(args…)` calls are left untouched. */
   def rewriteParametricAggregates(sql: String): String = {
-    val out = new StringBuilder
-    var cur = sql
-    var carry = false
-    var m = ParametricAgg.findFirstMatchIn(cur)
-    while (m.isDefined) {
-      val mm = m.get
-      if (insideQuote(cur, mm.start, carry)) {
-        out.append(cur.substring(0, mm.end))
-        carry = quoteStateAfter(cur, mm.end, carry)
-        cur = cur.substring(mm.end)
-      } else {
-        val p1End = matchParen(cur, mm.end - 1)
-        require(p1End > 0, s"unbalanced parens in ${cur.substring(mm.start)}")
-        // a second argument list directly after → parametric form
-        var j = p1End + 1
-        while (j < cur.length && Character.isWhitespace(cur.charAt(j))) j += 1
-        if (j < cur.length && cur.charAt(j) == '(') {
-          val p2End = matchParen(cur, j)
-          require(p2End > 0, s"unbalanced parens in ${cur.substring(mm.start)}")
-          val params = cur.substring(mm.end, p1End)
-          val args = cur.substring(j + 1, p2End)
-          out.append(cur.substring(0, mm.start))
-            .append(mm.group(1)).append('(')
-            .append(args).append(", ").append(params).append(')')
-          carry = quoteStateAfter(cur, p2End + 1, carry)
-          cur = cur.substring(p2End + 1)
-        } else {
-          out.append(cur.substring(0, p1End + 1))
-          carry = quoteStateAfter(cur, p1End + 1, carry)
-          cur = cur.substring(p1End + 1)
-        }
-      }
-      m = ParametricAgg.findFirstMatchIn(cur)
+    val lx = SqlLex(sql)
+    lx.splice(ParametricAgg) { m =>
+      val p1End = lx.matchParen(m.end - 1)
+      require(p1End > 0, s"unbalanced parens in ${sql.substring(m.start)}")
+      // a second argument list directly after → parametric form
+      var j = p1End + 1
+      while (j < sql.length && Character.isWhitespace(sql.charAt(j))) j += 1
+      if (j < sql.length && sql.charAt(j) == '(') {
+        val p2End = lx.matchParen(j)
+        require(p2End > 0, s"unbalanced parens in ${sql.substring(m.start)}")
+        val params = sql.substring(m.end, p1End)
+        val args = sql.substring(j + 1, p2End)
+        Some((p2End + 1, s"${m.group(1)}($args, $params)"))
+      } else Some((p1End + 1, sql.substring(m.start, p1End + 1)))
     }
-    out.append(cur)
-    out.toString
   }
 
   // ---- table functions ----
@@ -1180,7 +1080,7 @@ object ChSql {
   /** Replace every `s3(…)`/`url(…)`-style call with a temp view created
     * from [[Sources]]. The view name is content-addressed so repeated
     * queries reuse the same relation (and Spark caches file listings).
-    * Matches inside single-quoted string literals are left untouched. */
+    * Matches inside literals and quoted identifiers are left untouched. */
   /** Content key for table-function temp views: 128-bit md5 hex — a
     * 32-bit hashCode collides across distinct argument lists, and
     * createOrReplaceTempView would then silently serve one call's data
@@ -1190,56 +1090,18 @@ object ChSql {
       .digest(content.getBytes("UTF-8")).map("%02x".format(_)).mkString
 
   def rewriteTableFunctions(spark: SparkSession, sql: String): String = {
-    val out = new StringBuilder
-    var cur = sql
-    var carry = false
-    var m = TableFn.findFirstMatchIn(cur)
-    while (m.isDefined) {
-      val mm = m.get
-      if (insideQuote(cur, mm.start, carry)) {
-        // literal text, not a call — emit up to and including the match
-        out.append(cur.substring(0, mm.end))
-        carry = quoteStateAfter(cur, mm.end, carry)
-        cur = cur.substring(mm.end)
-      } else {
-        val fn = mm.group(1).toLowerCase
-        val argStart = mm.end // after the '('
-        val argEnd = matchParen(cur, argStart - 1)
-        require(argEnd > 0, s"unbalanced parens in table function: ${cur.substring(mm.start)}")
-        val argStr = cur.substring(argStart, argEnd)
-        val view = createView(spark, fn, argStr)
-        out.append(cur.substring(0, mm.start)).append(view)
-        carry = quoteStateAfter(cur, argEnd + 1, carry)
-        cur = cur.substring(argEnd + 1)
-      }
-      m = TableFn.findFirstMatchIn(cur)
+    val lx = SqlLex(sql)
+    lx.splice(TableFn) { m =>
+      val argEnd = lx.matchParen(m.end - 1)
+      require(argEnd > 0,
+        s"unbalanced parens in table function: ${sql.substring(m.start)}")
+      Some((argEnd + 1,
+        createView(spark, m.group(1).toLowerCase, sql.substring(m.end, argEnd))))
     }
-    out.append(cur)
-    out.toString
-  }
-
-  /** Is position `pos` inside a single-quoted SQL string literal?
-    * `init` seeds the scan for strings that are a SUFFIX of a larger
-    * statement (the slicing rewriters above carry parity across
-    * consumed prefixes). */
-  private def insideQuote(s: String, pos: Int, init: Boolean = false): Boolean =
-    quoteStateAfter(s, pos, init)
-
-  /** Quote parity after scanning `s[0, until)` starting from `init`. */
-  private def quoteStateAfter(s: String, until: Int, init: Boolean): Boolean = {
-    var inQuote = init
-    var i = 0
-    while (i < until) {
-      val c = s.charAt(i)
-      if (inQuote && c == '\\') i += 1
-      else if (c == '\'') inQuote = !inQuote
-      i += 1
-    }
-    inQuote
   }
 
   private def createView(spark: SparkSession, fn: String, argStr: String): String = {
-    val rawArgs = ChSchemaParser.splitTopLevel(argStr, ',').map(_.trim)
+    val rawArgs = SqlLex(argStr).splitTopLevel(',').map(_.trim)
     if (PipelineTableFns.handles(fn)) {
       // LLM-pipeline operators as table functions (VERDICT r12 #2) —
       // the DataFrame is a lazy plan; re-registered per query so new
@@ -1347,76 +1209,4 @@ object ChSql {
     if (s.length >= 2 && s.startsWith("'") && s.endsWith("'"))
       s.substring(1, s.length - 1).replace("\\'", "'")
     else s
-
-  /** Index of the `)` matching the `(` at `open`, honoring quotes. */
-  private def matchParen(s: String, open: Int): Int = {
-    var depth = 0
-    var inQuote = false
-    var i = open
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQuote) {
-        if (c == '\\') i += 1 else if (c == '\'') inQuote = false
-      } else c match {
-        case '\'' => inQuote = true
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return i
-        case _ =>
-      }
-      i += 1
-    }
-    -1
-  }
-
-  /** Split on `sep` occurrences OUTSIDE single-quoted literals — a
-    * quoted value like `log_comment='a,b'` stays one piece. */
-  private def splitOutsideQuotes(s: String, sep: Char): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var inQuote = false
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQuote) { cur.append(c); if (c == '\'') inQuote = false }
-      else if (c == '\'') { cur.append(c); inQuote = true }
-      else if (c == sep) { out += cur.toString; cur.clear() }
-      else cur.append(c)
-      i += 1
-    }
-    out += cur.toString
-    out.result()
-  }
-
-  /** Last index of `kw` (case-insensitive, word-bounded) outside
-    * parens/quotes, or -1. */
-  private def lastTopLevelKeyword(s: String, kw: String): Int = {
-    var depth = 0
-    var inQuote = false
-    var i = 0
-    var last = -1
-    val lower = s.toLowerCase
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQuote) {
-        if (c == '\\') i += 1 else if (c == '\'') inQuote = false
-      } else c match {
-        case '\'' => inQuote = true
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case _ =>
-          // identifier boundary includes '_': `settings_json` must NOT
-          // match the keyword `settings`
-          def wordChar(ch: Char) = Character.isLetterOrDigit(ch) || ch == '_'
-          if (depth == 0 && lower.startsWith(kw, i) &&
-            (i == 0 || !wordChar(s.charAt(i - 1))) &&
-            (i + kw.length >= s.length ||
-              !wordChar(s.charAt(i + kw.length))))
-            last = i
-      }
-      i += 1
-    }
-    last
-  }
 }

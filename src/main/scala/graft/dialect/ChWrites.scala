@@ -149,7 +149,7 @@ object ChWrites {
     import spark.implicits._
     sql match {
       case InsertRemoteRe(fn, argStr, rest) =>
-        val lit = graft.types.ChSchemaParser.splitTopLevel(argStr, ',')
+        val lit = SqlLex(argStr).splitTopLevel(',')
           .map(_.trim).map(unquoteArg)
         require(lit.size >= 2,
           s"INSERT INTO FUNCTION $fn(…) needs (addresses, table) at least")
@@ -441,7 +441,7 @@ object ChWrites {
         else {
           val fields = spark.table(name).schema.fields
           val targets = Option(colList)
-            .map(graft.types.ChSchemaParser.splitTopLevel(_, ',')
+            .map(SqlLex(_).splitTopLevel(',')
               .map(ProjectionSql.clean).filter(_.nonEmpty).toSeq)
             .getOrElse(fields.map(_.name).toSeq)
           targets.foreach(c => require(fields.exists(_.name == c),
@@ -538,7 +538,7 @@ object ChWrites {
         val name = ProjectionSql.clean(rawName)
         val fields = spark.table(name).schema.fields
         val targets = Option(colList)
-          .map(graft.types.ChSchemaParser.splitTopLevel(_, ',')
+          .map(SqlLex(_).splitTopLevel(',')
               .map(ProjectionSql.clean).filter(_.nonEmpty).toSeq)
           .getOrElse(fields.map(_.name).toSeq)
         targets.foreach(c => require(fields.exists(_.name == c),
@@ -555,7 +555,7 @@ object ChWrites {
         // column-aliased subquery
         val name = ProjectionSql.clean(rawName)
         val fields = spark.table(name).schema.fields
-        val targets = graft.types.ChSchemaParser.splitTopLevel(colList, ',')
+        val targets = SqlLex(colList).splitTopLevel(',')
           .map(ProjectionSql.clean).filter(_.nonEmpty).toSeq
         targets.foreach(c => require(fields.exists(_.name == c),
           s"INSERT INTO $name: unknown column '$c'"))
@@ -858,7 +858,7 @@ object ChWrites {
     * literal containing "from x" never counts. */
   private def mvSource(select: String): String = {
     var found: Option[String] = None
-    ChSql.replaceQuoteAware(select, MvFromRe) { m =>
+    SqlLex(select).replace(MvFromRe) { m =>
       if (found.isEmpty && m.group(1).equalsIgnoreCase("FROM"))
         found = Some(m.group(2))
       None
@@ -937,7 +937,7 @@ object ChWrites {
         val re = ("""(?i)\b(FROM)\s+(""" +
           java.util.regex.Pattern.quote(mv.source) + """)\b""").r
         var substituted = false
-        val rewritten = ChSql.replaceQuoteAware(mv.select, re) { m =>
+        val rewritten = SqlLex(mv.select).replace(re) { m =>
           if (substituted) None
           else { substituted = true; Some(s"${m.group(1)} $batchView") }
         }

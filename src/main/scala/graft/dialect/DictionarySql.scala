@@ -73,7 +73,7 @@ object DictionarySql {
           }
         require(spark.catalog.tableExists(src),
           s"CREATE DICTIONARY $name: source table '$src' does not exist")
-        val attrs = graft.types.ChSchemaParser.splitTopLevel(cols, ',')
+        val attrs = SqlLex(cols).splitTopLevel(',')
           .map(_.trim).filter(_.nonEmpty).map {
             case AttrRe(n, t, dflt) =>
               // validate the type parses to a Spark type now
@@ -117,30 +117,16 @@ object DictionarySql {
     * form. Unknown dictionaries refuse loudly at rewrite time. */
   def rewriteFunctions(sql: String): String = {
     if (!sql.contains("dict")) return sql
-    val out = new StringBuilder
-    var rest = sql
-    var guard = 0
-    while (rest.nonEmpty && guard < 10000) {
-      guard += 1
-      DictFnRe.findFirstMatchIn(rest) match {
-        case None => out.append(rest); rest = ""
-        case Some(m) if inQuote(rest, m.start) =>
-          out.append(rest.substring(0, m.end)); rest = rest.substring(m.end)
-        case Some(m) =>
-          val open = m.end - 1
-          val close = matchParen(rest, open)
-          if (close < 0) { out.append(rest); rest = "" }
-          else {
-            val fn = m.group(1)
-            val inner = rewriteFunctions(rest.substring(open + 1, close))
-            out.append(rest.substring(0, m.start))
-              .append(render(fn, splitArgs(inner)))
-            rest = rest.substring(close + 1)
-          }
+    val lx = SqlLex(sql)
+    lx.splice(DictFnRe) { m =>
+      val close = lx.matchParen(m.end - 1)
+      if (close < 0) None
+      else {
+        val inner = rewriteFunctions(sql.substring(m.end, close))
+        Some((close + 1, render(m.group(1),
+          SqlLex(inner).splitTopLevel(',').map(_.trim).filter(_.nonEmpty))))
       }
     }
-    out.append(rest)
-    out.toString
   }
 
   private def render(fn: String, args: Seq[String]): String = {
@@ -208,46 +194,4 @@ object DictionarySql {
         "TIMESTAMP '1970-01-01 00:00:00'"
       else "NULL"
     }
-
-  // ---- small scanners (quote/paren aware) ----
-
-  private def inQuote(s: String, pos: Int): Boolean = {
-    var q = false; var i = 0
-    while (i < pos) {
-      val c = s.charAt(i)
-      if (q && c == '\\' && i + 1 < pos) i += 1
-      else if (c == '\'') q = !q
-      i += 1
-    }
-    q
-  }
-
-  private def matchParen(s: String, open: Int): Int = {
-    var depth = 0; var i = open; var q = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (q && c == '\\' && i + 1 < s.length) i += 1
-      else if (c == '\'') q = !q
-      else if (!q && c == '(') depth += 1
-      else if (!q && c == ')') { depth -= 1; if (depth == 0) return i }
-      i += 1
-    }
-    -1
-  }
-
-  private def splitArgs(s: String): Seq[String] = {
-    val out = Seq.newBuilder[String]
-    var depth = 0; var q = false; var start = 0; var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (q && c == '\\' && i + 1 < s.length) i += 1
-      else if (c == '\'') q = !q
-      else if (!q && (c == '(' || c == '[')) depth += 1
-      else if (!q && (c == ')' || c == ']')) depth -= 1
-      else if (!q && depth == 0 && c == ',') { out += s.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    out += s.substring(start)
-    out.result().map(_.trim).filter(_.nonEmpty)
-  }
 }

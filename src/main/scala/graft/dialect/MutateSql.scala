@@ -411,78 +411,28 @@ object MutateSql {
     bare(spark.table(n).queryExecution.analyzed)
   } catch { case scala.util.control.NonFatal(_) => false }
 
-  /** First top-level `WHERE` keyword — outside single quotes and parens,
-    * whole-word — splitting `<assignments> WHERE <condition>`. Returns
-    * None when no top-level WHERE exists (a quoted or parenthesized
-    * WHERE does not count). */
-  private def splitAtTopLevelWhere(s: String): Option[(String, String)] = {
-    var i = 0
-    var depth = 0
-    var inQuote = false
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQuote) {
-        if (c == '\\' && i + 1 < s.length) i += 1
-        else if (c == '\'') inQuote = false
-      }
-      else if (c == '\'') inQuote = true
-      else if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (depth == 0 && (c == 'w' || c == 'W') && i + 5 <= s.length &&
-        s.regionMatches(true, i, "WHERE", 0, 5) &&
-        (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1)) && s.charAt(i - 1) != '_') &&
-        (i + 5 == s.length || !Character.isLetterOrDigit(s.charAt(i + 5)) && s.charAt(i + 5) != '_')) {
-        val assigns = s.substring(0, i).trim
-        val cond = s.substring(i + 5).trim
-        if (assigns.nonEmpty && cond.nonEmpty) return Some((assigns, cond))
-      }
-      i += 1
-    }
-    None
-  }
+  private val WhereKw = """(?i)\bWHERE\b""".r
+  // an assignment's `=`: not part of <=, >=, ==, !=
+  private val AssignEq = """(?<![<>!=])=(?!=)""".r
 
-  /** Split `a = e1, b = e2` on top-level commas (parens and quotes
-    * respected — an expression like `concat(x, ',')` must not split). */
-  private def splitAssignments(s: String): Seq[(String, String)] = {
-    val parts = Seq.newBuilder[String]
-    var depth = 0
-    var inQuote = false
-    var start = 0
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (inQuote) {
-        if (c == '\\' && i + 1 < s.length) i += 1
-        else if (c == '\'') inQuote = false
-      }
-      else if (c == '\'') inQuote = true
-      else if (c == '(') depth += 1
-      else if (c == ')') depth -= 1
-      else if (c == ',' && depth == 0) { parts += s.substring(start, i); start = i + 1 }
-      i += 1
-    }
-    parts += s.substring(start)
-    parts.result().map(_.trim).filter(_.nonEmpty).map { a =>
-      val eq = {
-        // first top-level '=' not part of <=, >=, ==, !=
-        var j = 0; var d = 0; var q = false; var found = -1
-        while (j < a.length && found < 0) {
-          val c = a.charAt(j)
-          if (q) { if (c == '\'') q = false }
-          else if (c == '\'') q = true
-          else if (c == '(') d += 1
-          else if (c == ')') d -= 1
-          else if (c == '=' && d == 0 &&
-            (j == 0 || !"<>!=".contains(a.charAt(j - 1))) &&
-            (j + 1 >= a.length || a.charAt(j + 1) != '=')) found = j
-          j += 1
-        }
-        require(found > 0, s"UPDATE: malformed assignment '$a' (expected col = expr)")
-        found
-      }
+  /** First top-level `WHERE` keyword with text on both sides, splitting
+    * `<assignments> WHERE <condition>`. None when no top-level WHERE
+    * exists (a quoted or parenthesized WHERE does not count). */
+  private def splitAtTopLevelWhere(s: String): Option[(String, String)] =
+    SqlLex(s).topLevelMatches(WhereKw).iterator
+      .map(m => (s.substring(0, m.start).trim, s.substring(m.end).trim))
+      .find { case (assigns, cond) => assigns.nonEmpty && cond.nonEmpty }
+
+  /** Split `a = e1, b = e2` on top-level commas — an expression like
+    * `concat(x, ',')` must not split — and each assignment at its first
+    * top-level `=`. */
+  private def splitAssignments(s: String): Seq[(String, String)] =
+    SqlLex(s).splitTopLevel(',').map(_.trim).filter(_.nonEmpty).map { a =>
+      val eq = SqlLex(a).topLevelMatches(AssignEq).headOption.map(_.start)
+        .filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+          s"UPDATE: malformed assignment '$a' (expected col = expr)"))
       val colName = a.substring(0, eq).trim
         .stripPrefix("`").stripSuffix("`").stripPrefix("\"").stripSuffix("\"")
       (colName, a.substring(eq + 1).trim)
     }
-  }
 }

@@ -91,18 +91,15 @@ object Governance {
     ("(?is)^(INSERT|CREATE|ALTER|TRUNCATE|DELETE|OPTIMIZE|DROP|ATTACH|" +
       "DETACH|RENAME|EXCHANGE)\\b.*").r
   private val SetStmtRe = """(?is)^SET\b.*""".r
-  private val SetReadonlyRe = """(?is)^SET\s+`?readonly`?\s*=.*""".r
+  private val SetReadonlyRe = """(?is)^SET\s+[`"]?readonly[`"]?\s*=.*""".r
 
-  @annotation.tailrec
-  def stripStatementPrefix(s: String): String = {
-    val t = s.dropWhile(c => c.isWhitespace || c == '(' || c == ';')
-    if (t.startsWith("--"))
-      stripStatementPrefix(t.dropWhile(c => c != '\n' && c != '\r'))
-    else if (t.startsWith("/*")) {
-      val end = t.indexOf("*/", 2)
-      if (end < 0) "" else stripStatementPrefix(t.substring(end + 2))
-    } else t
-  }
+  /** The statement as dispatch sees it — every comment turned into a
+    * space ([[graft.dialect.ChSql.stripComments]]), so a comment inside
+    * `SET /* c */ readonly = 0` cannot hide the setting — from its first
+    * keyword on: leading whitespace, `(` and `;` skipped. */
+  def stripStatementPrefix(s: String): String =
+    graft.dialect.ChSql.stripComments(s)
+      .dropWhile(c => c.isWhitespace || c == '(' || c == ';')
 
   def isStateChanging(sql: String): Boolean =
     WriteStmtRe.matches(stripStatementPrefix(sql))

@@ -1,13 +1,12 @@
 package graft.service
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import com.sun.net.httpserver.{HttpExchange, HttpHandler}
 import org.apache.spark.sql.SparkSession
 
 /** The reference's service shell re-expressed over [[QueryService]]:
@@ -15,8 +14,9 @@ import org.apache.spark.sql.SparkSession
   * `GET /hc` (reference `http_server/http_server.go:50,83-85`,
   * `main.go:59`) plus an internal metrics server exposing Prometheus
   * text (`observability/internal_http.go:22`, started at
-  * `main.go:44-50`). Here one embedded JDK server carries all three
-  * surfaces — no framework, no new dependency:
+  * `main.go:44-50`). Here one embedded server ([[RawHttpServer]], the
+  * door's own socket loop) carries all three surfaces — no framework,
+  * no new dependency:
   *
   *   - `GET /hc` → `200 ok` (byte-for-byte the reference's health reply)
   *   - `POST /query` → the full request envelope: JSON
@@ -78,12 +78,6 @@ class QueryServer(
       * spellings; health/metrics handles stay open, as CH's `/ping`
       * does. Mismatches answer 403 with CH's code-516 text. */
     auth: Option[(String, String)] = None,
-    /** r17: serve over the door's OWN socket loop ([[RawHttpServer]])
-      * — same handlers, plus progressive `X-ClickHouse-Progress`
-      * header lines while a query runs (the one behavior the JDK
-      * `HttpServer` cannot express: it writes its header block once,
-      * at commit). `false` = the JDK transport, as a kill switch. */
-    rawDoor: Boolean = true,
     /** r18: serve HTTPS (CH's 8443 posture) — raw transport only; the
       * listener becomes an SSLServerSocket, everything above is
       * unchanged. See [[Tls]]. */
@@ -105,14 +99,13 @@ class QueryServer(
 
   private val journal = journalDir.map(new QueryJournal(_))
 
-  private var server: HttpServer = _
   private var rawServer: RawHttpServer = _
 
   /** Bind and serve; returns the bound port (ephemeral when `port=0`).
     * Journal recovery runs BEFORE the listener binds, so a `rerun`
     * recovery never races fresh traffic. */
   def start(): Int = synchronized {
-    require(server == null && rawServer == null, "already started")
+    require(rawServer == null, "already started")
     recoverJournal()
     val contexts = scala.collection.mutable.ArrayBuffer
       .empty[(String, HttpHandler)]
@@ -219,43 +212,21 @@ class QueryServer(
       }
     })
     started.set(System.currentTimeMillis())
-    if (rawDoor) {
-      rawServer = new RawHttpServer("127.0.0.1", port, tls)
-      contexts.foreach { case (p, h) => rawServer.createContext(p, h) }
-      rawServer.start()
-    } else {
-      require(tls.isEmpty,
-        "HTTPS needs the raw transport (rawDoor = true)")
-      server = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
-      contexts.foreach { case (p, h) => server.createContext(p, h) }
-      // small fixed pool: control-plane requests only; Spark owns the cores
-      server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4, r => {
-        val t = new Thread(r, "graft-query-server"); t.setDaemon(true); t
-      }))
-      // as StaticHttp: start from a daemon thread so the dispatcher
-      // inherits daemon status and a finished main can exit the JVM
-      val starter = new Thread(() => server.start(), "graft-query-server-starter")
-      starter.setDaemon(true)
-      starter.start()
-      starter.join()
-      server.getAddress.getPort
-    }
+    rawServer = new RawHttpServer("127.0.0.1", port, tls)
+    contexts.foreach { case (p, h) => rawServer.createContext(p, h) }
+    rawServer.start()
   }
 
   /** Graceful shutdown (reference `http_server.go:87-90`): close the
     * LISTENER first — no new work is admitted into a dying server
     * (review finding: a drain loop before the close kept accepting and
     * could drain forever under steady traffic) — then let in-flight
-    * exchanges finish within the drain budget. `HttpServer.stop(delay)`
+    * exchanges finish within the drain budget. `RawHttpServer.stop`
     * is exactly this contract: socket closes immediately, the call
     * blocks until current handlers complete or ~delay seconds pass. */
   def stop(drainMs: Long = 30000L): Unit = synchronized {
     val delaySec =
       if (drainMs <= 0) 0 else math.max(1, math.ceil(drainMs / 1000.0).toInt)
-    if (server != null) {
-      server.stop(delaySec)
-      server = null
-    }
     if (rawServer != null) {
       rawServer.stop(delaySec)
       rawServer = null
@@ -438,8 +409,7 @@ class QueryServer(
           // spools to ONE parquet file (a Spark job; the driver never
           // materializes rows), then the bytes go out Content-Length'd
           val wantsParquet = {
-            val main = graft.dialect.ChSql.stripOnCluster(
-              graft.dialect.ChSql.substituteMacros(req.query, req.macros))
+            val main = graft.dialect.ChSql.statement(req.query, req.macros)
             val stmtFmt =
               if (graft.dialect.ChWrites.isWrite(main)) None
               else graft.dialect.ChSql.requestedFormat(main)
@@ -1309,12 +1279,9 @@ class QueryServer(
 
   /** `send_progress_in_http_headers=1`: add `X-ClickHouse-Progress`
     * headers (cumulative row counts, ≥100 ms apart) while the response
-    * is STILL UNCOMMITTED. The JDK HttpServer writes its header block
-    * once, at commit — so unlike CH (which flushes header lines
-    * progressively before the body), the client reads the accumulated
-    * progress values when the response commits: several increasing
-    * values on a response that spooled, the pre-commit ones on a
-    * chunked stream. The per-row cost is one branch once the response
+    * is STILL UNCOMMITTED; [[RawHttpServer]] writes each one to the
+    * wire as it is added, as CH flushes header lines progressively
+    * before the body. The per-row cost is one branch once the response
     * commits. */
   private def progressIterator(ex: HttpExchange, sink: SpoolSink,
       meta: QueryService.QueryResult,
@@ -1459,10 +1426,9 @@ class QueryServer(
   /** CH `JSONEachRowWithProgress`: each line is an EVENT object —
     * `{"progress":{…}}` at ≥[[ProgressIntervalNs]] cadence (flushed
     * immediately, so a client on a long-running query sees progress
-    * WHILE it runs — the JDK HttpServer cannot flush progressive
-    * HEADERS mid-response, which is why the header spelling reports
-    * accumulate-at-commit and this format is the live channel), data
-    * rows wrapped as `{"row":{…}}`, and a final
+    * WHILE it runs, also after the response commits, when progress
+    * header lines can no longer be sent), data rows wrapped as
+    * `{"row":{…}}`, and a final
     * `{"rows_before_limit_at_least":…}` — the event layout of CH's
     * streaming JSON formats. */
   private def ndjsonProgressStream(meta: QueryService.QueryResult,

@@ -117,9 +117,10 @@ class QueryService(spark: SparkSession) {
 
   ChFunctions.register(spark)
 
-  /** Build the DataFrame for a request: run init queries, rewrite the
-    * main query through the dialect front door. The plan is lazy — the
-    * caller picks the action (collect, write, explain). */
+  /** Build the DataFrame for a request: run init queries, then the main
+    * statement through the dialect's one router ([[ChSql.run]]). The
+    * plan is lazy — the caller picks the action (collect, write,
+    * explain). */
   def executeToDf(req: QueryRequest): (DataFrame, Map[String, String]) = {
     // readonly scans the WHOLE request text (init + main, macro-
     // substituted) BEFORE anything executes — CH's READONLY contract
@@ -161,45 +162,7 @@ class QueryService(spark: SparkSession) {
     req.initQueries.foreach { q =>
       ChSql.sql(spark, q, req.macros).collect()
     }
-    // write statements (INSERT INTO …/CREATE TABLE … AS SELECT) as the
-    // MAIN query return their status frame — same contract as init-path
-    // writes through ChSql.sql
-    val main = ChSql.stripOnCluster(ChSql.substituteMacros(req.query, req.macros))
-    // ATTACH TABLE as the MAIN statement: route to the catalog like the
-    // init path does — it otherwise fell through to Spark's own parser
-    // (review-era gap surfaced by the schema-only persistence test)
-    if (graft.core.Catalog.isAttach(main)) {
-      import spark.implicits._
-      val t = graft.core.Catalog.attach(spark, main)
-      return (Seq((t.name, "attached")).toDF("table", "status"), Map.empty)
-    }
-    if (graft.dialect.ChWrites.isWrite(main))
-      return (graft.dialect.ChWrites.run(spark, main, req.macros), Map.empty)
-    // projection DDL as the main query (advisor r9: the statement was
-    // reachable only through ChSql.sql — one of the two front doors)
-    if (graft.dialect.ProjectionSql.isProjection(main))
-      return (graft.dialect.ProjectionSql.run(spark, main), Map.empty)
-    if (graft.dialect.OptimizeSql.isOptimize(main))
-      return (graft.dialect.OptimizeSql.run(spark, main), Map.empty)
-    if (graft.dialect.MutateSql.isMutation(main))
-      return (graft.dialect.MutateSql.run(spark, main, req.macros), Map.empty)
-    // schema evolution / dictionaries as the main statement — same
-    // routing as the init path's ChSql.sql front door
-    if (graft.dialect.AlterSchemaSql.isAlterSchema(main))
-      return (graft.dialect.AlterSchemaSql.run(spark, main), Map.empty)
-    if (graft.dialect.DictionarySql.isDictionary(main))
-      return (graft.dialect.DictionarySql.run(spark, main), Map.empty)
-    if (graft.dialect.ShowSql.isIntrospection(main))
-      return (graft.dialect.ShowSql.run(spark, main), Map.empty)
-    if (graft.dialect.DropSql.isDrop(main))
-      return (graft.dialect.DropSql.run(spark, main), Map.empty)
-    if (graft.dialect.KillSql.isKill(main))
-      return (graft.dialect.KillSql.run(spark, main), Map.empty)
-    if (graft.dialect.QuotaSql.isQuota(main))
-      return (graft.dialect.QuotaSql.run(spark, main), Map.empty)
-    val r = ChSql.rewrite(spark, req.query, req.macros)
-    ChSql.applySettings(spark, r.settings)
-    (ChSql.finish(spark, r), r.settings)
+    ChSql.run(spark, req.query, req.macros)
   }
 
   /** Full request → result-envelope path (O1+O6+O7). A `sinkPath`
@@ -209,7 +172,7 @@ class QueryService(spark: SparkSession) {
     * recomputed — that makes journal replay of a
     * completed-but-unacknowledged request idempotent. */
   def execute(req: QueryRequest): QueryResult = {
-    val main = ChSql.stripOnCluster(ChSql.substituteMacros(req.query, req.macros))
+    val main = ChSql.statement(req.query, req.macros)
     val fmt =
       if (graft.dialect.ChWrites.isWrite(main)) None // INSERT's FORMAT is the INPUT format
       else ChSql.requestedFormat(main)
@@ -296,7 +259,7 @@ class QueryService(spark: SparkSession) {
     * statements produce their status frame as a one-row iterator. */
   def executeStreamed[A](req: QueryRequest)(
       consume: (QueryResult, Iterator[Seq[Any]]) => A): A = {
-    val main = ChSql.stripOnCluster(ChSql.substituteMacros(req.query, req.macros))
+    val main = ChSql.statement(req.query, req.macros)
     val fmt =
       if (graft.dialect.ChWrites.isWrite(main)) None
       else ChSql.requestedFormat(main)

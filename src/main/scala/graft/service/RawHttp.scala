@@ -51,9 +51,8 @@ import com.sun.net.httpserver.{Headers, HttpContext, HttpExchange, HttpHandler, 
   * Scale posture: one thread per live connection off a daemon pool,
   * CAPPED at [[RawHttpServer.MaxConnections]] (excess connections get
   * an immediate 503) — the bounded-door posture the JDK transport's
-  * 4-thread executor expressed; Spark owns the cores. The JDK
-  * transport remains behind `QueryServer(rawDoor = false)` as the kill
-  * switch.
+  * 4-thread executor expressed; Spark owns the cores. It is the HTTP
+  * door's only transport.
   */
 final class RawHttpServer(host: String, port: Int,
     /** HTTPS (r18): TLS at the listener, the HTTP loop unchanged. */
@@ -78,9 +77,9 @@ final class RawHttpServer(host: String, port: Int,
 
   private def route(path: String): Option[HttpHandler] = {
     // JDK ServerImpl semantics — plain string prefix, longest context
-    // wins — so the raw door and the `rawDoor=false` kill switch agree
-    // on every path, including non-'/'-boundary prefixes like /queryX
-    // (advisor r17: the two transports must not disagree on routing)
+    // wins — on every path, including non-'/'-boundary prefixes like
+    // /queryX, so handlers written against the JDK contract route as
+    // they would there
     val hits = routes.filter { case (p, _) => path.startsWith(p) }
     if (hits.isEmpty) None else Some(hits.maxBy(_._1.length)._2)
   }

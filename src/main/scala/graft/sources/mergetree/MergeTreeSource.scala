@@ -307,7 +307,7 @@ private final class MergeTreeScanBuilder(
     // lexicographic range its code range excludes). Equality/IN stay
     // sound: name↔code is a bijection, membership is order-free.
     val keyIsEnum = key.exists { k =>
-      try graft.types.ChSchemaParser.splitTopLevel(ddl, ',').map(_.trim)
+      try graft.dialect.SqlLex(ddl).splitTopLevel(',').map(_.trim)
         .exists(c => c.startsWith(s"`$k`") && c.contains("Enum"))
       catch { case _: Exception => true } // unparseable → be conservative
     }

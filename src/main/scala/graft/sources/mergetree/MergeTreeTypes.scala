@@ -85,7 +85,7 @@ private[mergetree] object ChType {
           case _ => ArrayT(inner)
         }
       case "Enum8" | "Enum16" =>
-        val pairs = ChSchemaParser.splitTopLevel(args, ',').map { p =>
+        val pairs = graft.dialect.SqlLex(args).splitTopLevel(',').map { p =>
           val eq = p.lastIndexOf('=')
           require(eq > 0, s"malformed enum entry: $p")
           val name = p.substring(0, eq).trim.stripPrefix("'").stripSuffix("'").replace("\\'", "'")
@@ -98,7 +98,7 @@ private[mergetree] object ChType {
       case "Date32" => Date32T
       case "DateTime" | "DateTime32" => DateTime32
       case "DateTime64" =>
-        val scale = ChSchemaParser.splitTopLevel(args, ',').headOption
+        val scale = graft.dialect.SqlLex(args).splitTopLevel(',').headOption
           .map(_.trim.toInt).getOrElse(3)
         require(scale >= 0 && scale <= 9, s"DateTime64 scale $scale")
         DateTime64T(scale)
@@ -117,7 +117,7 @@ private[mergetree] object ChType {
       case "Decimal64" => DecimalT(18, args.trim.toInt)
       case "Decimal128" => DecimalT(38, args.trim.toInt)
       case "Decimal" =>
-        val ps = ChSchemaParser.splitTopLevel(args, ',').map(_.trim.toInt)
+        val ps = graft.dialect.SqlLex(args).splitTopLevel(',').map(_.trim.toInt)
         require(ps.nonEmpty && ps.head >= 1 && ps.head <= 38,
           s"Decimal precision out of range: $args")
         DecimalT(ps.head, if (ps.length > 1) ps(1) else 0)

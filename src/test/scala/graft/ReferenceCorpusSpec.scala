@@ -355,7 +355,7 @@ SETTINGS disk = disk(type = web, endpoint = '$endpoint')"""
     val ddl = githubEventsAttach("ignored")
     val colsDdl = ddl.substring(ddl.indexOf("(\n") + 1, ddl.lastIndexOf(")\nENGINE"))
     val columns: Seq[(String, String)] =
-      graft.types.ChSchemaParser.splitTopLevel(colsDdl, ',').map(_.trim).filter(_.nonEmpty)
+      graft.dialect.SqlLex(colsDdl).splitTopLevel(',').map(_.trim).filter(_.nonEmpty)
         .map { c =>
           val end = c.indexOf('`', 1)
           (c.substring(1, end), c.substring(end + 1).trim)

@@ -638,4 +638,83 @@ class ChSqlSpec extends AnyFunSuite {
       .collect().map(_.getInt(0)).toSeq
     assert(got == Seq(4, 5, 6, 7), got.mkString(", "))
   }
+
+  // ---- one lexer: comments, quoted identifiers and escapes ----
+
+  test("a commented-out SETTINGS clause is not applied") {
+    val r = ChSql.rewrite(graft.TestSpark.spark,
+      "SELECT 1 FROM t -- SETTINGS max_threads=1")
+    assert(r.settings.isEmpty, r.settings)
+    assert(!r.sql.contains("SETTINGS"), r.sql)
+  }
+
+  test("an apostrophe in a comment or quoted identifier leaves SETTINGS and LIMIT n, m working") {
+    val spark = graft.TestSpark.spark
+    Seq(
+      "SELECT number AS n -- don't\nFROM numbers(10) ORDER BY n",
+      "SELECT number AS n /* it's */ FROM numbers(10) ORDER BY n",
+      "SELECT number AS `it's` FROM numbers(10) ORDER BY 1"
+    ).foreach { head =>
+      val (df, settings) = ChSql.run(spark, head + " LIMIT 2, 3 SETTINGS max_threads=1")
+      assert(settings == Map("max_threads" -> "1"), head)
+      assert(df.collect().map(_.getLong(0)).toSeq == Seq(2L, 3L, 4L), head)
+    }
+  }
+
+  test("an escaped quote in a SETTINGS value keeps the clause extractable") {
+    val q = "SELECT 1 AS x SETTINGS log_comment='a\\',b', max_threads=2"
+    val (sql, s) = ChSql.extractSettings(q)
+    assert(sql == "SELECT 1 AS x")
+    assert(s == Map("log_comment" -> "a',b", "max_threads" -> "2"))
+    assert(ChSql.sql(graft.TestSpark.spark, q).collect().map(_.getInt(0)).toSeq == Seq(1))
+  }
+
+  test("a statement behind a leading comment routes like the bare statement") {
+    val spark = graft.TestSpark.spark
+    val out = java.nio.file.Files.createTempDirectory("graft_cmt").toString + "/p"
+    val insert = s"-- note\nINSERT INTO '$out' SELECT 1 AS a"
+    assert(ChWrites.isWrite(ChSql.statement(insert)))
+    assert(graft.service.Governance.isStateChanging(insert))
+    new graft.service.QueryService(spark)
+      .execute(graft.service.QueryService.QueryRequest(insert))
+    assert(spark.read.parquet(out).collect().map(_.getInt(0)).toSeq == Seq(1))
+    val wh = java.nio.file.Files.createTempDirectory("graft_cmt_wh").toString
+    spark.conf.set(ChWrites.WarehouseConf, wh)
+    try {
+      ChSql.sql(spark, "/* c */ CREATE TABLE cmt_ctas ENGINE = MergeTree " +
+        "ORDER BY a AS SELECT 7 AS a").collect()
+      assert(ChSql.sql(spark, "SELECT a FROM cmt_ctas").collect()
+        .map(_.getInt(0)).toSeq == Seq(7))
+    } finally spark.conf.unset(ChWrites.WarehouseConf)
+  }
+
+  test("rewrites never fire inside comments") {
+    val r = ChSql.rewrite(graft.TestSpark.spark,
+      "SELECT 1 AS x /* GLOBAL IN ( */ FROM t")
+    assert(r.sql == "SELECT 1 AS x   FROM t", r.sql)
+    assert(ChSql.stripGlobal("SELECT '/* GLOBAL IN ( */' AS x") ==
+      "SELECT '/* GLOBAL IN ( */' AS x")
+  }
+
+  test("a trailing comment after FORMAT keeps the requested format") {
+    assert(ChSql.requestedFormat(ChSql.statement("SELECT 1 FORMAT JSON -- x")) == Some("JSON"))
+    val r = ChSql.rewrite(graft.TestSpark.spark, "SELECT 1 AS x FORMAT JSON -- x")
+    assert(!r.sql.contains("FORMAT"), r.sql)
+  }
+
+  test("INSERT … FORMAT CSV inline data with -- and /* reaches the table unchanged") {
+    val spark = graft.TestSpark.spark
+    val wh = java.nio.file.Files.createTempDirectory("graft_cmt_csv").toString
+    spark.conf.set(ChWrites.WarehouseConf, wh)
+    try {
+      ChSql.sql(spark, "CREATE TABLE cmt_csv (id Int64, s String) " +
+        "ENGINE = MergeTree ORDER BY id")
+      new graft.service.QueryService(spark).execute(
+        graft.service.QueryService.QueryRequest(
+          "INSERT INTO cmt_csv FORMAT CSV\n1,a -- b\n2,\"/* c */\"\n3,d/*e"))
+      val got = ChSql.sql(spark, "SELECT id, s FROM cmt_csv ORDER BY id")
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+      assert(got == Seq((1L, "a -- b"), (2L, "/* c */"), (3L, "d/*e")), got)
+    } finally spark.conf.unset(ChWrites.WarehouseConf)
+  }
 }

@@ -304,6 +304,16 @@ class GovernanceSpec extends AnyFunSuite {
         svc.execute(QueryRequest("SET readonly = 0"))
       }
       assert(e4.getMessage.contains("protected"), e4.getMessage)
+      // a comment inside the SET cannot hide the protected name: the
+      // guard classifies the comment-stripped text dispatch runs
+      Seq("SET /* c */ readonly = 0", "SET readonly -- c\n= 0",
+          "# note\nSET `readonly`/**/= 0").foreach { q =>
+        val e = intercept[IllegalArgumentException] {
+          svc.execute(QueryRequest(q))
+        }
+        assert(e.getMessage.contains("protected"), s"$q: ${e.getMessage}")
+      }
+      assert(spark.conf.get(Governance.Readonly) == "2")
       val e5 = intercept[IllegalArgumentException] {
         svc.execute(QueryRequest("INSERT INTO whatever VALUES (1)"))
       }

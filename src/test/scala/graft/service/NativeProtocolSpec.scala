@@ -469,10 +469,26 @@ class NativeProtocolSpec extends AnyFunSuite {
           assert(header == Seq("id" -> "Int64", "v(a,b)" -> "String"), header)
           val r = c.query("SELECT `id`, `v(a,b)` AS v FROM native_ins_q ORDER BY id")
           assert(r.rows == Seq(Seq(1L, "x"), Seq(2L, "y")))
+          // a leading comment keeps the statement on the client-data route
+          c.insert("-- load\nINSERT INTO native_ins_q /* cols */ (`id`, `v(a,b)`) VALUES",
+            Seq(Seq(
+              Col("id", TInt64, IndexedSeq(3L)),
+              Col("v(a,b)", TString, IndexedSeq("z")))))
+          assert(c.query("SELECT count() AS n FROM native_ins_q").rows == Seq(Seq(3L)))
           c.exec("DROP TABLE native_ins_q")
         } finally c.close()
       }
     } finally spark.conf.unset(graft.dialect.ChWrites.WarehouseConf)
+  }
+
+  test("INSERT openers: comments stripped, quoted names unquoted, empty list refused") {
+    val tail = """(?is)^\s*(?:VALUES)?\s*$""".r
+    assert(InsertOpeners.parse("# n\nINSERT INTO t /* ( */ (`a,b`, \"c\"\"d\") VALUES", tail) ==
+      Some(("t", Some(Seq("a,b", "c\"d")))))
+    assert(InsertOpeners.parse("INSERT INTO db.t", tail) == Some(("db.t", None)))
+    assert(InsertOpeners.parse("INSERT INTO t ()", tail).isEmpty)
+    assert(InsertOpeners.parse("INSERT INTO t (`a)", tail).isEmpty)
+    assert(InsertOpeners.parse("INSERT INTO t (a) SELECT 1", tail).isEmpty)
   }
 
   test("query parameters: {name:Type} substitutes the client-bound value") {

@@ -618,6 +618,16 @@ class QueryServerSpec extends AnyFunSuite {
       HttpResponse.BodyHandlers.ofString()).statusCode() == 200)
     assert(post("/?default_format=CSV",
       "SELECT count() FROM xreq_parq").body() == "6\n")
+    // a leading comment keeps the statement on the binary-body route
+    val q3 = java.net.URLEncoder.encode(
+      "/* load */ INSERT INTO xreq_parq FORMAT Parquet", "UTF-8")
+    val ins3 = client.send(
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/?query=$q3"))
+        .POST(HttpRequest.BodyPublishers.ofByteArray(bytes)).build(),
+      HttpResponse.BodyHandlers.ofString())
+    assert(ins3.statusCode() == 200, ins3.body())
+    assert(post("/?default_format=CSV",
+      "SELECT count() FROM xreq_parq").body() == "9\n")
     // an empty body is the caller's fault
     assert(client.send(
       HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/?query=$q"))

@@ -151,4 +151,15 @@ class QueryServiceSpec extends AnyFunSuite {
     assert(spark.read.parquet(dir).filter("n_nationkey % 2 = 0").count() == 0)
     graft.plans.AggProjections.drop(spark, dir, "svc_p")
   }
+
+  test("SYSTEM and EXPLAIN statements answer through the service as through ChSql.sql") {
+    val svc = new QueryService(spark)
+    val flush = svc.execute(QueryService.QueryRequest("SYSTEM FLUSH LOGS"))
+    assert(flush.cols == Seq("statement", "status"))
+    assert(flush.rows == Seq(Seq("FLUSH LOGS", "noop")))
+    val explain = svc.execute(QueryService.QueryRequest("EXPLAIN SELECT 1"))
+    assert(explain.cols ==
+      graft.dialect.ChSql.sql(spark, "EXPLAIN SELECT 1").columns.toSeq)
+    assert(explain.cols == Seq("explain") && explain.rows.size > 1, explain.rows)
+  }
 }

@@ -3,6 +3,8 @@ package graft.types
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.dialect.SqlLex
+
 class ChSchemaParserSpec extends AnyFunSuite {
 
   /** The NYC-taxi schema string embedded in every CSV table-function call
@@ -133,14 +135,14 @@ class ChSchemaParserSpec extends AnyFunSuite {
   }
 
   test("splitTopLevel respects backticked and double-quoted identifiers (r15)") {
-    assert(ChSchemaParser.splitTopLevel("a, `x,y`, b", ',').map(_.trim) ==
+    assert(SqlLex("a, `x,y`, b").splitTopLevel(',').map(_.trim) ==
       Seq("a", "`x,y`", "b"))
-    assert(ChSchemaParser.splitTopLevel("""a, "x,y", b""", ',').map(_.trim) ==
+    assert(SqlLex("""a, "x,y", b""").splitTopLevel(',').map(_.trim) ==
       Seq("a", "\"x,y\"", "b"))
     // parens inside quoted identifiers do not disturb the depth count
-    assert(ChSchemaParser.splitTopLevel("`v(a`, `w)b`", ',').map(_.trim) ==
+    assert(SqlLex("`v(a`, `w)b`").splitTopLevel(',').map(_.trim) ==
       Seq("`v(a`", "`w)b`"))
-    assert(ChSchemaParser.splitTopLevel("""f(a, b), "g(h", c""", ',')
+    assert(SqlLex("""f(a, b), "g(h", c""").splitTopLevel(',')
       .map(_.trim) == Seq("f(a, b)", "\"g(h\"", "c"))
   }
 }
