@@ -392,74 +392,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Vectorized first-level agg hash map (r14, the q3 finding):
-      // q3_uniq_exact sf10 0.39 → 0.26 s median with AQE on (Q3Matrix);
-      // automatic fallback for unsupported key shapes
-      .config("spark.sql.codegen.aggregate.map.vectorized.enable", "true")
-      // 16k reader batches (r15, the q2 finding — BatchSizeProbe, two
-      // windows): q2 −20/−34%, q4 −7/−25%, q1/q3 neutral, GC flat
-      .config("spark.sql.parquet.columnarReaderBatchSize", "16384")
-      // Task-memory page size. Spark's default scales with the execution
-      // pool (min(64MB, pool/cores/16)) — under a multi-ten-GB driver
-      // heap every sort/agg task grabs fresh 64MB zero-filled pages, and
-      // a run of many short tasks turns into tens of GB of page-fault
-      // churn (measured here: q5 2.9 s → 14-19 s at -Xmx89g, the r4/r5
-      // driver-bench artifact). 4MB is plenty per task at this
-      // partition size and keeps the allocator reusing warm pages.
-      .config("spark.buffer.pageSize", "4m")
-      // NOTE: parquet aggregate pushdown (count from footers) needs the
-      // DSv2 scan (useV1SourceList=""); measured end-to-end here the v2
-      // reader is net slower at this scale — scheduling overhead
-      // dominates — so the default v1 scan stays. PlanSpec pins the
-      // pushdown capability with the explicit confs.
-      .config("spark.ui.enabled", "false")
-      // Leaf-scan packing (r11, the q3 finding): Spark's default
-      // minPartitionNum = cores splits a 32-small-file table into 32
-      // tiny scan tasks. Measured on this box (Q3Probe decomposition):
-      // the partial-distinct map stage over 32×47k-row tasks burns
-      // 5.9µs/row and 0.31 s wall; the SAME rows in 8 tasks cost
-      // 0.33µs/row and 0.13 s wall — per-row cost inflates ~10× under
-      // 32-way concurrency (GC-pause amplification across concurrent
-      // tasks + memory-subsystem contention), and the shuffle grows 4×
-      // (more per-partition duplicate keys). But the floor alone also
-      // CAPS big scans — maxSplitBytes = min(maxPartitionBytes,
-      // max(openCost, totalBytes/minPartitionNum)) — so the sf10 1 GB
-      // lineitem scan ran 8 tasks on 32 cores (q4: 3-5 s vs 1.3 s at
-      // full width). Pairing the floor with a 32 MB size cap expresses
-      // both regimes: small tables pack to cores/4 tasks, anything
-      // ≥ cores/4 × 32 MB fans back out to every core.
-      // SPARK_GRAFT_MIN_PART / SPARK_GRAFT_MAX_PART_BYTES override
-      // independently; 0 = leave Spark's default for that knob.
-    val minPart = sys.env.getOrElse("SPARK_GRAFT_MIN_PART",
-      math.max(1, cpus.toInt / 4).toString)
-    val maxPartBytes = sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES",
-      (32L * 1024 * 1024).toString)
-    val builder1 = if (minPart == "0") builder0
-      else builder0.config("spark.sql.files.minPartitionNum", minPart)
-    val builder2 = if (maxPartBytes == "0") builder1
-      else builder1.config("spark.sql.files.maxPartitionBytes", maxPartBytes)
-    // OFF-HEAP column vectors: DEFAULT OFF since r14 (Engine.scala has
-    // the full rationale) — on-heap won q4 in every clean-window A/B
-    // (r13 ×3, r14 Q4Probe: on-heap 0.96-1.9 s vs off-heap 4.4-28 s
-    // back-to-back) and off-heap amplifies 10-15× under host
-    // contention. SPARK_GRAFT_OFFHEAP=<bytes> opts back in (the q2
-    // wide-row GC-at-scale case).
-    val offheap = sys.env.getOrElse("SPARK_GRAFT_OFFHEAP", "0")
-    val spark = (if (offheap == "0") builder2
-      else builder2
-        .config("spark.sql.columnVector.offheap.enabled", "true")
-        .config("spark.memory.offHeap.enabled", "true")
-        .config("spark.memory.offHeap.size", offheap))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.dialect.ChFunctions.register(spark)
+    // Engine.session carries the tuning the gate was won with: 16k
+    // reader batches, the vectorized agg map, 4m pages, small-table
+    // scan packing, on-heap column vectors (Engine.scala has each
+    // measurement)
+    val cpus = graft.core.Engine.defaultCores.toString
+    val spark = graft.core.Engine.session("graft-bench")
     Tables.registerViews(spark, sfDir)
 
     val times = scala.collection.mutable.LinkedHashMap.empty[String, Double]
@@ -687,23 +625,11 @@ object Bench {
             "spark.sql.columnVector.offheap.enabled" -> "true",
             "spark.memory.offHeap.enabled" -> "true",
             "spark.memory.offHeap.size" -> (4L << 30).toString),
-          "onheap" -> Map.empty[String, String]
+          "onheap" -> Map(
+            "spark.sql.columnVector.offheap.enabled" -> "false",
+            "spark.memory.offHeap.enabled" -> "false")
         ).map { case (name, confs) =>
-          val b = SparkSession.builder()
-            .master(s"local[$cpus]")
-            .appName(s"graft-q4ab-$name")
-            .config("spark.sql.shuffle.partitions", cpus)
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.buffer.pageSize", "4m")
-            .config("spark.sql.parquet.columnarReaderBatchSize", "16384")
-            .config("spark.ui.enabled", "false")
-          if (minPart != "0") b.config("spark.sql.files.minPartitionNum", minPart)
-          if (maxPartBytes != "0")
-            b.config("spark.sql.files.maxPartitionBytes", maxPartBytes)
-          confs.foreach { case (k, v) => b.config(k, v) }
-          val s2 = b.getOrCreate()
-          s2.sparkContext.setLogLevel("WARN")
-          graft.dialect.ChFunctions.register(s2)
+          val s2 = graft.core.Engine.session(s"graft-q4ab-$name", extraConf = confs)
           try {
             def once(): Double = {
               val t0 = System.nanoTime()

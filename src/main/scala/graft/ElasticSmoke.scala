@@ -162,7 +162,6 @@ object ElasticSmoke {
       println(f"[elastic] process-worker join: $n3 executor JVMs in " +
         f"${(System.nanoTime() - t3) / 1e9}%.2f s")
       ok &= n3 >= 3
-      graft.dialect.ChFunctions.register(spark)
       def slowQuery(): Long =
         spark.range(0, 1200000000L, 1, 24)
           .selectExpr("sum(pmod(cityHash64(toString(id)), 1000000007)) AS s")

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `explain("formatted")` for the headline queries to PLANS.md —
   * the per-operator plan audit the build rules call for. Run after any
   * operator change; PlanSpec pins the load-bearing properties as
@@ -47,12 +45,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1) else "PLANS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Engine.session("graft-plan-audit", cores = 4)
     spark.sparkContext.setLogLevel("ERROR")
 
     val sb = new StringBuilder

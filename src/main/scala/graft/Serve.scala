@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Service process entry — the reference's `main.go:44-70` shape: start
   * the metrics/health/query HTTP surface, then block until SIGTERM.
   * `GRAFT_HTTP_PORT` (default 8080) mirrors the reference's `HTTP_PORT`
@@ -11,15 +9,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Serve {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("graft-serve")
-      .master(s"local[$cpus]")
-      .config(graft.core.Engine.doorConf)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Engine.session("graft-serve")
     args.headOption.foreach { dir =>
       graft.core.Tables.registerViews(spark, dir)
       // per-request sessions resolve tables through the CATALOG, not

@@ -1,18 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** t1-style smoke: run [[SparkEntry.entry]] on sf0.001 exactly the way
   * the driver does (its own session, rows>0 check), print the rows. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Engine.session("graft-smoke", cores = 4)
     val df = SparkEntry.entry(spark)
     val rows = df.collect()
     println(s"[smoke] cols=${df.columns.mkString(",")} rows=${rows.length}")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
-import graft.dialect.{ChFunctions, ChSql}
+import graft.dialect.ChSql
 import graft.operators.{Dedup, Multimodal, SemDedup, Similarity, Skew, TextAnalysis}
 import graft.service.QueryService
 import graft.sources.Sources
@@ -37,10 +37,8 @@ object SparkEntry {
   // helpers
   // ---------------------------------------------------------------
 
-  private def prep(spark: SparkSession, dir: String): Unit = {
-    ChFunctions.register(spark)
+  private def prep(spark: SparkSession, dir: String): Unit =
     Tables.registerViews(spark, dir)
-  }
 
   /** Run a CH-dialect SQL query against the registered testdata views. */
   private def ch(sql: String): (SparkSession, String) => DataFrame =

@@ -22,8 +22,8 @@ object Engine {
     sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors())
 
-  /** Fixed settings of every SparkContext that serves the doors
-    * (`graft.Serve`, [[session]], the test session). Not options: each
+  /** Fixed settings of every SparkContext [[session]] builds, so of
+    * every one that serves the doors. Not options: each
     * door request runs on its own `newSession()`, and these are what
     * must hold for every one of them.
     *
@@ -41,6 +41,18 @@ object Engine {
     "spark.sql.artifact.isolation.enabled" -> "false",
     "spark.sql.session.timeZone" -> "UTC")
 
+  /** The one `SparkSession.builder()` in the engine: every main
+    * (`Serve`, `Verify`, `Bench`, the smokes, `PlanAudit`) and the test
+    * session build through here, so the server that answers a query
+    * runs the confs the gate and the tests were measured with. The
+    * dialect functions, the five optimizer rules and the driver-merge
+    * strategy are not set here: [[graft.dialect.GraftExtensions]] is a
+    * `SparkSessionExtensionsProvider` listed under `META-INF/services`,
+    * and Spark applies it to every session of a JVM with graft on its
+    * classpath. `spark.sql.extensions` must not name it as well, or
+    * every rule is injected, and runs, twice.
+    *
+    * `extraConf` is applied last and wins over everything below. */
   def session(
       appName: String = "graft",
       cores: Int = defaultCores,
@@ -53,9 +65,10 @@ object Engine {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Bound task-memory pages: Spark's heap-proportional default
-      // (up to 64MB/page) makes short interactive tasks zero-fill tens
-      // of GB under a large driver heap (see Bench.scala measurement)
+      // Bound task-memory pages: Spark's default scales with the
+      // execution pool (min(64MB, pool/cores/16)), so under a
+      // multi-ten-GB driver heap every short sort/agg task zero-filled
+      // fresh 64MB pages (measured: q5 2.9 s → 14-19 s at -Xmx89g)
       .config("spark.buffer.pageSize", "4m")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
@@ -76,28 +89,30 @@ object Engine {
       // loop/virtual-call overhead it amortizes is measured, not
       // guessed.
       .config("spark.sql.parquet.columnarReaderBatchSize", "16384")
-      // Leaf-scan packing (r11): Spark's default minPartitionNum=cores
-      // shreds small many-file tables into per-file tiny tasks; measured
-      // here (Bench.scala/Q3Probe) per-row aggregate cost inflates ~10×
-      // under 32-way concurrency on sub-MB tasks while 4×-fewer, bigger
-      // tasks cut both CPU and wall. But the knob is one formula for
-      // every scan — maxSplitBytes = min(maxPartitionBytes,
-      // max(openCost, totalBytes/minPartitionNum)) — so a low floor
-      // alone also CAPS a 1 GB scan at cores/4 tasks (measured: the
-      // full-width hash scan at sf10 ran 8 tasks on 32 cores, 3-5 s vs
-      // 1.3 s at full width). The pair below expresses both regimes:
-      // small tables pack into cores/4 tasks, and the 32 MB size cap
-      // keeps anything ≥ cores/4 × 32 MB fanning out to all cores.
-      // The cap is sized for THIS single-node regime (splits ≤ a few
-      // GB per table): on a 1000-executor cluster 32 MB would 4× the
-      // task count of a 100 TB scan for no gain — deployments at that
-      // scale should raise it back to 128 MB via env/extraConf.
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART",
-          math.max(1, cores / 4).toString))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES",
-          (32L * 1024 * 1024).toString))
+    // Leaf-scan packing (r11): Spark's default minPartitionNum=cores
+    // shreds small many-file tables into per-file tiny tasks; measured
+    // here (Bench.scala/Q3Probe) per-row aggregate cost inflates ~10×
+    // under 32-way concurrency on sub-MB tasks while 4×-fewer, bigger
+    // tasks cut both CPU and wall. But the knob is one formula for
+    // every scan — maxSplitBytes = min(maxPartitionBytes,
+    // max(openCost, totalBytes/minPartitionNum)) — so a low floor
+    // alone also CAPS a 1 GB scan at cores/4 tasks (measured: the
+    // full-width hash scan at sf10 ran 8 tasks on 32 cores, 3-5 s vs
+    // 1.3 s at full width). The pair below expresses both regimes:
+    // small tables pack into cores/4 tasks, and the 32 MB size cap
+    // keeps anything ≥ cores/4 × 32 MB fanning out to all cores.
+    // The cap is sized for THIS single-node regime (splits ≤ a few
+    // GB per table): on a 1000-executor cluster 32 MB would 4× the
+    // task count of a 100 TB scan for no gain — deployments at that
+    // scale should raise it back to 128 MB via env/extraConf.
+    // SPARK_GRAFT_MIN_PART / SPARK_GRAFT_MAX_PART_BYTES override each
+    // knob; 0 leaves Spark's default for it.
+    val minPart = sys.env.getOrElse("SPARK_GRAFT_MIN_PART",
+      math.max(1, cores / 4).toString)
+    if (minPart != "0") b.config("spark.sql.files.minPartitionNum", minPart)
+    val maxPartBytes = sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES",
+      (32L * 1024 * 1024).toString)
+    if (maxPartBytes != "0") b.config("spark.sql.files.maxPartitionBytes", maxPartBytes)
     // OFF-HEAP column vectors: DEFAULT OFF since r14. The r12 case for
     // off-heap was q2's GC under a long-lived pressured heap (on-heap
     // collapsing ~10× in that window); every clean-window A/B since —
@@ -119,14 +134,6 @@ object Engine {
     extraConf.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
-  /** Apply engine defaults to an externally-created session (e.g. the one
-    * the driver's Verify/Bench mains build). Idempotent. */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark
   }
 }

@@ -64,8 +64,18 @@ object SystemTables {
   private case class QueryLogEntry(
       executionId: Long, durationMs: Long, error: Option[String])
 
-  private val log = new java.util.concurrent.ConcurrentLinkedQueue[QueryLogEntry]()
-  private val starts = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+  /** How many completed executions [[queryLog]] keeps (the newest);
+    * every statement that names the view materializes all of them. */
+  val QueryLogMax = 1000
+
+  // both guarded by `this`
+  private val log = new java.util.ArrayDeque[QueryLogEntry]()
+  // start times of running executions; one whose end never arrives
+  // falls out once QueryLogMax newer ones have started
+  private val starts = new java.util.LinkedHashMap[Long, java.lang.Long]() {
+    override def removeEldestEntry(e: java.util.Map.Entry[Long, java.lang.Long]): Boolean =
+      size() > QueryLogMax
+  }
   @volatile private var installedOn: org.apache.spark.SparkContext = null
 
   /** Install the SQL-execution listener once per SparkContext — the
@@ -78,12 +88,15 @@ object SystemTables {
       if (installedOn eq sc) return
       sc.addSparkListener(new SparkListener {
         override def onOtherEvent(event: SparkListenerEvent): Unit = event match {
-          case s: SparkListenerSQLExecutionStart =>
+          case s: SparkListenerSQLExecutionStart => SystemTables.synchronized {
             starts.put(s.executionId, s.time)
-          case e: SparkListenerSQLExecutionEnd =>
+          }
+          case e: SparkListenerSQLExecutionEnd => SystemTables.synchronized {
             val dur = Option(starts.remove(e.executionId))
               .map(t0 => (e.time - t0).max(0L)).getOrElse(0L)
-            log.add(QueryLogEntry(e.executionId, dur, e.errorMessage.filter(_.nonEmpty)))
+            log.addLast(QueryLogEntry(e.executionId, dur, e.errorMessage.filter(_.nonEmpty)))
+            if (log.size > QueryLogMax) log.removeFirst()
+          }
           case _ =>
         }
       })
@@ -95,7 +108,7 @@ object SystemTables {
   def queryLog(spark: SparkSession): DataFrame = {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
-    log.asScala.toSeq
+    synchronized(log.asScala.toList)
       .map(e => (e.executionId, e.durationMs, e.error.getOrElse("")))
       .toDF("execution_id", "duration_ms", "error")
   }

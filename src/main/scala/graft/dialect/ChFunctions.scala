@@ -1,6 +1,5 @@
 package graft.dialect
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.graft.FunctionShim
@@ -25,31 +24,8 @@ object ChFunctions {
     try java.net.InetAddress.getLocalHost.getHostName
     catch { case _: Exception => "localhost" }
 
-  /** Idempotent per-session registration (runtime path — works on any
-    * already-built session, e.g. the driver harness's own). The
-    * config-time path is [[GraftExtensions]], which injects the same
-    * [[builders]] through `SparkSessionExtensions`. Idempotence is read
-    * off the session's own registry — no process-wide set of session
-    * ids to grow per door session or to collide. */
-  def register(spark: SparkSession): Unit =
-    synchronized {
-      builders.foreach { case (name, b) =>
-        if (!FunctionShim.sessionHas(spark, name)) FunctionShim.register(spark, name, b)
-      }
-      // the optimizer surface rides the same registration choke point:
-      // any session that can resolve the dialect also answers global
-      // count/min/max from parquet footers (graft.plans.FooterAggregates)
-      FunctionShim.addOptimization(spark, graft.plans.FooterAggregates(spark))
-      FunctionShim.addOptimization(spark, graft.plans.AggProjectionRewrite(spark))
-      FunctionShim.addOptimization(spark, graft.plans.DictAggRewrite(spark))
-      FunctionShim.addOptimization(spark, graft.plans.BitmapDistinctRewrite(spark))
-      // vectorized sum(pmod(cityHash64(*), m)) fold (r18)
-      FunctionShim.addOptimization(spark, graft.plans.HashScanRewrite(spark))
-      FunctionShim.addStrategy(spark, graft.plans.DriverMergeStrategy)
-    }
-
   /** Every ClickHouse-named function as (name, native-expression
-    * builder) — the single source both registration paths share. */
+    * builder), injected into every session by [[GraftExtensions]]. */
   lazy val builders: Seq[(String, Seq[Expression] => Expression)] = {
     val out = Seq.newBuilder[(String, Seq[Expression] => Expression)]
     def reg(name: String)(b: Seq[Expression] => Expression): Unit = out += (name -> b)
@@ -1865,7 +1841,9 @@ object ChFunctions {
       // (countMap is NOT here: the combinator grammar already serves
       // count+Map over (keys, values) — a static single-arg spelling
       // would shadow it, the bug class the shadow-guard exists for)
-      reg("hostname")(_ => Literal(ChFunctions.cachedHostName))
+      // (no hostname: the registry is case-insensitive, so hostName
+      // above answers it; a second entry would replace the first, with
+      // a warning, in every new session)
       reg("firstLine")({ case Seq(s) =>
         ElementAt(StringSplit(s, Literal("\n"), Literal(2)), Literal(1)) })
       // the doors' CH-convention ports

@@ -465,8 +465,8 @@ object ChSql {
     * introspection verbs route to their handlers, everything else runs
     * through [[rewrite]] + [[finish]]. Returns the frame and the
     * statement's SETTINGS. The one dispatch chain — [[sql]] and the
-    * service doors both come through here; the session must already
-    * carry the dialect functions ([[ChFunctions.register]]). */
+    * service doors both come through here. The dialect functions come
+    * with every session ([[GraftExtensions]]). */
   def run(spark: SparkSession, query: String,
       macros: Map[String, String] = defaultMacros)
       : (DataFrame, Map[String, String]) = {
@@ -526,13 +526,10 @@ object ChSql {
     (finish(spark, r), r.settings)
   }
 
-  /** [[run]]'s frame, on a session this call registers the dialect
-    * functions on. */
+  /** [[run]]'s frame. */
   def sql(spark: SparkSession, query: String,
-      macros: Map[String, String] = defaultMacros): DataFrame = {
-    ChFunctions.register(spark)
+      macros: Map[String, String] = defaultMacros): DataFrame =
     run(spark, query, macros)._1
-  }
 
   /** The text every dispatch check and rewrite pass sees: macros
     * substituted, comments removed ([[stripComments]]), `ON CLUSTER`

@@ -1,24 +1,26 @@
 package graft.dialect
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Config-time registration of the ClickHouse function surface:
+/** The one registration of graft's Catalyst surface. Listed in
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * so Spark's `ServiceLoader` pass applies it to every session built in
+  * a JVM with graft on its classpath, with no config key. Do not also
+  * name it in `spark.sql.extensions`: Spark would apply it twice and
+  * every rule and the strategy would run twice per query.
   *
-  * {{{
-  *   spark.sql.extensions=graft.dialect.GraftExtensions
-  * }}}
-  *
-  * injects every [[ChFunctions.builders]] entry through
-  * `SparkSessionExtensions.injectFunction`, so ALL sessions derived
-  * from the context — including `newSession()` forks with fresh
-  * session state — resolve `cityHash64`, `uniq`, `multiIf`, … as
-  * native Catalyst expressions without any runtime call. The runtime
-  * twin ([[ChFunctions.register]]) exists for sessions built without
-  * this config (e.g. a harness-owned session).
+  * It injects every [[ChFunctions.builders]] entry through
+  * `injectFunction`, so every session of the context, `newSession()`
+  * forks included, resolves `cityHash64`, `uniq`, `multiIf`, … as
+  * native Catalyst expressions; the five rewrite rules into the
+  * operator-optimization batch; and [[graft.plans.DriverMergeStrategy]]
+  * into the planner. Combinator spellings (`sumArrayIf`, …) have no
+  * fixed list and are registered per statement by
+  * [[ChSql.registerCombinators]].
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+class GraftExtensions extends SparkSessionExtensionsProvider {
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ChFunctions.builders.foreach { case (name, builder) =>

@@ -854,9 +854,6 @@ case class AggProjectionRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     case d: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
         if graft.sources.mergetree.MergeTree.relationInfo(d).isDefined =>
       d.output.find(_.exprId == attr.exprId).map(_.name)
-    case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
-        if graft.sources.mergetree.MergeTree.relationInfo(s).isDefined =>
-      s.output.find(_.exprId == attr.exprId).map(_.name)
     case Project(projList, c) =>
       projList.find(_.exprId == attr.exprId).flatMap {
         case a: AttributeReference => resolve(c, a)
@@ -885,9 +882,6 @@ case class AggProjectionRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         }
       case d: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
         graft.sources.mergetree.MergeTree.relationInfo(d)
-          .map { case (endpoint, _, _) => (MtSrc(endpoint), Nil) }
-      case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        graft.sources.mergetree.MergeTree.relationInfo(s)
           .map { case (endpoint, _, _) => (MtSrc(endpoint), Nil) }
       case Project(_, c) => relationAndFilters(c)
       case SubqueryAlias(_, c) => relationAndFilters(c)

@@ -1157,11 +1157,10 @@ object DictAgg {
 }
 
 /** The rewrite rule — see [[DictAgg]] for semantics and guardrails.
-  * Registered via [[graft.dialect.GraftExtensions]] and the runtime
-  * twin in `ChFunctions.register`, after [[FooterAggregates]] and
-  * [[AggProjectionRewrite]] (a projection reroute, when fresh, is
-  * strictly better than re-scanning; this rule picks up the shapes no
-  * projection covers). */
+  * Injected by [[graft.dialect.GraftExtensions]], after
+  * [[FooterAggregates]] and [[AggProjectionRewrite]] (a projection
+  * reroute, when fresh, is strictly better than re-scanning; this rule
+  * picks up the shapes no projection covers). */
 case class DictAggRewrite(spark: SparkSession) extends Rule[LogicalPlan]
     with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
 

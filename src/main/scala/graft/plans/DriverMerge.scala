@@ -183,8 +183,8 @@ case class DriverMergeAggExec(
     sparkContext.parallelize(merged.toIndexedSeq, 1)
 }
 
-/** Plans [[DriverMergeAgg]] — registered via `injectPlannerStrategy`
-  * (config path) and `experimental.extraStrategies` (runtime path). */
+/** Plans [[DriverMergeAgg]] — injected by
+  * [[graft.dialect.GraftExtensions]] through `injectPlannerStrategy`. */
 object DriverMergeStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case d: DriverMergeAgg =>

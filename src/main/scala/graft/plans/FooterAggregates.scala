@@ -227,8 +227,8 @@ case class FooterAggregates(spark: SparkSession) extends Rule[LogicalPlan] {
 
 object FooterAggregates {
 
-  /** Bounded LRU of sweep results, shared across rule instances (the
-    * extensions path and the runtime path each build one). */
+  /** Bounded LRU of sweep results, shared across rule instances (each
+    * session builds its own). */
   private val SweepCacheMax = 128
   private val sweepCache =
     new java.util.LinkedHashMap[String, FileStats](SweepCacheMax, 0.75f, true) {

@@ -35,9 +35,6 @@ private[plans] object ScanRelations {
     case d: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
       graft.sources.mergetree.MergeTree.relationInfo(d)
         .map { case (ep, ddl, ob) => MergeTreeRel(ep, ddl, ob) }
-    case sr: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-      graft.sources.mergetree.MergeTree.relationInfo(sr)
-        .map { case (ep, ddl, ob) => MergeTreeRel(ep, ddl, ob) }
     case Project(projList, c) if projList.forall(_.isInstanceOf[AttributeReference]) =>
       relationOf(c)
     case SubqueryAlias(_, c) => relationOf(c)
@@ -55,9 +52,6 @@ private[plans] object ScanRelations {
     case d: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
         if graft.sources.mergetree.MergeTree.relationInfo(d).isDefined =>
       d.output.find(_.exprId == attr.exprId).map(_.name)
-    case sr: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
-        if graft.sources.mergetree.MergeTree.relationInfo(sr).isDefined =>
-      sr.output.find(_.exprId == attr.exprId).map(_.name)
     case Project(projList, c) =>
       projList.find(_.exprId == attr.exprId).flatMap {
         case a: AttributeReference => resolve(c, a)

@@ -2,7 +2,7 @@ package graft.service
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.dialect.{ChFunctions, ChSql}
+import graft.dialect.ChSql
 
 /** The BigHouse query API re-expressed on Spark (SURVEY §2.7 O1/O6/O7/O9).
   *
@@ -114,8 +114,6 @@ object QueryService {
 
 class QueryService(spark: SparkSession) {
   import QueryService._
-
-  ChFunctions.register(spark)
 
   /** Build the DataFrame for a request: run init queries, then the main
     * statement through the dialect's one router ([[ChSql.run]]). The

@@ -186,13 +186,6 @@ object MergeTree {
           Some((t.endpoint, t.ddl, t.orderBy))
         case _ => None
       }
-    // after V2ScanRelationPushDown the relation is wrapped in a
-    // ScanRelation — rules injected late (the runtime
-    // extraOptimizations path, used by sessions built without the
-    // extensions conf) only ever see this shape, so both must match
-    // (review: the reroute silently never fired on such sessions)
-    case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-      relationInfo(s.relation)
     case _ => None
   }
 

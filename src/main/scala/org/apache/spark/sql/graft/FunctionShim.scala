@@ -4,13 +4,12 @@ import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Bridge into Spark's session `FunctionRegistry` (private[sql]) so the
-  * dialect layer can register ClickHouse-named functions
-  * (`cityHash64`, `uniq`, `multiIf`, …) as native Catalyst expression
-  * builders on an ALREADY-RUNNING session — the driver harness builds
-  * its own `SparkSession`, so a `SparkSessionExtensions` config hook is
-  * not always available. Registration via the registry (not UDFs) keeps
-  * these functions inside whole-stage codegen.
+/** Bridge into Spark's `private[sql]` surface: the session
+  * `FunctionRegistry` (the combinator spellings `sumArrayIf`, … have no
+  * fixed list, so [[graft.dialect.ChSql.registerCombinators]] registers
+  * them per statement as native Catalyst expression builders, never
+  * UDFs), plus plan, column and parquet-footer helpers. The fixed
+  * function surface is injected by [[graft.dialect.GraftExtensions]].
   */
 object FunctionShim {
 
@@ -64,42 +63,6 @@ object FunctionShim {
       FunctionIdentifier(name),
       new ExpressionInfo("graft.dialect.ChFunctions", name),
       (exprs: Seq[Expression]) => builder(exprs))
-  }
-
-  /** Idempotently append a logical optimizer rule to an ALREADY-RUNNING
-    * session (`experimental.extraOptimizations` — the runtime twin of
-    * `SparkSessionExtensions.injectOptimizerRule`, same contract: the
-    * rule runs in the user-provided batch after Spark's own). */
-  def addOptimization(
-      spark: SparkSession,
-      rule: org.apache.spark.sql.catalyst.rules.Rule[
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    // a session built WITH GraftExtensions already carries the rule in
-    // its operator-optimization batch — adding it again via the
-    // runtime path would run it twice per query
-    val injected = classic.sessionState.optimizer
-      .extendedOperatorOptimizationRules.exists(_.getClass == rule.getClass)
-    val exp = classic.experimental
-    if (!injected && !exp.extraOptimizations.exists(_.getClass == rule.getClass))
-      exp.extraOptimizations = exp.extraOptimizations :+ rule
-  }
-
-  /** Idempotently append a planner strategy to an ALREADY-RUNNING
-    * session (`experimental.extraStrategies` — the runtime twin of
-    * `SparkSessionExtensions.injectPlannerStrategy`). */
-  def addStrategy(
-      spark: SparkSession,
-      strategy: org.apache.spark.sql.execution.SparkStrategy): Unit = {
-    val classic = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    // a session built WITH GraftExtensions already carries the strategy
-    // in its planner's extra strategies — adding it again would plan it
-    // twice per query
-    val injected = classic.sessionState.planner.extraPlanningStrategies
-      .exists(_.getClass == strategy.getClass)
-    val exp = classic.experimental
-    if (!injected && !exp.extraStrategies.exists(_.getClass == strategy.getClass))
-      exp.extraStrategies = exp.extraStrategies :+ strategy
   }
 
   /** Open ONLY the footer of one parquet file (a ~kilobyte ranged

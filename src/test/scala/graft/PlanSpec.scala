@@ -601,7 +601,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("windowFunnel SQL: pruned scan, one user-keyed data shuffle, partial collect map-side") {
-    graft.dialect.ChFunctions.register(spark)
     core.Tables.registerViews(spark, dir)
     val df = dialect.ChSql.sql(spark,
       """SELECT user_id, windowFunnel(86400)(ts, event_type = 'view',
@@ -622,7 +621,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("dialect-routed queries stay inside whole-stage codegen") {
-    graft.dialect.ChFunctions.register(spark)
     core.Tables.registerViews(spark, dir)
     val df = dialect.ChSql.sql(spark,
       "SELECT l_returnflag, sum(pmod(cityHash64(l_orderkey), 1000000007)) AS h FROM lineitem GROUP BY l_returnflag")

@@ -2,20 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (forked test JVM). */
+/** One shared local session for all suites (forked test JVM), built by
+  * the engine's own recipe ([[graft.core.Engine.session]]), so the
+  * tests run the confs and the optimizer pipeline the server runs. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config(graft.core.Engine.doorConf)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_warehouse").toString)
-      .config("spark.sql.extensions", "graft.dialect.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.core.Engine.session("graft-test",
+    extraConf = Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_warehouse").toString))
 }

@@ -32,6 +32,29 @@ class SystemTablesSpec extends AnyFunSuite {
     assert(log.forall(_.getAs[Long]("duration_ms") >= 0))
   }
 
+  test("query log keeps only the newest QueryLogMax executions") {
+    SystemTables.install(spark)
+    // each read is itself an execution, logged once it ends
+    def ids(): Seq[Long] = SystemTables.queryLog(spark).collect().map(_.getLong(0)).toSeq
+    spark.sql("SELECT 1").collect()
+    Thread.sleep(500)
+    val before = ids().max
+    val flood = SystemTables.QueryLogMax + 10
+    (0 until flood).foreach(_ => spark.sql("SELECT 1").collect())
+    // listener events arrive in order but async: once an id past the
+    // flood is logged, every flood execution is too
+    var got = ids()
+    val deadline = System.nanoTime() + 20000000000L
+    while (got.max < before + flood && System.nanoTime() < deadline) {
+      Thread.sleep(200)
+      got = ids()
+    }
+    assert(got.max >= before + flood, s"log did not catch up: ${got.max}")
+    assert(got.size == SystemTables.QueryLogMax)
+    // the oldest went first: every kept entry is newer than the flood's start
+    assert(got.min > before, s"min ${got.min} <= $before")
+  }
+
   test("ordered projection over a system table (…_test.go:98-105 shape)") {
     val rows = ChSql.sql(spark,
       "SELECT host, port FROM system.executors ORDER BY host ASC").collect()

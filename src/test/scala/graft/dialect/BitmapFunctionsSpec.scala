@@ -13,7 +13,6 @@ class BitmapFunctionsSpec extends AnyFunSuite {
 
   private def prep(): Unit = {
     graft.core.Tables.registerViews(spark, dir)
-    ChFunctions.register(spark)
   }
 
   test("groupBitmap == count(DISTINCT) on integers, grouped and global") {

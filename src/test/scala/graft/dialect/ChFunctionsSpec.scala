@@ -8,7 +8,6 @@ class ChFunctionsSpec extends AnyFunSuite {
 
   private lazy val spark = {
     val s = graft.TestSpark.spark
-    ChFunctions.register(s)
     import s.implicits._
     Seq(
       (1, 10.0, "R", "2024-03-05 10:30:00"),
@@ -310,7 +309,7 @@ class ChFunctionsSpec extends AnyFunSuite {
   test("SparkSessionExtensions path serves fresh sessions with no runtime call") {
     // newSession() builds FRESH session state: FunctionShim-registered
     // names are absent there, so resolution proves the injectFunction
-    // path (spark.sql.extensions=graft.dialect.GraftExtensions) works
+    // path (the ServiceLoader-registered GraftExtensions) works
     val fresh = spark.newSession()
     val h = fresh.sql("SELECT cityHash64('') AS h").collect().head.getLong(0)
     assert(h == java.lang.Long.parseUnsignedLong("9ae16a3b2f90404f", 16))
@@ -1225,7 +1224,7 @@ class ChFunctionsSpec extends AnyFunSuite {
       .asInstanceOf[scala.collection.Seq[Int]].toSeq == Seq(2, 3))
     // countMap stays with the combinator grammar (count+Map over
     // (keys, values)) — a static spelling would shadow it
-    val cm = one("""SELECT countMap(k, v).values FROM VALUES
+    val cm = q("""SELECT countMap(k, v).values FROM VALUES
       (array('a', 'b'), array(1L, 1L)), (array('a'), array(1L)) AS t(k, v)""")
     assert(cm.asInstanceOf[scala.collection.Seq[Long]].toSeq == Seq(2L, 1L))
     assert(one("SELECT firstLine('one\ntwo')") == "one")
@@ -1800,17 +1799,10 @@ class ChFunctionsSpec extends AnyFunSuite {
   }
 
   test("register: many fresh sessions all resolve the dialect functions") {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    // no registration call: every session gets the functions from the
+    // ServiceLoader-registered GraftExtensions
     (1 to 40).foreach { i =>
       val s = spark.newSession()
-      val reg = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .sessionState.functionRegistry
-      ChFunctions.register(s)
-      // idempotence is read off the session's own registry: a function
-      // missing there (a session built without the extensions) is
-      // registered again, never skipped on a remembered session id
-      Seq("cityHash64", "uniq").foreach(n => reg.dropFunction(FunctionIdentifier(n)))
-      ChFunctions.register(s)
       val r = s.sql(s"SELECT cityHash64('a') = cityHash64('a'), uniq(x) " +
         s"FROM VALUES ($i), ($i), (${i + 1}) AS t(x)").collect().head
       assert(r.getBoolean(0) && r.getLong(1) == 2L, s"session $i")

@@ -481,7 +481,6 @@ class ChSqlSpec extends AnyFunSuite {
 
   test("DROP TABLE deletes CTAS-owned storage; DETACH keeps data and re-ATTACHes") {
     val spark = graft.TestSpark.spark
-    graft.dialect.ChFunctions.register(spark)
     val wh = java.nio.file.Files.createTempDirectory("graft_drop_wh").toString
     spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
     spark.read.parquet("/root/testdata/sf0.001/nation.parquet")

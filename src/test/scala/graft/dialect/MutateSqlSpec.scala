@@ -9,11 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * preserve sorted layouts, and leave untouched rows byte-identical. */
 class MutateSqlSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = graft.TestSpark.spark
-    graft.dialect.ChFunctions.register(s)
-    s
-  }
+  private lazy val spark = graft.TestSpark.spark
 
   private def freshCopy(): String = {
     val d = Files.createTempDirectory("graft_mut").toString + "/t"

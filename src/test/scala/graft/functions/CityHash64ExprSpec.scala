@@ -8,7 +8,6 @@ class CityHash64ExprSpec extends AnyFunSuite {
   private lazy val spark = graft.TestSpark.spark
 
   test("SQL cityHash64 over strings matches the byte-level port") {
-    graft.dialect.ChFunctions.register(spark)
     import spark.implicits._
     val df = Seq("", "a", "hello world", "x" * 100).toDF("s")
     val got = df.selectExpr("s", "cityHash64(s) AS h").collect()
@@ -19,7 +18,6 @@ class CityHash64ExprSpec extends AnyFunSuite {
   }
 
   test("codegen and interpreted paths agree") {
-    graft.dialect.ChFunctions.register(spark)
     import spark.implicits._
     val df = Seq((1L, "a", 2.5), (42L, "hello", -1.0)).toDF("l", "s", "d")
     val wholestage = df.selectExpr("cityHash64(l, s, d) AS h").collect().map(_.getLong(0))
@@ -31,7 +29,6 @@ class CityHash64ExprSpec extends AnyFunSuite {
   }
 
   test("multi-arg combine is the documented left fold") {
-    graft.dialect.ChFunctions.register(spark)
     import spark.implicits._
     val row = Seq(("ab", 7L)).toDF("s", "l")
       .selectExpr("cityHash64(s, l) AS h").collect().head.getLong(0)
@@ -41,14 +38,12 @@ class CityHash64ExprSpec extends AnyFunSuite {
   }
 
   test("NULL hashes to the documented empty-hash, not SQL NULL") {
-    graft.dialect.ChFunctions.register(spark)
     val r = spark.sql("SELECT cityHash64(CAST(NULL AS STRING)) AS h").collect().head
     assert(!r.isNullAt(0))
     assert(r.getLong(0) == CityHash.NullHash)
   }
 
   test("unsupported type fails analysis, not execution") {
-    graft.dialect.ChFunctions.register(spark)
     intercept[Exception] {
       spark.sql("SELECT cityHash64(map('a', 1))").collect()
     }

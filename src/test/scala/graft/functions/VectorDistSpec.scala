@@ -7,11 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * propagation, and the loud size-mismatch failure. */
 class VectorDistSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = graft.TestSpark.spark
-    graft.dialect.ChFunctions.register(s)
-    s
-  }
+  private lazy val spark = graft.TestSpark.spark
 
   private def one(sql: String): Any =
     spark.sql(s"SELECT $sql AS v").collect().head.get(0)

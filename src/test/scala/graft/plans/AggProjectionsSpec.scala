@@ -11,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * stale companions). */
 class AggProjectionsSpec extends AnyFunSuite {
 
-  private lazy val spark = {
-    val s = graft.TestSpark.spark
-    graft.dialect.ChFunctions.register(s)
-    s
-  }
+  private lazy val spark = graft.TestSpark.spark
 
   private lazy val projRoot = {
     val d = Files.createTempDirectory("graft_proj_spec").toString
@@ -347,27 +343,6 @@ class AggProjectionsSpec extends AnyFunSuite {
     assert(scansProjection(q), q.queryExecution.optimizedPlan.toString)
     assert(sortedRows(q) == unoptimized(sortedRows(
       spark.sql("SELECT k, sum(v) AS s, count(*) AS n FROM mt_proj_t GROUP BY k"))))
-    // the LATE-phase rule application (runtime extraOptimizations path,
-    // sessions built without the extensions conf) sees the
-    // post-pushdown DataSourceV2ScanRelation, not the bare relation —
-    // apply the rule to the fully-optimized plan and pin that it still
-    // reroutes (review: it silently never fired on such sessions)
-    // dictAgg must ALSO sit out here: since r16 it accepts the
-    // MergeTree ScanRelation and would rewrite this aggregate to a
-    // LogicalRDD before the late-phase input is captured
-    spark.conf.set(graft.plans.DictAgg.EnabledKey, "false")
-    val lateInput =
-      try unoptimized(q.queryExecution.optimizedPlan)
-      finally spark.conf.unset(graft.plans.DictAgg.EnabledKey)
-    assert(lateInput.collectFirst {
-      case s: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => s
-    }.isDefined, s"expected a ScanRelation in $lateInput")
-    val lateRewritten = AggProjectionRewrite(spark)(lateInput)
-    assert(lateRewritten.collectFirst {
-      case l: org.apache.spark.sql.execution.datasources.LogicalRelation
-        if l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-          .location.rootPaths.exists(_.toString.contains(projRoot)) => l
-    }.isDefined, s"late-phase rewrite did not fire: $lateRewritten")
     // DROP unregisters
     assert(graft.dialect.ChSql.sql(spark,
       "ALTER TABLE mt_proj_t DROP PROJECTION p_k").collect().head.getString(1) == "dropped")

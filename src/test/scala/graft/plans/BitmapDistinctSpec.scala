@@ -88,7 +88,6 @@ class BitmapDistinctSpec extends AnyFunSuite {
   }
 
   test("ATTACHed MergeTree tables engage too (r16)") {
-    graft.dialect.ChFunctions.register(spark)
     val wh = java.nio.file.Files.createTempDirectory("graft_bmd_mt").toString
     spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
     val svc = new graft.service.QueryService(spark)
@@ -130,7 +129,6 @@ class BitmapDistinctSpec extends AnyFunSuite {
   }
 
   test("the dialect uniqExact spelling engages — the q3 bench shape") {
-    graft.dialect.ChFunctions.register(spark)
     spark.read.parquet(table).createOrReplaceTempView("bmd_t")
     val before = BitmapDistinct.engagements.get()
     val fast = rows(graft.dialect.ChSql.sql(spark,

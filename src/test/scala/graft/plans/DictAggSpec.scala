@@ -338,7 +338,6 @@ class DictAggSpec extends AnyFunSuite {
   }
 
   test("conditional aggregates ride per-spec masks: sumIf/countIf/FILTER (r17b)") {
-    graft.dialect.ChFunctions.register(spark)
     spark.read.parquet(table).createOrReplaceTempView("dictagg_cond")
     def matches(sql: String): Unit = {
       def q() = graft.dialect.ChSql.sql(spark, sql)
@@ -446,7 +445,6 @@ class DictAggSpec extends AnyFunSuite {
   }
 
   test("ATTACHed MergeTree tables engage too — dictionary-backed LC vectors (r16)") {
-    graft.dialect.ChFunctions.register(spark)
     val wh = java.nio.file.Files.createTempDirectory("graft_dictagg_mt").toString
     spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
     val svc = new graft.service.QueryService(spark)
@@ -470,7 +468,6 @@ class DictAggSpec extends AnyFunSuite {
   }
 
   test("the dialect front door (ChSql) engages too — the q2 bench spelling") {
-    graft.dialect.ChFunctions.register(spark)
     spark.read.parquet(table).createOrReplaceTempView("dictagg_t")
     val before = DictAgg.engagements.get()
     val fast = collectSorted(graft.dialect.ChSql.sql(spark,

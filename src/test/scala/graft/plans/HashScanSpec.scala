@@ -126,7 +126,6 @@ class HashScanSpec extends AnyFunSuite {
   }
 
   test("ATTACHed MergeTree tables ride the kernel too (the reference's table format)") {
-    graft.dialect.ChFunctions.register(spark)
     graft.core.Tables.registerViews(spark, sfDir)
     val wh = java.nio.file.Files.createTempDirectory("graft_hs_mt").toString
     spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)

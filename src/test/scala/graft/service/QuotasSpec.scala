@@ -154,7 +154,6 @@ class QuotasSpec extends AnyFunSuite {
 
   test("system.quotas / system.quota_usage introspection") {
     withCleanQuotas {
-      graft.dialect.ChFunctions.register(spark)
       run("CREATE QUOTA q_sys FOR INTERVAL 1 hour MAX queries = 50, " +
         "result_rows = 1000 TO default")
       run("SELECT 1")

@@ -109,7 +109,6 @@ class TlsSpec extends AnyFunSuite {
     spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
     spark.conf.set(Tls.TruststoreConf, keystore)
     spark.conf.set(Tls.TruststorePasswordConf, password)
-    graft.dialect.ChFunctions.register(spark)
     val svc = new QueryService(spark)
     try {
       svc.executeToDf(QueryService.QueryRequest(

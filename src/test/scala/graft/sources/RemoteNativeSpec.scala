@@ -103,7 +103,6 @@ class RemoteNativeSpec extends AnyFunSuite {
   test("write-side federation: INSERT INTO FUNCTION remote(…) SELECT streams rows out") {
     val wh = java.nio.file.Files.createTempDirectory("graft_rw_wh").toString
     spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
-    graft.dialect.ChFunctions.register(spark)
     val svc = new graft.service.QueryService(spark)
     try {
       svc.executeToDf(graft.service.QueryService.QueryRequest(

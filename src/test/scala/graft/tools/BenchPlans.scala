@@ -37,7 +37,6 @@ object BenchPlans {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.dialect.ChFunctions.register(spark)
     Tables.registerViews(spark, sfDir)
 
     def hashScan(li: DataFrame): DataFrame =

@@ -35,8 +35,6 @@ object DictLaneProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.dialect.ChFunctions.register(spark)
-
     def ms(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e6
     }

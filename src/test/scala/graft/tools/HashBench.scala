@@ -27,7 +27,6 @@ object HashBench {
     val b3 = sys.env.get("HB_AQE").fold(b2b)(v =>
       b2b.config("spark.sql.adaptive.enabled", v))
     val spark = b3.getOrCreate()
-    graft.dialect.ChFunctions.register(spark)
     spark.sparkContext.setLogLevel("WARN")
     val li = graft.core.Tables.load(spark, dir, "lineitem")
     def q = li.select(call_function("cityHash64", li.columns.map(col).toIndexedSeq: _*).as("h"))

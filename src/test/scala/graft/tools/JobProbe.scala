@@ -27,8 +27,6 @@ object JobProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.dialect.ChFunctions.register(spark)
-
     final case class J(id: Int, desc: String, tasks: Int,
         start: Long, var end: Long = 0L)
     val live = new java.util.concurrent.ConcurrentHashMap[Int, J]()

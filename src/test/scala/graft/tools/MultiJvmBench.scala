@@ -50,7 +50,6 @@ object MultiJvmBench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.dialect.ChFunctions.register(spark)
     try {
       // wait for both executor JVMs
       val deadline = System.currentTimeMillis() + 120000

@@ -30,8 +30,6 @@ object OpsProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.dialect.ChFunctions.register(spark)
-
     val shapes: Seq[(String, () => DataFrame)] = Seq(
       "q5_minhash_dedup" -> (() =>
         graft.operators.Dedup.minHashDupPairs(

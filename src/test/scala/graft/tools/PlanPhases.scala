@@ -11,7 +11,6 @@ object PlanPhases {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.dialect.ChFunctions.register(spark)
     def ord = graft.core.Tables.load(spark, base, "orders")
     def mk() = ord.agg(countDistinct(col("o_custkey")).as("u"))
     (1 to 12).foreach { i =>

@@ -28,8 +28,6 @@ object Q10Probe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.dialect.ChFunctions.register(spark)
-
     def mt: DataFrame = spark.read.format("mergetree")
       .option("endpoint", mtDir).option("ddl", Ddl)
       .option("orderBy", "l_returnflag,l_linestatus")

@@ -26,8 +26,6 @@ object Q3Decomp {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.dialect.ChFunctions.register(spark)
-
     def q3() = graft.core.Tables.load(spark, base, "orders")
       .agg(countDistinct(col("o_custkey")).as("u"))
 

@@ -28,8 +28,6 @@ object Q3LayoutProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.dialect.ChFunctions.register(spark)
-
     val alt8 = "/tmp/graft_q3layout_8f"
     val alt4 = "/tmp/graft_q3layout_4f"
     if (!new java.io.File(s"$alt8/_SUCCESS").exists()) {

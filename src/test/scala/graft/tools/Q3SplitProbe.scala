@@ -42,7 +42,6 @@ object Q3SplitProbe {
         .config("spark.ui.enabled", "false")
         .getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
-      graft.dialect.ChFunctions.register(spark)
       def q3() = graft.core.Tables.load(spark, base, "orders")
         .agg(countDistinct(col("o_custkey")).as("u"))
       val parts = q3().rdd.getNumPartitions // rough scan width indicator

@@ -41,7 +41,6 @@ object Q4Probe {
         .config(confs)
         .getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
-      graft.dialect.ChFunctions.register(spark)
       try {
         def gcMs = java.lang.management.ManagementFactory
           .getGarbageCollectorMXBeans.stream.mapToLong(_.getCollectionTime).sum

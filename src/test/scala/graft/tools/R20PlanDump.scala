@@ -19,11 +19,9 @@ object R20PlanDump {
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.dialect.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.dialect.ChFunctions.register(spark)
     val docs = Tables.load(spark, dir, "documents")
 
     val mtDdl = "`l_returnflag` LowCardinality(String), " +

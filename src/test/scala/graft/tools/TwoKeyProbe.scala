@@ -17,7 +17,6 @@ object TwoKeyProbe {
       .config("spark.buffer.pageSize","4m")
       .config("spark.ui.enabled","false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.dialect.ChFunctions.register(spark)
     def li = spark.read.parquet(s"$base/lineitem.parquet")
     def q() = li.groupBy("l_returnflag","l_linestatus")
       .agg(sum("l_quantity").as("s"), count(lit(1)).as("c"))

@@ -78,7 +78,6 @@ class DecimalSpec extends AnyFunSuite {
     import graft.service.QueryService
     val wh = java.nio.file.Files.createTempDirectory("graft_dec_x_wh").toString
     spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
-    graft.dialect.ChFunctions.register(spark)
     val svc = new QueryService(spark)
     val back = svc.executeToDf(QueryService.QueryRequest(
       query = "SELECT CAST(hi AS STRING) AS hi, CAST(lo AS STRING) AS lo FROM dec_mt_x",
@@ -112,7 +111,6 @@ class DecimalSpec extends AnyFunSuite {
     val wh = java.nio.file.Files.createTempDirectory("graft_dec_wh").toString
     spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
     graft.core.Tables.registerViews(spark, "/root/testdata/sf0.001")
-    graft.dialect.ChFunctions.register(spark)
     val svc = new QueryService(spark)
     svc.executeToDf(QueryService.QueryRequest(
       query = "SELECT 1 AS ok",
