@@ -5,12 +5,10 @@ import org.roaringbitmap.longlong.Roaring64Bitmap
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, TypedImperativeAggregate}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.expressions.aggregate.Count
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -29,15 +27,12 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   *
   * This rewrite (kill switch `spark.graft.bitmapDistinct=false`)
   * folds each partition's values into ONE set state per column and
-  * emits one serialized blob per partition. By default (r17, the
-  * VERDICT r16 lever) the blobs come back as JOB RESULTS and are
-  * OR-merged on the driver under [[DriverMergeAgg]] — a SINGLE-STAGE
-  * plan, no shuffle at all. With `spark.graft.driverMerge=false` the
-  * r16 two-stage shape remains: a final merge through
-  * [[BitmapOrCardinality]] (a native `TypedImperativeAggregate` — no
-  * UDFs). Either way the moved volume is one compressed state per
-  * partition — never larger than the raw distinct keys it replaces,
-  * typically orders of magnitude smaller.
+  * emits one serialized blob per partition. The blobs come back as JOB
+  * RESULTS and are OR-merged on the driver under [[DriverMergeAgg]]
+  * (r17, the VERDICT r16 lever) — a SINGLE-STAGE plan, no shuffle at
+  * all. The moved volume is one compressed state per partition — never
+  * larger than the raw distinct keys it replaces, typically orders of
+  * magnitude smaller.
   *
   * Set-state representation, chosen PER COLUMN at plan time:
   *   - DENSE bitset when the parquet footers prove the column's
@@ -377,14 +372,14 @@ object BitmapDistinct {
   }
 
   /** Driver-side OR + cardinality — the merge half of the
-    * single-stage plan. `outCols(i)` maps output position i to its
+    * single-stage plan. `outCols(i).idx` is output position i's
     * tracked column (several outputs may share one column's state).
     * Zero partial rows (an empty relation with no splits) still
     * yields the global aggregate's one row of zeros. */
   final case class BitmapCardMerger(
       nCols: Int,
       dense: Array[DenseCol],
-      outCols: Array[Int])
+      outCols: Array[DriverMerge.FinalCol])
       extends DriverMerger {
 
     override def merge(rows: Iterator[Row]): Iterator[InternalRow] = {
@@ -432,120 +427,42 @@ object BitmapDistinct {
       val vals = new Array[Any](outCols.length)
       var i = 0
       while (i < outCols.length) {
-        vals(i) = java.lang.Long.valueOf(cards(outCols(i))); i += 1
+        vals(i) = java.lang.Long.valueOf(cards(outCols(i).idx)); i += 1
       }
       Iterator.single(new GenericInternalRow(vals))
     }
   }
 }
 
-/** `OR` the per-partition bitmap blobs, evaluate to the cardinality —
-  * the merge side of the two-stage [[BitmapDistinct]] shape. A native
-  * Catalyst typed aggregate: stays inside ObjectHashAggregate, no UDF. */
-case class BitmapOrCardinality(
-    child: Expression,
-    mutableAggBufferOffset: Int = 0,
-    inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Roaring64Bitmap]
-    with UnaryLike[Expression] {
-
-  override def createAggregationBuffer(): Roaring64Bitmap =
-    new Roaring64Bitmap()
-
-  override def update(
-      buffer: Roaring64Bitmap, input: InternalRow): Roaring64Bitmap = {
-    val v = child.eval(input)
-    if (v != null) buffer.or(BitmapDistinct.deserialize(v.asInstanceOf[Array[Byte]]))
-    buffer
-  }
-
-  override def merge(
-      buffer: Roaring64Bitmap,
-      other: Roaring64Bitmap): Roaring64Bitmap = {
-    buffer.or(other)
-    buffer
-  }
-
-  override def eval(buffer: Roaring64Bitmap): Any =
-    buffer.getLongCardinality
-
-  override def serialize(buffer: Roaring64Bitmap): Array[Byte] =
-    BitmapDistinct.serialize(buffer)
-
-  override def deserialize(storageFormat: Array[Byte]): Roaring64Bitmap =
-    BitmapDistinct.deserialize(storageFormat)
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = false
-  override def prettyName: String = "bitmap_or_cardinality"
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): BitmapOrCardinality =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): BitmapOrCardinality =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): BitmapOrCardinality =
-    copy(child = newChild)
-}
-
-/** The rewrite rule — see [[BitmapDistinct]]. Registered alongside
-  * [[DictAggRewrite]] in both registration paths. */
-case class BitmapDistinctRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
+/** The rewrite rule — see [[BitmapDistinct]]. */
+case class BitmapDistinctRewrite(spark: SparkSession) extends DriverMergeRule {
 
   import BitmapDistinct._
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (spark.conf.getOption(EnabledKey).exists(_.trim.equalsIgnoreCase("false")))
-      return plan
-    if (DriverMerge.suppress.get()) return plan // planning an overflow fallback
-    plan.transformDown {
-      case agg @ Aggregate(Nil, aggExprs, child, _) =>
-        (try tryRewrite(agg, aggExprs, child)
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            logWarning(s"bitmapDistinct rewrite failed; keeping the scan plan: $e")
-            None
-        }).getOrElse(agg)
-    }
-  }
+  override protected def enabledKey: String = EnabledKey
 
-  private def tryRewrite(
-      agg: Aggregate,
-      aggExprs: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression],
-      child: LogicalPlan): Option[LogicalPlan] = {
-    val src = ScanRelations.relationOf(child).getOrElse(return None)
-    // never re-rewrite an AggProjections COMPANION scan — same
-    // exclusion (and rationale) as DictAggRewrite
+  override protected def tryRewrite(agg: Aggregate): Option[LogicalPlan] = {
+    if (agg.groupingExpressions.nonEmpty) return None
+    val src = ScanRelations.relationOf(agg.child).getOrElse(return None)
+    // never re-rewrite an AggProjections COMPANION scan
     if (ScanRelations.isProjectionCompanion(spark, src)) return None
 
     // every aggregate call must be count(DISTINCT intCol); collect the
     // distinct columns in first-seen order
-    val aes = new java.util.IdentityHashMap[AggregateExpression, Integer]()
-    aggExprs.foreach(_.foreach {
-      case ae: AggregateExpression => aes.putIfAbsent(ae, Integer.valueOf(aes.size))
-      case _ =>
-    })
-    if (aes.isEmpty) return None
-    val aeList: Seq[AggregateExpression] = {
-      val arr = new Array[AggregateExpression](aes.size)
-      aes.forEach((k, v) => arr(v.intValue) = k)
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(arr)
-    }
-    // aeIdx → (relation column name, integral width)
-    val plans: Seq[(String, Boolean)] = aeList.map { ae =>
+    val (aeList, aeIdx) = RewriteOutputs.aggregateCalls(agg.aggregateExpressions)
+    if (aeList.isEmpty) return None
+    // aeIdx → relation column name
+    val cols: Seq[String] = aeList.map { ae =>
       if (!ae.isDistinct || ae.filter.isDefined) return None
       ae.aggregateFunction match {
-        case Count(Seq(a: AttributeReference)) =>
-          val n = ScanRelations.resolve(child, a).getOrElse(return None)
-          a.dataType match {
-            case LongType => (n, true)
-            case IntegerType => (n, false)
-            case _ => return None
-          }
+        case Count(Seq(a: AttributeReference))
+            if a.dataType == LongType || a.dataType == IntegerType =>
+          ScanRelations.resolve(agg.child, a).getOrElse(return None)
         case _ => return None
       }
     }
 
-    val neededNames = plans.map(_._1).distinct
+    val neededNames = cols.distinct
     // planned-scan cache (r18): repeats skip the ~30 ms sub-scan
     // planning that dominated this rule's per-query cost (PlanPhases)
     val (batchRdd, scanOut) =
@@ -557,114 +474,46 @@ case class BitmapDistinctRewrite(spark: SparkSession) extends Rule[LogicalPlan] 
     val isLong = colIdxs.map(i => scanOut(i).dataType == LongType)
     val blobIdxOf: Map[String, Int] = neededNames.zipWithIndex.toMap
 
-    val aeIdx = RewriteOutputs.aeIndex(aes, aeList) _
-
-    // ---- single-stage driver merge (default; VERDICT r16 lever) ----
-    if (DriverMerge.enabled(spark)) {
-      // dense-domain gate per column: footer-exact [min, max] with a
-      // small span → flat bitset instead of Roaring (parquet only; the
-      // MergeTree scan keeps Roaring)
-      val dense: Array[DenseCol] = {
-        val maxRange = spark.conf.getOption(DenseMaxRangeKey)
-          .flatMap(v => scala.util.Try(v.toLong).toOption)
-          .getOrElse(DenseMaxRangeDefault)
-        val ranges: Map[String, Option[(Long, Long)]] = src match {
-          case ScanRelations.ParquetRel(lr) =>
-            try FooterAggregates.columnRanges(spark,
-              lr.relation.asInstanceOf[HadoopFsRelation], neededNames)
-            catch {
-              case scala.util.control.NonFatal(_) =>
-                neededNames.map(_ -> None).toMap
-            }
-          case _ => neededNames.map(_ -> None).toMap
-        }
-        neededNames.map { n =>
-          ranges.getOrElse(n, None) match {
-            case Some((mn, mx)) if mx - mn >= 0 && mx - mn < maxRange =>
-              DenseCol(mn, (((mx - mn) >> 6) + 1).toInt)
-            case _ => null
-          }
-        }.toArray
-      }
-      val rowRdd: RDD[Row] = batchRdd
-        .mapPartitions(it => BitmapDistinct.partial(it, colIdxs, isLong, dense))
-
-      // DIRECT mode: every output is a bare count(DISTINCT …) → the
-      // leaf emits the aggregate's own attrs, no Project, and collect()
-      // is ONE stage end-to-end
-      val direct: Option[Seq[Int]] = {
-        val cols = aggExprs.map { ne =>
-          val inner = ne match { case Alias(c, _) => c; case other => other }
-          inner match {
-            case ae: AggregateExpression if ne.dataType == LongType =>
-              aeIdx(ae).map(i => blobIdxOf(plans(i)._1))
-            case _ => None
-          }
-        }
-        if (cols.forall(_.isDefined)) Some(cols.map(_.get)) else None
-      }
-
-      val sourceDesc = src match {
+    // dense-domain gate per column: footer-exact [min, max] with a
+    // small span → flat bitset instead of Roaring (parquet only; the
+    // MergeTree scan keeps Roaring)
+    val dense: Array[DenseCol] = {
+      val maxRange = spark.conf.getOption(DenseMaxRangeKey)
+        .flatMap(v => scala.util.Try(v.toLong).toOption)
+        .getOrElse(DenseMaxRangeDefault)
+      val ranges: Map[String, Option[(Long, Long)]] = src match {
         case ScanRelations.ParquetRel(lr) =>
-          "parquet " + lr.relation
-            .asInstanceOf[HadoopFsRelation].location.rootPaths.mkString(",")
-        case ScanRelations.MergeTreeRel(ep, _, _) => s"mergetree $ep"
+          try FooterAggregates.columnRanges(spark,
+            lr.relation.asInstanceOf[HadoopFsRelation], neededNames)
+          catch {
+            case scala.util.control.NonFatal(_) =>
+              neededNames.map(_ -> None).toMap
+          }
+        case _ => neededNames.map(_ -> None).toMap
       }
-      val rewritten: Option[LogicalPlan] = direct match {
-        case Some(outCols) =>
-          val merger = BitmapCardMerger(neededNames.size, dense, outCols.toArray)
-          Some(DriverMergeAgg(
-            aggExprs.map(_.toAttribute), rowRdd, merger, Some(agg), sourceDesc))
-        case None =>
-          // GENERAL mode: leaf = one cardinality per tracked column,
-          // outputs re-expressed over it under a Project
-          val leafAttrs: Seq[Attribute] = neededNames.indices.map(i =>
-            AttributeReference(s"card_$i", LongType, nullable = false)())
-          val outputs = RewriteOutputs(aggExprs,
-            ae => aeIdx(ae).map(i => leafAttrs(blobIdxOf(plans(i)._1))),
-            _ => None).getOrElse(return None)
-          val merger = BitmapCardMerger(neededNames.size, dense,
-            neededNames.indices.toArray)
-          Some(Project(outputs,
-            DriverMergeAgg(leafAttrs, rowRdd, merger, Some(agg), sourceDesc)))
-      }
-      rewritten.foreach { p =>
+      neededNames.map { n =>
+        ranges.getOrElse(n, None) match {
+          case Some((mn, mx)) if mx - mn >= 0 && mx - mn < maxRange =>
+            DenseCol(mn, (((mx - mn) >> 6) + 1).toInt)
+          case _ => null
+        }
+      }.toArray
+    }
+    val rowRdd: RDD[Row] = batchRdd
+      .mapPartitions(it => BitmapDistinct.partial(it, colIdxs, isLong, dense))
+
+    DriverMerge.plan(agg, agg.aggregateExpressions, Nil,
+      neededNames.map(_ => (LongType, false)),
+      ae => aeIdx(ae).map(i => blobIdxOf(cols(i))),
+      rowRdd, src,
+      outCols => BitmapCardMerger(neededNames.size, dense, outCols))
+      .map { p =>
         engagements.incrementAndGet()
-        DriverMerge.engagements.incrementAndGet()
         logInfo(s"bitmapDistinct: single-stage count(DISTINCT " +
           s"${neededNames.mkString(", ")}) — " +
           neededNames.indices.map(i =>
             if (dense(i) != null) "dense" else "roaring").mkString("/"))
-        return Some(p)
+        p
       }
-    }
-
-    // ---- two-stage shape (driver merge off) ----
-    val rowRdd: RDD[Row] = batchRdd
-      .mapPartitions(it => BitmapDistinct.partial(it, colIdxs, isLong,
-        new Array[DenseCol](colIdxs.length)))
-
-    val schema = StructType(neededNames.zipWithIndex.map { case (_, i) =>
-      StructField(s"bm_$i", BinaryType, nullable = true)
-    })
-    val partialDf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .createDataFrame(rowRdd, schema)
-    val partialPlan = partialDf.queryExecution.analyzed
-    val pAttr: Map[Int, Attribute] =
-      partialPlan.output.zipWithIndex.map(_.swap).toMap
-
-    def mergeOf(i: Int): Expression = {
-      val (colName, _) = plans(i)
-      BitmapOrCardinality(pAttr(blobIdxOf(colName))).toAggregateExpression()
-    }
-
-    val outputs = RewriteOutputs(aggExprs,
-      ae => aeIdx(ae).map(mergeOf), _ => None).getOrElse(return None)
-
-    engagements.incrementAndGet()
-    logInfo(s"bitmapDistinct: rewriting count(DISTINCT ${neededNames.mkString(", ")}) " +
-      "to per-partition Roaring64 bitmaps + OR-merge")
-    Some(Aggregate(Nil, outputs, partialPlan))
   }
-
 }

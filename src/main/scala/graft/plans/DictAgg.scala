@@ -3,11 +3,10 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Cast, Coalesce, Expression, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.vectorized.WritableColumnVector
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
@@ -36,18 +35,15 @@ import org.apache.spark.unsafe.types.UTF8String
   *   (Project of attrs)? (LogicalRelation parquet)
   * }}}
   *
-  * becomes, by default, a SINGLE-STAGE plan (r17, the VERDICT r16
-  * lever): a per-partition partial aggregation that consumes the
-  * vectorized scan's `ColumnarBatch`es directly ([[DictAgg.partial]])
-  * and emits one row per (partition, group), collected as JOB RESULTS
-  * and folded into the final answer on the driver by
-  * [[DictAgg.DictAggMerger]] under [[DriverMergeAgg]] — no exchange, no
-  * second stage, the same merge topology DuckDB's gather uses. With
-  * `spark.graft.driverMerge=false` the r16 two-stage shape remains: a
-  * tiny final `Aggregate` merges the partials through a shuffle —
-  * sums re-sum, counts re-sum, min/max re-min/max, avg merges as
-  * Σsum ÷ Σcount (the same mergeable-state discipline as
-  * [[AggProjections]]).
+  * becomes a SINGLE-STAGE plan (r17, the VERDICT r16 lever): a
+  * per-partition partial aggregation that consumes the vectorized
+  * scan's `ColumnarBatch`es directly ([[DictAgg.partial]]) and emits
+  * one row per (partition, group), collected as JOB RESULTS and folded
+  * into the final answer on the driver by [[DictAgg.DictAggMerger]]
+  * under [[DriverMergeAgg]] — no exchange, no second stage, the same
+  * merge topology DuckDB's gather uses. Sums re-sum, counts re-sum,
+  * min/max re-min/max, avg merges as Σsum ÷ Σcount (the same
+  * mergeable-state discipline as [[AggProjections]]).
   *
   * The kernel's inner loop per row is: dictionary code → int array
   * index → accumulator update. The UTF8String is materialized ONCE per
@@ -58,8 +54,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Exactness guardrails:
   *   - group keys travel as BINARY partials and are compared byte-wise
-  *     (Spark's own binary grouping in the two-stage shape, the
-  *     composite map in the driver merger), then cast back to string —
+  *     (the composite map in the driver merger), then decoded back —
   *     byte-exact even for non-UTF-8-roundtrippable data (a
   *     java.lang.String key would collapse invalid sequences);
   *   - every aggregate must rewrite onto a mergeable partial (no
@@ -74,24 +69,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * 100 TB posture: the partial stage is embarrassingly parallel over
   * scan splits and its output volume is (distinct keys × partitions)
   * rows — for a LowCardinality key, kilobytes. A high-cardinality key
-  * is the wrong target for this path, so the kernel bounds its hash
-  * map at `spark.graft.dictAgg.maxGroupsPerPartition` (default 1M)
-  * groups per partition and FLUSHES the full map as partial rows when
-  * it fills (bounded memory, still correct — the merge side absorbs
-  * repeated groups exactly like a normal shuffle-side merge; this
-  * replaced the r16 per-input-row singleton stream, whose
-  * count(DISTINCT) degradation shipped one bitmap blob per row —
-  * review r17). Under a driver-merge plan the per-partition cap also
-  * shrinks with the partition count (total collected rows stay under
-  * `spark.graft.driverMerge.maxTotalRows`), and instead of flushing
-  * the task FAILS FAST with the overflow marker — [[DriverMergeAggExec]]
-  * then runs the untouched native plan, so a mis-gated high-cardinality
-  * key costs one wasted partial scan, never a driver OOM.
+  * is the wrong target for this path, so the kernel caps its groups
+  * per partition at `min(DriverMergeGroupCap, maxTotalRows /
+  * partitions)` (total collected rows stay under
+  * `spark.graft.driverMerge.maxTotalRows`). A task past the cap FAILS
+  * FAST with the overflow marker — [[DriverMergeAggExec]] then runs
+  * the untouched native plan, so a mis-gated high-cardinality key costs
+  * one wasted partial scan, never a driver OOM. A cap below 16 (more
+  * than maxTotalRows / 16 scan partitions) would overflow on almost
+  * any key, so the rewrite stands down and the native plan runs.
   */
 object DictAgg {
 
   val EnabledKey = "spark.graft.dictAgg"
-  val MaxGroupsKey = "spark.graft.dictAgg.maxGroupsPerPartition"
   /** Byte budget for the driver gather of per-slot HLL registers
     * (r19): caps slots so partitions × cap × register-bytes stays
     * bounded even at uniqCombined's precision-17 register size. */
@@ -101,8 +91,8 @@ object DictAgg {
       .flatMap(v => scala.util.Try(v.toLong).toOption)
       .getOrElse(256L << 20)
 
-  /** Per-partition group cap under driver merge (further shrunk so
-    * partitions × cap ≤ [[DriverMerge.MaxTotalRowsKey]]). */
+  /** Per-partition group cap (further shrunk so partitions × cap ≤
+    * [[DriverMerge.MaxTotalRowsKey]]). */
   val DriverMergeGroupCap = 1 << 16
 
   // op codes
@@ -113,15 +103,15 @@ object DictAgg {
   final val OpMax = 4
   final val OpAvg = 5
   /** count(DISTINCT intCol) per group — a Roaring64 bitmap per slot,
-    * merged by [[BitmapOrCardinality]] (two-stage) or the driver
-    * merger (the grouped composition of the two r16 rewrites; the
+    * OR-merged by the driver merger (the grouped composition of the
+    * two r16 rewrites; the
     * reference's natural `GROUP BY event_type, uniqExact(actor_login)`
     * analytics shape). */
   final val OpUniq = 6
   /** APPROXIMATE distinct per group — `uniq()` (HLL++ at the default
     * rsd 0.05): per-slot register words driven by Spark's own helper
     * ([[HllRegisters]]), so the estimate is bit-identical to the
-    * native HyperLogLogPlusPlus plan. Driver-merge path only (r18). */
+    * native HyperLogLogPlusPlus plan (r18). */
   final val OpHll = 7
 
   // value type tags (the scan column's data type)
@@ -213,11 +203,6 @@ object DictAgg {
     /** Number of partial columns this spec emits (avg emits sum+count). */
     def width: Int = if (op == OpAvg) 2 else 1
   }
-
-  /** One FINAL output column of the driver merger: a group key part
-    * (`isKey`, `idx` = key position) or a finalized aggregate (`idx` =
-    * spec index). */
-  final case class FinalCol(isKey: Boolean, idx: Int) extends Serializable
 
   /** Engagement counter — PlanSpec asserts the rewrite actually fired
     * on the bench q2 shape (a silently-disengaged optimization is the
@@ -380,12 +365,10 @@ object DictAgg {
   }
 
   /** Per-partition partial aggregation over the vectorized scan's
-    * batches. Emits `Row(key0Bytes[, key1Bytes], partial0, partial1,
-    * …)` — one row per live group, plus a full-map FLUSH whenever the
-    * group map hits `maxGroups` (the map resets and the scan
-    * continues; repeated groups across flushes merge downstream).
-    * With `failFast` (driver-merge plans) the overflow instead throws
-    * [[DriverMerge.OverflowMarker]]. ZERO to FOUR keys of string /
+    * batches. Consumes every batch, then emits `Row(key0Bytes[,
+    * key1Bytes], partial0, partial1, …)` — one row per group. A group
+    * past `maxGroups` throws [[DriverMerge.OverflowMarker]] (the exec
+    * then runs the native plan). ZERO to FOUR keys of string /
     * int(+date) / long(+timestamp) kinds (r17): empty `keyIdxs` is the
     * GLOBAL-aggregate spelling (one slot, load-bearing for the mixed
     * distinct+plain shape); a single string key rides the per-batch
@@ -407,8 +390,7 @@ object DictAgg {
         * share ONE evaluation per batch. */
       specPredGroups: Array[Array[Pred]],
       specGroupIdx: Array[Int],
-      maxGroups: Int,
-      failFast: Boolean): Iterator[Row] = {
+      maxGroups: Int): Iterator[Row] = {
 
     val nSpecs = specs.length
     val nKeys = keyIdxs.length
@@ -471,23 +453,23 @@ object DictAgg {
     }
 
     def newSlot(keyBytes: Array[Array[Byte]]): Int = {
+      if (nGroups >= maxGroups) DriverMerge.overflow()
       grow(nGroups + 1)
       keys(nGroups) = keyBytes
       nGroups += 1
       nGroups - 1
     }
 
-    /** Cross-batch lookup-or-create off the composite identity; -1 =
-      * past maxGroups (the caller flushes or fails fast). */
+    /** Cross-batch lookup-or-create off the composite identity. */
     def slotOf(parts: Array[Array[Byte]]): Int = {
       val ck = compositeKey(parts)
       val hit = slots.get(ck)
       if (hit != null) hit.intValue()
-      else if (nGroups < maxGroups) {
+      else {
         val s = newSlot(parts)
         slots.put(ck, Integer.valueOf(s))
         s
-      } else -1
+      }
     }
 
     // per-batch code→slot cache (parquet dictionaries are per
@@ -547,46 +529,13 @@ object DictAgg {
       Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(vals))
     }
 
-    /** Emit every live group as a partial row and reset ALL group
-      * state for slot reuse — the bounded-memory overflow discipline.
-      * Repeated groups across flushes are mergeable partials; the
-      * merge side (driver or shuffle) absorbs them. */
-    def flushAll(): Array[Row] = {
-      val out = new Array[Row](nGroups)
-      var s = 0
-      while (s < nGroups) { out(s) = slotRow(s); s += 1 }
-      slots.clear()
-      if (valueSlots != null) valueSlots.clear()
-      nullSlot = -1
-      var j = 0
-      while (j < nSpecs) {
-        java.util.Arrays.fill(accL(j), 0, nGroups, 0L)
-        java.util.Arrays.fill(accD(j), 0, nGroups, 0.0d)
-        java.util.Arrays.fill(accC(j), 0, nGroups, 0L)
-        if (accB(j) != null)
-          java.util.Arrays.fill(
-            accB(j).asInstanceOf[Array[AnyRef]], 0, nGroups, null)
-        if (accH(j) != null)
-          java.util.Arrays.fill(
-            accH(j).asInstanceOf[Array[AnyRef]], 0, nGroups, null)
-        j += 1
-      }
-      java.util.Arrays.fill(keys.asInstanceOf[Array[AnyRef]], 0, nGroups, null)
-      nGroups = 0
-      if (nKeys == 0) newSlot(Array.empty) // the global slot stays live
-      out
-    }
-
     var slotsBuf = new Array[Int](16384)
     // the GLOBAL-aggregate spelling (no keys): one slot for everything
     if (nKeys == 0) newSlot(Array.empty)
 
-    /** One batch's work; returns flushed partial rows (bounded by the
-      * group cap per flush — past-cap scans must stream partials out,
-      * never buffer unbounded state). */
-    def processBatch(batch: ColumnarBatch): Iterator[Row] = {
+    def processBatch(batch: ColumnarBatch): Unit = {
       val n = batch.numRows()
-      if (n == 0) return Iterator.empty
+      if (n == 0) return
       if (slotsBuf.length < n) slotsBuf = new Array[Int](n)
       val vecs = new Array[ColumnVector](batch.numCols())
       var v = 0
@@ -644,40 +593,31 @@ object DictAgg {
       val d0 = if (nKeys == 2) dictOf(kv0) else null
       val d1 = if (nKeys == 2) dictOf(kv1) else null
       val paired = d0 != null && d1 != null
-      def resetBatchCaches(): Unit = {
-        if (dictIds != null) java.util.Arrays.fill(codeSlots, -1)
-        if (paired) pairSlots.clear()
-      }
-      resetBatchCaches()
+      if (dictIds != null) java.util.Arrays.fill(codeSlots, -1)
+      if (paired) pairSlots.clear()
 
-      /** Resolve slots for rows [start, n) into slotsBuf; returns the
-        * first row whose NEW group could not be allocated under
-        * `maxGroups` (n = all resolved). */
-      def resolveSlots(start: Int): Int = {
+      /** Resolve every row's slot into slotsBuf (-1 = filtered out). */
+      def resolveSlots(): Unit = {
         if (nKeys == 0) {
-          if (mask == null) java.util.Arrays.fill(slotsBuf, start, n, 0)
+          if (mask == null) java.util.Arrays.fill(slotsBuf, 0, n, 0)
           else {
-            var i = start
+            var i = 0
             while (i < n) { slotsBuf(i) = if (mask(i)) 0 else -1; i += 1 }
           }
-          return n
+          return
         }
-        var i = start
+        var i = 0
         if (singleNumKey) {
           val kind = keyKinds(0)
           while (i < n) {
             if (mask != null && !mask(i)) slotsBuf(i) = -1
             else if (keyVec.isNullAt(i)) {
-              if (nullSlot == -1) {
-                if (nGroups >= maxGroups) return i
-                nullSlot = newSlot(Array(null))
-              }
+              if (nullSlot == -1) nullSlot = newSlot(Array(null))
               slotsBuf(i) = nullSlot
             } else {
               val v = if (kind == KInt) keyVec.getInt(i).toLong else keyVec.getLong(i)
               var slot = valueSlots.get(v)
               if (slot < 0) {
-                if (nGroups >= maxGroups) return i
                 slot = newSlot(Array(le8(v)))
                 valueSlots.put(v, slot)
               }
@@ -693,10 +633,7 @@ object DictAgg {
             } else {
               var slot = -1
               if (keyVec.isNullAt(i)) {
-                if (nullSlot == -1) {
-                  if (nGroups >= maxGroups) return i
-                  nullSlot = newSlot(Array(null))
-                }
+                if (nullSlot == -1) nullSlot = newSlot(Array(null))
                 slot = nullSlot
               } else if (dictIds != null) {
                 val code = dictIds.getInt(i)
@@ -709,13 +646,9 @@ object DictAgg {
                 slot = codeSlots(code)
                 if (slot == -1) {
                   slot = slotOf(partsOf(i))
-                  if (slot < 0) return i
                   codeSlots(code) = slot
                 }
-              } else {
-                slot = slotOf(partsOf(i))
-                if (slot < 0) return i
-              }
+              } else slot = slotOf(partsOf(i))
               slotsBuf(i) = slot
               i += 1
             }
@@ -737,24 +670,18 @@ object DictAgg {
                 if (hit >= 0) slot = hit
                 else {
                   slot = slotOf(partsOf(i))
-                  if (slot < 0) return i
                   pairSlots.put(packed, slot)
                 }
-              } else {
-                slot = slotOf(partsOf(i))
-                if (slot < 0) return i
-              }
+              } else slot = slotOf(partsOf(i))
               slotsBuf(i) = slot
               i += 1
             }
           }
         }
-        n
       }
 
-      /** Run each spec's tight typed loop over the recorded slots of
-        * rows [start, end). */
-      def accumulate(start: Int, end: Int): Unit = {
+      /** Run each spec's tight typed loop over the recorded slots. */
+      def accumulate(): Unit = {
         var j = 0
         while (j < nSpecs) {
           val spec = specs(j)
@@ -766,15 +693,15 @@ object DictAgg {
             else groupMasks(specGroupIdx(j))
           spec.op match {
             case OpCountStar =>
-              var i = start
-              while (i < end) {
+              var i = 0
+              while (i < n) {
                 val s = slotsBuf(i)
                 if (s >= 0 && (sm == null || sm(i))) c(s) += 1
                 i += 1
               }
             case OpCountCol =>
-              var i = start
-              while (i < end) {
+              var i = 0
+              while (i < n) {
                 val s = slotsBuf(i)
                 if (s >= 0 && (sm == null || sm(i)) && !vec.isNullAt(i)) c(s) += 1
                 i += 1
@@ -785,8 +712,8 @@ object DictAgg {
             // or silently wrap (legacy) where the native plan succeeds
             // (review r16)
             case OpAvg if spec.typ == TInt || spec.typ == TLong =>
-              var i = start
-              while (i < end) {
+              var i = 0
+              while (i < n) {
                 val s = slotsBuf(i)
                 if (s >= 0 && (sm == null || sm(i)) && !vec.isNullAt(i)) {
                   d(s) += (if (spec.typ == TInt) vec.getInt(i).toDouble
@@ -797,8 +724,8 @@ object DictAgg {
               }
             case OpSum | OpAvg => spec.typ match {
               case TInt =>
-                var i = start
-                while (i < end) {
+                var i = 0
+                while (i < n) {
                   val s = slotsBuf(i)
                   if (s >= 0 && (sm == null || sm(i)) && !vec.isNullAt(i)) {
                     val x = vec.getInt(i).toLong
@@ -808,8 +735,8 @@ object DictAgg {
                   i += 1
                 }
               case TLong =>
-                var i = start
-                while (i < end) {
+                var i = 0
+                while (i < n) {
                   val s = slotsBuf(i)
                   if (s >= 0 && (sm == null || sm(i)) && !vec.isNullAt(i)) {
                     val x = vec.getLong(i)
@@ -819,15 +746,15 @@ object DictAgg {
                   i += 1
                 }
               case TFloat =>
-                var i = start
-                while (i < end) {
+                var i = 0
+                while (i < n) {
                   val s = slotsBuf(i)
                   if (s >= 0 && (sm == null || sm(i)) && !vec.isNullAt(i)) { d(s) += vec.getFloat(i); c(s) += 1 }
                   i += 1
                 }
               case TDouble =>
-                var i = start
-                while (i < end) {
+                var i = 0
+                while (i < n) {
                   val s = slotsBuf(i)
                   if (s >= 0 && (sm == null || sm(i)) && !vec.isNullAt(i)) { d(s) += vec.getDouble(i); c(s) += 1 }
                   i += 1
@@ -837,8 +764,8 @@ object DictAgg {
               if (accB(j) == null) accB(j) =
                 new Array[org.roaringbitmap.longlong.Roaring64Bitmap](cap)
               val bmArr = accB(j)
-              var i = start
-              while (i < end) {
+              var i = 0
+              while (i < n) {
                 val sl = slotsBuf(i)
                 if (sl >= 0 && (sm == null || sm(i)) && !vec.isNullAt(i)) {
                   var bm = bmArr(sl)
@@ -863,8 +790,8 @@ object DictAgg {
                 case TDouble => DoubleType
                 case _ => org.apache.spark.sql.types.StringType
               }
-              var i = start
-              while (i < end) {
+              var i = 0
+              while (i < n) {
                 val sl = slotsBuf(i)
                 if (sl >= 0 && (sm == null || sm(i)) && !vec.isNullAt(i)) {
                   var regs = hArr(sl)
@@ -886,8 +813,8 @@ object DictAgg {
             case OpMin | OpMax => spec.typ match {
               case TInt | TLong =>
                 val isMin = spec.op == OpMin
-                var i = start
-                while (i < end) {
+                var i = 0
+                while (i < n) {
                   val s = slotsBuf(i)
                   if (s >= 0 && (sm == null || sm(i)) && !vec.isNullAt(i)) {
                     val x = if (spec.typ == TInt) vec.getInt(i).toLong else vec.getLong(i)
@@ -898,8 +825,8 @@ object DictAgg {
                 }
               case _ =>
                 val isMin = spec.op == OpMin
-                var i = start
-                while (i < end) {
+                var i = 0
+                while (i < n) {
                   val s = slotsBuf(i)
                   if (s >= 0 && (sm == null || sm(i)) && !vec.isNullAt(i)) {
                     val x = if (spec.typ == TFloat) vec.getFloat(i).toDouble else vec.getDouble(i)
@@ -915,47 +842,14 @@ object DictAgg {
         }
       }
 
-      var flushed: scala.collection.mutable.ArrayBuffer[Row] = null
-      var start = 0
-      while (start < n) {
-        val end = resolveSlots(start)
-        accumulate(start, end)
-        if (end < n) {
-          // the group map is full at row `end`: emit + reset, resume
-          if (failFast) DriverMerge.overflow()
-          if (flushed == null) flushed = new scala.collection.mutable.ArrayBuffer[Row]()
-          flushed ++= flushAll()
-          resetBatchCaches() // per-batch caches hold now-stale slots
-        }
-        start = end
-      }
-      if (flushed == null) Iterator.empty else flushed.iterator
+      resolveSlots()
+      accumulate()
     }
 
-    new Iterator[Row] {
-      private var pending: Iterator[Row] = Iterator.empty
-      private var tail: Iterator[Row] = null
-      override def hasNext: Boolean = {
-        while (!pending.hasNext && batches.hasNext)
-          pending = processBatch(batches.next())
-        if (pending.hasNext) true
-        else {
-          if (tail == null) tail = (0 until nGroups).iterator.map(slotRow)
-          tail.hasNext
-        }
-      }
-      override def next(): Row = {
-        if (!hasNext) throw new NoSuchElementException("exhausted")
-        if (pending.hasNext) pending.next() else tail.next()
-      }
-    }
+    batches.foreach(processBatch)
+    (0 until nGroups).iterator.map(slotRow)
   }
 
-  /** Driver-side fold of [[partial]] rows into FINAL rows — the merge
-    * half of the single-stage plan. One pass over (groups × partitions)
-    * tiny rows; finalization follows the same per-op contracts as the
-    * two-stage merge expressions (null sum for all-NULL groups, LEGACY
-    * avg divide — null on zero count, bitmap OR → cardinality). */
   /** Per-group merge state of [[DictAggMerger]]. */
   private final class MergeSt(val parts: Array[Array[Byte]], nSpecs: Int) {
     val l = new Array[Long](nSpecs)
@@ -965,11 +859,16 @@ object DictAgg {
     var hlls: Array[Array[Long]] = null
   }
 
+  /** Driver-side fold of [[partial]] rows into FINAL rows — the merge
+    * half of the single-stage plan. One pass over (groups × partitions)
+    * tiny rows; finalization follows the native aggregates' per-op
+    * contracts (null sum for all-NULL groups, LEGACY avg divide — null
+    * on zero count, bitmap OR → cardinality). */
   final case class DictAggMerger(
       nKeys: Int,
       keyKinds: Array[Int],
       specs: Array[Spec],
-      finalCols: Array[FinalCol],
+      finalCols: Array[DriverMerge.FinalCol],
       globalIdentity: Boolean)
       extends DriverMerger {
 
@@ -1071,17 +970,17 @@ object DictAgg {
     }
 
     /** UnsafeRowWriter's float normalization contract: -0.0 → +0.0,
-      * every NaN → the canonical NaN. The two-stage shape gets this
-      * for free when partials cross an UnsafeRow boundary; the driver
-      * merger must apply it explicitly or `min(d)` could surface a
-      * -0.0 the native plan never shows. */
+      * every NaN → the canonical NaN. A shuffled aggregate gets this
+      * for free when its state crosses an UnsafeRow boundary; the
+      * driver merger must apply it explicitly or `min(d)` could surface
+      * a -0.0 the native plan never shows. */
     private def normD(v: Double): Double =
       if (v != v) Double.NaN else if (v == 0.0d) 0.0d else v
     private def normF(v: Float): Float =
       if (v != v) Float.NaN else if (v == 0.0f) 0.0f else v
 
     /** One FINAL row from a merged group — catalyst values, same
-      * per-op contracts as the two-stage merge expressions. */
+      * per-op contracts as the native aggregates. */
     private def finalizeRow(st: MergeSt): InternalRow = {
       val vals = new Array[Any](finalCols.length)
       var i = 0
@@ -1161,36 +1060,12 @@ object DictAgg {
   * [[FooterAggregates]] and [[AggProjectionRewrite]] (a projection
   * reroute, when fresh, is strictly better than re-scanning; this rule
   * picks up the shapes no projection covers). */
-case class DictAggRewrite(spark: SparkSession) extends Rule[LogicalPlan]
+case class DictAggRewrite(spark: SparkSession) extends DriverMergeRule
     with org.apache.spark.sql.catalyst.expressions.PredicateHelper {
 
   import DictAgg._
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (spark.conf.getOption(EnabledKey).exists(_.trim.equalsIgnoreCase("false")))
-      return plan
-    if (DriverMerge.suppress.get()) return plan // planning an overflow fallback
-    plan.transformDown {
-      // up to FOUR group keys (r17b): 1 key rides the code→slot /
-      // raw-value fast paths, 2 dict-coded string keys the packed-pair
-      // cache, anything else the byte-composite map — still one scan,
-      // one stage
-      case agg @ Aggregate(groupExprs, aggExprs, child, _)
-          if groupExprs.size <= 4 &&
-            groupExprs.forall {
-              case a: AttributeReference => keyKindOf(a.dataType).isDefined
-              case _ => false
-            } =>
-        (try tryRewrite(agg,
-          groupExprs.map(_.asInstanceOf[AttributeReference]), aggExprs, child)
-        catch {
-          // an optimization must never fail the query
-          case scala.util.control.NonFatal(e) =>
-            logWarning(s"dictAgg rewrite failed; keeping the scan plan: $e")
-            None
-        }).getOrElse(agg)
-    }
-  }
+  override protected def enabledKey: String = EnabledKey
 
   private def typeTag(dt: DataType): Option[Int] = dt match {
     case IntegerType => Some(TInt)
@@ -1201,9 +1076,7 @@ case class DictAggRewrite(spark: SparkSession) extends Rule[LogicalPlan]
   }
 
   /** r17 key generalization: DateType rides KInt (internal int days),
-    * TimestampType rides KLong (internal long micros). Non-string keys
-    * engage on the driver-merge path only (the two-stage partial
-    * schema's Row encoder would need java.sql external types). */
+    * TimestampType rides KLong (internal long micros). */
   private def keyKindOf(dt: DataType): Option[Int] = dt match {
     case StringType => Some(KStr)
     case IntegerType | DateType => Some(KInt)
@@ -1329,30 +1202,23 @@ case class DictAggRewrite(spark: SparkSession) extends Rule[LogicalPlan]
     }
   }
 
-  private def tryRewrite(
-      agg: Aggregate,
-      gs: Seq[AttributeReference],
-      aggExprs: Seq[NamedExpression],
-      child: LogicalPlan): Option[LogicalPlan] = {
+  override protected def tryRewrite(agg: Aggregate): Option[LogicalPlan] = {
+    // up to FOUR group keys (r17b): 1 key rides the code→slot /
+    // raw-value fast paths, 2 dict-coded string keys the packed-pair
+    // cache, anything else the byte-composite map — still one scan,
+    // one stage
+    if (agg.groupingExpressions.size > 4) return None
+    val gs = agg.groupingExpressions.map {
+      case a: AttributeReference if keyKindOf(a.dataType).isDefined => a
+      case _ => return None
+    }
+    val aggExprs = agg.aggregateExpressions
+    val child = agg.child
     // r17: peel filters between the aggregate and the relation — every
     // conjunct must compile into the kernel's predicate language or
     // the rewrite stands down entirely
     val (conds, scanChild) = decomposeFilters(child)
     val src = ScanRelations.relationOf(scanChild).getOrElse(return None)
-    // an AggProjections COMPANION scan may ride the DRIVER-MERGE path
-    // only (r17: the reroute reduced the query to a tiny pre-aggregated
-    // scan; removing its final exchange is a real win and the leaf's
-    // sourceDesc keeps the companion path visible to plan audits). The
-    // TWO-STAGE shape must never take it — replacing its FileScan with
-    // an opaque RDD node obscured audits in r16.
-    val isCompanion = ScanRelations.isProjectionCompanion(spark, src)
-    val sourceDesc = src match {
-      case ScanRelations.ParquetRel(lr) =>
-        "parquet " + lr.relation
-          .asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-          .location.rootPaths.mkString(",")
-      case ScanRelations.MergeTreeRel(ep, _, _) => s"mergetree $ep"
-    }
     val keyNames = gs.map(g =>
       ScanRelations.resolve(child, g).getOrElse(return None))
     val keyKinds: Array[Int] =
@@ -1376,21 +1242,7 @@ case class DictAggRewrite(spark: SparkSession) extends Rule[LogicalPlan]
     // their codegen'd native plan; pure-distinct globals belong to
     // BitmapDistinctRewrite.
 
-    // collect every AggregateExpression (identity-keyed: the same
-    // object may be referenced from several output expressions; a
-    // boxed-Integer map because IdentityHashMap[_, Int] unboxes a
-    // missing key's null to 0 — a silent wrong-index bug)
-    val aes = new java.util.IdentityHashMap[AggregateExpression, Integer]()
-    aggExprs.foreach(_.foreach {
-      case ae: AggregateExpression =>
-        aes.putIfAbsent(ae, Integer.valueOf(aes.size))
-      case _ =>
-    })
-    val aeList: Seq[AggregateExpression] = {
-      val arr = new Array[AggregateExpression](aes.size)
-      aes.forEach((k, v) => arr(v.intValue) = k)
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(arr)
-    }
+    val (aeList, aeIdx) = RewriteOutputs.aggregateCalls(aggExprs)
 
     val ansi = spark.conf.get("spark.sql.ansi.enabled", "true")
       .equalsIgnoreCase("true")
@@ -1426,7 +1278,7 @@ case class DictAggRewrite(spark: SparkSession) extends Rule[LogicalPlan]
         ae.filter.map(splitConjunctivePredicates).getOrElse(Nil)
       if (ae.isDistinct) ae.aggregateFunction match {
         // grouped count(DISTINCT intCol): per-slot Roaring64 bitmap,
-        // OR-merged at the final stage (driver or shuffle)
+        // OR-merged by the driver merger
         case Count(Seq(a: AttributeReference))
             if a.dataType == IntegerType || a.dataType == LongType =>
           val n = colOf(a).getOrElse(return None)
@@ -1558,26 +1410,20 @@ case class DictAggRewrite(spark: SparkSession) extends Rule[LogicalPlan]
       }.toArray
     }.toArray
 
-    val maxGroups = spark.conf.getOption(MaxGroupsKey)
-      .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(1 << 20)
-
-    // ---- single-stage driver merge (default; VERDICT r16 lever) ----
     // per-partition cap sized so the collected volume stays bounded
     // regardless of cluster width: partitions × cap ≤ maxTotalRows.
     // At 32 partitions that is 64k groups/partition; at 100k scan
     // splits the cap shrinks to ~40 and a non-LC key fails fast into
     // the native plan instead of flooding the driver.
     val parts = math.max(1, batchRdd.getNumPartitions)
-    val dmCapRows = math.min(
-      math.min(maxGroups.toLong, DriverMergeGroupCap.toLong),
+    val dmCapRows = math.min(DriverMergeGroupCap.toLong,
       DriverMerge.maxTotalRows(spark) / parts).toInt
     // r19: OpHll registers are fixed-size but can be BIG (precision 17
     // — the uniqCombined class — is ~105 KB/slot vs ~416 B at the
     // default rsd), so the gather is bounded in BYTES too: partitions
-    // × cap × per-slot register bytes ≤ hllGatherBytes. Past the cap
-    // the overflow fails fast into the native two-stage plan, which
-    // shuffles sketches instead of gathering them — the right posture
-    // for high-cardinality keys under a high-precision sketch.
+    // × cap × per-slot register bytes ≤ hllGatherBytes (floored at 16;
+    // past the cap the overflow fails fast into the native plan, which
+    // shuffles sketches instead of gathering them).
     val hllBytesPerSlot = specs.collect {
       case s if s.op == OpHll => HllRegisters.forRsd(s.hllRsd).numWords * 8L
     }.sum
@@ -1585,172 +1431,23 @@ case class DictAggRewrite(spark: SparkSession) extends Rule[LogicalPlan]
       if (hllBytesPerSlot == 0L) dmCapRows
       else math.min(dmCapRows.toLong, math.max(16L,
         HllGatherBytes(spark) / (parts * hllBytesPerSlot))).toInt
-    if (DriverMerge.enabled(spark) && dmCap >= 16) {
-      buildDriverMerge(agg, gs, aggExprs, aes, aeList, specs, keyIdxs,
-        keyKinds, preds, specPredGroups, specGroupIdx, batchRdd, dmCap,
-        sourceDesc).foreach { p =>
+    // a cap this small would overflow on almost any key: the native
+    // plan runs instead
+    if (dmCap < 16) return None
+
+    val rowRdd: RDD[Row] = batchRdd.mapPartitions(it =>
+      DictAgg.partial(it, keyIdxs, keyKinds, specs, preds, specPredGroups,
+        specGroupIdx, dmCap))
+    DriverMerge.plan(agg, aggExprs, gs,
+      specs.map(s => (mergedType(s), mergedNullable(s))).toSeq, aeIdx,
+      rowRdd, src,
+      cols => DictAggMerger(gs.size, keyKinds, specs, cols, gs.isEmpty))
+      .map { p =>
         engagements.incrementAndGet()
-        DriverMerge.engagements.incrementAndGet()
         logInfo(s"dictAgg: single-stage driver-merge GROUP BY " +
           s"${keyNames.mkString(", ")} (${specs.length} aggregates, " +
           s"${preds.length} predicates, cap $dmCap × $parts partitions)")
-        return Some(p)
+        p
       }
-    }
-
-    // ---- two-stage shape (driver merge off or shape not expressible).
-    // String keys and no predicates only: the partial schema's Row
-    // encoder would need java.sql external types for date/timestamp
-    // keys, and the merge expressions have no filter analog. Companion
-    // scans never take this shape (plan-audit visibility, r16) ----
-    if (isCompanion || preds.nonEmpty || keyKinds.exists(_ != KStr)) return None
-    val rowRdd: RDD[Row] =
-      batchRdd.mapPartitions(it =>
-        DictAgg.partial(it, keyIdxs, keyKinds, specs, Array.empty,
-          specPredGroups, specGroupIdx, maxGroups, failFast = false))
-
-    // OpHll is driver-merge-only (its two-stage merge would need a
-    // dedicated register-OR Catalyst aggregate); without the driver
-    // merge the native HLL++ plan stands (r18)
-    if (specs.exists(_.op == OpHll)) return None
-
-    // ---- partial schema: binary key + per-spec mergeable state ----
-    def partialFields(p: AggPlan, i: Int): Seq[StructField] = p.op match {
-      case OpUniq => Seq(StructField(s"u_$i", BinaryType, nullable = true))
-      case OpSum =>
-        val dt = if (p.typ == TInt || p.typ == TLong) LongType else DoubleType
-        Seq(StructField(s"s_$i", dt, nullable = true))
-      case OpCountStar | OpCountCol =>
-        Seq(StructField(s"c_$i", LongType, nullable = false))
-      case OpMin => Seq(StructField(s"mn_$i", typOf(p.typ), nullable = true))
-      case OpMax => Seq(StructField(s"mx_$i", typOf(p.typ), nullable = true))
-      case OpAvg =>
-        // Double sum regardless of input type — Average's own contract
-        Seq(StructField(s"s_$i", DoubleType, nullable = true),
-          StructField(s"c_$i", LongType, nullable = false))
-    }
-    val schema = StructType(
-      keyNames.indices.map(i =>
-        StructField(s"k_$i", BinaryType, nullable = true)) ++
-        plans.zipWithIndex.flatMap { case (p, i) => partialFields(p, i) })
-    val partialDf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .createDataFrame(rowRdd, schema)
-    val partialPlan = partialDf.queryExecution.analyzed
-    val pAttr: Map[String, Attribute] = partialPlan.output.map(a => a.name -> a).toMap
-    val kAttrs = keyNames.indices.map(i => pAttr(s"k_$i"))
-
-    // ---- final merge expressions, rebound to the original exprIds ----
-    def mergeOf(i: Int): Expression = {
-      val p = plans(i)
-      p.op match {
-        case OpUniq =>
-          BitmapOrCardinality(pAttr(s"u_$i")).toAggregateExpression()
-        case OpSum => Sum(pAttr(s"s_$i")).toAggregateExpression()
-        case OpCountStar | OpCountCol =>
-          Coalesce(Seq(Sum(pAttr(s"c_$i")).toAggregateExpression(), Literal(0L)))
-        case OpMin => Min(pAttr(s"mn_$i")).toAggregateExpression()
-        case OpMax => Max(pAttr(s"mx_$i")).toAggregateExpression()
-        case OpAvg =>
-          // LEGACY divide: an all-NULL group merges to 0 count and the
-          // direct path's Average yields NULL there, not a DIVIDE_BY_ZERO
-          org.apache.spark.sql.catalyst.expressions.Divide(
-            Cast(Sum(pAttr(s"s_$i")).toAggregateExpression(), DoubleType),
-            Cast(Sum(pAttr(s"c_$i")).toAggregateExpression(), DoubleType),
-            org.apache.spark.sql.catalyst.expressions.EvalMode.LEGACY)
-      }
-    }
-    val keyExprByExprId: Map[Long, Expression] =
-      gs.zipWithIndex.map { case (g, i) =>
-        g.exprId.id -> (Cast(kAttrs(i), StringType): Expression)
-      }.toMap
-
-    val outputs: Seq[NamedExpression] = RewriteOutputs(aggExprs,
-      ae => RewriteOutputs.aeIndex(aes, aeList)(ae).map(mergeOf),
-      a => keyExprByExprId.get(a.exprId.id)).getOrElse(return None)
-
-    engagements.incrementAndGet()
-    logInfo(s"dictAgg: rewriting GROUP BY ${keyNames.mkString(", ")} " +
-      s"to dictionary-code partial aggregation (${specs.length} aggregates)")
-    Some(Aggregate(kAttrs, outputs, partialPlan))
   }
-
-  /** The single-stage plan: [[DriverMergeAgg]] (+ a `Project` when the
-    * output expressions are not bare aggregate/key references). Returns
-    * None only if an output's type would not match exactly — the caller
-    * then falls through to the two-stage shape. */
-  private def buildDriverMerge(
-      agg: Aggregate,
-      gs: Seq[AttributeReference],
-      aggExprs: Seq[NamedExpression],
-      aes: java.util.IdentityHashMap[AggregateExpression, Integer],
-      aeList: Seq[AggregateExpression],
-      specs: Array[Spec],
-      keyIdxs: Array[Int],
-      keyKinds: Array[Int],
-      preds: Array[Pred],
-      specPredGroups: Array[Array[Pred]],
-      specGroupIdx: Array[Int],
-      batchRdd: RDD[ColumnarBatch],
-      dmCap: Int,
-      sourceDesc: String): Option[LogicalPlan] = {
-    val nKeys = gs.size
-    val rowRdd: RDD[Row] = batchRdd.mapPartitions(it =>
-      DictAgg.partial(it, keyIdxs, keyKinds, specs, preds, specPredGroups,
-        specGroupIdx, dmCap, failFast = true))
-    val aeIdx = RewriteOutputs.aeIndex(aes, aeList) _
-
-    // DIRECT mode: every output is a bare finalized column → the leaf
-    // emits the aggregate's own output attrs and no Project (and no
-    // extra job) is needed — collect() is ONE stage end-to-end.
-    val direct: Option[Seq[FinalCol]] = {
-      val cols = aggExprs.map { ne =>
-        val inner = ne match { case Alias(c, _) => c; case other => other }
-        inner match {
-          case ae: AggregateExpression =>
-            aeIdx(ae).filter(i => mergedType(specs(i)) == ne.dataType)
-              .map(i => FinalCol(isKey = false, i))
-          case a: AttributeReference =>
-            val k = gs.indexWhere(_.exprId == a.exprId)
-            if (k >= 0) Some(FinalCol(isKey = true, k)) else None
-          case _ => None
-        }
-      }
-      if (cols.forall(_.isDefined)) Some(cols.map(_.get)) else None
-    }
-
-    direct match {
-      case Some(cols) =>
-        val merger = DictAggMerger(nKeys, keyKinds, specs, cols.toArray, gs.isEmpty)
-        Some(DriverMergeAgg(
-          aggExprs.map(_.toAttribute), rowRdd, merger, Some(agg), sourceDesc))
-      case None =>
-        // GENERAL mode: leaf = keys ++ finalized specs (fresh attrs),
-        // outputs re-expressed over them under a Project
-        val leafAttrs: Seq[Attribute] =
-          gs.zipWithIndex.map { case (g, i) =>
-            AttributeReference(s"k_$i", g.dataType, nullable = true)()
-          } ++
-          specs.indices.map(j => AttributeReference(
-            s"a_$j", mergedType(specs(j)), nullable = mergedNullable(specs(j)))())
-        val keyAttrByExprId: Map[Long, Attribute] =
-          gs.zipWithIndex.map { case (g, i) => g.exprId.id -> leafAttrs(i) }.toMap
-        val outputs: Seq[NamedExpression] = RewriteOutputs(aggExprs,
-          ae => aeIdx(ae).map(i => leafAttrs(nKeys + i)),
-          a => keyAttrByExprId.get(a.exprId.id)).getOrElse(return None)
-        val finalCols =
-          gs.indices.map(i => FinalCol(isKey = true, i)) ++
-            specs.indices.map(j => FinalCol(isKey = false, j))
-        val merger = DictAggMerger(nKeys, keyKinds, specs, finalCols.toArray, gs.isEmpty)
-        Some(Project(outputs,
-          DriverMergeAgg(leafAttrs, rowRdd, merger, Some(agg), sourceDesc)))
-    }
-  }
-
-  private def typOf(t: Int): DataType = t match {
-    case TInt => IntegerType
-    case TLong => LongType
-    case TFloat => FloatType
-    case TDouble => DoubleType
-  }
-
 }

@@ -1,13 +1,18 @@
 package graft.plans
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, NamedExpression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LeafNode, LogicalPlan, Project, Statistics}
 import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, SinglePartition}
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.graft.FunctionShim
+import org.apache.spark.sql.types.DataType
 
 /** Single-stage finalization for the columnar aggregation rewrites
   * (VERDICT r16's round-17 lever: "make the two rewrites single-stage
@@ -51,9 +56,6 @@ trait DriverMerger extends Serializable {
 }
 
 object DriverMerge {
-  /** Kill switch for the single-stage path (default on). Off reverts
-    * to the r16 two-stage plans — same answers, one extra exchange. */
-  val EnabledKey = "spark.graft.driverMerge"
   /** Upper bound on rows a driver merge may collect; rewrites divide
     * this by the scan's partition count to size per-partition caps. */
   val MaxTotalRowsKey = "spark.graft.driverMerge.maxTotalRows"
@@ -97,18 +99,112 @@ object DriverMerge {
     * deadline that fired mid-fallback kept this from moving. */
   val fallbacksCompleted = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  def enabled(spark: org.apache.spark.sql.SparkSession): Boolean =
-    !spark.conf.getOption(EnabledKey).exists(_.trim.equalsIgnoreCase("false"))
-
-  def maxTotalRows(spark: org.apache.spark.sql.SparkSession): Long =
+  def maxTotalRows(spark: SparkSession): Long =
     spark.conf.getOption(MaxTotalRowsKey)
       .flatMap(v => scala.util.Try(v.toLong).toOption)
       .getOrElse(MaxTotalRowsDefault)
+
+  /** One column of a merger's final rows: group key part `idx`
+    * (`isKey`) or the kernel's finalized value `idx`. */
+  final case class FinalCol(isKey: Boolean, idx: Int) extends Serializable
+
+  /** The plan every kernel rewrite ends in: a [[DriverMergeAgg]] over
+    * the kernel's `partials` (its own `mapPartitions`, so the RDD keeps
+    * naming the kernel's source file in plan text).
+    *
+    * `keys` are the group keys and `values` the (type, nullable) of each
+    * finalized value the merger can emit; `valueOf` maps an aggregate
+    * call to its value. DIRECT mode: every output is a bare key or a
+    * value of the output's exact type, so the leaf emits the
+    * aggregate's own attributes, `agg` itself is the overflow fallback
+    * and `collect()` is one stage. GENERAL mode: the leaf emits every
+    * key and value, a `Project` re-expresses the outputs over them, and
+    * the fallback is `agg` re-aimed at the leaf's columns (its rows
+    * must have the leaf's layout). None when an output cannot be
+    * expressed exactly — the native plan stays. */
+  def plan(
+      agg: Aggregate,
+      outputs: Seq[NamedExpression],
+      keys: Seq[Attribute],
+      values: Seq[(DataType, Boolean)],
+      valueOf: AggregateExpression => Option[Int],
+      partials: RDD[Row],
+      src: ScanRelations.SrcRel,
+      merger: Array[FinalCol] => DriverMerger): Option[LogicalPlan] = {
+    def keyOf(a: AttributeReference): Option[Int] =
+      Some(keys.indexWhere(_.exprId == a.exprId)).filter(_ >= 0)
+    def leaf(attrs: Seq[Attribute], cols: Seq[FinalCol], fallback: Aggregate) =
+      DriverMergeAgg(attrs, partials, merger(cols.toArray), Some(fallback), src.desc)
+    val direct = outputs.map { ne =>
+      val inner = ne match { case Alias(c, _) => c; case other => other }
+      inner match {
+        case ae: AggregateExpression =>
+          valueOf(ae).filter(values(_)._1 == ne.dataType)
+            .map(FinalCol(isKey = false, _))
+        case a: AttributeReference => keyOf(a).map(FinalCol(isKey = true, _))
+        case _ => None
+      }
+    }
+    val planned =
+      if (direct.forall(_.isDefined))
+        Some(leaf(outputs.map(_.toAttribute), direct.map(_.get), agg))
+      else {
+        val keyAttrs = keys.indices.map(i =>
+          AttributeReference(s"k_$i", keys(i).dataType, nullable = true)())
+        val valueAttrs = values.indices.map { j =>
+          val (dt, nullable) = values(j)
+          AttributeReference(s"a_$j", dt, nullable)()
+        }
+        val calls = outputs.flatMap(_.collect { case ae: AggregateExpression => ae })
+        val valueCalls = values.indices.map { j =>
+          calls.find(ae => valueOf(ae).contains(j) && ae.dataType == values(j)._1)
+            .getOrElse(return None)
+        }
+        val fallback = agg.copy(aggregateExpressions =
+          (keys ++ valueCalls).zip(keyAttrs ++ valueAttrs).map { case (e, a) =>
+            Alias(e, a.name)(exprId = a.exprId)
+          })
+        RewriteOutputs(outputs,
+          ae => valueOf(ae).map(valueAttrs),
+          a => keyOf(a).map(keyAttrs))
+          .map(Project(_, leaf(keyAttrs ++ valueAttrs,
+            keys.indices.map(FinalCol(isKey = true, _)) ++
+              values.indices.map(FinalCol(isKey = false, _)), fallback)))
+      }
+    planned.foreach(_ => engagements.incrementAndGet())
+    planned
+  }
+}
+
+/** The one guard every columnar kernel rule runs under: the kernel's
+  * own kill switch (`enabledKey=false` keeps the native plan),
+  * [[DriverMerge.suppress]] (an overflow fallback is being planned),
+  * and an optimization never failing the query — a rewrite that throws
+  * logs and keeps the aggregate. A kernel supplies only its match. */
+private[plans] trait DriverMergeRule extends Rule[LogicalPlan] {
+  def spark: SparkSession
+  protected def enabledKey: String
+  /** The kernel's rewrite of one aggregate, or None to keep it. */
+  protected def tryRewrite(agg: Aggregate): Option[LogicalPlan]
+
+  final override def apply(plan: LogicalPlan): LogicalPlan = {
+    if (spark.conf.getOption(enabledKey).exists(_.trim.equalsIgnoreCase("false")) ||
+        DriverMerge.suppress.get()) return plan
+    plan.transformDown {
+      case agg: Aggregate =>
+        try tryRewrite(agg).getOrElse(agg)
+        catch {
+          case NonFatal(e) =>
+            logWarning(s"$ruleName failed; keeping the native plan: $e")
+            agg
+        }
+    }
+  }
 }
 
 /** Logical leaf carrying the partial-scan RDD and its driver-side
-  * merger. `fallback` is the original (pre-rewrite) aggregate subtree,
-  * executed only if a partial task signals overflow. `sourceDesc`
+  * merger. `fallback` is a native aggregate with exactly this leaf's
+  * output, executed only if a partial task signals overflow. `sourceDesc`
   * names the scanned source in plan text (the RDD arg prints as an
   * opaque MapPartitionsRDD — audits need to see WHAT is scanned). */
 case class DriverMergeAgg(

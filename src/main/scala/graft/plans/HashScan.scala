@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.expressions.{
 import org.apache.spark.sql.catalyst.expressions.aggregate.{
   AggregateExpression, Complete, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.vectorized.{Dictionary, GraftVectorShim, WritableColumnVector}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
@@ -42,50 +41,42 @@ import graft.functions.CityHash
   *
   * Kill switch: `spark.graft.hashScan=false` restores the native plan.
   */
-case class HashScanRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
+case class HashScanRewrite(spark: SparkSession) extends DriverMergeRule {
 
   import HashScan._
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled(spark) || DriverMerge.suppress.get() ||
-        !DriverMerge.enabled(spark)) return plan
-    plan.transformUp {
-      case agg @ Aggregate(Nil, aggExprs, child, _) =>
-        tryRewrite(agg, aggExprs, child).getOrElse(agg)
-    }
-  }
+  override protected def enabledKey: String = EnabledKey
 
-  private def tryRewrite(
-      agg: Aggregate,
-      aggExprs0: Seq[NamedExpression],
-      child0: LogicalPlan): Option[LogicalPlan] = {
+  override protected def tryRewrite(agg: Aggregate): Option[LogicalPlan] = {
+    if (agg.groupingExpressions.nonEmpty) return None
     // the typical shape keeps `h = cityHash64(…)` in a Project the
     // optimizer does not collapse into the Aggregate — inline one
     // level of deterministic aliases so the Sum(Pmod(hash…)) pattern
     // is visible (the substitution mirrors CollapseProject)
-    val (aggExprs, child) = child0 match {
+    val (aggExprs, child) = agg.child match {
       case org.apache.spark.sql.catalyst.plans.logical.Project(projList, gc)
           if projList.forall(ne => ne.isInstanceOf[AttributeReference] ||
             (ne.isInstanceOf[Alias] && ne.deterministic)) =>
         val sub: Map[Long, Expression] = projList.collect {
           case a: Alias => a.exprId.id -> a.child
         }.toMap
-        val inlined = aggExprs0.map(_.transformUp {
+        val inlined = agg.aggregateExpressions.map(_.transformUp {
           case a: AttributeReference if sub.contains(a.exprId.id) =>
             sub(a.exprId.id)
         }.asInstanceOf[NamedExpression])
         (inlined, gc)
-      case _ => (aggExprs0, child0)
+      case other => (agg.aggregateExpressions, other)
     }
     val src = ScanRelations.relationOf(child).getOrElse(return None)
     if (ScanRelations.isProjectionCompanion(spark, src)) return None
 
     // every output: Alias(Sum(Pmod(CityHash64Expr(attrs…), m)))
-    final case class HashAgg(cols: Seq[String], types: Seq[DataType], m: Long)
+    final case class HashAgg(
+        call: AggregateExpression, cols: Seq[String], types: Seq[DataType], m: Long)
     val shapes: Seq[HashAgg] = aggExprs.map { ne =>
       val inner = ne match { case Alias(c, _) => c; case other => other }
       inner match {
-        case AggregateExpression(
+        case call @ AggregateExpression(
             Sum(Pmod(h: graft.functions.CityHash64Expr, Literal(m, mt), _), _),
             Complete, false, None, _) =>
           val mLong = mt match {
@@ -101,7 +92,7 @@ case class HashScanRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
             case _ => return None
           }
           if (h.children.exists(c => !vectorizable(c.dataType))) return None
-          HashAgg(cols, h.children.map(_.dataType), mLong)
+          HashAgg(call, cols, h.children.map(_.dataType), mLong)
         case _ => return None
       }
     }
@@ -129,29 +120,21 @@ case class HashScanRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         case Some(sums) => Iterator.single(Row.fromSeq(sums.toIndexedSeq))
       }
     }
-
-    val sourceDesc = src match {
-      case ScanRelations.ParquetRel(lr) =>
-        "parquet " + lr.relation
-          .asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-          .location.rootPaths.mkString(",")
-      case ScanRelations.MergeTreeRel(ep, _, _) => s"mergetree $ep"
-    }
-    engagements.incrementAndGet()
-    DriverMerge.engagements.incrementAndGet()
-    logInfo(s"hashScan: vectorized cityHash64 fold over " +
-      s"${neededNames.size} columns (${specs.length} aggregates)")
-    Some(DriverMergeAgg(agg.output, partials,
-      SumMerger(specs.length), Some(agg), sourceDesc))
+    DriverMerge.plan(agg, aggExprs, Nil, specs.map(_ => (LongType, true)).toSeq,
+      ae => Some(shapes.indexWhere(_.call eq ae)).filter(_ >= 0),
+      partials, src, cols => SumMerger(specs.length, cols))
+      .map { p =>
+        engagements.incrementAndGet()
+        logInfo(s"hashScan: vectorized cityHash64 fold over " +
+          s"${neededNames.size} columns (${specs.length} aggregates)")
+        p
+      }
   }
 }
 
 object HashScan {
 
   val EnabledKey = "spark.graft.hashScan"
-
-  def enabled(spark: SparkSession): Boolean =
-    !spark.conf.getOption(EnabledKey).exists(_.trim.equalsIgnoreCase("false"))
 
   /** Engagement counter — PlanSpec pins the bench q4 shape rides it. */
   val engagements = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -518,12 +501,14 @@ object HashScan {
     s
   }
 
-  /** Driver merger: add the per-partition partial sums. A cross-
-    * partition overflow (each partial fits, the total does not) throws
-    * the overflow marker so [[DriverMergeAggExec]] re-runs the native
-    * plan, whose ANSI Sum raises the canonical error — same discipline
-    * as the in-partition fold. */
-  final case class SumMerger(nAggs: Int) extends DriverMerger {
+  /** Driver merger: add the per-partition partial sums; output i is
+    * aggregate `outCols(i).idx`. A cross-partition overflow (each
+    * partial fits, the total does not) throws the overflow marker so
+    * [[DriverMergeAggExec]] re-runs the native plan, whose ANSI Sum
+    * raises the canonical error — same discipline as the in-partition
+    * fold. */
+  final case class SumMerger(nAggs: Int, outCols: Array[DriverMerge.FinalCol])
+      extends DriverMerger {
     override def merge(rows: Iterator[Row]): Iterator[InternalRow] = {
       val sums = new Array[Long](nAggs)
       var any = false
@@ -538,13 +523,15 @@ object HashScan {
         }
         any = true
       }
-      // Sum over zero rows is NULL (Spark/CH agree): zero-row
-      // partitions emit no partial at all, so `any` stays false
-      val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(nAggs)
-      var j = 0
-      while (j < nAggs) {
-        if (any) row.update(j, sums(j)) else row.update(j, null)
-        j += 1
+      // Sum over zero rows is NULL here, as in Spark: zero-row
+      // partitions emit no partial at all, so `any` stays false.
+      // ClickHouse returns 0 for a non-Nullable argument; graft follows
+      // Spark and that divergence is still open (ROADMAP direction 4)
+      val row = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(outCols.length)
+      var i = 0
+      while (i < outCols.length) {
+        if (any) row.update(i, sums(outCols(i).idx)) else row.update(i, null)
+        i += 1
       }
       Iterator.single(row)
     }

@@ -8,15 +8,24 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.graft.FunctionShim
 
-/** The columnar-rewrite rules' shared source-relation machinery —
-  * [[DictAggRewrite]] and [[BitmapDistinctRewrite]] accept the same
-  * two scan shapes (a bare parquet relation, an ATTACHed MergeTree
-  * DSv2 relation) with the same unwrapping, name resolution, and
-  * columnar-scan extraction; keeping one copy stops the two rules
-  * drifting (review r16 — a fix had to be applied four times). */
+/** The columnar kernel rules' shared source-relation machinery —
+  * [[DictAggRewrite]], [[BitmapDistinctRewrite]] and [[HashScanRewrite]]
+  * accept the same two scan shapes (a bare parquet relation, an
+  * ATTACHed MergeTree DSv2 relation) with the same unwrapping, name
+  * resolution, columnar-scan extraction and plan-text description;
+  * keeping one copy stops the rules drifting (review r16 — a fix had
+  * to be applied four times). */
 private[plans] object ScanRelations {
 
-  sealed trait SrcRel
+  sealed trait SrcRel {
+    /** The scanned source, as plan text names it. */
+    def desc: String = this match {
+      case ParquetRel(lr) =>
+        "parquet " + lr.relation.asInstanceOf[HadoopFsRelation]
+          .location.rootPaths.mkString(",")
+      case MergeTreeRel(ep, _, _) => s"mergetree $ep"
+    }
+  }
   final case class ParquetRel(lr: LogicalRelation) extends SrcRel
   final case class MergeTreeRel(
       endpoint: String, ddl: String, orderBy: Seq[String]) extends SrcRel
@@ -205,13 +214,10 @@ private[plans] object ScanRelations {
   }
 }
 
-/** The rewrites' shared output-expression walker — both rules (each in
-  * two modes) re-express an Aggregate's outputs over replacement
-  * expressions for the aggregate calls and group keys, with the same
-  * recursion and the same exact-dataType guard. One copy, four call
-  * sites (same rationale as [[ScanRelations]]: r16 needed one fix
-  * applied four times; review r17 caught the walker drifting the same
-  * way). */
+/** The output-expression walker of [[DriverMerge.plan]]'s GENERAL
+  * mode, and the aggregate-call collection the kernels classify —
+  * one copy (r16 needed one fix applied four times; review r17 caught
+  * the walker drifting the same way). */
 private[plans] object RewriteOutputs {
 
   import org.apache.spark.sql.catalyst.expressions.{Literal, NamedExpression}
@@ -253,15 +259,27 @@ private[plans] object RewriteOutputs {
     Some(out.result())
   }
 
-  /** The aggregate-call index lookup both rules share: identity first
-    * (the common case — the same object referenced from several
-    * outputs), semantic equality as the fallback. */
-  def aeIndex(
-      aes: java.util.IdentityHashMap[AggregateExpression, Integer],
-      aeList: Seq[AggregateExpression])(ae: AggregateExpression): Option[Int] = {
-    val boxed = aes.get(ae)
-    if (boxed != null) Some(boxed.intValue)
-    else aeList.zipWithIndex
-      .collectFirst { case (x, i) if x.semanticEquals(ae) => i }
+  /** Every aggregate call in `aggExprs`, first-seen order, with its
+    * index lookup: identity first (the common case — the same object
+    * referenced from several outputs), semantic equality as the
+    * fallback. Identity-keyed through boxed Integers because
+    * IdentityHashMap[_, Int] unboxes a missing key's null to 0 — a
+    * silent wrong-index bug. */
+  def aggregateCalls(aggExprs: Seq[NamedExpression])
+      : (Seq[AggregateExpression], AggregateExpression => Option[Int]) = {
+    val aes = new java.util.IdentityHashMap[AggregateExpression, Integer]()
+    aggExprs.foreach(_.foreach {
+      case ae: AggregateExpression => aes.putIfAbsent(ae, Integer.valueOf(aes.size))
+      case _ =>
+    })
+    val arr = new Array[AggregateExpression](aes.size)
+    aes.forEach((k, v) => arr(v.intValue) = k)
+    val calls = scala.collection.immutable.ArraySeq.unsafeWrapArray(arr)
+    val indexOf = (ae: AggregateExpression) => {
+      val boxed = aes.get(ae)
+      if (boxed != null) Some(boxed.intValue)
+      else Some(calls.indexWhere(_.semanticEquals(ae))).filter(_ >= 0)
+    }
+    (calls, indexOf)
   }
 }

@@ -126,13 +126,11 @@ class PlanSpec extends AnyFunSuite {
     val filtered = li.filter(col("l_quantity") > 10).agg(count(lit(1)))
     assert(planOf(filtered).contains("FileScan"),
       s"filtered count must scan:\n${planOf(filtered)}")
-    // a grouped count must still read the data — a plain FileScan, the
-    // r16 dictionary-code partial RDD, or the r17 driver-merge leaf
-    // (whose embedded RDD's lineage IS the columnar file scan); never
-    // a footer LocalTableScan
+    // a grouped count must still read the data — a plain FileScan or
+    // the driver-merge leaf (whose embedded RDD's lineage IS the
+    // columnar file scan); never a footer LocalTableScan
     val grouped = li.groupBy("l_returnflag").agg(count(lit(1)))
     assert((planOf(grouped).contains("FileScan") ||
-        planOf(grouped).contains("ExistingRDD") ||
         planOf(grouped).contains("DriverMergeAgg")) &&
         !planOf(grouped).contains("LocalTableScan"),
       s"grouped count must scan:\n${planOf(grouped)}")
@@ -143,11 +141,10 @@ class PlanSpec extends AnyFunSuite {
     val strMin = li.agg(min(col("l_returnflag")))
     assert(planOf(strMin).contains("FileScan"),
       s"min(string col) must scan:\n${planOf(strMin)}")
-    // count(distinct intCol) scans too — since r16 through the bitmap
-    // partial RDD (r17: under the driver-merge leaf); never a footer
+    // count(distinct intCol) scans too — through the bitmap kernel
+    // under the driver-merge leaf; never a footer
     val distinct = li.agg(countDistinct(col("l_orderkey")))
     assert((planOf(distinct).contains("FileScan") ||
-        planOf(distinct).contains("ExistingRDD") ||
         planOf(distinct).contains("DriverMergeAgg")) &&
         !planOf(distinct).contains("LocalTableScan"),
       s"count(distinct) must scan:\n${planOf(distinct)}")

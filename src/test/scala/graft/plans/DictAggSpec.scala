@@ -8,8 +8,8 @@ import graft.TestSpark
 
 /** Dictionary-code aggregation rewrite ([[DictAggRewrite]]): the
   * rewritten plan must be answer-identical to the direct path across
-  * every supported aggregate, null shape, and the maxGroups overflow
-  * degradation — and it must actually ENGAGE on the bench q2 shape
+  * every supported aggregate, null shape, and the group-cap overflow
+  * fallback — and it must actually ENGAGE on the bench q2 shape
   * (a silently-disengaged optimization is the r15 bug class). */
 class DictAggSpec extends AnyFunSuite {
 
@@ -45,8 +45,8 @@ class DictAggSpec extends AnyFunSuite {
   // partitions is nondeterministic on both the native and rewritten
   // paths (shuffle fetch order vs driver collect order), so the last
   // ULPs legitimately move — same caveat as AggProjections
-  private def agged(df: DataFrame): DataFrame =
-    df.groupBy("k").agg(
+  private def agged(df: DataFrame, key: String = "k"): DataFrame =
+    df.groupBy(key).agg(
       sum("i").as("si"), sum("l").as("sl"),
       round(sum("f"), 6).as("sf"), round(sum("d"), 6).as("sd"),
       count(lit(1)).as("c"), count(col("d")).as("cd"), count(col("s")).as("cs"),
@@ -60,6 +60,24 @@ class DictAggSpec extends AnyFunSuite {
   private def withDisabled[T](f: => T): T = {
     spark.conf.set(DictAgg.EnabledKey, "false")
     try f finally spark.conf.unset(DictAgg.EnabledKey)
+  }
+
+  /** Runs `f` with `maxTotalRows` sized from `path`'s scan partition
+    * count so the kernel's per-partition group cap is exactly `cap`. */
+  private def withCap[T](path: String, cap: Int)(f: => T): T = {
+    val parts = spark.read.parquet(path).rdd.getNumPartitions
+    spark.conf.set(DriverMerge.MaxTotalRowsKey, (cap.toLong * parts).toString)
+    try f finally spark.conf.unset(DriverMerge.MaxTotalRowsKey)
+  }
+
+  /** `f`'s result, asserting that the driver merge overflowed and its
+    * native fallback ran to completion while `f` ran. */
+  private def viaFallback[T](f: => T): T = {
+    val before = DriverMerge.fallbacksCompleted.get()
+    val out = f
+    assert(DriverMerge.fallbacksCompleted.get() > before,
+      "no driver-merge fallback ran: the overflow was not exercised")
+    out
   }
 
   test("rewrite engages on the q2 shape and matches the direct path") {
@@ -78,38 +96,30 @@ class DictAggSpec extends AnyFunSuite {
     val plan = df.queryExecution.optimizedPlan.toString
     assert(plan.contains("DriverMergeAgg"),
       s"expected the single-stage driver-merge leaf in the plan:\n$plan")
-    // with driver merge off, the r16 two-stage shape (partials RDD +
-    // final Aggregate) remains
-    spark.conf.set(DriverMerge.EnabledKey, "false")
-    try {
-      val p2 = spark.read.parquet(table).groupBy("k").agg(sum("d").as("s"))
-        .queryExecution.optimizedPlan.toString
-      assert(p2.contains("LogicalRDD") || p2.contains("ExistingRDD"),
-        s"expected the dictionary-code partial RDD in the two-stage plan:\n$p2")
-    } finally spark.conf.unset(DriverMerge.EnabledKey)
   }
 
-  test("maxGroups overflow: driver merge falls back, shuffle path flushes — same answer") {
-    spark.conf.set(DictAgg.MaxGroupsKey, "2")
-    try {
-      // default (driver merge): the partial task fails fast and the
-      // exec re-runs the native plan — identical answers
+  test("cap overflow: the driver merge falls back to the native plan, same answer") {
+    // GROUP BY i: 101 groups per partition against a cap of 16 — the
+    // partial task fails fast and the exec re-runs the native plan.
+    // `slc` (a cast over sum) puts the plan in GENERAL mode, so the
+    // fallback's rows must come back in the leaf's column layout
+    def q() = agged(spark.read.parquet(table), "i")
+    withCap(table, 16) {
       val before = DictAgg.engagements.get()
-      val fast = collectSorted(agged(spark.read.parquet(table)))
+      val fast = viaFallback(collectSorted(q()))
       assert(DictAgg.engagements.get() > before)
-      val slow = withDisabled(collectSorted(agged(spark.read.parquet(table))))
-      assert(fast == slow)
-      // two-stage shape: the kernel flushes its full map and resumes —
-      // bounded memory, repeated groups merge downstream (r17; replaced
-      // the r16 per-row singleton stream)
-      spark.conf.set(DriverMerge.EnabledKey, "false")
-      try {
-        val b2 = DictAgg.engagements.get()
-        val flushed = collectSorted(agged(spark.read.parquet(table)))
-        assert(DictAgg.engagements.get() > b2)
-        assert(flushed == slow)
-      } finally spark.conf.unset(DriverMerge.EnabledKey)
-    } finally spark.conf.unset(DictAgg.MaxGroupsKey)
+      assert(fast == withDisabled(collectSorted(q())))
+    }
+  }
+
+  test("a cap below 16 stands the rewrite down: native plan, same answer") {
+    def q() = spark.read.parquet(table).groupBy("k").agg(sum("d").as("s"))
+    withCap(table, 15) {
+      val plan = q().queryExecution.optimizedPlan.toString
+      assert(!plan.contains("DriverMergeAgg") && !plan.contains("LogicalRDD"),
+        s"a cap below 16 must keep the native plan:\n$plan")
+      assert(collectSorted(q()) == withDisabled(collectSorted(q())))
+    }
   }
 
   test("all-null measure groups and the null key group match") {
@@ -289,10 +299,9 @@ class DictAggSpec extends AnyFunSuite {
     assert(DictAgg.engagements.get() > b3,
       "dictAgg did not engage on the (int, string) key pair")
     assert(pFast == withDisabled(collectSorted(q2())))
-    // int-key overflow under a tiny cap: fail-fast → native fallback
-    spark.conf.set(DictAgg.MaxGroupsKey, "2")
-    try assert(collectSorted(qi()) == fast)
-    finally spark.conf.unset(DictAgg.MaxGroupsKey)
+    // int-key overflow (102 groups) past a cap of 16: fail-fast →
+    // native fallback
+    withCap(table, 16)(assert(viaFallback(collectSorted(qi())) == fast))
   }
 
   test("GLOBAL mixed distinct+plain aggregates engage — no Expand (r16)") {
@@ -370,18 +379,6 @@ class DictAggSpec extends AnyFunSuite {
     graft.dialect.ChSql.sql(spark,
       "SELECT k, sumIf(l, i > l) AS s FROM dictagg_cond GROUP BY k").collect()
     assert(DictAgg.engagements.get() == b3)
-    // the TWO-STAGE shape (driver merge off) applies the same per-spec
-    // masks in its partial kernel
-    spark.conf.set(DriverMerge.EnabledKey, "false")
-    try {
-      val sql = "SELECT k, sumIf(l, i > 50) AS s_hi, countIf(i > 50) AS c_hi, " +
-        "count() AS c FROM dictagg_cond GROUP BY k"
-      def q() = graft.dialect.ChSql.sql(spark, sql)
-      val b4 = DictAgg.engagements.get()
-      val twoStage = collectSorted(q())
-      assert(DictAgg.engagements.get() > b4, "two-stage did not engage")
-      assert(twoStage == withDisabled(collectSorted(q())))
-    } finally spark.conf.unset(DriverMerge.EnabledKey)
   }
 
   test("kill switch disables the rewrite") {
@@ -401,10 +398,6 @@ class DictAggSpec extends AnyFunSuite {
     assert(DictAgg.engagements.get() > before,
       "dictAgg did not engage on the grouped count-distinct shape")
     assert(fast == withDisabled(collectSorted(q())))
-    // overflow mode keeps distinct counts exact too
-    spark.conf.set(DictAgg.MaxGroupsKey, "2")
-    try assert(collectSorted(q()) == fast)
-    finally spark.conf.unset(DictAgg.MaxGroupsKey)
     // string distinct stays on the native plan
     val b2 = DictAgg.engagements.get()
     spark.read.parquet(table).groupBy("k").agg(countDistinct(col("s"))).collect()
@@ -431,10 +424,10 @@ class DictAggSpec extends AnyFunSuite {
       "dictAgg did not engage on the two-key shape")
     assert(fast == withDisabled(collectSorted(q())))
     // s2 is null when i is null → null key PARTS in both positions
-    // are exercised; overflow mode stays exact
-    spark.conf.set(DictAgg.MaxGroupsKey, "3")
-    try assert(collectSorted(q()) == fast)
-    finally spark.conf.unset(DictAgg.MaxGroupsKey)
+    // are exercised; past a cap of 16 (up to 32 key pairs per
+    // partition) the native fallback stays exact
+    withCap(s"$dir/t.parquet", 16)(
+      assert(viaFallback(collectSorted(q())) == fast))
     // three keys engage too since r17b (composite path) — same answers
     val b2 = DictAgg.engagements.get()
     def q3() = spark.read.parquet(s"$dir/t.parquet")
