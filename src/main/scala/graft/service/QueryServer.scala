@@ -404,7 +404,9 @@ class QueryServer(
           var streamAborted: Option[Throwable] = None
           // consume runs INSIDE the governance window — the deadline
           // covers plan + stream, and max_result_rows bounds the
-          // iterator (whose jobs run per-partition via toLocalIterator)
+          // iterator (one job per partition, up to W = defaultParallelism
+          // in flight; the driver holds at most W partitions and submits
+          // none ahead past spark.driver.maxResultSize of unread bytes)
           // FORMAT Parquet never streams row-wise — the whole result
           // spools to ONE parquet file (a Spark job; the driver never
           // materializes rows), then the bytes go out Content-Length'd
@@ -1291,26 +1293,29 @@ class QueryServer(
       private var lastNs = 0L
       private var lastAt = 0L
       private var done = false
-      override def hasNext: Boolean = it.hasNext
+      private def report(due: Boolean): Unit = if (!done) {
+        if (sink.committed) done = true
+        else if (due || System.nanoTime() - lastNs >= ProgressIntervalNs) {
+          lastNs = System.nanoTime()
+          lastAt = n
+          ex.getResponseHeaders.add("X-ClickHouse-Progress",
+            progressJson(meta, n, t0, sink.bytesOut.get))
+        }
+      }
+      // a wait for the next partition (a scan's partitions finish
+      // together, so its rows come in one burst) reports once on the
+      // tick: the first line, or the rows shipped since the last one
+      override def hasNext: Boolean =
+        if (done) it.hasNext
+        else PartitionFetch.whileWaiting(ProgressIntervalNs, () =>
+          if (lastNs == 0L || n != lastAt) report(due = false))(it.hasNext)
       override def next(): Seq[Any] = {
         val r = it.next()
         n += 1
-        if (!done) {
-          if (sink.committed) done = true
-          else {
-            val now = System.nanoTime()
-            // row cadence keeps the pre-commit window (≤ the 256 KiB
-            // spool) yielding several increasing values even when the
-            // driver drains faster than the 100 ms tick
-            if (lastNs == 0L || n - lastAt >= 8192 ||
-                now - lastNs >= ProgressIntervalNs) {
-              lastNs = now
-              lastAt = n
-              ex.getResponseHeaders.add("X-ClickHouse-Progress",
-                progressJson(meta, n, t0, sink.bytesOut.get))
-            }
-          }
-        }
+        // row cadence keeps the pre-commit window (≤ the 256 KiB
+        // spool) yielding several increasing values even when the
+        // driver drains faster than the 100 ms tick
+        report(due = lastNs == 0L || n - lastAt >= 8192)
         r
       }
     }

@@ -249,8 +249,11 @@ class QueryService(spark: SparkSession) {
     * door rendered from a fully collected array — a driver-memory
     * incident for a big SELECT at scale): `consume` receives the
     * result META (cols/types/settings/format; `rows` empty) plus a
-    * GOVERNED row iterator fed by `toLocalIterator` — one partition
-    * driver-side at a time — and runs INSIDE the governance window, so
+    * GOVERNED row iterator ([[Governance.iterateBounded]]: up to W =
+    * `defaultParallelism` partition jobs in flight, rows in partition
+    * order; the driver holds at most W partitions, and submits none
+    * ahead past `spark.driver.maxResultSize` of unread bytes — never
+    * the whole result) — and runs INSIDE the governance window, so
     * `max_execution_time` covers the whole plan-and-stream and
     * `max_result_rows` bounds the iterator (throw mid-stream / break).
     * Same request routing as [[execute]]: sink offload and write/DDL
@@ -305,14 +308,16 @@ class QueryService(spark: SparkSession) {
           val (df, settings) = executeToDf(req)
           val estRows = df.queryExecution.optimizedPlan.collectLeaves()
             .flatMap(_.stats.rowCount).map(_.toLong).sum
-          val out = consume(
-            QueryResult(
-              cols = df.columns.toSeq,
-              types = df.schema.fields.map(_.dataType.simpleString).toSeq,
-              rows = Nil, settings = settings, format = fmt,
-              schema = Some(df.schema),
-              jobGroup = Some(group), estRowsToRead = estRows),
-            Governance.iterateBounded(df).map(_.toSeq))
+          val out = Governance.iterateBounded(df) { rows =>
+            consume(
+              QueryResult(
+                cols = df.columns.toSeq,
+                types = df.schema.fields.map(_.dataType.simpleString).toSeq,
+                rows = Nil, settings = settings, format = fmt,
+                schema = Some(df.schema),
+                jobGroup = Some(group), estRowsToRead = estRows),
+              rows.map(_.toSeq))
+          }
           failed = false
           out
         } } finally {

@@ -29,9 +29,11 @@ import NativeWire._
   *     table semantics), and the end-of-external-data empty block;
   *   - Data blocks out STREAM: a zero-row header block (names +
   *     types), then [[BlockRows]]-sized row blocks fed by
-  *     `toLocalIterator` — one partition fetched at a time, the full
-  *     result is never materialized driver-side — then Progress and
-  *     EndOfStream (CH streams blocks as the pipeline produces them);
+  *     [[graft.service.Governance.iterateBounded]] — up to W =
+  *     `defaultParallelism` partitions fetched at once, handed out in
+  *     partition order, the full result never materialized
+  *     driver-side — then Progress and EndOfStream (CH streams blocks
+  *     as the pipeline produces them);
   *   - native batch INSERT: `INSERT INTO t [(cols)]` with no inline
   *     source → the server answers the target's header block, consumes
   *     client Data blocks, and FLUSHES every `max_insert_block_size`
@@ -293,11 +295,13 @@ class NativeServer(spark: SparkSession, port: Int = 0,
     // never interleaves into a Data frame).
     //
     // The result STREAMS (VERDICT r13 task #1): the worker drains
-    // Governance.iterateBounded — toLocalIterator, one partition
-    // fetched at a time — into BlockRows-sized Data frames, so the
-    // driver never holds the full result. A SELECT * over a 100 TB
-    // table through this door is bounded by one partition + one block,
-    // not by the result size.
+    // Governance.iterateBounded — up to W = defaultParallelism
+    // partition jobs in flight, rows in partition order — into
+    // BlockRows-sized Data frames, so the driver never holds the full
+    // result. A SELECT * over a 100 TB table through this door is
+    // bounded by W partitions (and no job submitted ahead past
+    // spark.driver.maxResultSize of unread bytes) + one block, not
+    // by the result size.
     val group = s"graft-native-${java.util.UUID.randomUUID().toString.take(8)}"
     // registered in system.processes under the client's own query id
     // (or a generated one) — KILL QUERY and the Cancel packet share
@@ -342,7 +346,6 @@ class NativeServer(spark: SparkSession, port: Int = 0,
               sendBlock(out, revision, compression,
                 NativeBlock.fromRows(schema, Array.empty[Row]), 0)
           }
-          val it = graft.service.Governance.iterateBounded(df)
           val buf = new scala.collection.mutable.ArrayBuffer[Row](BlockRows)
           var sent = 0L
           var blocks = 0L // DATA blocks (the header is not counted)
@@ -382,9 +385,11 @@ class NativeServer(spark: SparkSession, port: Int = 0,
               }
             }
           }
-          while (!cancelled && it.hasNext) {
-            buf += it.next()
-            if (buf.length >= BlockRows) flush()
+          graft.service.Governance.iterateBounded(df) { it =>
+            while (!cancelled && it.hasNext) {
+              buf += it.next()
+              if (buf.length >= BlockRows) flush()
+            }
           }
           if (!cancelled) {
             flush()
@@ -669,7 +674,7 @@ class NativeServer(spark: SparkSession, port: Int = 0,
     val body = new WireOut
     NativeBlock.writeBlock(body, cols, rows, revision)
     if (compression) out.write(NativeWire.lz4Frame(body.bytes))
-    else out.write(body.bytes)
+    else body.writeTo(out)
     out.flush()
   }
 

@@ -1,6 +1,7 @@
 package graft.service.native
 
 import java.io.{EOFException, InputStream, OutputStream}
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Byte-level primitives of ClickHouse's native TCP protocol (the wire
@@ -28,31 +29,47 @@ object NativeWire {
 
   // ---- growable output buffer ----
 
+  /** Unsynchronized growable byte buffer; 2/4/8-byte little-endian
+    * values go in with one store each (these writes are most of a
+    * block encode). */
   final class WireOut {
-    private val out = new java.io.ByteArrayOutputStream()
-    def size: Int = out.size()
-    def bytes: Array[Byte] = out.toByteArray
-    def writeByte(b: Int): Unit = out.write(b)
-    def writeBytes(b: Array[Byte]): Unit = out.write(b, 0, b.length)
+    private var buf = new Array[Byte](256)
+    private var le = wrap(buf)
+    private var pos = 0
+    private def wrap(b: Array[Byte]): ByteBuffer =
+      ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
+    private def ensure(n: Int): Unit = if (n > buf.length - pos) {
+      val want = pos.toLong + n
+      require(want <= Int.MaxValue - 8, s"wire buffer over 2 GB ($want bytes)")
+      buf = java.util.Arrays.copyOf(buf,
+        math.max(want, math.min(buf.length * 2L, Int.MaxValue - 8L)).toInt)
+      le = wrap(buf)
+    }
+    def size: Int = pos
+    def bytes: Array[Byte] = java.util.Arrays.copyOf(buf, pos)
+    /** The written bytes onto `out`, without the copy [[bytes]] makes. */
+    def writeTo(out: OutputStream): Unit = out.write(buf, 0, pos)
+    def writeByte(b: Int): Unit = { ensure(1); buf(pos) = b.toByte; pos += 1 }
+    def writeBytes(b: Array[Byte]): Unit = {
+      ensure(b.length)
+      System.arraycopy(b, 0, buf, pos, b.length)
+      pos += b.length
+    }
     def writeVarUInt(v0: Long): Unit = {
+      ensure(10)
       var v = v0
-      while ((v & ~0x7FL) != 0) { out.write(((v & 0x7F) | 0x80).toInt); v >>>= 7 }
-      out.write(v.toInt)
+      while ((v & ~0x7FL) != 0) { buf(pos) = ((v & 0x7F) | 0x80).toByte; pos += 1; v >>>= 7 }
+      buf(pos) = v.toByte
+      pos += 1
     }
     def writeString(s: String): Unit = {
       val b = s.getBytes(UTF_8)
       writeVarUInt(b.length.toLong)
-      out.write(b, 0, b.length)
+      writeBytes(b)
     }
-    def writeShortLE(v: Short): Unit = { out.write(v & 0xFF); out.write((v >> 8) & 0xFF) }
-    def writeIntLE(v: Int): Unit = {
-      var i = 0
-      while (i < 4) { out.write((v >> (8 * i)) & 0xFF); i += 1 }
-    }
-    def writeLongLE(v: Long): Unit = {
-      var i = 0
-      while (i < 8) { out.write(((v >> (8 * i)) & 0xFF).toInt); i += 1 }
-    }
+    def writeShortLE(v: Short): Unit = { ensure(2); le.putShort(pos, v); pos += 2 }
+    def writeIntLE(v: Int): Unit = { ensure(4); le.putInt(pos, v); pos += 4 }
+    def writeLongLE(v: Long): Unit = { ensure(8); le.putLong(pos, v); pos += 8 }
     def writeFloatLE(v: Float): Unit = writeIntLE(java.lang.Float.floatToIntBits(v))
     def writeDoubleLE(v: Double): Unit = writeLongLE(java.lang.Double.doubleToLongBits(v))
   }

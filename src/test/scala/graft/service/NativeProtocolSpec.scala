@@ -323,16 +323,17 @@ class NativeProtocolSpec extends AnyFunSuite {
         val r = c.query(
           "SELECT id FROM (SELECT explode(sequence(1, 20000)) AS id) t ORDER BY id")
         assert(r.rows.size == 20000)
-        assert(r.rows.head.head == 1 && r.rows.last.head == 20000)
+        assert(r.rows.map(_.head) == (1 to 20000))
       } finally c.close()
     }
   }
 
   test("streaming results: partitions fetch incrementally, never one driver collect") {
-    // spy: toLocalIterator submits ONE JOB PER PARTITION lazily from
-    // the draining thread; a collect-then-chunk server runs exactly one
-    // job for this shuffle-free scan. Count jobs under the query's
-    // graft-native-* group.
+    // spy: the windowed fetch submits ONE JOB PER PARTITION from the
+    // draining thread, up to defaultParallelism of them ahead; a
+    // collect-then-chunk server runs exactly one job for this
+    // shuffle-free scan. Count jobs under the query's graft-native-*
+    // group.
     val jobs = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {

@@ -459,9 +459,10 @@ class QueryServerSpec extends AnyFunSuite {
   }
 
   test("big results stream chunked with incremental partition fetch (never one collect)") {
-    // spy: the governed drain runs toLocalIterator — one job per
-    // partition; a collect-then-render server runs exactly one job for
-    // this shuffle-free scan
+    // spy: the governed drain runs the windowed partition fetch — one
+    // job per partition, up to defaultParallelism in flight; a
+    // collect-then-render server runs exactly one job for this
+    // shuffle-free scan
     val jobs = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
