@@ -522,6 +522,9 @@ object ChSql {
         .linesIterator.toSeq.toDF("explain"))
     }
     val r = rewriteStatement(spark, m, macros)
+    // a direct caller keeps the clause on its session; under the
+    // service's lifecycle it is already applied (no change here) and
+    // ends with the query
     applySettings(spark, r.settings)
     (finish(spark, r), r.settings)
   }
@@ -598,35 +601,62 @@ object ChSql {
     else (sql, Map.empty)
   }
 
-  /** Apply extracted settings: `spark.*` keys set directly; CH knobs are
-    * accepted no-ops (recorded in the envelope by QueryService). */
+  /** The statement's trailing `SETTINGS` clause (FORMAT may precede or
+    * follow it); `stmt` is [[statement]] text. */
+  def statementSettings(stmt: String): Map[String, String] =
+    extractSettings(stripFormat(stmt))._2
+
+  /** The session conf key a setting lands on: `spark.*` keys as they
+    * are, governance keys ([[graft.service.Governance.Keys]], enforced
+    * by the doors) lower-cased; None for a CH tuning knob, an accepted
+    * no-op with no Spark equivalent. */
+  private def confKey(k: String): Option[String] =
+    if (k.startsWith("spark.")) Some(k)
+    else Some(k.toLowerCase).filter(graft.service.Governance.Keys)
+
+  /** Apply settings to the session: `spark.*` and governance keys are
+    * set, CH knobs are accepted no-ops (recorded in the envelope by
+    * QueryService). A setting already at its value is no change (CH
+    * skips its constraint check the same way). */
   def applySettings(spark: SparkSession, settings: Map[String, String]): Unit = {
+    val changes = settings.filterNot { case (k, v) =>
+      confKey(k).exists(spark.conf.getOption(_).contains(v))
+    }
     // readonly guards run UP FRONT, before anything applies, so a
     // refusal never leaves a half-applied settings block (review r15):
-    // level 1 refuses ALL settings changes (CH's contract — the SET and
-    // URL-param spellings already did), level 2 protects `readonly`
-    // itself
-    if (settings.nonEmpty) {
+    // level 1 refuses ALL settings changes (CH's contract — the SET
+    // spelling already did), level 2 protects `readonly` itself
+    if (changes.nonEmpty) {
       val ro = spark.conf.getOption(graft.service.Governance.Readonly)
         .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(0)
       if (ro == 1) throw new IllegalArgumentException(
         "Cannot modify settings in readonly mode (readonly = 1; " +
           "readonly = 2 permits non-protected setting changes). READONLY")
-      if (ro >= 2 && settings.keys.exists(
+      if (ro >= 2 && changes.keys.exists(
           _.equalsIgnoreCase(graft.service.Governance.Readonly)))
         throw new IllegalArgumentException(
           "Setting 'readonly' is protected and cannot be modified in " +
             "readonly mode. READONLY")
     }
-    settings.foreach {
-      case (k, v) if k.startsWith("spark.") => spark.conf.set(k, v)
-      case (k, v) if graft.service.Governance.Keys(k.toLowerCase) =>
-        // resource governance (max_execution_time / max_result_rows /
-        // result_overflow_mode) is ENFORCED at collect time — forward
-        // into the session instead of dropping as a no-op knob
-        spark.conf.set(k.toLowerCase, v)
-      case _ => // CH tuning knob — accepted, no Spark equivalent needed
-    }
+    changes.foreach { case (k, v) => confKey(k).foreach(spark.conf.set(_, v)) }
+  }
+
+  /** Run `body` under per-query settings: each layer goes through
+    * [[applySettings]] in order (so a `readonly` set by an earlier
+    * layer guards the later ones), and every key a layer could set is
+    * put back to its value from before, however `body` ends. */
+  def withSettings[A](spark: SparkSession, layers: Map[String, String]*)(
+      body: => A): A = {
+    val saved = layers.flatMap(_.keys.flatMap(confKey)).distinct
+      .map(k => k -> spark.conf.getOption(k))
+    try {
+      layers.foreach(applySettings(spark, _))
+      body
+    } finally saved.filter { case (k, v) => spark.conf.getOption(k) != v }
+      .foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
   }
 
   private val TrailingFormat = """(?is)\s+FORMAT\s+[A-Za-z][A-Za-z0-9]*\s*;?\s*$""".r

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{DataFrame, Row}
   * session indefinitely — a real gap for the reference's query-service
   * posture, whose Temporal activities carry timeouts).
   *
-  *   - `max_execution_time` (seconds, 0 = unlimited): the collect runs
+  *   - `max_execution_time` (seconds, 0 = unlimited): the request runs
   *     under a dedicated Spark job group with `interruptOnCancel`; at
   *     the deadline the group is cancelled — executors stop working,
   *     not just the client waiting — and the request fails with CH's
@@ -21,21 +21,22 @@ import org.apache.spark.sql.{DataFrame, Row}
   *   - `max_result_rows` + `result_overflow_mode = throw|break`
   *     (throw is CH's default): `break` truncates the result at the
   *     limit; `throw` fails with CH's TOO_MANY_ROWS shape. Enforced by
-  *     collecting limit+1 — the limit reaches the plan, so `break`
+  *     fetching limit+1 — the limit reaches the plan, so `break`
   *     never materializes an unbounded result just to cut it.
   *
-  * The settings reach the session as plain conf keys — CH spellings
-  * land there from `SET k = v` (verbatim Spark SQL SET), the `SETTINGS`
-  * clause ([[graft.dialect.ChSql.applySettings]]), and the native
-  * protocol's per-query settings block.
+  * The settings are session conf keys. `SET k = v` (verbatim Spark SQL
+  * SET) keeps them on the session; per-query settings — HTTP URL
+  * params, the native protocol's settings block and the statement's
+  * trailing `SETTINGS` clause — are applied by the service's one
+  * lifecycle ([[QueryService.governed]]) BEFORE [[runGoverned]] reads
+  * the deadline, and end with their query.
   *
   * Scope: [[runGoverned]] wraps the WHOLE request on both doors —
-  * plan, DDL/INSERT side effects, collect — so a runaway
+  * plan, DDL/INSERT side effects, the result stream — so a runaway
   * INSERT … SELECT or CTAS is deadline-killed too (CH's
   * `max_execution_time` covers inserts); a cancelled write is a
   * crashed write, which the staged-swap/manifest-commit protocol
-  * leaves consistent. A deadline set by the statement's own SETTINGS
-  * clause (applied mid-request) engages at the collect.
+  * leaves consistent.
   */
 object Governance {
 
@@ -231,53 +232,17 @@ object Governance {
     }
   }
 
-  /** `df.collect()` under the session's governance settings.
-    * `jobGroup` lets a door that needs EXTERNAL cancellation (the
-    * native protocol's Cancel packet) name the group every job of this
-    * collect runs under — deadline or not, one `cancelJobGroup(name)`
-    * kills the query. */
-  def collectBounded(df: DataFrame,
-      jobGroup: Option[String] = None): Array[Row] = {
-    checkScanBudget(df)
-    val timeoutSec = conf(df, MaxExecutionTime).map(_.toDouble).getOrElse(0d)
-    val maxRows = conf(df, MaxResultRows).map(_.toLong).getOrElse(0L)
-    val overflow = conf(df, ResultOverflowMode).getOrElse("throw").toLowerCase
-    require(overflow == "throw" || overflow == "break",
-      s"$ResultOverflowMode must be 'throw' or 'break', got '$overflow'")
-    // limit+1 pushes the bound into the plan AND still detects overflow
-    val limited =
-      if (maxRows > 0 && maxRows < Int.MaxValue - 1)
-        df.limit(maxRows.toInt + 1)
-      else df
-    val rows =
-      if (timeoutSec <= 0) jobGroup match {
-        case None => limited.collect()
-        case Some(g) =>
-          val sc = df.sparkSession.sparkContext
-          sc.setJobGroup(g, "governed collect", interruptOnCancel = true)
-          try limited.collect() finally sc.clearJobGroup()
-      }
-      else collectWithDeadline(limited, (timeoutSec * 1000).toLong, jobGroup)
-    if (maxRows > 0 && rows.length > maxRows) {
-      if (overflow == "break") rows.take(maxRows.toInt)
-      else throw new IllegalArgumentException(
-        s"Limit for result rows exceeded: read ${rows.length}+ rows, " +
-          s"maximum $maxRows. TOO_MANY_ROWS (set $ResultOverflowMode = " +
-          "'break' to truncate instead)")
-    } else rows
-  }
-
-  /** Loan analog of [[collectBounded]] for the STREAMING doors
-    * (VERDICT r13 task #1 — both doors fully materialized every result
-    * driver-side before the first byte left, the one real scale-killer
-    * at 100 TB): `consume` drains a [[PartitionFetch]], which keeps up
-    * to `sparkContext.defaultParallelism` (W) partition jobs in flight
-    * and hands rows out in partition order. The driver holds at most W
+  /** The governed result drain, a loan (VERDICT r13 task #1 — both
+    * doors fully materialized every result driver-side before the first
+    * byte left, the one real scale-killer at 100 TB): `consume` drains
+    * a [[PartitionFetch]], which keeps up to
+    * `sparkContext.defaultParallelism` (W) partition jobs in flight and
+    * hands rows out in partition order. The driver holds at most W
     * partitions' bytes — and submits none ahead past
     * `spark.driver.maxResultSize` of unread bytes — plus the
     * consumer's block, never the whole result.
     *
-    * `max_result_rows` still reaches the PLAN as limit+1; overflow
+    * `max_result_rows` reaches the PLAN as limit+1; overflow
     * surfaces DURING iteration — `break` ends the stream at the limit,
     * `throw` raises CH's TOO_MANY_ROWS (the client may already hold
     * the first maxRows rows; CH streams-then-errors the same way).
@@ -321,46 +286,5 @@ object Governance {
         }
       })
     finally it.close()
-  }
-
-  private def collectWithDeadline(df: DataFrame, ms: Long,
-      jobGroup: Option[String] = None): Array[Row] = {
-    val sc = df.sparkSession.sparkContext
-    val group = jobGroup.getOrElse(
-      s"graft-deadline-${java.util.UUID.randomUUID().toString.take(8)}")
-    @volatile var result: Either[Throwable, Array[Row]] = null
-    val worker = new Thread(() => {
-      // job group is a thread-local on the submitting thread;
-      // interruptOnCancel interrupts the task threads too
-      sc.setJobGroup(group, s"deadline ${ms}ms", interruptOnCancel = true)
-      try result = Right(df.collect())
-      catch { case e: Throwable => result = Left(e) }
-      finally sc.clearJobGroup()
-    }, group)
-    worker.setDaemon(true)
-    worker.start()
-    worker.join(ms)
-    if (worker.isAlive) {
-      // see runGoverned: future jobs of this per-query group die too,
-      // so a driver-merge overflow fallback can't outlive its deadline
-      sc.cancelJobGroupAndFutureJobs(group)
-      worker.join(10000)
-      throw new TimeoutException(
-        s"Timeout exceeded: maximum ${ms / 1000.0} seconds " +
-          s"($MaxExecutionTime). TIMEOUT_EXCEEDED")
-    }
-    result match {
-      case Right(r) => r
-      case Left(e: org.apache.spark.SparkException)
-          if e.getMessage != null && e.getMessage.contains("cancelled") =>
-        // cancel raced the join window — report the deadline, not the
-        // incidental cancellation wrapper
-        throw new TimeoutException(
-          s"Timeout exceeded: maximum ${ms / 1000.0} seconds " +
-            s"($MaxExecutionTime). TIMEOUT_EXCEEDED")
-      case Left(e) => throw e
-      case null => throw new IllegalStateException(
-        "deadline worker finished without a result")
-    }
   }
 }

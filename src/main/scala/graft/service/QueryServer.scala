@@ -158,16 +158,8 @@ class QueryServer(
           // URL settings govern binary INSERTs too (review r15:
           // `?readonly=1` / `?max_execution_time=` were silently
           // dropped on this branch)
-          // governance keys normalize to the lowercase spelling the
-          // SET path uses and Governance reads — '?MAX_RESULT_ROWS=5'
-          // must apply the bound, not set a wrong-cased key that is
-          // silently unenforced (advisor r16)
           val urlSettings0 = params.view.filterKeys(k =>
             !ReservedParams.contains(k) && !k.startsWith("param_")).toMap
-            .map { case (k, v) =>
-              (if (graft.service.Governance.Keys(k.toLowerCase)) k.toLowerCase
-               else k, v)
-            }
           if (binaryIns.isDefined)
             serveBinaryInsert(ex, reqId, binaryIns.get, urlSettings0)
           else {
@@ -203,9 +195,9 @@ class QueryServer(
               .exists(v => v == "1" || v.equalsIgnoreCase("true")),
             // CH accepts any SETTING as a URL param, scoped to the
             // query: everything not reserved for the protocol itself
-            // reaches the request session as a SET (r15) — so
+            // is a per-query setting (r15) — so
             // `?max_result_rows=10&readonly=1` govern exactly like
-            // their SET spellings
+            // their SETTINGS-clause spellings
             urlSettings = urlSettings0)
           }
         })
@@ -310,9 +302,10 @@ class QueryServer(
         * uncommitted (see [[progressIterator]] for the honest scope). */
       progressHeaders: Boolean = false,
       /** CH accepts ANY setting as a URL parameter
-        * (`?max_result_rows=10&readonly=1`) scoped to the query —
-        * applied to the request session before execution and restored
-        * after (a `?session_id=`-pinned session must not keep them). */
+        * (`?max_result_rows=10&readonly=1`) scoped to the query — the
+        * service's lifecycle applies them and puts them back
+        * ([[QueryService.governed]]), so a `?session_id=`-pinned
+        * session does not keep them. */
       urlSettings: Map[String, String] = Map.empty): (Int, String, String) = {
     val t0 = System.nanoTime()
     inFlight.incrementAndGet()
@@ -353,45 +346,6 @@ class QueryServer(
         return acquired.left.toOption.get
       }
       val (reqSession, releaseSession) = acquired.toOption.get
-      // per-query URL settings: set on the request session, restored
-      // after the response (CH scopes URL settings to the query)
-      val savedSettings = urlSettings.keys
-        .map(k => k -> reqSession.conf.getOption(k)).toMap
-      def restoreSettings(): Unit = savedSettings.foreach {
-        case (k, Some(v)) =>
-          try reqSession.conf.set(k, v)
-          catch { case scala.util.control.NonFatal(_) => () }
-        case (k, None) =>
-          try reqSession.conf.unset(k)
-          catch { case scala.util.control.NonFatal(_) => () }
-      }
-      // application runs inside ITS OWN guard (review r15): a throwing
-      // conf.set (static/core confs) before the main try would skip
-      // restore AND releaseSession, locking a pinned session forever.
-      // And a readonly session refuses URL setting changes like the
-      // SET path does — `?readonly=0` must not un-readonly a request
-      // (level 1 refuses all; level 2 protects readonly itself).
-      try {
-        val ro = reqSession.conf.getOption(Governance.Readonly)
-          .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(0)
-        if (ro == 1 && urlSettings.nonEmpty)
-          throw new IllegalArgumentException(
-            "Cannot modify settings in readonly mode (readonly = 1). READONLY")
-        if (ro >= 2 && urlSettings.keys.exists(
-            _.equalsIgnoreCase(Governance.Readonly)))
-          throw new IllegalArgumentException(
-            "Setting 'readonly' is protected and cannot be modified in " +
-              "readonly mode. READONLY")
-        urlSettings.foreach { case (k, v) => reqSession.conf.set(k, v) }
-      } catch {
-        case e: Exception =>
-          restoreSettings()
-          releaseSession()
-          errorsTotal.increment()
-          log.info(s"request_id=$reqId status=400 error=url_settings")
-          val (ct, b) = err(e.getMessage)
-          return (400, ct, b)
-      }
       val res =
         try {
           val req = buildReq()
@@ -402,109 +356,107 @@ class QueryServer(
           var spooled: Option[(String, String)] = None
           var streamedRows = 0L
           var streamAborted: Option[Throwable] = None
-          // consume runs INSIDE the governance window — the deadline
+          // the body runs INSIDE the governance window — the deadline
           // covers plan + stream, and max_result_rows bounds the
           // iterator (one job per partition, up to W = defaultParallelism
           // in flight; the driver holds at most W partitions and submits
           // none ahead past spark.driver.maxResultSize of unread bytes)
-          // FORMAT Parquet never streams row-wise — the whole result
-          // spools to ONE parquet file (a Spark job; the driver never
-          // materializes rows), then the bytes go out Content-Length'd
-          val wantsParquet = {
-            val main = graft.dialect.ChSql.statement(req.query, req.macros)
-            val stmtFmt =
-              if (graft.dialect.ChWrites.isWrite(main)) None
-              else graft.dialect.ChSql.requestedFormat(main)
-            stmtFmt.orElse(defaultFormat).exists(_.equalsIgnoreCase("parquet"))
-          }
-          if (wantsParquet) {
-            svc.executeSpooledParquet(req) { (_, file) =>
-              ex.getResponseHeaders.set("Content-Type", "application/octet-stream")
-              ex.getResponseHeaders.set("X-ClickHouse-Format", "Parquet")
-              // parquet is internally compressed — no gzip layer.
-              // the committed flag flips AFTER the header send succeeds
-              // (review r15: flipping first misclassified a failed send
-              // as "already committed" and the client got no response)
-              ex.sendResponseHeaders(200, file.length())
-              parquetSent = true
-              val os = ex.getResponseBody
-              try java.nio.file.Files.copy(file.toPath, os) finally os.close()
-              streamedRows = -1L // logged as bytes-shipped, not rows
-            }
-          } else
-          svc.executeStreamed(req) { (meta, rowIt0) =>
-            // a statement-level FORMAT always wins; default_format
-            // only fills the gap (CH's precedence)
-            val fmtKey = meta.format.orElse(defaultFormat).map(_.toLowerCase)
-            val ctype = formatContentType(fmtKey)
-            // the CANONICAL format spelling, as CH reports it
-            ResponseFormats.names.find(n =>
-                fmtKey.contains(n.toLowerCase)).foreach(n =>
-              ex.getResponseHeaders.set("X-ClickHouse-Format", n))
-            val sink = new SpoolSink(ex, ctype, pickEncoding(ex))
-            sinkRef = sink
-            val rowIt =
-              if (progressHeaders) progressIterator(ex, sink, meta, rowIt0, t0)
-              else rowIt0
-            try {
-              if (fmtKey.contains("jsoneachrowwithprogress")) {
-                // in-body progress events require the chunked stream
-                // from byte 0 — a spooled response would deliver every
-                // "progress" line at commit, defeating the format
-                sink.forceCommit()
-                streamedRows =
-                  ndjsonProgressStream(meta, rowIt, sink.writer, t0, sink)
-                spooled = sink.finishOk().map(b => (ctype, b)) // None
-              } else if (fmtKey.contains("native")) {
-                // binary: commit the chunked 200 up front — the spool's
-                // small-response path hands bytes back as a STRING,
-                // which would corrupt the block framing
-                sink.forceCommit()
-                streamedRows = nativeFormatStream(meta, rowIt, sink.rawOut)
-                spooled = sink.finishOk().map(b => (ctype, b)) // None
-              } else if (fmtKey.exists(_.startsWith("rowbinary"))) {
-                sink.forceCommit()
-                val schema = meta.schema.getOrElse(
-                  throw new IllegalStateException(
-                    "FORMAT RowBinary: the result schema is unavailable"))
-                val withNames = fmtKey.exists(_.contains("withnames"))
-                val withTypes = fmtKey.exists(_.contains("andtypes"))
-                streamedRows = graft.service.native.RowBinary.streamResult(
-                  schema, rowIt, sink.rawOut, withNames, withTypes)
-                spooled = sink.finishOk().map(b => (ctype, b)) // None
-              } else if (fmtKey.contains("arrow") ||
-                  fmtKey.contains("arrowstream")) {
-                sink.forceCommit()
-                val schema = meta.schema.getOrElse(
-                  throw new IllegalStateException(
-                    "FORMAT Arrow: the result schema is unavailable"))
-                streamedRows = org.apache.spark.sql.graft.ArrowShim
-                  .streamResult(schema,
-                    spark.conf.getOption("spark.sql.session.timeZone")
-                      .getOrElse(java.util.TimeZone.getDefault.getID),
-                    rowIt, sink.rawOut, NativeFormatBlockRows,
-                    fileFormat = fmtKey.contains("arrow") &&
-                      !fmtKey.contains("arrowstream"))
-                spooled = sink.finishOk().map(b => (ctype, b)) // None
-              } else {
-                streamedRows = renderStream(fmtKey, meta, rowIt, sink.writer)
-                if (progressHeaders && !sink.committed)
-                  ex.getResponseHeaders.set("X-ClickHouse-Summary",
-                    progressJson(meta, streamedRows, t0, sink.bytesOut.get))
-                spooled = sink.finishOk().map(b => (ctype, b))
+          svc.governed(req, urlSettings) { run =>
+            val meta = run.meta
+            // FORMAT Parquet never streams row-wise — the whole result
+            // spools to ONE parquet file (a Spark job; the driver never
+            // materializes rows), then the bytes go out Content-Length'd
+            if (meta.format.orElse(defaultFormat)
+                .exists(_.equalsIgnoreCase("parquet")))
+              run.spoolParquet { file =>
+                ex.getResponseHeaders.set("Content-Type", "application/octet-stream")
+                ex.getResponseHeaders.set("X-ClickHouse-Format", "Parquet")
+                // parquet is internally compressed — no gzip layer.
+                // the committed flag flips AFTER the header send succeeds
+                // (review r15: flipping first misclassified a failed send
+                // as "already committed" and the client got no response)
+                ex.sendResponseHeaders(200, file.length())
+                parquetSent = true
+                val os = ex.getResponseBody
+                try java.nio.file.Files.copy(file.toPath, os) finally os.close()
+                streamedRows = -1L // logged as bytes-shipped, not rows
               }
-            } catch {
-              case e: Throwable if sink.committed =>
-                // this IS the render thread — flush its own buffered
-                // rows before the in-band error line (a cross-thread
-                // abort cannot; see SpoolSink.abort)
-                try sink.writer.flush()
-                catch { case scala.util.control.NonFatal(_) => () }
-                sink.abort(inBandError(e))
-                streamAborted = Some(e)
-              // not committed: rethrow — the spool is discarded and the
-              // error maps to the same 400/500 it always did
+            else run.stream { rowIt0 =>
+              // a statement-level FORMAT always wins; default_format
+              // only fills the gap (CH's precedence)
+              val fmtKey = meta.format.orElse(defaultFormat).map(_.toLowerCase)
+              val ctype = formatContentType(fmtKey)
+              // the CANONICAL format spelling, as CH reports it
+              ResponseFormats.names.find(n =>
+                  fmtKey.contains(n.toLowerCase)).foreach(n =>
+                ex.getResponseHeaders.set("X-ClickHouse-Format", n))
+              val sink = new SpoolSink(ex, ctype, pickEncoding(ex))
+              sinkRef = sink
+              val rowIt =
+                if (progressHeaders) progressIterator(ex, sink, meta, rowIt0, t0)
+                else rowIt0
+              try {
+                if (fmtKey.contains("jsoneachrowwithprogress")) {
+                  // in-body progress events require the chunked stream
+                  // from byte 0 — a spooled response would deliver every
+                  // "progress" line at commit, defeating the format
+                  sink.forceCommit()
+                  streamedRows =
+                    ndjsonProgressStream(meta, rowIt, sink.writer, t0, sink)
+                  spooled = sink.finishOk().map(b => (ctype, b)) // None
+                } else if (fmtKey.contains("native")) {
+                  // binary: commit the chunked 200 up front — the spool's
+                  // small-response path hands bytes back as a STRING,
+                  // which would corrupt the block framing
+                  sink.forceCommit()
+                  streamedRows = nativeFormatStream(meta, rowIt, sink.rawOut)
+                  spooled = sink.finishOk().map(b => (ctype, b)) // None
+                } else if (fmtKey.exists(_.startsWith("rowbinary"))) {
+                  sink.forceCommit()
+                  val schema = meta.schema.getOrElse(
+                    throw new IllegalStateException(
+                      "FORMAT RowBinary: the result schema is unavailable"))
+                  val withNames = fmtKey.exists(_.contains("withnames"))
+                  val withTypes = fmtKey.exists(_.contains("andtypes"))
+                  streamedRows = graft.service.native.RowBinary.streamResult(
+                    schema, rowIt, sink.rawOut, withNames, withTypes)
+                  spooled = sink.finishOk().map(b => (ctype, b)) // None
+                } else if (fmtKey.contains("arrow") ||
+                    fmtKey.contains("arrowstream")) {
+                  sink.forceCommit()
+                  val schema = meta.schema.getOrElse(
+                    throw new IllegalStateException(
+                      "FORMAT Arrow: the result schema is unavailable"))
+                  streamedRows = org.apache.spark.sql.graft.ArrowShim
+                    .streamResult(schema,
+                      spark.conf.getOption("spark.sql.session.timeZone")
+                        .getOrElse(java.util.TimeZone.getDefault.getID),
+                      rowIt, sink.rawOut, NativeFormatBlockRows,
+                      fileFormat = fmtKey.contains("arrow") &&
+                        !fmtKey.contains("arrowstream"))
+                  spooled = sink.finishOk().map(b => (ctype, b)) // None
+                } else {
+                  streamedRows = renderStream(fmtKey, meta, rowIt, sink.writer)
+                  if (progressHeaders && !sink.committed)
+                    ex.getResponseHeaders.set("X-ClickHouse-Summary",
+                      progressJson(meta, streamedRows, t0, sink.bytesOut.get))
+                  spooled = sink.finishOk().map(b => (ctype, b))
+                }
+              } catch {
+                case e: Throwable if sink.committed =>
+                  // this IS the render thread — flush its own buffered
+                  // rows before the in-band error line (a cross-thread
+                  // abort cannot; see SpoolSink.abort)
+                  try sink.writer.flush()
+                  catch { case scala.util.control.NonFatal(_) => () }
+                  sink.abort(inBandError(e))
+                  streamAborted = Some(e)
+                // not committed: rethrow — the spool is discarded and the
+                // error maps to the same 400/500 it always did
+              }
             }
+            // shipped rows consume the result_rows quota budget
+            if (streamAborted.isEmpty) run.shipped(streamedRows)
           }
           streamAborted match {
             case Some(e) =>
@@ -516,12 +468,6 @@ class QueryServer(
               queriesTotal.increment()
               val secs = (System.nanoTime() - t0) / 1e9
               querySecondsTotal.add(secs)
-              // shipped rows consume the result_rows quota budget
-              // (quota/kill operator verbs stay unmetered)
-              if (streamedRows > 0 &&
-                  !graft.dialect.QuotaSql.isQuota(req.query) &&
-                  !graft.dialect.KillSql.isKill(req.query))
-                Quotas.recordResultRows("default", streamedRows)
               log.info(s"request_id=$reqId status=200 rows=$streamedRows " +
                 f"seconds=$secs%.3f")
               spooled match {
@@ -570,7 +516,7 @@ class QueryServer(
             if (sinkRef != null && !sinkRef.aborted)
               sinkRef.abort(inBandError(e))
             ResponseSent
-        } finally { restoreSettings(); releaseSession() }
+        } finally releaseSession()
       // any response — success or error — means the caller learns
       // this request's fate: it must never replay
       journalKey.foreach(k => journal.foreach(_.complete(k)))

@@ -15,13 +15,22 @@ import graft.dialect.ChSql
   * (`:318-339`). Our envelope adds column TYPES — a strict superset of
   * the reference's names-only contract (S10 note).
   *
+  * Every door's request runs through ONE governed lifecycle,
+  * [[QueryService.governed]]: statement and FORMAT check once,
+  * per-query settings (HTTP URL params, the native settings block, the
+  * statement's trailing `SETTINGS` clause) applied before the deadline
+  * is read and restored when the query ends, then registration, scan
+  * progress, quota admission and [[Governance.runGoverned]] around the
+  * plan and the body. [[execute]], [[executeStreamed]], the HTTP door
+  * and the native door are thin bodies over it.
+  *
   * Lifecycle notes vs the reference:
   *   - spawn/readiness/teardown (O2/O4/O8) collapse onto Spark's driver
   *     = coordinator model: the session owns its executors, so
   *     `execute` needs no barrier; elasticity is the cluster manager's
   *     dynamic allocation at real scale;
-  *   - `executeOnCurrent` is the warm path (O9, `:368-410`): no init, no
-  *     settings churn, straight to SQL on the live session.
+  *   - `executeOnCurrent` is the warm path (O9, `:368-410`): no init,
+  *     straight to SQL on the live session.
   */
 object QueryService {
 
@@ -47,9 +56,8 @@ object QueryService {
       rows: Seq[Seq[Any]],
       settings: Map[String, String],
       format: Option[String] = None,
-      /** Spark-level schema of the streamed result — what the BINARY
-        * response formats (Native, Parquet) need to encode typed
-        * columns; None on the legacy collect paths. */
+      /** Spark-level schema of the result — what the BINARY response
+        * formats (Native, Parquet) need to encode typed columns. */
       schema: Option[org.apache.spark.sql.types.StructType] = None,
       /** The query's Spark job group — the key into [[ScanProgress]]'s
         * executor-side read counters, which the doors' progress
@@ -58,6 +66,78 @@ object QueryService {
       /** Leaf-relation row estimate (CBO rowCount stats when present) —
         * CH's `total_rows_to_read`; 0 when unknown. */
       estRowsToRead: Long = 0L)
+
+  /** What [[QueryService.governed]] lends its body, inside the
+    * governance window: the request's planned frame, its result meta
+    * (`rows` empty) and the query's executor-side scan counters. */
+  final class Governed private[QueryService] (val df: DataFrame,
+      val meta: QueryResult, val scan: ScanProgress.Counters,
+      metered: Boolean) {
+
+    /** Rows shipped across a door consume the `result_rows` quota. */
+    def shipped(rows: Long): Unit =
+      if (metered) Quotas.recordResultRows("default", rows)
+
+    /** Drain the result through [[Governance.iterateBounded]]: up to W
+      * = `defaultParallelism` partition jobs in flight, rows in
+      * partition order, `max_result_rows` bounding the iterator (throw
+      * mid-stream / break); the driver holds at most W partitions and
+      * submits none ahead past `spark.driver.maxResultSize` of unread
+      * bytes — never the whole result. */
+    def stream[A](consume: Iterator[Seq[Any]] => A): A =
+      Governance.iterateBounded(df)(rows => consume(rows.map(_.toSeq)))
+
+    /** `FORMAT Parquet` for the HTTP door: `consume` gets ONE parquet
+      * file holding the whole result, spooled under a temp dir (deleted
+      * after `consume` returns). The write itself is a Spark job —
+      * executor-parallel encode, coalesced to a single output task so
+      * the response is one well-formed file; the driver never
+      * materializes the rows. This is a PROTOCOL endpoint, not the
+      * bulk-extract path — at 100 TB use `sink_path` / `INSERT INTO
+      * FUNCTION file(…)`, which keep the output parallel.
+      * `max_result_rows` is enforced on the plan (limit+1 →
+      * refuse/truncate per `result_overflow_mode`). */
+    def spoolParquet[A](consume: java.io.File => A): A = {
+      val spark = df.sparkSession
+      val tmp = java.nio.file.Files
+        .createTempDirectory("graft_http_parquet").toFile
+      try {
+        Governance.checkScanBudget(df)
+        val maxRows = spark.conf.getOption(Governance.MaxResultRows)
+          .map(_.trim).filter(_.nonEmpty).map(_.toLong).getOrElse(0L)
+        val overflow = spark.conf.getOption(Governance.ResultOverflowMode)
+          .map(_.trim.toLowerCase).getOrElse("throw")
+        val out = new java.io.File(tmp, "out")
+        (if (maxRows > 0 && maxRows < Int.MaxValue - 1)
+          df.limit(maxRows.toInt + 1) else df)
+          .coalesce(1).write.parquet(out.toString)
+        def partIn(dir: java.io.File): java.io.File =
+          dir.listFiles().find(_.getName.endsWith(".parquet"))
+            .getOrElse(throw new IllegalStateException(
+              s"parquet spool produced no part file under $dir"))
+        consume(
+          if (maxRows > 0 &&
+              spark.read.parquet(out.toString).count() > maxRows) {
+            // footer-served count; overflow surfaces per CH semantics
+            if (overflow != "break")
+              throw new IllegalArgumentException(
+                s"Limit for result rows exceeded: read ${maxRows + 1}+ " +
+                  s"rows, maximum $maxRows. TOO_MANY_ROWS (set " +
+                  "result_overflow_mode = 'break' to truncate instead)")
+            // break: re-write truncated (bounded by maxRows, still a job)
+            val cut = new java.io.File(tmp, "cut")
+            spark.read.parquet(out.toString).limit(maxRows.toInt)
+              .coalesce(1).write.parquet(cut.toString)
+            partIn(cut)
+          } else partIn(out))
+      } finally {
+        def rm(f: java.io.File): Unit = {
+          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
+        }
+        rm(tmp)
+      }
+    }
+  }
 
   /** Temporal-shaped retry policy (SURVEY §2.7 O1): the reference gets
     * per-activity retry from Temporal's defaults — exponential backoff,
@@ -163,275 +243,128 @@ class QueryService(spark: SparkSession) {
     ChSql.run(spark, req.query, req.macros)
   }
 
-  /** Full request → result-envelope path (O1+O6+O7). A `sinkPath`
-    * request writes the result as parquet (atomic: tmp dir + rename,
-    * `_SUCCESS` is the completion marker) and answers with a status
-    * frame; when the marker already exists the artifact is SERVED, not
-    * recomputed — that makes journal replay of a
-    * completed-but-unacknowledged request idempotent. */
-  def execute(req: QueryRequest): QueryResult = {
+  /** The one governed request lifecycle — every door's query runs
+    * inside it, in this order:
+    *   1. the statement is built once and an unknown FORMAT refuses
+    *      BEFORE execution (CH errors on unknown format names too);
+    *   2. the request's per-query settings apply — the door's
+    *      (`settings`: HTTP URL params, the native Query packet's
+    *      settings block), then the statement's trailing `SETTINGS`
+    *      clause — through [[ChSql.withSettings]], so the deadline they
+    *      set is in force when [[Governance.runGoverned]] reads it;
+    *   3. the query registers in `system.processes` under `group` (the
+    *      deadline, KILL QUERY and the native Cancel share that kill
+    *      handle), its scan progress is tracked, and it is admitted
+    *      against the quota — register FIRST, admit inside the guard: a
+    *      quota refusal must not leak the Proc, and a concurrency
+    *      refusal must not burn quota budget (review r16);
+    *   4. [[Governance.runGoverned]] wraps the WHOLE request — plan,
+    *      DDL/INSERT side effects and `body` — so `max_execution_time`
+    *      covers plan-and-stream; `body` gets the planned frame;
+    *   5. one `finally` unregisters, records the quota's read rows,
+    *      wall time and failure, releases the progress counters, and
+    *      puts every per-query setting back: they end with their query
+    *      (a `SET` statement still persists on its session).
+    * A `sinkPath` request offloads its result inside the same
+    * lifecycle and lends its status frame. Access-entity and operator
+    * verbs (QUOTA, KILL) stay outside quota metering: a single-user
+    * engine must be able to DROP an exhausted quota. */
+  def governed[A](req: QueryRequest,
+      settings: Map[String, String] = Map.empty,
+      door: String = "sql",
+      queryId: String = java.util.UUID.randomUUID().toString,
+      group: String =
+        s"graft-query-${java.util.UUID.randomUUID().toString.take(8)}")(
+      body: Governed => A): A = {
     val main = ChSql.statement(req.query, req.macros)
     val fmt =
       if (graft.dialect.ChWrites.isWrite(main)) None // INSERT's FORMAT is the INPUT format
       else ChSql.requestedFormat(main)
-    // unknown format refuses BEFORE execution (CH errors on unknown
-    // format names too) — failing after the query ran wasted the work
-    // and double-counted the request (review finding)
     fmt.filterNot(ResponseFormats.supported).foreach { f =>
       throw new IllegalArgumentException(
         s"unsupported FORMAT $f (${ResponseFormats.names.mkString(", ")})")
     }
-    req.sinkPath match {
-      case Some(path) =>
-        val (n, reused) = offload(req, path)
-        QueryResult(
-          cols = Seq("path", "rows", "status"),
-          types = Seq("string", "bigint", "string"),
-          rows = Seq(Seq(path, n, if (reused) "already_written" else "written")),
-          settings = Map.empty)
-      case None =>
-        // governance (max_execution_time / max_result_rows) wraps the
-        // WHOLE request — plan, DDL/INSERT side effects, collect — in
-        // one job group; the query registers in system.processes under
-        // that group, so the deadline and KILL QUERY share the kill
-        // handle. A statement-level SETTINGS deadline (applied inside
-        // executeToDf) still engages at the collect.
-        val qid = java.util.UUID.randomUUID().toString
-        val group = s"graft-query-${qid.take(8)}"
-        // access-entity/operator verbs stay OUTSIDE quota metering: a
-        // single-user engine must be able to DROP an exhausted quota
-        // (CH has other users for that; documented divergence)
-        val metered = !graft.dialect.QuotaSql.isQuota(main) &&
-          !graft.dialect.KillSql.isKill(main)
-        // register FIRST, admit INSIDE the try: a quota refusal must
-        // not leak the Proc, and a concurrency refusal must not burn
-        // quota budget for a query that never ran (review r16)
-        Processes.registerBounded(Processes.Proc(qid, req.query, "default",
-          "sql", System.currentTimeMillis(), group, spark),
-          Governance.concurrencyLimit(spark))
-        ScanProgress.ensureListener(spark)
-        ScanProgress.track(group)
-        val t0 = System.nanoTime()
-        var resultRows = -1L
-        var failed = true
-        var admitted = false
-        val (cols, types, rows, settings) =
-          try {
-            if (metered) Quotas.admit("default")
-            admitted = true
-            val out = Governance.runGoverned(spark, group) {
-              val (df, settings) = executeToDf(req)
-              (df.columns.toSeq,
-                df.schema.fields.map(_.dataType.simpleString).toSeq,
-                Governance.collectBounded(df, Some(group)).map(_.toSeq).toSeq,
-                settings)
-            }
-            resultRows = out._3.size.toLong
-            failed = false
-            out
-          } finally {
-            Processes.unregister(qid)
-            if (metered && admitted) Quotas.record("default", resultRows,
-              ScanProgress.get(group).map(_.recordsRead.get).getOrElse(0L),
-              (System.nanoTime() - t0) / 1e9, failed)
-            ScanProgress.release(group)
-          }
-        QueryResult(
-          cols = cols,
-          types = types,
-          rows = rows,
-          settings = settings,
-          format = fmt)
+    val metered = !graft.dialect.QuotaSql.isQuota(main) &&
+      !graft.dialect.KillSql.isKill(main)
+    ChSql.withSettings(spark, settings, ChSql.statementSettings(main)) {
+      Processes.registerBounded(Processes.Proc(queryId, req.query, "default",
+        door, System.currentTimeMillis(), group, spark),
+        Governance.concurrencyLimit(spark))
+      ScanProgress.ensureListener(spark)
+      val scan = ScanProgress.track(group)
+      val t0 = System.nanoTime()
+      var admitted = false
+      var failed = true
+      try {
+        if (metered) Quotas.admit("default")
+        admitted = true
+        val out = Governance.runGoverned(spark, group) {
+          val (df, stmtSettings) =
+            req.sinkPath.fold(executeToDf(req))(offload(req, _))
+          val estRows = df.queryExecution.optimizedPlan.collectLeaves()
+            .flatMap(_.stats.rowCount).map(_.toLong).sum
+          body(new Governed(df, QueryResult(
+            cols = df.columns.toSeq,
+            types = df.schema.fields.map(_.dataType.simpleString).toSeq,
+            rows = Nil, settings = stmtSettings, format = fmt,
+            schema = Some(df.schema), jobGroup = Some(group),
+            estRowsToRead = estRows), scan, metered))
+        }
+        failed = false
+        out
+      } finally {
+        Processes.unregister(queryId)
+        // quotas meter what the executors READ (real task metrics) and
+        // wall time here; shipped rows via [[Governed.shipped]]
+        if (metered && admitted) Quotas.record("default", 0L,
+          scan.recordsRead.get, (System.nanoTime() - t0) / 1e9, failed)
+        ScanProgress.release(group)
+      }
     }
+  }
+
+  /** Full request → result-envelope path (O1+O6+O7): the governed
+    * result, drained. A `sinkPath` request answers with its status
+    * frame — see [[offload]]. */
+  def execute(req: QueryRequest): QueryResult = governed(req) { run =>
+    val rows = run.stream(_.toVector)
+    run.shipped(rows.size)
+    run.meta.copy(rows = rows)
   }
 
   /** Streaming analog of [[execute]] (VERDICT r13 task #1: the HTTP
     * door rendered from a fully collected array — a driver-memory
     * incident for a big SELECT at scale): `consume` receives the
-    * result META (cols/types/settings/format; `rows` empty) plus a
-    * GOVERNED row iterator ([[Governance.iterateBounded]]: up to W =
-    * `defaultParallelism` partition jobs in flight, rows in partition
-    * order; the driver holds at most W partitions, and submits none
-    * ahead past `spark.driver.maxResultSize` of unread bytes — never
-    * the whole result) — and runs INSIDE the governance window, so
-    * `max_execution_time` covers the whole plan-and-stream and
-    * `max_result_rows` bounds the iterator (throw mid-stream / break).
-    * Same request routing as [[execute]]: sink offload and write/DDL
-    * statements produce their status frame as a one-row iterator. */
+    * result META (`rows` empty) plus the governed row iterator
+    * ([[Governed.stream]]) and runs INSIDE the governance window. */
   def executeStreamed[A](req: QueryRequest)(
-      consume: (QueryResult, Iterator[Seq[Any]]) => A): A = {
-    val main = ChSql.statement(req.query, req.macros)
-    val fmt =
-      if (graft.dialect.ChWrites.isWrite(main)) None
-      else ChSql.requestedFormat(main)
-    fmt.filterNot(ResponseFormats.supported).foreach { f =>
-      throw new IllegalArgumentException(
-        s"unsupported FORMAT $f (${ResponseFormats.names.mkString(", ")})")
-    }
-    req.sinkPath match {
-      case Some(path) =>
-        val (n, reused) = offload(req, path)
-        consume(
-          QueryResult(
-            cols = Seq("path", "rows", "status"),
-            types = Seq("string", "bigint", "string"),
-            rows = Nil, settings = Map.empty,
-            schema = Some(org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("path",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("rows",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("status",
-                org.apache.spark.sql.types.StringType))))),
-          Iterator(Seq[Any](path, n,
-            if (reused) "already_written" else "written")))
-      case None =>
-        val qid = java.util.UUID.randomUUID().toString
-        val group = s"graft-query-${qid.take(8)}"
-        Processes.registerBounded(Processes.Proc(qid, req.query, "default",
-          "sql", System.currentTimeMillis(), group, spark),
-          Governance.concurrencyLimit(spark))
-        ScanProgress.ensureListener(spark)
-        ScanProgress.track(group)
-        val metered = !graft.dialect.QuotaSql.isQuota(main) &&
-          !graft.dialect.KillSql.isKill(main)
-        val t0 = System.nanoTime()
-        var failed = true
-        var admitted = false
-        try {
-          // inside the try: a quota refusal must not leak the Proc or
-          // the tracked scan group (review r16 — this path admitted
-          // outside the cleanup and leaked both on refusal)
-          if (metered) Quotas.admit("default")
-          admitted = true
-          Governance.runGoverned(spark, group) {
-          val (df, settings) = executeToDf(req)
-          val estRows = df.queryExecution.optimizedPlan.collectLeaves()
-            .flatMap(_.stats.rowCount).map(_.toLong).sum
-          val out = Governance.iterateBounded(df) { rows =>
-            consume(
-              QueryResult(
-                cols = df.columns.toSeq,
-                types = df.schema.fields.map(_.dataType.simpleString).toSeq,
-                rows = Nil, settings = settings, format = fmt,
-                schema = Some(df.schema),
-                jobGroup = Some(group), estRowsToRead = estRows),
-              rows.map(_.toSeq))
-          }
-          failed = false
-          out
-        } } finally {
-          Processes.unregister(qid)
-          // the doors record shipped rows via Quotas.recordResultRows;
-          // quotas meter what the executors READ (real task metrics)
-          // + wall time here
-          if (metered && admitted) Quotas.record("default", 0L,
-            ScanProgress.get(group).map(_.recordsRead.get).getOrElse(0L),
-            (System.nanoTime() - t0) / 1e9, failed)
-          ScanProgress.release(group)
-        }
-    }
-  }
+      consume: (QueryResult, Iterator[Seq[Any]]) => A): A =
+    governed(req)(run => run.stream(consume(run.meta, _)))
 
-  /** `FORMAT Parquet` support for the HTTP door: run the request
-    * governed and hand the consumer ONE parquet file holding the whole
-    * result, spooled under a temp dir (deleted after `consume`
-    * returns). The write itself is a Spark job — executor-parallel
-    * encode, coalesced to a single output task so the response is one
-    * well-formed file; the driver never materializes the rows. This is
-    * a PROTOCOL endpoint, not the bulk-extract path — at 100 TB use
-    * `sink_path` / `INSERT INTO FUNCTION file(…)`, which keep the
-    * output parallel. `max_result_rows` is enforced on the plan
-    * (limit+1 → refuse/truncate per `result_overflow_mode`), and
-    * `max_execution_time` covers plan + write. */
-  def executeSpooledParquet[A](req: QueryRequest)(
-      consume: (QueryResult, java.io.File) => A): A = {
-    val qid = java.util.UUID.randomUUID().toString
-    val group = s"graft-query-${qid.take(8)}"
-    // register FIRST, then create the tempdir INSIDE the guarded
-    // region (review r15, twice): tempdir-then-register leaked a dir
-    // per concurrency-cap refusal; register-then-tempdir leaked a slot
-    // on a full /tmp — one try/finally owns both now
-    Processes.registerBounded(Processes.Proc(qid, req.query, "default",
-      "sql", System.currentTimeMillis(), group, spark),
-      Governance.concurrencyLimit(spark))
-    ScanProgress.ensureListener(spark)
-    ScanProgress.track(group)
-    val tq0 = System.nanoTime()
-    var spooledOk = false
-    var admitted = false
-    var tmp: java.io.File = null
-    try {
-      Quotas.admit("default") // FORMAT Parquet is always a SELECT
-      admitted = true
-      Governance.runGoverned(spark, group) {
-      tmp = java.nio.file.Files
-        .createTempDirectory("graft_http_parquet").toFile
-      val (df0, settings) = executeToDf(req)
-      Governance.checkScanBudget(df0)
-      val maxRows = spark.conf.getOption(Governance.MaxResultRows)
-        .map(_.trim).filter(_.nonEmpty).map(_.toLong).getOrElse(0L)
-      val overflow = spark.conf.getOption(Governance.ResultOverflowMode)
-        .map(_.trim.toLowerCase).getOrElse("throw")
-      val df =
-        if (maxRows > 0 && maxRows < Int.MaxValue - 1)
-          df0.limit(maxRows.toInt + 1)
-        else df0
-      val out = new java.io.File(tmp, "out")
-      df.coalesce(1).write.parquet(out.toString)
-      def partIn(dir: java.io.File): java.io.File =
-        dir.listFiles().find(_.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(
-            s"parquet spool produced no part file under $dir"))
-      val part =
-        if (maxRows > 0 &&
-            spark.read.parquet(out.toString).count() > maxRows) {
-          // footer-served count; overflow surfaces per CH semantics
-          if (overflow != "break")
-            throw new IllegalArgumentException(
-              s"Limit for result rows exceeded: read ${maxRows + 1}+ " +
-                s"rows, maximum $maxRows. TOO_MANY_ROWS (set " +
-                "result_overflow_mode = 'break' to truncate instead)")
-          // break: re-write truncated (bounded by maxRows, still a job)
-          val cut = new java.io.File(tmp, "cut")
-          spark.read.parquet(out.toString).limit(maxRows.toInt)
-            .coalesce(1).write.parquet(cut.toString)
-          partIn(cut)
-        } else partIn(out)
-      val res = consume(
-        QueryResult(df.columns.toSeq,
-          df.schema.fields.map(_.dataType.simpleString).toSeq,
-          Nil, settings, Some("parquet"), Some(df.schema)), part)
-      spooledOk = true
-      res
-    } } finally {
-      Processes.unregister(qid)
-      if (admitted) Quotas.record("default", 0L,
-        ScanProgress.get(group).map(_.recordsRead.get).getOrElse(0L),
-        (System.nanoTime() - tq0) / 1e9, failed = !spooledOk)
-      ScanProgress.release(group)
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete()
-      }
-      if (tmp != null) rm(tmp)
-    }
-  }
-
-  /** Returns (row count, whether an existing artifact was served). */
-  private def offload(req: QueryRequest, path: String): (Long, Boolean) = {
+  /** Writes the result as parquet at `path` (atomic: tmp dir + rename,
+    * `_SUCCESS` is the completion marker) and returns the status frame;
+    * when the marker already exists the artifact is SERVED, not
+    * recomputed — that makes journal replay of a
+    * completed-but-unacknowledged request idempotent. */
+  private def offload(req: QueryRequest,
+      path: String): (DataFrame, Map[String, String]) = {
+    import spark.implicits._
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-      return (spark.read.parquet(path).count(), true)
-    val (df, _) = executeToDf(req)
-    val tmp = new org.apache.hadoop.fs.Path(
-      p.getParent, s".${p.getName}.__sink_tmp")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    df.write.mode("overwrite").parquet(tmp.toString)
-    // a leftover COMPLETE-marker-less dir is a torn previous write
-    if (fs.exists(p)) fs.delete(p, true)
-    require(fs.rename(tmp, p), s"sink rename $tmp -> $path failed")
-    (spark.read.parquet(path).count(), false)
+    val reused = fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))
+    if (!reused) {
+      val (df, _) = executeToDf(req)
+      val tmp = new org.apache.hadoop.fs.Path(
+        p.getParent, s".${p.getName}.__sink_tmp")
+      if (fs.exists(tmp)) fs.delete(tmp, true)
+      df.write.mode("overwrite").parquet(tmp.toString)
+      // a leftover COMPLETE-marker-less dir is a torn previous write
+      if (fs.exists(p)) fs.delete(p, true)
+      require(fs.rename(tmp, p), s"sink rename $tmp -> $path failed")
+    }
+    val n = spark.read.parquet(path).count()
+    (Seq((path, n, if (reused) "already_written" else "written"))
+      .toDF("path", "rows", "status"), Map.empty)
   }
 
   /** Warm path (O9): one SQL string against the live session, no init. */

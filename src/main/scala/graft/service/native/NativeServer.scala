@@ -52,7 +52,10 @@ import NativeWire._
   * connection, so SET/ATTACH init state persists across queries on the
   * pinned connection exactly as the reference's init-then-query flow
   * assumes — and is isolated from other connections (CH's own session
-  * = connection contract). The catalog outlives connections (tables
+  * = connection contract). A Query packet's settings block and the
+  * statement's `SETTINGS` clause are per-query: they apply for that
+  * query only ([[QueryService.governed]]; a native INSERT's block via
+  * [[ChSql.withSettings]]). The catalog outlives connections (tables
   * CTAS'd on one conn are visible to the next), as on the HTTP door.
   *
   * Scale posture: a driver-side control door, like the HTTP shell —
@@ -251,17 +254,16 @@ class NativeServer(spark: SparkSession, port: Int = 0,
       catch { case scala.util.control.NonFatal(e) => Left(e) }
     val query = querySub.getOrElse(rawQuery)
 
-    // settings application can REFUSE (readonly guards, r15) — like
-    // querySub, the error must not throw before the client's pending
-    // data blocks drain, or the conn desynchronizes; defer it past the
-    // protocol exchange
-    val settingsApplied: Either[Throwable, Unit] =
-      try Right(ChSql.applySettings(session, settings.toMap))
-      catch { case scala.util.control.NonFatal(e) => Left(e) }
-
     if (isClientDataInsert(query)) {
-      insertFromClientBlocks(session, svc, in, out, revision, compression,
-        query, querySub.flatMap(q => settingsApplied.map(_ => q)))
+      // the client waits for the target's header block: an error here
+      // answers it before any data is sent, so the conn stays in sync
+      // (advisor r13: a substitution error was silently swallowed and
+      // the raw query ran)
+      querySub.left.foreach(e => throw e)
+      ChSql.withSettings(session, settings.toMap) {
+        insertFromClientBlocks(session, svc, in, out, revision, compression,
+          query)
+      }
       return
     }
 
@@ -280,55 +282,27 @@ class NativeServer(spark: SparkSession, port: Int = 0,
       out.flush()
       return
     }
-    // the protocol exchange is complete — deferred errors surface now
+    // the protocol exchange is complete — a deferred error surfaces now
     querySub.left.foreach(e => throw e)
-    settingsApplied.left.foreach(e => throw e)
 
     val started = System.nanoTime()
-    // governance + cancellation: the WHOLE request (plan, DDL/INSERT
-    // side effects, STREAMING send) runs on a worker thread under ONE
-    // job group (max_execution_time's deadline uses the same group),
-    // while this thread watches the socket for the client's Cancel
-    // packet — clickhouse-go sends Cancel(3) when its ctx expires, CH's
-    // contract being "stop working, answer EndOfStream". Pings between
-    // packets are answered inline (under the write lock, so a Pong
-    // never interleaves into a Data frame).
+    // the WHOLE request runs on a worker thread inside the service's
+    // governed lifecycle ([[QueryService.governed]]: the settings block
+    // scoped to this query, deadline, processes, quotas), while this
+    // thread watches the socket for the client's Cancel packet —
+    // clickhouse-go sends Cancel(3) when its ctx expires, CH's contract
+    // being "stop working, answer EndOfStream". The job group is named
+    // here so the watch can cancel it; the query registers under the
+    // client's own query id (or a generated one). Pings between packets
+    // are answered inline (under the write lock, so a Pong never
+    // interleaves into a Data frame).
     //
-    // The result STREAMS (VERDICT r13 task #1): the worker drains
-    // Governance.iterateBounded — up to W = defaultParallelism
-    // partition jobs in flight, rows in partition order — into
-    // BlockRows-sized Data frames, so the driver never holds the full
-    // result. A SELECT * over a 100 TB table through this door is
-    // bounded by W partitions (and no job submitted ahead past
-    // spark.driver.maxResultSize of unread bytes) + one block, not
-    // by the result size.
+    // The result STREAMS (VERDICT r13 task #1) into BlockRows-sized
+    // Data frames: the driver holds at most W = defaultParallelism
+    // partitions + one block, never the full result.
     val group = s"graft-native-${java.util.UUID.randomUUID().toString.take(8)}"
-    // registered in system.processes under the client's own query id
-    // (or a generated one) — KILL QUERY and the Cancel packet share
-    // the job-group kill handle
     val qid = if (clientQueryId.nonEmpty) clientQueryId
       else java.util.UUID.randomUUID().toString
-    // quotas gate the native door too (quota/kill operator verbs stay
-    // outside metering — see QueryService). Register FIRST, admit
-    // under the cleanup guard: a quota refusal must not leak the Proc
-    // or the tracked group, and a concurrency refusal must not burn
-    // quota budget (review r16)
-    val metered = !graft.dialect.QuotaSql.isQuota(query) &&
-      !graft.dialect.KillSql.isKill(query)
-    graft.service.Processes.registerBounded(graft.service.Processes.Proc(
-      qid, query, "default", "native", System.currentTimeMillis(),
-      group, session), graft.service.Governance.concurrencyLimit(session))
-    graft.service.ScanProgress.ensureListener(session)
-    val scanCounters = graft.service.ScanProgress.track(group)
-    val startedWall = System.nanoTime()
-    if (metered)
-      try graft.service.Quotas.admit("default")
-      catch {
-        case e: Throwable =>
-          graft.service.Processes.unregister(qid)
-          graft.service.ScanProgress.release(group)
-          throw e
-      }
     val outLock = new Object
     @volatile var cancelled = false
     @volatile var sentEos = false
@@ -336,9 +310,9 @@ class NativeServer(spark: SparkSession, port: Int = 0,
     val worker = new Thread(() => {
       org.apache.spark.sql.SparkSession.setActiveSession(session)
       try {
-        graft.service.Governance.runGoverned(session, group) {
-          val (df, _) = svc.executeToDf(QueryRequest(query))
-          val schema: StructType = df.schema
+        svc.governed(QueryRequest(query), settings.toMap, "native", qid,
+            group) { run =>
+          val schema: StructType = run.df.schema
           // header first (names + wire types), CH's frame order; plan
           // and analysis errors already threw before any frame left
           outLock.synchronized {
@@ -356,8 +330,8 @@ class NativeServer(spark: SparkSession, port: Int = 0,
           var reportedRows = 0L
           var reportedBytes = 0L
           def progressDelta(shipped: Long): Unit = {
-            val curRows = math.max(shipped, scanCounters.recordsRead.get)
-            val curBytes = scanCounters.bytesRead.get
+            val curRows = math.max(shipped, run.scan.recordsRead.get)
+            val curBytes = run.scan.bytesRead.get
             val dr = curRows - reportedRows
             val db = curBytes - reportedBytes
             if (dr > 0 || db > 0) {
@@ -385,7 +359,7 @@ class NativeServer(spark: SparkSession, port: Int = 0,
               }
             }
           }
-          graft.service.Governance.iterateBounded(df) { it =>
+          graft.service.Governance.iterateBounded(run.df) { it =>
             while (!cancelled && it.hasNext) {
               buf += it.next()
               if (buf.length >= BlockRows) flush()
@@ -400,9 +374,9 @@ class NativeServer(spark: SparkSession, port: Int = 0,
               // frames must never follow it
               if (!cancelled) {
                 progressDelta(sent)
-                // shipped rows consume the result_rows quota budget
-                if (metered)
-                  graft.service.Quotas.recordResultRows("default", sent)
+                // shipped rows consume the result_rows quota budget,
+                // before EndOfStream frees the client's next query
+                run.shipped(sent)
                 sendProfileInfo(out, sent, blocks)
                 NativeWire.writeVarUInt(out, ServerEndOfStream)
                 out.flush()
@@ -414,14 +388,6 @@ class NativeServer(spark: SparkSession, port: Int = 0,
         outcome = Right(())
       }
       catch { case e: Throwable => outcome = Left(e) }
-      finally {
-        graft.service.Processes.unregister(qid)
-        if (metered) graft.service.Quotas.record("default", 0L,
-          scanCounters.recordsRead.get,
-          (System.nanoTime() - startedWall) / 1e9,
-          failed = outcome == null || outcome.isLeft)
-        graft.service.ScanProgress.release(group)
-      }
     }, group)
     worker.setDaemon(true)
     worker.start()
@@ -530,14 +496,7 @@ class NativeServer(spark: SparkSession, port: Int = 0,
 
   private def insertFromClientBlocks(session: SparkSession,
       svc: QueryService, in: InputStream, out: OutputStream,
-      revision: Long, compression: Boolean, query: String,
-      querySub: Either[Throwable, String]): Unit = {
-    // a {name:Type} substitution failure on an INSERT opener surfaces
-    // as the Exception frame the client reads where it expects the
-    // header block — it aborts before sending any data, so the conn
-    // stays in sync (advisor r13: the error was silently swallowed and
-    // the raw query ran)
-    querySub.left.foreach(e => throw e)
+      revision: Long, compression: Boolean, query: String): Unit = {
     // a readonly session refuses the INSERT at the OPENER — before the
     // header block commits the exchange (r15)
     graft.service.Governance.checkReadonly(session, Seq(query))

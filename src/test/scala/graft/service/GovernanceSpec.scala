@@ -59,11 +59,12 @@ class GovernanceSpec extends AnyFunSuite {
         Thread.sleep(2500)
       }
       val completedBefore = DriverMerge.fallbacksCompleted.get()
-      val li = graft.core.Tables.load(spark, "/root/testdata/sf0.001", "lineitem")
-      val df = li.groupBy("l_orderkey")
-        .agg(org.apache.spark.sql.functions.sum("l_quantity").as("s"))
+      graft.core.Tables.load(spark, "/root/testdata/sf0.001", "lineitem")
+        .createOrReplaceTempView("gov_fallback_li")
       val e = intercept[java.util.concurrent.TimeoutException] {
-        Governance.collectBounded(df)
+        new QueryService(spark).execute(QueryRequest(
+          "SELECT l_orderkey, sum(l_quantity) AS s FROM gov_fallback_li " +
+            "GROUP BY l_orderkey"))
       }
       assert(e.getMessage.contains("TIMEOUT_EXCEEDED"), e.getMessage)
       assert(fallbackStarted.get(),
@@ -76,6 +77,7 @@ class GovernanceSpec extends AnyFunSuite {
     } finally {
       DriverMerge.onFallbackStart = () => ()
       spark.conf.unset(DriverMerge.MaxTotalRowsKey)
+      spark.catalog.dropTempView("gov_fallback_li")
       clear()
     }
     // the session survives the mid-fallback kill
@@ -245,11 +247,9 @@ class GovernanceSpec extends AnyFunSuite {
           settings = Map("max_result_rows" -> "10",
             "result_overflow_mode" -> "break"))
         assert(r.rows.size == 10, r.rows.size)
-        // reset the conn-session governance for the sanity check
-        val ok = c.query("SELECT count() AS n FROM numbers(100)",
-          settings = Map("max_result_rows" -> "0",
-            "result_overflow_mode" -> "throw"))
-        assert(ok.rows == Seq(Seq(100L)))
+        // the settings blocks ended with their queries
+        val ok = c.query("SELECT number FROM numbers(100)")
+        assert(ok.rows.size == 100, ok.rows.size)
       } finally c.close()
     } finally native.stop()
   }
@@ -343,6 +343,102 @@ class GovernanceSpec extends AnyFunSuite {
     finally {
       spark.conf.unset(Governance.MaxConcurrentQueries)
       clear()
+    }
+  }
+
+  private def withNative[A](body: graft.service.native.NativeClient => A): A = {
+    val srv = new graft.service.native.NativeServer(spark)
+    val port = srv.start()
+    try {
+      val c = new graft.service.native.NativeClient("127.0.0.1", port)
+      try body(c) finally c.close()
+    } finally srv.stop()
+  }
+
+  private def withHttp[A](body: Int => A): A = {
+    val srv = new QueryServer(spark)
+    val port = srv.start()
+    try body(port) finally srv.stop(0L)
+  }
+
+  private val http = java.net.http.HttpClient.newHttpClient()
+
+  private def post(port: Int, params: String,
+      sql: String): java.net.http.HttpResponse[String] =
+    http.send(java.net.http.HttpRequest.newBuilder(
+        java.net.URI.create(s"http://127.0.0.1:$port/?$params"))
+        .timeout(java.time.Duration.ofSeconds(40))
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(sql)).build(),
+      java.net.http.HttpResponse.BodyHandlers.ofString())
+
+  /** `body`'s answer, or a failure once `sec` seconds pass without one. */
+  private def within[A](sec: Int)(body: => A): A = {
+    import scala.concurrent.ExecutionContext.Implicits.global
+    scala.concurrent.Await.result(scala.concurrent.Future(body),
+      scala.concurrent.duration.Duration(sec, "s"))
+  }
+
+  test("a statement's SETTINGS deadline is enforced at both doors; the session answers after") {
+    val timed = s"$slowSql SETTINGS max_execution_time = 1"
+    withHttp { port =>
+      val sid = "gov_deadline_" + System.nanoTime()
+      val started = System.nanoTime()
+      val r = post(port, s"session_id=$sid", timed)
+      val elapsedSec = (System.nanoTime() - started) / 1e9
+      assert(r.statusCode() != 200 && r.body().contains("TIMEOUT_EXCEEDED"),
+        s"${r.statusCode()}: ${r.body()}")
+      assert(elapsedSec < 30, s"deadline kill took ${elapsedSec}s")
+      val ok = post(port, s"session_id=$sid&default_format=CSV", "SELECT 1")
+      assert(ok.statusCode() == 200 && ok.body() == "1\n", ok.body())
+    }
+    withNative { c =>
+      val e = within(40) {
+        intercept[graft.service.native.NativeClient.ServerSideException] {
+          c.query(timed)
+        }
+      }
+      assert(e.code == graft.service.native.NativeProtocol.ErrTimeoutExceeded,
+        s"${e.code}: ${e.getMessage}")
+      assert(e.getMessage.contains("TIMEOUT_EXCEEDED"), e.getMessage)
+      assert(c.query("SELECT 1 AS ok").rows == Seq(Seq(1)))
+    }
+  }
+
+  test("per-query settings end with their query at both doors; a SET persists") {
+    val all = "SELECT number FROM numbers(100)"
+    val clause = s"$all SETTINGS max_result_rows = 5, result_overflow_mode = 'break'"
+    withNative { c =>
+      // the Query packet's settings block
+      assert(c.query(all, Map("max_result_rows" -> "10",
+        "result_overflow_mode" -> "break")).rows.size == 10)
+      assert(c.query(all).rows.size == 100)
+      // the statement's trailing SETTINGS clause
+      assert(c.query(clause).rows.size == 5)
+      assert(c.query(all).rows.size == 100)
+      // a SET statement stays on the connection's session (CH semantics)
+      c.exec("SET max_result_rows = 5")
+      c.exec("SET result_overflow_mode = break")
+      assert(c.query(all).rows.size == 5)
+      assert(c.query(all).rows.size == 5)
+    }
+    withHttp { port =>
+      val sid = "gov_scope_" + System.nanoTime()
+      def rows(params: String, sql: String): Int = {
+        val r = post(port, s"session_id=$sid&default_format=TSV$params", sql)
+        assert(r.statusCode() == 200, r.body())
+        r.body().linesIterator.size
+      }
+      // the SETTINGS clause on a pinned session
+      assert(rows("", clause) == 5)
+      assert(rows("", all) == 100)
+      // URL params on a pinned session
+      assert(rows("&max_result_rows=5&result_overflow_mode=break", all) == 5)
+      assert(rows("", all) == 100)
+      // a SET statement stays on the pinned session
+      rows("", "SET max_result_rows = 5")
+      rows("", "SET result_overflow_mode = break")
+      assert(rows("", all) == 5)
+      assert(rows("", all) == 5)
     }
   }
 }

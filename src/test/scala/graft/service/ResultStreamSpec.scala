@@ -277,9 +277,9 @@ class ResultStreamSpec extends AnyFunSuite {
     withNative { c =>
       val b = c.query(sql, Map("max_result_rows" -> "10", "result_overflow_mode" -> "break"))
       assert(b.rows.map(_.head) == (0L until 10L))
-      // per-query settings stay on the connection's session: name the mode
+      // the break ended with its query: throw is the mode again
       val e = intercept[NativeClient.ServerSideException] {
-        c.query(sql, Map("max_result_rows" -> "10", "result_overflow_mode" -> "throw"))
+        c.query(sql, Map("max_result_rows" -> "10"))
       }
       assert(e.getMessage.contains("Limit for result rows exceeded: read 11+ rows, " +
         "maximum 10. TOO_MANY_ROWS"), e.getMessage)
