@@ -608,8 +608,8 @@ object Bench {
     // SparkContext init, so the A/B stops the shared session LAST —
     // after every other measurement — and times the full-width hash
     // scan in two fresh contexts: off-heap vs on-heap (the engine
-    // default since r14). Exclusive probe runs (Q4Probe, 2×/5-7 iters) already
-    // showed medians ~1.0-1.3 s EITHER way with negligible GC and 7-8 s
+    // default since r14). Exclusive memory-mode A/B runs (2×/5-7 iters)
+    // already showed medians ~1.0-1.3 s EITHER way with negligible GC and 7-8 s
     // outliers in BOTH modes — the spread is machine noise, not the
     // off-heap pool; this section keeps that attribution pinned in
     // every round's artifact. SPARK_GRAFT_Q4AB=0 skips.

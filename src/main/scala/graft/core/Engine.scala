@@ -11,9 +11,10 @@ import org.apache.spark.sql.SparkSession
   * `local[N]` stands in for the N-node fly.io fleet during tests.
   *
   * Scale posture: every conf set here is chosen for a real multi-executor
-  * cluster, not just local mode — AQE on (runtime re-plan / skew-join
-  * splitting), shuffle partitions sized to cores (overridden upward on a
-  * real cluster), UTC session time so results are layout-independent.
+  * cluster, not just local mode — AQE on as Spark ships it (runtime
+  * re-plan / skew-join splitting), shuffle partitions sized to cores
+  * (overridden upward on a real cluster), UTC session time so results
+  * are layout-independent.
   */
 object Engine {
 
@@ -57,14 +58,11 @@ object Engine {
       appName: String = "graft",
       cores: Int = defaultCores,
       extraConf: Map[String, String] = Map.empty): SparkSession = {
-    val b = SparkSession.builder()
+    val spark = SparkSession.builder()
       .appName(appName)
       .master(s"local[$cores]")
       .config(doorConf)
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // Bound task-memory pages: Spark's default scales with the
       // execution pool (min(64MB, pool/cores/16)), so under a
       // multi-ten-GB driver heap every short sort/agg task zero-filled
@@ -72,67 +70,48 @@ object Engine {
       .config("spark.buffer.pageSize", "4m")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.parquet.aggregatePushdown", "true")
       // Vectorized first-level agg hash map (r14, the q3 finding):
       // keyed hash-aggs with fixed-width keys spend ~55ns/row in the
       // row-based first-level map; the vectorized map cut
-      // q3_uniq_exact sf10 from 0.39 to 0.26 s median (Q3Matrix, 7
-      // iters) with AQE on, and is a no-op for key shapes it doesn't
-      // support (automatic fallback)
+      // q3_uniq_exact sf10 from 0.39 to 0.26 s median (7-iteration
+      // runtime-conf A/B) with AQE on, and is a no-op for key shapes
+      // it doesn't support (automatic fallback)
       .config("spark.sql.codegen.aggregate.map.vectorized.enable", "true")
-      // Reader batch size 4× Spark's 4096 default (r15, BatchSizeProbe
-      // over the sf10 fixture, two independent windows): q2 group-sum
-      // −20/−34%, q4 16-column hash-scan −7/−25%, q1/q3 neutral-to-
-      // better, GC flat. Per-task vector memory grows with the batch
-      // (16k rows × column width × read columns ≈ 4 MB for a 16-column
-      // scan) — noise against multi-GB executors, and the per-batch
-      // loop/virtual-call overhead it amortizes is measured, not
-      // guessed.
+      // Reader batch size 4× Spark's 4096 default (r15, reader-batch
+      // A/B over the sf10 fixture, two independent windows): q2
+      // group-sum −20/−34%, q4 16-column hash-scan −7/−25%, q1/q3
+      // neutral-to-better, GC flat. Per-task vector memory grows with
+      // the batch (16k rows × column width × read columns ≈ 4 MB for a
+      // 16-column scan) — noise against multi-GB executors, and the
+      // per-batch loop/virtual-call overhead it amortizes is measured,
+      // not guessed.
       .config("spark.sql.parquet.columnarReaderBatchSize", "16384")
-    // Leaf-scan packing (r11): Spark's default minPartitionNum=cores
-    // shreds small many-file tables into per-file tiny tasks; measured
-    // here (Bench.scala/Q3Probe) per-row aggregate cost inflates ~10×
-    // under 32-way concurrency on sub-MB tasks while 4×-fewer, bigger
-    // tasks cut both CPU and wall. But the knob is one formula for
-    // every scan — maxSplitBytes = min(maxPartitionBytes,
-    // max(openCost, totalBytes/minPartitionNum)) — so a low floor
-    // alone also CAPS a 1 GB scan at cores/4 tasks (measured: the
-    // full-width hash scan at sf10 ran 8 tasks on 32 cores, 3-5 s vs
-    // 1.3 s at full width). The pair below expresses both regimes:
-    // small tables pack into cores/4 tasks, and the 32 MB size cap
-    // keeps anything ≥ cores/4 × 32 MB fanning out to all cores.
-    // The cap is sized for THIS single-node regime (splits ≤ a few
-    // GB per table): on a 1000-executor cluster 32 MB would 4× the
-    // task count of a 100 TB scan for no gain — deployments at that
-    // scale should raise it back to 128 MB via env/extraConf.
-    // SPARK_GRAFT_MIN_PART / SPARK_GRAFT_MAX_PART_BYTES override each
-    // knob; 0 leaves Spark's default for it.
-    val minPart = sys.env.getOrElse("SPARK_GRAFT_MIN_PART",
-      math.max(1, cores / 4).toString)
-    if (minPart != "0") b.config("spark.sql.files.minPartitionNum", minPart)
-    val maxPartBytes = sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES",
-      (32L * 1024 * 1024).toString)
-    if (maxPartBytes != "0") b.config("spark.sql.files.maxPartitionBytes", maxPartBytes)
-    // OFF-HEAP column vectors: DEFAULT OFF since r14. The r12 case for
-    // off-heap was q2's GC under a long-lived pressured heap (on-heap
-    // collapsing ~10× in that window); every clean-window A/B since —
-    // r13's three runs and r14's Q4Probe (off-heap 4.4-28 s vs on-heap
-    // 0.96-1.9 s back-to-back on the same box) — shows on-heap winning
-    // the full-width scan shape outright AND off-heap amplifying
-    // 10-15× under host IO/CPU contention, making it the riskier
-    // default on a shared machine. The 1000-executor GC argument is
-    // real but is an argument, not a local measurement; deployments
-    // with dedicated memory opt in with SPARK_GRAFT_OFFHEAP=<bytes>
-    // (e.g. 4294967296), which sets all three configs. SCALING.md
-    // records both shapes' numbers.
-    val offHeap = sys.env.getOrElse("SPARK_GRAFT_OFFHEAP", "0")
-    if (offHeap != "0") {
-      b.config("spark.sql.columnVector.offheap.enabled", "true")
-        .config("spark.memory.offHeap.enabled", "true")
-        .config("spark.memory.offHeap.size", offHeap)
-    }
-    extraConf.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
+      // Leaf-scan packing (r11): Spark's default minPartitionNum=cores
+      // shreds small many-file tables into per-file tiny tasks;
+      // measured here (the r11 q3 stage decomposition) per-row
+      // aggregate cost inflates ~10× under 32-way concurrency on
+      // sub-MB tasks while 4×-fewer, bigger tasks cut both CPU and
+      // wall. But the knob is one formula for every scan —
+      // maxSplitBytes = min(maxPartitionBytes, max(openCost,
+      // totalBytes/minPartitionNum)) — so a low floor alone also CAPS
+      // a 1 GB scan at cores/4 tasks (measured: the full-width hash
+      // scan at sf10 ran 8 tasks on 32 cores, 3-5 s vs 1.3 s at full
+      // width). The pair below expresses both regimes: small tables
+      // pack into cores/4 tasks, and the 32 MB size cap keeps anything
+      // ≥ cores/4 × 32 MB fanning out to all cores. The cap is sized
+      // for THIS single-node regime (splits ≤ a few GB per table): on
+      // a 1000-executor cluster 32 MB would 4× the task count of a
+      // 100 TB scan for no gain — a deployment at that scale passes
+      // 128 MB back through `extraConf`.
+      .config("spark.sql.files.minPartitionNum", math.max(1, cores / 4).toString)
+      .config("spark.sql.files.maxPartitionBytes", (32L * 1024 * 1024).toString)
+      // Column vectors stay on-heap, Spark's default (r14): every
+      // clean-window A/B since r13 had on-heap winning the full-width
+      // scan (0.96-1.9 s vs off-heap 4.4-28 s back-to-back) and
+      // off-heap amplifying 10-15× under host IO/CPU contention.
+      // `Bench`'s q4 section re-measures both modes every run.
+      .config(extraConf)
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -471,7 +471,7 @@ object ChSql {
       macros: Map[String, String] = defaultMacros)
       : (DataFrame, Map[String, String]) = {
     import spark.implicits._
-    val m = statement(query, macros)
+    val m = unquoteSet(statement(query, macros))
     def done(df: DataFrame) = (df, Map.empty[String, String])
     if (graft.core.Catalog.isAttach(m)) {
       val t = graft.core.Catalog.attach(spark, m)
@@ -527,6 +527,17 @@ object ChSql {
     // ends with the query
     applySettings(spark, r.settings)
     (finish(spark, r), r.settings)
+  }
+
+  private val QuotedSet =
+    """(?is)(\s*SET\s+[A-Za-z_][A-Za-z0-9_.]*\s*=\s*)('(?:[^'\\]|\\.)*')\s*;?\s*""".r
+
+  /** CH `SET k = 'v'`: the value is a literal, unquoted by the same
+    * rule as a `SETTINGS` clause's; Spark's `SET` would keep the quotes
+    * in the value. */
+  private def unquoteSet(stmt: String): String = stmt match {
+    case QuotedSet(head, v) => head + unquote(v)
+    case _ => stmt
   }
 
   /** [[run]]'s frame. */

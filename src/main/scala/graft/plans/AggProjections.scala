@@ -680,7 +680,7 @@ case class AggProjectionRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     // every group expression must be a plain source data column
     val groupNames: Option[Seq[(Attribute, String)]] = {
       val resolved = groupExprs.map {
-        case a: AttributeReference => resolve(child, a).map(n => (a: Attribute, n))
+        case a: AttributeReference => ScanRelations.resolve(child, a).map(n => (a: Attribute, n))
         case _ => None
       }
       if (resolved.forall(_.isDefined)) Some(resolved.map(_.get)) else None
@@ -729,7 +729,7 @@ case class AggProjectionRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       // normalization, so predicate-on-key ⇒ whole groups holds.
       case a: AttributeReference
           if a.dataType != DoubleType && a.dataType != org.apache.spark.sql.types.FloatType =>
-        resolve(below, a).filter(m.groupCols.contains).map(projAttr)
+        ScanRelations.resolve(below, a).filter(m.groupCols.contains).map(projAttr)
       case other if other.references.isEmpty && other.deterministic &&
           !other.exists(_.isInstanceOf[PlanExpression[_]]) =>
         Some(other) // attribute-free subtree (literals, constants) — as-is
@@ -754,7 +754,7 @@ case class AggProjectionRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     def mergeAgg(ae: AggregateExpression): Option[Expression] = {
       if (ae.isDistinct || ae.filter.isDefined) return None
       def colOf(e: Expression): Option[String] = e match {
-        case a: AttributeReference => resolve(child, a)
+        case a: AttributeReference => ScanRelations.resolve(child, a)
         case _ => None
       }
       ae.aggregateFunction match {
@@ -844,27 +844,6 @@ case class AggProjectionRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     case scala.util.control.NonFatal(e) =>
       logWarning(s"projection rewrite failed; keeping the scan plan: $e")
       None
-  }
-
-  // same resolution discipline as FooterAggregates: an attribute is
-  // usable only if it reaches the relation as a bare data column
-  private def resolve(p: LogicalPlan, attr: Attribute): Option[String] = p match {
-    case l: LogicalRelation =>
-      l.output.find(_.exprId == attr.exprId).map(_.name)
-    case d: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-        if graft.sources.mergetree.MergeTree.relationInfo(d).isDefined =>
-      d.output.find(_.exprId == attr.exprId).map(_.name)
-    case Project(projList, c) =>
-      projList.find(_.exprId == attr.exprId).flatMap {
-        case a: AttributeReference => resolve(c, a)
-        case Alias(a: AttributeReference, _) => resolve(c, a)
-        case _ => None
-      }
-    case SubqueryAlias(_, c) => resolve(c, attr)
-    // name resolution only — the filter itself is handled (or refused)
-    // by relationAndFilters
-    case Filter(_, c) => resolve(c, attr)
-    case _ => None
   }
 
   /** The parquet or MergeTree relation under cardinality-preserving

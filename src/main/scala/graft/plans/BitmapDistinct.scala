@@ -65,14 +65,6 @@ object BitmapDistinct {
     * q3 bench shape. */
   val engagements = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Probe-only kill switch for the dictionary id-seen lane
-    * (JVM-local: `-Dgraft.bitmapDistinct.dictLane=false`, or flipped
-    * directly by the A/B probes — local mode shares the JVM) —
-    * same-build A/B timing; both lanes are bit-identical. */
-  @volatile private[graft] var dictLaneEnabled =
-    !"false".equalsIgnoreCase(
-      System.getProperty("graft.bitmapDistinct.dictLane", "true"))
-
   def serialize(bm: Roaring64Bitmap): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     bm.serialize(new java.io.DataOutputStream(bos))
@@ -183,7 +175,7 @@ object BitmapDistinct {
     def dictFold(j: Int, vec: org.apache.spark.sql.vectorized.ColumnVector,
         rows: Int): Boolean = {
       val ds = dictSeen(j)
-      if (!BitmapDistinct.dictLaneEnabled || ds.broken) return false
+      if (ds.broken) return false
       // a cache-resident dense bitset beats the id-seen indirection —
       // the dict lane only wins when the direct fold would thrash cache
       // (large spans) or pay Roaring's per-add cost (DictKernelBench:

@@ -126,20 +126,7 @@ case class FooterAggregates(spark: SparkSession) extends Rule[LogicalPlan] {
       p: LogicalPlan,
       attr: Attribute,
       rel: HadoopFsRelation): Option[String] =
-    resolve(p, attr).filter(n => rel.dataSchema.fieldNames.contains(n))
-
-  private def resolve(p: LogicalPlan, attr: Attribute): Option[String] = p match {
-    case l: LogicalRelation =>
-      l.output.find(_.exprId == attr.exprId).map(_.name)
-    case Project(projList, c) =>
-      projList.find(_.exprId == attr.exprId).flatMap {
-        case a: AttributeReference => resolve(c, a)
-        case Alias(a: AttributeReference, _) => resolve(c, a)
-        case _ => None
-      }
-    case SubqueryAlias(_, c) => resolve(c, attr)
-    case _ => None
-  }
+    ScanRelations.resolve(p, attr).filter(n => rel.dataSchema.fieldNames.contains(n))
 
   /** The parquet relation under cardinality-preserving wrappers only. */
   private def plainParquet(p: LogicalPlan): Option[HadoopFsRelation] = p match {

@@ -217,16 +217,9 @@ object HashScan {
     * Returns false when the column cannot ride the dictionary this
     * batch (no dictionary, boolean, or a failed decode probe) — the
     * caller then runs the per-row lane, with `hs` untouched. */
-  /** Probe-only kill switch for the dictionary memo lane (JVM-local:
-    * `-Dgraft.hashScan.dictLane=false`, or flipped directly by the
-    * A/B probes — local mode shares the JVM). Not a session conf: the
-    * lane is not a semantic choice, both lanes are bit-identical. */
-  @volatile private[graft] var dictLaneEnabled =
-    !"false".equalsIgnoreCase(System.getProperty("graft.hashScan.dictLane", "true"))
-
   private def dictLane(v: ColumnVector, tag: Int, n: Int,
       hs: Array[Long], first: Boolean, memo: DictMemo): Boolean = {
-    if (!dictLaneEnabled || memo == null || memo.broken || tag == TBool) return false
+    if (memo == null || memo.broken || tag == TBool) return false
     val w = v match {
       case w: WritableColumnVector
           if w.hasDictionary && w.getDictionaryIds != null => w

@@ -52,5 +52,21 @@ class EngineSessionSpec extends AnyFunSuite {
     assert(spark.conf.get("spark.sql.parquet.columnarReaderBatchSize") == "16384")
     assert(spark.sparkContext.getConf.get("spark.buffer.pageSize") == "4m")
     Engine.doorConf.foreach { case (k, v) => assert(spark.conf.get(k) == v, k) }
+    // the effective value of every conf the recipe sets or defaults, as
+    // a door's per-request session sees it: the served configuration
+    val fresh = spark.newSession().conf
+    val cores = Engine.defaultCores
+    Seq(
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.files.minPartitionNum" -> math.max(1, cores / 4).toString,
+      "spark.sql.files.maxPartitionBytes" -> (32L * 1024 * 1024).toString,
+      "spark.sql.shuffle.partitions" -> cores.toString,
+      "spark.sql.autoBroadcastJoinThreshold" -> (64L * 1024 * 1024).toString,
+      "spark.sql.codegen.aggregate.map.vectorized.enable" -> "true",
+      "spark.sql.columnVector.offheap.enabled" -> "false"
+    ).foreach { case (k, v) => assert(fresh.get(k) == v, k) }
+    assert(!spark.sparkContext.getConf.getBoolean("spark.memory.offHeap.enabled", false))
   }
 }

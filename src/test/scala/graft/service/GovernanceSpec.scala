@@ -417,7 +417,7 @@ class GovernanceSpec extends AnyFunSuite {
       assert(c.query(all).rows.size == 100)
       // a SET statement stays on the connection's session (CH semantics)
       c.exec("SET max_result_rows = 5")
-      c.exec("SET result_overflow_mode = break")
+      c.exec("SET result_overflow_mode = 'break'")
       assert(c.query(all).rows.size == 5)
       assert(c.query(all).rows.size == 5)
     }
@@ -436,9 +436,34 @@ class GovernanceSpec extends AnyFunSuite {
       assert(rows("", all) == 100)
       // a SET statement stays on the pinned session
       rows("", "SET max_result_rows = 5")
-      rows("", "SET result_overflow_mode = break")
+      rows("", "SET result_overflow_mode = 'break'")
       assert(rows("", all) == 5)
       assert(rows("", all) == 5)
+    }
+  }
+
+  // CH's own spelling of a SET value is a quoted literal
+  private val quotedSets =
+    Seq("SET result_overflow_mode = 'break'", "SET max_result_rows = '5'")
+
+  test("native door: a quoted SET value takes effect unquoted on the connection") {
+    withNative { c =>
+      quotedSets.foreach(c.exec(_))
+      assert(c.query("SELECT number FROM numbers(100)").rows.size == 5)
+    }
+  }
+
+  test("HTTP door: a quoted SET value takes effect unquoted on a pinned session") {
+    withHttp { port =>
+      val sid = "gov_quoted_set_" + System.nanoTime()
+      quotedSets.foreach { q =>
+        val r = post(port, s"session_id=$sid", q)
+        assert(r.statusCode() == 200, s"$q: ${r.body()}")
+      }
+      val r = post(port, s"session_id=$sid&default_format=TSV",
+        "SELECT number FROM numbers(100)")
+      assert(r.statusCode() == 200, r.body())
+      assert(r.body().linesIterator.size == 5, r.body())
     }
   }
 }

@@ -1,7 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale validation for the executor-parallel MergeTree write tier
   * (VERDICT r10 task #4 done-criterion): CTAS the FULL sf0.1 lineitem
   * (6M rows) into a part tree — written by executors, no driver-side
@@ -10,20 +8,13 @@ import org.apache.spark.sql.SparkSession
   * multi-part with per-part sorted, disjoint key ranges.
   *
   * Run: `sbt "Test/runMain graft.sources.MergeTreeScaleCheck"`
-  * (optionally SPARK_GRAFT_SF_DIR to point at another scale).
+  * (optionally SPARK_GRAFT_SF_DIR to point at another scale). The
+  * session is the engine's own ([[graft.core.Engine.session]]).
   */
 object MergeTreeScaleCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Engine.session("graft-mt-scale")
     import graft.sources.mergetree.{MergeTree, MergeTreeCtas}
     import org.apache.spark.sql.functions._
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The four DuckDB-comparable bench shapes under REAL executor JVMs —
@@ -33,23 +33,14 @@ object MultiJvmBench {
       "java.base/sun.nio.ch", "java.base/sun.nio.cs",
       "java.base/sun.security.action", "java.base/sun.util.calendar")
       .map(p => s"--add-opens=$p=ALL-UNNAMED").mkString(" ")
-    val spark = SparkSession.builder()
-      .master("local-cluster[2,16,6144]")
-      .appName("graft-multijvm-bench")
-      .config("spark.executor.memory", "5g")
-      .config("spark.executor.extraClassPath", classesDir)
-      .config("spark.executor.extraJavaOptions", addOpens)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.aggregate.map.vectorized.enable", "true")
-      .config("spark.sql.parquet.columnarReaderBatchSize", "16384")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.sql.files.minPartitionNum", "8")
-      .config("spark.sql.files.maxPartitionBytes", s"${32L * 1024 * 1024}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the served recipe at the cluster's 32 cores (shuffle partitions,
+    // scan packing), on forked executor JVMs that load graft's classes
+    val spark = graft.core.Engine.session("graft-multijvm-bench", cores = 32,
+      extraConf = Map(
+        "spark.master" -> "local-cluster[2,16,6144]",
+        "spark.executor.memory" -> "5g",
+        "spark.executor.extraClassPath" -> classesDir,
+        "spark.executor.extraJavaOptions" -> addOpens))
     try {
       // wait for both executor JVMs
       val deadline = System.currentTimeMillis() + 120000
