@@ -124,8 +124,8 @@ object MultiJvmSmoke {
       // staged-then-renamed part per task, all task-side in executor
       // JVMs; read back through the granule-skipping DSv2 scan. Small
       // maxPartRows forces a genuinely multi-part, multi-task layout.
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, s"$scratch/wh")
-      spark.conf.set(graft.sources.mergetree.MergeTreeCtas.PartRowsConf, "40")
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, s"$scratch/wh")
+      spark.conf.set(graft.service.Settings.MergeTreePartRows.name, "40")
       val svc = new QueryService(spark)
       val mt = svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT c_nationkey, count() AS n,
@@ -160,7 +160,7 @@ object MultiJvmSmoke {
       // Hadoop Configuration to the forked executors via its Writable
       // serialization — the one piece of TreeFs that only a multi-JVM
       // run can prove
-      spark.conf.set(graft.sources.mergetree.MergeTree.FsConf, "hadoop")
+      spark.conf.set(graft.service.Settings.MergeTreeFs.name, "hadoop")
       val mtH =
         try svc.executeToDf(QueryService.QueryRequest(
           query = """SELECT c_nationkey, count() AS n,
@@ -171,7 +171,7 @@ object MultiJvmSmoke {
             s"""CREATE TABLE mj_hfs ENGINE = MergeTree ORDER BY (c_custkey) AS
                |SELECT c_custkey, c_nationkey, c_acctbal AS bal
                |FROM parquet.`$dir/customer.parquet`""".stripMargin)))._1
-        finally spark.conf.unset(graft.sources.mergetree.MergeTree.FsConf)
+        finally spark.conf.unset(graft.service.Settings.MergeTreeFs.name)
       ok &= check("hadoopfs_ctas", fmt(mtH), fmt(expMt))
 
       // (e) the DOORS + the allocator against a REAL cluster manager

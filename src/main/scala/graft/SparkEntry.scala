@@ -883,7 +883,7 @@ object SparkEntry {
     "q179_ctas_mergetree" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT c_nationkey, count() AS n,
@@ -908,7 +908,7 @@ object SparkEntry {
     "q180_mt_mutations" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT st, count() AS n,
@@ -930,7 +930,7 @@ object SparkEntry {
     "q181_mt_insert_append" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT c_nationkey, count() AS n,
@@ -955,7 +955,7 @@ object SparkEntry {
     "q182_mt_truncate_refill" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT c_nationkey, count() AS n,
@@ -1017,7 +1017,7 @@ object SparkEntry {
     "q184_mt_partitioned_ctas" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT st, count() AS n,
@@ -1041,7 +1041,7 @@ object SparkEntry {
     "q185_mt_drop_partition" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT toYear(d) AS y, count() AS n,
@@ -1065,7 +1065,7 @@ object SparkEntry {
     "q186_replacing_final" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT nk, count() AS n,
@@ -1088,7 +1088,7 @@ object SparkEntry {
     "q187_replacing_optimize" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT nk, count() AS n,
@@ -1114,7 +1114,7 @@ object SparkEntry {
     "q189_mt_attach_partition" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT toYear(d) AS y, count() AS n,
@@ -1143,7 +1143,7 @@ object SparkEntry {
     "q200_rollup_pipeline" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT y, st, CAST(round(total * 100) AS BIGINT) AS total_c,
@@ -1225,7 +1225,7 @@ object SparkEntry {
     "q196_materialized_view" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT st, CAST(round(total * 100) AS BIGINT) AS total_c,
@@ -1255,7 +1255,7 @@ object SparkEntry {
     "q195_create_then_load" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT st, count() AS n,
@@ -1279,7 +1279,7 @@ object SparkEntry {
     "q194_schema_evolution" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT st, count() AS n,
@@ -1307,7 +1307,7 @@ object SparkEntry {
     "q193_aggregating_tree" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT prio, CAST(round(sumMerge(s)) AS BIGINT) AS tot,
@@ -1337,7 +1337,7 @@ object SparkEntry {
     "q192_ttl_retention" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT st, count() AS n,
@@ -1363,7 +1363,7 @@ object SparkEntry {
     "q191_vcollapsing_final" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT nk, count() AS n,
@@ -1393,7 +1393,7 @@ object SparkEntry {
     "q188_summing_final" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT ck, qty AS q,
@@ -1418,7 +1418,7 @@ object SparkEntry {
     "q190_summing_optimize" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT ck, qty AS q,
@@ -2734,7 +2734,7 @@ object SparkEntry {
     "q201_replicated_ddl" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = """SELECT nk, count() AS n FROM repl_prod FINAL
@@ -2857,7 +2857,7 @@ object SparkEntry {
     "q218_inline_insert" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = "SELECT id, s, v FROM inline_ins ORDER BY id",
@@ -2877,7 +2877,7 @@ object SparkEntry {
     "q219_default_columns" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
         query = "SELECT id, s, v FROM def_cols ORDER BY id",
@@ -3032,7 +3032,7 @@ object SparkEntry {
     "q233_mt_decimal_ctas" -> ((spark, dir) => {
       prep(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new graft.service.QueryService(spark)
       svc.executeToDf(graft.service.QueryService.QueryRequest(
         // aggregate OUTPUTS are engine-rendered strings so the compare
@@ -3060,8 +3060,8 @@ object SparkEntry {
     "q234_remote_secure" -> ((spark, dir) => {
       prep(spark, dir)
       val (port, keystore, password) = secureDoorPort(spark, dir)
-      spark.conf.set(graft.service.Tls.TruststoreConf, keystore)
-      spark.conf.set(graft.service.Tls.TruststorePasswordConf, password)
+      spark.conf.set(graft.service.Settings.TlsTruststore.name, keystore)
+      spark.conf.set(graft.service.Settings.TlsTruststorePassword.name, password)
       ChSql.sql(spark,
         s"""SELECT n_nationkey, n_name, n_regionkey
            |FROM remoteSecure('127.0.0.1:$port', default.nation_rm)
@@ -3076,7 +3076,7 @@ object SparkEntry {
       prep(spark, dir)
       val port = remoteDoorPort(spark, dir)
       val wh = s"${derivedDir(spark, dir)}/wh"
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       val svc = new graft.service.QueryService(spark)
       svc.executeToDf(graft.service.QueryService.QueryRequest(
         query = """SELECT rk, count() AS cnt, sum(nk) AS s

@@ -95,17 +95,13 @@ object Catalog {
   def isAttach(sql: String): Boolean =
     sql.trim.toUpperCase.startsWith("ATTACH TABLE")
 
-  /** Conf key: set `true` to let an ATTACH with an unreadable endpoint
-    * register as a schema-only (empty) view instead of failing. */
-  val AllowEmptyConf = "spark.graft.attach.allowEmpty"
-
   /** Parse + register an ATTACH TABLE statement (already macro-substituted
     * and ON-CLUSTER-stripped by the dialect layer). When the endpoint
     * (or an explicit local path) holds parquet, the view reads it. An
     * endpoint that CANNOT be read (http MergeTree part layouts, missing
     * paths) FAILS LOUDLY — a silently-empty view would make every
     * downstream query "succeed" with 0 rows (judge r3 #3 / r4 #3);
-    * [[AllowEmptyConf]] is the explicit escape hatch for schema-only
+    * `spark.graft.attach.allowEmpty` is the explicit escape hatch for schema-only
     * registration. An ATTACH with no endpoint clause at all is plain
     * DDL and registers schema-only as before. */
   def attach(spark: SparkSession, sql: String): AttachedTable = sql match {
@@ -142,7 +138,7 @@ object Catalog {
         case Some((path, _)) if canRead(path) => Kind.Parquet
         case Some((path, _)) if isHttpParquet(path) => Kind.HttpParquet
         case Some((path, _))
-            if !spark.conf.get(AllowEmptyConf, "false").toBoolean =>
+            if !graft.service.Settings.AttachAllowEmpty(spark) =>
           throw new IllegalArgumentException(
             s"ATTACH TABLE $name: endpoint '$path' is not readable. " +
               "Supported endpoints: local/parquet paths, http(s) .parquet " +
@@ -150,7 +146,8 @@ object Catalog {
               "an http(s) root with a `.index` listing (flat paths, or the " +
               "static-files-disk-uploader's per-directory format), or a " +
               "web-disk endpoint whose `store/<uuid>` root the ATTACH's " +
-              s"UUID names. Set $AllowEmptyConf=true to register a " +
+              "UUID names. Set " +
+              s"${graft.service.Settings.AttachAllowEmpty.name}=true to register a " +
               "schema-only view instead.")
         case _ => Kind.SchemaOnly
       }
@@ -601,7 +598,7 @@ object Catalog {
           }
         }
       case Kind.SchemaOnly =>
-        // ATTACH with no endpoint clause, or AllowEmptyConf over an
+        // ATTACH with no endpoint clause, or attach.allowEmpty over an
         // unreadable one: the schema IS the table — replays as the
         // same empty view (skipping it broke request-2 queries while
         // EXISTS still answered 1; review finding)

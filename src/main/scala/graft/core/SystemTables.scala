@@ -130,50 +130,20 @@ object SystemTables {
     // front door on a system_parts mention (review finding)
   }
 
-  /** ≈ system.settings: the governance settings this engine ENFORCES
-    * (readonly, max_execution_time, max_result_rows, …) with the
-    * session's current value and CH's `changed` flag — the
-    * `SELECT * FROM system.settings WHERE changed` staple. Registered
-    * on demand (per referencing query) like `system_processes`: the
-    * values mutate with every SET. Descriptions state this engine's
-    * actual contract, not CH's prose. */
+  /** ≈ system.settings: every row of the one settings table
+    * ([[graft.service.Settings]]) with the session's value (its default
+    * when unset — clients numeric-parse the staple columns; a password
+    * shows empty) and CH's `changed` flag, the `SELECT * FROM
+    * system.settings WHERE changed` staple. Registered on demand (per
+    * referencing query) like `system_processes`: the values mutate with
+    * every SET. */
   def registerSettings(spark: SparkSession): Unit = {
     import spark.implicits._
-    import graft.service.Governance
-    val desc = Map(
-      Governance.MaxExecutionTime ->
-        "seconds before the query's job group is cancelled (0 = unlimited)",
-      Governance.MaxResultRows ->
-        "result row bound, enforced in-plan as limit+1",
-      Governance.ResultOverflowMode ->
-        "throw (default) or break when max_result_rows is exceeded",
-      Governance.MaxInsertBlockSize ->
-        "rows buffered per streaming-INSERT flush (one part per flush)",
-      Governance.MaxBytesToRead ->
-        "refuse queries whose leaf-scan estimate exceeds this",
-      Governance.MaxMemoryUsage ->
-        "accepted for compatibility; not enforced (Spark cannot meter per-query heap)",
-      Governance.Readonly ->
-        "0 = anything; 1 = reads only, no setting changes; 2 = reads + non-protected setting changes",
-      Governance.MaxConcurrentQueries ->
-        "server-wide cap on simultaneously registered queries")
-    // the ENFORCED defaults — CH renders a real value for every
-    // setting, and clients numeric-parse the staple columns (review
-    // r15: six keys rendered '')
-    val defaults = Map(
-      Governance.MaxInsertBlockSize -> Governance.DefaultInsertBlockSize.toString,
-      Governance.ResultOverflowMode -> "throw",
-      Governance.MaxExecutionTime -> "0",
-      Governance.MaxResultRows -> "0",
-      Governance.MaxBytesToRead -> "0",
-      Governance.MaxMemoryUsage -> "0",
-      Governance.Readonly -> "0",
-      Governance.MaxConcurrentQueries -> "0")
-    Governance.Keys.toSeq.sorted.map { k =>
-      val cur = spark.conf.getOption(k)
-      (k, cur.orElse(defaults.get(k)).getOrElse(""),
-        if (cur.isDefined) 1 else 0, desc.getOrElse(k, ""))
-    }.toDF("name", "value", "changed", "description")
+    graft.service.Settings.all.map { s =>
+      val cur = spark.conf.getOption(s.name)
+      (s.name, if (s.name.endsWith("Password")) "" else cur.getOrElse(s.default),
+        if (cur.isDefined) 1 else 0, s.description, s.default, s.kind.toString)
+    }.toDF("name", "value", "changed", "description", "default", "kind")
       .createOrReplaceTempView("system_settings")
   }
 

@@ -174,8 +174,7 @@ object AlterSchemaSql {
         // and keep their path.
         val view = spark.table(from)
         val nt = if (t.ownsStorage && t.endpoint.isDefined) {
-          val warehouse = spark.conf.get(ChWrites.WarehouseConf,
-            s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
+          val warehouse = graft.service.Settings.WarehouseDir(spark)
           val newEp = s"$warehouse/$to"
           graft.sources.mergetree.MergeTreeCtas.moveTree(
             t.endpoint.get, newEp, s"RENAME TABLE $from TO $to")

@@ -3,6 +3,7 @@ package graft.dialect
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graft.FunctionShim
 
+import graft.service.Settings
 import graft.sources.Sources
 
 /** The ClickHouse-SQL front door (SURVEY §4 "dialect front door"): a
@@ -16,9 +17,8 @@ import graft.sources.Sources
   *   - `ON CLUSTER 'x'` strip (C5 — DDL is driver-side in Spark, so
   *     cluster-wide visibility is automatic; `…_test.go:85`);
   *   - trailing `SETTINGS k=v, …` clause extraction (C2 —
-  *     `README.md:68`); `spark.*` keys are applied to the session, CH
-  *     tuning knobs are recorded and treated as accepted no-ops
-  *     (parallelism is partition-native in Spark);
+  *     `README.md:68`), applied through the one settings table
+  *     ([[graft.service.Settings]]), as `SET k = v, …` is;
   *   - zero-arg `count()` → `count(*)` (A1 — `…_test.go:53`);
   *   - table functions in FROM — `s3(…)`, `s3Cluster(…)`, `url(…)`,
   *     `urlCluster(…)`, `file(…)` — rewritten to temp views backed by
@@ -471,8 +471,16 @@ object ChSql {
       macros: Map[String, String] = defaultMacros)
       : (DataFrame, Map[String, String]) = {
     import spark.implicits._
-    val m = unquoteSet(statement(query, macros))
+    val m = statement(query, macros)
     def done(df: DataFrame) = (df, Map.empty[String, String])
+    // CH `SET k = v[, k2 = v2 …]`: the SETTINGS clause's list, applied
+    // on the session (a bare `SET` or `SET k` is Spark's listing)
+    SetList.findFirstMatchIn(m).foreach { sm =>
+      val kv = settingsList(sm.group(1)).getOrElse(throw
+        new IllegalArgumentException(s"Cannot parse SET list: ${sm.group(1)}"))
+      applySettings(spark, kv.toMap)
+      return done(kv.toDF("key", "value"))
+    }
     if (graft.core.Catalog.isAttach(m)) {
       val t = graft.core.Catalog.attach(spark, m)
       return done(Seq((t.name, "attached")).toDF("table", "status"))
@@ -529,16 +537,7 @@ object ChSql {
     (finish(spark, r), r.settings)
   }
 
-  private val QuotedSet =
-    """(?is)(\s*SET\s+[A-Za-z_][A-Za-z0-9_.]*\s*=\s*)('(?:[^'\\]|\\.)*')\s*;?\s*""".r
-
-  /** CH `SET k = 'v'`: the value is a literal, unquoted by the same
-    * rule as a `SETTINGS` clause's; Spark's `SET` would keep the quotes
-    * in the value. */
-  private def unquoteSet(stmt: String): String = stmt match {
-    case QuotedSet(head, v) => head + unquote(v)
-    case _ => stmt
-  }
+  private val SetList = """(?is)^\s*SET\s+(.*=.*?)[\s;]*$""".r
 
   /** [[run]]'s frame. */
   def sql(spark: SparkSession, query: String,
@@ -595,61 +594,59 @@ object ChSql {
   def extractSettings(sql: String): (String, Map[String, String]) = {
     val idx = SqlLex(sql).lastTopLevelKeyword("settings")
     if (idx < 0) return (sql, Map.empty)
-    val tail = sql.substring(idx + "settings".length)
-    val pairs = SqlLex(tail).splitTopLevel(',').map(_.trim).filter(_.nonEmpty)
-    val kv = pairs.flatMap { p =>
-      val eq = p.indexOf('=')
-      if (eq <= 0) None
-      else {
-        val k = p.substring(0, eq).trim
-        val v = unquote(p.substring(eq + 1).trim.stripSuffix(";").trim)
-        if (k.matches("[A-Za-z_][A-Za-z0-9_.]*")) Some(k -> v) else None
-      }
-    }
     // only strip when the entire tail parses as a settings list
-    if (kv.length == pairs.length && kv.nonEmpty)
-      (sql.substring(0, idx).trim, kv.toMap)
-    else (sql, Map.empty)
+    settingsList(sql.substring(idx + "settings".length))
+      .fold((sql, Map.empty[String, String]))(kv => (sql.substring(0, idx).trim, kv.toMap))
   }
 
-  /** The statement's trailing `SETTINGS` clause (FORMAT may precede or
-    * follow it); `stmt` is [[statement]] text. */
-  def statementSettings(stmt: String): Map[String, String] =
-    extractSettings(stripFormat(stmt))._2
-
-  /** The session conf key a setting lands on: `spark.*` keys as they
-    * are, governance keys ([[graft.service.Governance.Keys]], enforced
-    * by the doors) lower-cased; None for a CH tuning knob, an accepted
-    * no-op with no Spark equivalent. */
-  private def confKey(k: String): Option[String] =
-    if (k.startsWith("spark.")) Some(k)
-    else Some(k.toLowerCase).filter(graft.service.Governance.Keys)
-
-  /** Apply settings to the session: `spark.*` and governance keys are
-    * set, CH knobs are accepted no-ops (recorded in the envelope by
-    * QueryService). A setting already at its value is no change (CH
-    * skips its constraint check the same way). */
-  def applySettings(spark: SparkSession, settings: Map[String, String]): Unit = {
-    val changes = settings.filterNot { case (k, v) =>
-      confKey(k).exists(spark.conf.getOption(_).contains(v))
+  /** A `k = v, …` list, the `SETTINGS` clause's and `SET`'s: a name may
+    * be a quoted identifier, a value is unquoted by [[unquote]]. None
+    * unless every item is such a pair. */
+  private def settingsList(text: String): Option[Seq[(String, String)]] = {
+    val pairs = SqlLex(text).splitTopLevel(',').map(_.trim).filter(_.nonEmpty)
+    val kv = pairs.flatMap { p =>
+      val eq = p.indexOf('=')
+      val k = if (eq <= 0) "" else p.substring(0, eq).trim
+      Some(if (k.length > 2 && "`\"".contains(k.head) && k.last == k.head)
+          k.substring(1, k.length - 1) else k)
+        .filter(_.matches("[A-Za-z_][A-Za-z0-9_.]*"))
+        .map(_ -> unquote(p.substring(eq + 1).trim.stripSuffix(";").trim))
     }
+    Some(kv).filter(_.nonEmpty).filter(_.length == pairs.length)
+  }
+
+  // a CREATE/ATTACH TABLE … ENGINE … with no SELECT: its SETTINGS are
+  // the engine's (`disk = disk(…)`), not the query's
+  private val EngineDdl =
+    """(?is)^\s*(?:CREATE|ATTACH)\b(?:(?!\bSELECT\b).)*\bENGINE\b(?:(?!\bSELECT\b).)*$""".r
+
+  /** The statement's trailing `SETTINGS` clause (FORMAT may precede or
+    * follow it) — none for a table DDL's engine settings; `stmt` is
+    * [[statement]] text. */
+  def statementSettings(stmt: String): Map[String, String] =
+    if (EngineDdl.matches(stmt)) Map.empty
+    else extractSettings(stripFormat(stmt))._2
+
+  /** Apply settings to the session, each resolved by the one table
+    * ([[Settings.resolve]]): an undeclared name, a bad value or a
+    * deployment key refuses by name before anything applies. A setting
+    * already at its value is no change (CH skips its constraint check
+    * the same way). */
+  def applySettings(spark: SparkSession, settings: Map[String, String]): Unit = {
+    val changes = settings.toSeq.map { case (k, v) => Settings.resolve(k, v) }
+      .filterNot { case (k, v) => spark.conf.getOption(k).contains(v) }
     // readonly guards run UP FRONT, before anything applies, so a
     // refusal never leaves a half-applied settings block (review r15):
-    // level 1 refuses ALL settings changes (CH's contract — the SET
-    // spelling already did), level 2 protects `readonly` itself
-    if (changes.nonEmpty) {
-      val ro = spark.conf.getOption(graft.service.Governance.Readonly)
-        .flatMap(v => scala.util.Try(v.trim.toInt).toOption).getOrElse(0)
-      if (ro == 1) throw new IllegalArgumentException(
-        "Cannot modify settings in readonly mode (readonly = 1; " +
-          "readonly = 2 permits non-protected setting changes). READONLY")
-      if (ro >= 2 && changes.keys.exists(
-          _.equalsIgnoreCase(graft.service.Governance.Readonly)))
-        throw new IllegalArgumentException(
-          "Setting 'readonly' is protected and cannot be modified in " +
-            "readonly mode. READONLY")
-    }
-    changes.foreach { case (k, v) => confKey(k).foreach(spark.conf.set(_, v)) }
+    // level 1 refuses ALL settings changes (CH's contract), level 2
+    // protects `readonly` itself
+    val ro = if (changes.isEmpty) 0 else Settings.Readonly(spark)
+    if (ro == 1) throw Settings.refused(164, "READONLY",
+      "Cannot modify settings in readonly mode (readonly = 1; " +
+        "readonly = 2 permits non-protected setting changes)")
+    if (ro >= 2 && changes.exists(_._1 == Settings.Readonly.name))
+      throw Settings.refused(164, "READONLY", "Setting 'readonly' is " +
+        "protected and cannot be modified in readonly mode")
+    changes.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   /** Run `body` under per-query settings: each layer goes through
@@ -658,7 +655,7 @@ object ChSql {
     * put back to its value from before, however `body` ends. */
   def withSettings[A](spark: SparkSession, layers: Map[String, String]*)(
       body: => A): A = {
-    val saved = layers.flatMap(_.keys.flatMap(confKey)).distinct
+    val saved = layers.flatMap(_.keys.flatMap(Settings.key)).distinct
       .map(k => k -> spark.conf.getOption(k))
     try {
       layers.foreach(applySettings(spark, _))
@@ -754,15 +751,14 @@ object ChSql {
             case Some(v) => (s"${qIdent(v)} DESC" +: tie).mkString(", ")
             case None =>
               val optIn = org.apache.spark.sql.SparkSession.getActiveSession
-                .flatMap(_.conf.getOption(FinalTiebreakConf))
-                .exists(_.trim.equalsIgnoreCase("payload"))
+                .exists(Settings.FinalTiebreak(_) == "payload")
               if (optIn && tie.nonEmpty) tie.mkString(", ")
               else throw new IllegalArgumentException(
                 s"FROM $table FINAL: ReplacingMergeTree without a " +
                   "version column keeps an order-of-merges-dependent " +
                   "row per key — declare ReplacingMergeTree(<version " +
                   "column>), or opt into the deterministic payload-max " +
-                  s"tiebreak with SET $FinalTiebreakConf = 'payload'")
+                  s"tiebreak with SET ${Settings.FinalTiebreak.name} = 'payload'")
           }
           // ReplacingMergeTree(ver, is_deleted): a surviving version
           // flagged deleted disappears from the FINAL read (CH's
@@ -855,10 +851,6 @@ object ChSql {
         }
       }
     }
-
-  /** Session opt-in for deterministic versionless-Replacing FINAL:
-    * `payload` uses the payload-max tiebreak instead of refusing. */
-  val FinalTiebreakConf = "spark.graft.finalTiebreak"
 
   private val SampleRe =
     """(?i)\bFROM\s+([A-Za-z_]\w*)\s+SAMPLE\s+(\d+(?:\.\d+)?)(?:\s*/\s*(\d+))?""".r

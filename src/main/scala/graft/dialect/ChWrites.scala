@@ -127,8 +127,6 @@ object ChWrites {
   private val OrderByRe = """(?is)\bORDER\s+BY\s*\(([^)]*)\)""".r
   private val OrderByBareRe = """(?is)\bORDER\s+BY\s+([\w`."]+)""".r
 
-  val WarehouseConf = "spark.graft.warehouseDir"
-
   private def unquoteArg(s: String): String =
     if (s.length >= 2 && s.startsWith("'") && s.endsWith("'"))
       s.substring(1, s.length - 1).replace("\\'", "'")
@@ -226,8 +224,7 @@ object ChWrites {
         val sortKey = parseOrderBy(middle)
         val partitionBy = parsePartitionBy(middle)
         val ttl = parseTtl(middle)
-        val warehouse = spark.conf.get(WarehouseConf,
-          s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
+        val warehouse = graft.service.Settings.WarehouseDir(spark)
         val path = s"$warehouse/$name"
         graft.core.Catalog.requireEndpointFree(path, name, "CREATE TABLE")
         val df = selectDfGoverned(spark, body, macros)
@@ -405,8 +402,7 @@ object ChWrites {
         val schema = graft.types.ChSchemaParser.parse(colsDdl)
         sortKey.foreach(k => require(schema.fieldNames.contains(k),
           s"CREATE TABLE $name: ORDER BY column '$k' is not declared"))
-        val warehouse = spark.conf.get(WarehouseConf,
-          s"${System.getProperty("java.io.tmpdir")}/graft_warehouse")
+        val warehouse = graft.service.Settings.WarehouseDir(spark)
         val path = s"$warehouse/$name"
         graft.core.Catalog.requireEndpointFree(path, name, "CREATE TABLE")
         val empty = spark.createDataFrame(

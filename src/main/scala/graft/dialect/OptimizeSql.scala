@@ -37,8 +37,6 @@ import graft.sources.Sinks
   * parts to merge). */
 object OptimizeSql {
 
-  val TargetBytesConf = "spark.graft.optimize.targetFileBytes"
-
   private val StmtRe =
     """(?is)^\s*OPTIMIZE\s+TABLE\s+(?:'([^']+)'|([\w.`"]+))\s*(FINAL)?\s*$""".r
   private val PartitionStmtRe =
@@ -247,13 +245,12 @@ object OptimizeSql {
         import org.apache.spark.sql.expressions.Window
         // versionless Replacing: refuse, unless the session opted
         // into the deterministic payload-max tiebreak (the same
-        // knob the FINAL read honors — [[ChSql.FinalTiebreakConf]])
+        // knob the FINAL read honors — `spark.graft.finalTiebreak`)
         val tie = spec.tieColumns.map(c => colOf(c).desc)
         val ord = spec.ver match {
           case Some(v) => colOf(v).desc +: tie
           case None =>
-            val optIn = spark.conf.getOption(ChSql.FinalTiebreakConf)
-              .exists(_.trim.equalsIgnoreCase("payload"))
+            val optIn = graft.service.Settings.FinalTiebreak(spark) == "payload"
             if (optIn && tie.nonEmpty) tie
             else throw new IllegalArgumentException(
               s"OPTIMIZE TABLE ${name.get} FINAL: ReplacingMergeTree " +
@@ -261,7 +258,7 @@ object OptimizeSql {
                 "order-of-merges-dependent row per key — declare " +
                 "ReplacingMergeTree(<version column>), or opt into " +
                 "the deterministic payload-max tiebreak with SET " +
-                s"${ChSql.FinalTiebreakConf} = 'payload'")
+                s"${graft.service.Settings.FinalTiebreak.name} = 'payload'")
         }
         val partCols =
           partitionBy.map(expr).toSeq ++ spec.key.map(colOf)
@@ -369,8 +366,7 @@ object OptimizeSql {
     * and the mutations both aim for (a mutation must not fragment the
     * layout a compaction just built — review finding). */
   private[dialect] def targetFiles(spark: SparkSession, bytes: Long): Int = {
-    val target = spark.conf.getOption(TargetBytesConf)
-      .map(_.toLong).getOrElse(512L * 1024 * 1024)
+    val target = graft.service.Settings.OptimizeTargetFileBytes(spark)
     math.max(1, math.ceil(bytes.toDouble / target).toInt)
   }
 

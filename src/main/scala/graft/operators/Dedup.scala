@@ -455,15 +455,11 @@ object Dedup {
     * without converging it THROWS rather than returning silently-wrong
     * labels. Lineage is truncated per round so the plan does not grow
     * with iterations: RELIABLE `checkpoint` when a checkpoint dir is
-    * configured ([[CheckpointDirConf]] or an sc-level
+    * configured (`spark.graft.checkpointDir` or an sc-level
     * `setCheckpointDir`) — the cluster-safe default, surviving executor
     * loss mid-iteration — falling back to `localCheckpoint` (executor-
     * memory blocks, fine for local mode) only when no dir exists. The
     * per-round driver `count` is over label CHANGES, not data. */
-
-  /** Reliable-checkpoint directory for iterative operators; should be
-    * fault-tolerant storage (HDFS/S3) on a real cluster. */
-  val CheckpointDirConf = "spark.graft.checkpointDir"
 
   /** Truncate `df`'s lineage: reliable checkpoint when a dir is
     * available, local blocks otherwise. `setCheckpointDir` is called
@@ -476,7 +472,7 @@ object Dedup {
   private def truncateLineage(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val sc = spark.sparkContext
-    val confDir = spark.conf.get(CheckpointDirConf, "")
+    val confDir = graft.service.Settings.CheckpointDir(spark)
     if (confDir.nonEmpty && sc.getCheckpointDir.isEmpty)
       sc.setCheckpointDir(confDir)
     if (sc.getCheckpointDir.isDefined) df.checkpoint()

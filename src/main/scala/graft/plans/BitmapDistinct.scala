@@ -54,13 +54,6 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   */
 object BitmapDistinct {
 
-  val EnabledKey = "spark.graft.bitmapDistinct"
-
-  /** Max (max-min) column span for the dense-bitset representation;
-    * 2^24 ⇒ 2 MB of words per partition per column, worst case. */
-  val DenseMaxRangeKey = "spark.graft.bitmapDistinct.denseMaxRange"
-  val DenseMaxRangeDefault: Long = 1L << 24
-
   /** Engagement counter — PlanSpec asserts the rewrite fires on the
     * q3 bench shape. */
   val engagements = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -431,7 +424,7 @@ case class BitmapDistinctRewrite(spark: SparkSession) extends DriverMergeRule {
 
   import BitmapDistinct._
 
-  override protected def enabledKey: String = EnabledKey
+  override protected def switch = graft.service.Settings.BitmapDistinct
 
   override protected def tryRewrite(agg: Aggregate): Option[LogicalPlan] = {
     if (agg.groupingExpressions.nonEmpty) return None
@@ -470,9 +463,7 @@ case class BitmapDistinctRewrite(spark: SparkSession) extends DriverMergeRule {
     // small span → flat bitset instead of Roaring (parquet only; the
     // MergeTree scan keeps Roaring)
     val dense: Array[DenseCol] = {
-      val maxRange = spark.conf.getOption(DenseMaxRangeKey)
-        .flatMap(v => scala.util.Try(v.toLong).toOption)
-        .getOrElse(DenseMaxRangeDefault)
+      val maxRange = graft.service.Settings.BitmapDistinctDenseMaxRange(spark)
       val ranges: Map[String, Option[(Long, Long)]] = src match {
         case ScanRelations.ParquetRel(lr) =>
           try FooterAggregates.columnRanges(spark,

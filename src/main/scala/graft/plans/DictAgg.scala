@@ -81,18 +81,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object DictAgg {
 
-  val EnabledKey = "spark.graft.dictAgg"
-  /** Byte budget for the driver gather of per-slot HLL registers
-    * (r19): caps slots so partitions × cap × register-bytes stays
-    * bounded even at uniqCombined's precision-17 register size. */
-  val HllGatherBytesKey = "spark.graft.dictAgg.hllGatherBytes"
-  private[plans] def HllGatherBytes(spark: SparkSession): Long =
-    spark.conf.getOption(HllGatherBytesKey)
-      .flatMap(v => scala.util.Try(v.toLong).toOption)
-      .getOrElse(256L << 20)
-
   /** Per-partition group cap (further shrunk so partitions × cap ≤
-    * [[DriverMerge.MaxTotalRowsKey]]). */
+    * `spark.graft.driverMerge.maxTotalRows`). */
   val DriverMergeGroupCap = 1 << 16
 
   // op codes
@@ -1065,7 +1055,7 @@ case class DictAggRewrite(spark: SparkSession) extends DriverMergeRule
 
   import DictAgg._
 
-  override protected def enabledKey: String = EnabledKey
+  override protected def switch = graft.service.Settings.DictAgg
 
   private def typeTag(dt: DataType): Option[Int] = dt match {
     case IntegerType => Some(TInt)
@@ -1417,7 +1407,7 @@ case class DictAggRewrite(spark: SparkSession) extends DriverMergeRule
     // the native plan instead of flooding the driver.
     val parts = math.max(1, batchRdd.getNumPartitions)
     val dmCapRows = math.min(DriverMergeGroupCap.toLong,
-      DriverMerge.maxTotalRows(spark) / parts).toInt
+      graft.service.Settings.DriverMergeMaxTotalRows(spark) / parts).toInt
     // r19: OpHll registers are fixed-size but can be BIG (precision 17
     // — the uniqCombined class — is ~105 KB/slot vs ~416 B at the
     // default rsd), so the gather is bounded in BYTES too: partitions
@@ -1430,7 +1420,7 @@ case class DictAggRewrite(spark: SparkSession) extends DriverMergeRule
     val dmCap =
       if (hllBytesPerSlot == 0L) dmCapRows
       else math.min(dmCapRows.toLong, math.max(16L,
-        HllGatherBytes(spark) / (parts * hllBytesPerSlot))).toInt
+        graft.service.Settings.DictAggHllGatherBytes(spark) / (parts * hllBytesPerSlot))).toInt
     // a cap this small would overflow on almost any key: the native
     // plan runs instead
     if (dmCap < 16) return None

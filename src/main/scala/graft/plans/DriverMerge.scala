@@ -56,11 +56,6 @@ trait DriverMerger extends Serializable {
 }
 
 object DriverMerge {
-  /** Upper bound on rows a driver merge may collect; rewrites divide
-    * this by the scan's partition count to size per-partition caps. */
-  val MaxTotalRowsKey = "spark.graft.driverMerge.maxTotalRows"
-  val MaxTotalRowsDefault: Long = 4L << 20
-
   /** Message marker a partial task throws when it exceeds its group
     * cap under a driver-merge plan. Matched by SUBSTRING across the
     * driver-side failure chain: a task failure crosses executor JVMs
@@ -98,11 +93,6 @@ object DriverMerge {
   /** Fallbacks that ran to CLEAN completion — the kill pin asserts a
     * deadline that fired mid-fallback kept this from moving. */
   val fallbacksCompleted = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  def maxTotalRows(spark: SparkSession): Long =
-    spark.conf.getOption(MaxTotalRowsKey)
-      .flatMap(v => scala.util.Try(v.toLong).toOption)
-      .getOrElse(MaxTotalRowsDefault)
 
   /** One column of a merger's final rows: group key part `idx`
     * (`isKey`) or the kernel's finalized value `idx`. */
@@ -177,19 +167,18 @@ object DriverMerge {
 }
 
 /** The one guard every columnar kernel rule runs under: the kernel's
-  * own kill switch (`enabledKey=false` keeps the native plan),
+  * own kill switch (`switch = false` keeps the native plan),
   * [[DriverMerge.suppress]] (an overflow fallback is being planned),
   * and an optimization never failing the query — a rewrite that throws
   * logs and keeps the aggregate. A kernel supplies only its match. */
 private[plans] trait DriverMergeRule extends Rule[LogicalPlan] {
   def spark: SparkSession
-  protected def enabledKey: String
+  protected def switch: graft.service.Settings.Setting[Boolean]
   /** The kernel's rewrite of one aggregate, or None to keep it. */
   protected def tryRewrite(agg: Aggregate): Option[LogicalPlan]
 
   final override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (spark.conf.getOption(enabledKey).exists(_.trim.equalsIgnoreCase("false")) ||
-        DriverMerge.suppress.get()) return plan
+    if (!switch(spark) || DriverMerge.suppress.get()) return plan
     plan.transformDown {
       case agg: Aggregate =>
         try tryRewrite(agg).getOrElse(agg)

@@ -54,7 +54,7 @@ case class FooterAggregates(spark: SparkSession) extends Rule[LogicalPlan] {
   import FooterAggregates._
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!conf.getConfString(EnabledKey, "true").toBoolean) return plan
+    if (!graft.service.Settings.FooterAggregates(spark)) return plan
     plan.transformDown {
       case agg @ Aggregate(Nil, aggExprs, child, _) if plainParquet(child).isDefined =>
         val rel = plainParquet(child).get
@@ -303,8 +303,6 @@ object FooterAggregates {
     }.toMap
     FileStats(rows, cols)
   }
-
-  val EnabledKey = "spark.graft.footerAggregates"
 
   /** Above this many files the footer sweep becomes a Spark job. */
   val DriverReadMaxFiles = 64

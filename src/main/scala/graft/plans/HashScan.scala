@@ -45,7 +45,7 @@ case class HashScanRewrite(spark: SparkSession) extends DriverMergeRule {
 
   import HashScan._
 
-  override protected def enabledKey: String = EnabledKey
+  override protected def switch = graft.service.Settings.HashScan
 
   override protected def tryRewrite(agg: Aggregate): Option[LogicalPlan] = {
     if (agg.groupingExpressions.nonEmpty) return None
@@ -133,8 +133,6 @@ case class HashScanRewrite(spark: SparkSession) extends DriverMergeRule {
 }
 
 object HashScan {
-
-  val EnabledKey = "spark.graft.hashScan"
 
   /** Engagement counter — PlanSpec pins the bench q4 shape rides it. */
   val engagements = new java.util.concurrent.atomic.AtomicLong(0L)

@@ -24,8 +24,8 @@ import org.apache.spark.sql.{DataFrame, Row}
   *     fetching limit+1 — the limit reaches the plan, so `break`
   *     never materializes an unbounded result just to cut it.
   *
-  * The settings are session conf keys. `SET k = v` (verbatim Spark SQL
-  * SET) keeps them on the session; per-query settings — HTTP URL
+  * The settings are rows of [[Settings]], kept in the session conf.
+  * `SET k = v` keeps them on the session; per-query settings — HTTP URL
   * params, the native protocol's settings block and the statement's
   * trailing `SETTINGS` clause — are applied by the service's one
   * lifecycle ([[QueryService.governed]]) BEFORE [[runGoverned]] reads
@@ -40,44 +40,6 @@ import org.apache.spark.sql.{DataFrame, Row}
   */
 object Governance {
 
-  val MaxExecutionTime = "max_execution_time"
-  val MaxResultRows = "max_result_rows"
-  val ResultOverflowMode = "result_overflow_mode"
-  val MaxInsertBlockSize = "max_insert_block_size"
-  val MaxBytesToRead = "max_bytes_to_read"
-  /** ACCEPTED but NOT enforced (r15, ADVICE): CH's `max_memory_usage`
-    * caps per-query RAM, which is routinely far smaller than the bytes
-    * a query legitimately scans (a 10 GB RAM cap over a 1 TB scan is a
-    * normal CH profile). r14 treated it as an alias for the bytes-READ
-    * gate, which refused mainstream workloads CH would run fine — a
-    * behavioral divergence. Spark cannot meter per-query heap, so the
-    * honest spelling is: accept the key (SET succeeds, sessions carry
-    * it) and enforce only [[MaxBytesToRead]], whose semantics we CAN
-    * honor on the scan estimate. */
-  val MaxMemoryUsage = "max_memory_usage"
-
-  /** CH's default `max_insert_block_size` — the row count at which a
-    * streaming native INSERT flushes its buffered client blocks into a
-    * part (bounding driver memory to one flush, not the whole load). */
-  val DefaultInsertBlockSize = 1048449L
-
-  /** CH's `readonly` setting (r15, the governance tail): 0 = anything,
-    * 1 = read-only statements and no setting changes, 2 = read-only
-    * statements but non-protected setting changes allowed (`readonly`
-    * itself stays protected). The HTTP door's GET route already forced
-    * readonly behavior per CH's HTTP contract; this is the session
-    * spelling. */
-  val Readonly = "readonly"
-  /** CH's server-wide concurrent-query cap, enforced against the
-    * global [[Processes]] registry at query registration. */
-  val MaxConcurrentQueries = "max_concurrent_queries"
-
-  /** The conf keys [[graft.dialect.ChSql.applySettings]] must forward
-    * into the session instead of dropping as no-op CH knobs. */
-  val Keys: Set[String] = Set(MaxExecutionTime, MaxResultRows,
-    ResultOverflowMode, MaxInsertBlockSize, MaxBytesToRead, MaxMemoryUsage,
-    Readonly, MaxConcurrentQueries)
-
   // statement classification for readonly — the same shape the HTTP
   // door's GET route enforces (state-changing verb at the head, AFTER
   // stripping comments/parens/semicolons so `/*x*/DROP …` classifies)
@@ -91,43 +53,25 @@ object Governance {
   private val WriteStmtRe =
     ("(?is)^(INSERT|CREATE|ALTER|TRUNCATE|DELETE|OPTIMIZE|DROP|ATTACH|" +
       "DETACH|RENAME|EXCHANGE)\\b.*").r
-  private val SetStmtRe = """(?is)^SET\b.*""".r
-  private val SetReadonlyRe = """(?is)^SET\s+[`"]?readonly[`"]?\s*=.*""".r
 
-  /** The statement as dispatch sees it — every comment turned into a
-    * space ([[graft.dialect.ChSql.stripComments]]), so a comment inside
-    * `SET /* c */ readonly = 0` cannot hide the setting — from its first
-    * keyword on: leading whitespace, `(` and `;` skipped. */
-  def stripStatementPrefix(s: String): String =
-    graft.dialect.ChSql.stripComments(s)
-      .dropWhile(c => c.isWhitespace || c == '(' || c == ';')
-
+  /** Whether `sql` changes state: its first keyword — every comment
+    * turned into a space ([[graft.dialect.ChSql.stripComments]]), so a
+    * comment cannot hide the verb; leading whitespace, `(` and `;`
+    * skipped — is a write verb. */
   def isStateChanging(sql: String): Boolean =
-    WriteStmtRe.matches(stripStatementPrefix(sql))
+    WriteStmtRe.matches(graft.dialect.ChSql.stripComments(sql)
+      .dropWhile(c => c.isWhitespace || c == '(' || c == ';'))
 
-  /** Refuse state-changing statements (and, at level 1, setting
-    * changes) when the session is `readonly` — CH's READONLY error
-    * shape. Scans the WHOLE request (init queries + main) before
-    * anything executes. */
+  /** Refuse state-changing statements when the session is `readonly` —
+    * CH's READONLY error. Scans the WHOLE request (init queries + main)
+    * before anything executes; setting changes are guarded where they
+    * apply, [[graft.dialect.ChSql.applySettings]]. */
   def checkReadonly(spark: org.apache.spark.sql.SparkSession,
       statements: Seq[String]): Unit = {
-    val ro = spark.conf.getOption(Readonly).map(_.trim).filter(_.nonEmpty)
-      .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(0)
-    if (ro <= 0) return
-    statements.foreach { q =>
-      val head = stripStatementPrefix(q)
-      if (WriteStmtRe.matches(head))
-        throw new IllegalArgumentException(
-          s"Cannot execute query in readonly mode ($Readonly = $ro). READONLY")
-      if (SetStmtRe.matches(head)) {
-        if (ro == 1) throw new IllegalArgumentException(
-          s"Cannot modify settings in readonly mode ($Readonly = 1; " +
-            s"$Readonly = 2 permits non-protected setting changes). READONLY")
-        if (SetReadonlyRe.matches(head)) throw new IllegalArgumentException(
-          s"Setting '$Readonly' is protected and cannot be modified in " +
-            "readonly mode. READONLY")
-      }
-    }
+    val ro = Settings.Readonly(spark)
+    if (ro > 0 && statements.exists(isStateChanging))
+      throw Settings.refused(164, "READONLY",
+        s"Cannot execute query in readonly mode (readonly = $ro)")
   }
 
   /** The session's [[MaxConcurrentQueries]] cap, for
@@ -136,9 +80,7 @@ object Governance {
     * the cap under concurrency). */
   def concurrencyLimit(
       spark: org.apache.spark.sql.SparkSession): Option[Long] =
-    spark.conf.getOption(MaxConcurrentQueries)
-      .map(_.trim).filter(_.nonEmpty)
-      .flatMap(v => scala.util.Try(v.toLong).toOption).filter(_ > 0)
+    Some(Settings.MaxConcurrentQueries(spark)).filter(_ > 0)
 
   /** Refuse a query whose SCAN estimate exceeds `max_bytes_to_read`
     * BEFORE running it — the sum of the optimized plan's leaf-relation
@@ -159,8 +101,7 @@ object Governance {
     * small driver-side constructs, not scans — the budget meters the
     * file-backed read. */
   def checkScanBudget(df: DataFrame): Unit = {
-    val limit = conf(df, MaxBytesToRead).map(_.toLong).filter(_ > 0)
-    limit.foreach { max =>
+    Some(Settings.MaxBytesToRead(df.sparkSession)).filter(_ > 0).foreach { max =>
       val defaultSize = BigInt(
         df.sparkSession.sessionState.conf.defaultSizeInBytes)
       val est = df.queryExecution.optimizedPlan.collectLeaves()
@@ -168,12 +109,9 @@ object Governance {
       if (est > max) throw new IllegalArgumentException(
         s"Limit for bytes to read exceeded: the scan would read ~$est " +
           s"bytes (leaf-relation estimate), maximum $max. TOO_MANY_BYTES " +
-          s"($MaxBytesToRead)")
+          s"(${Settings.MaxBytesToRead.name})")
     }
   }
-
-  private def conf(df: DataFrame, key: String): Option[String] =
-    df.sparkSession.conf.getOption(key).map(_.trim).filter(_.nonEmpty)
 
   /** Run `body` — the WHOLE request: plan, DDL/INSERT side effects,
     * collect — on a worker thread under `jobGroup`, cancelled at the
@@ -186,8 +124,7 @@ object Governance {
     * on this thread under the group (one kill handle, no thread). */
   def runGoverned[A](spark: org.apache.spark.sql.SparkSession,
       jobGroup: String)(body: => A): A = {
-    val timeoutSec = spark.conf.getOption(MaxExecutionTime)
-      .map(_.trim).filter(_.nonEmpty).map(_.toDouble).getOrElse(0d)
+    val timeoutSec = Settings.MaxExecutionTime(spark)
     val sc = spark.sparkContext
     if (timeoutSec <= 0) {
       sc.setJobGroup(jobGroup, "governed request", interruptOnCancel = true)
@@ -216,7 +153,7 @@ object Governance {
         worker.join(10000)
         throw new TimeoutException(
           s"Timeout exceeded: maximum ${ms / 1000.0} seconds " +
-            s"($MaxExecutionTime). TIMEOUT_EXCEEDED")
+            "(max_execution_time). TIMEOUT_EXCEEDED")
       }
       result match {
         case Right(r) => r
@@ -224,7 +161,7 @@ object Governance {
             if e.getMessage != null && e.getMessage.contains("cancelled") =>
           throw new TimeoutException(
             s"Timeout exceeded: maximum ${ms / 1000.0} seconds " +
-              s"($MaxExecutionTime). TIMEOUT_EXCEEDED")
+              "(max_execution_time). TIMEOUT_EXCEEDED")
         case Left(e) => throw e
         case null => throw new IllegalStateException(
           "governed worker finished without a result")
@@ -258,14 +195,7 @@ object Governance {
     * cancelled and have ended before this returns. */
   def iterateBounded[A](df: DataFrame)(consume: Iterator[Row] => A): A = {
     checkScanBudget(df)
-    val maxRows = conf(df, MaxResultRows).map(_.toLong).getOrElse(0L)
-    val overflow = conf(df, ResultOverflowMode).getOrElse("throw").toLowerCase
-    require(overflow == "throw" || overflow == "break",
-      s"$ResultOverflowMode must be 'throw' or 'break', got '$overflow'")
-    val limited =
-      if (maxRows > 0 && maxRows < Int.MaxValue - 1)
-        df.limit(maxRows.toInt + 1)
-      else df
+    val (limited, maxRows, break) = resultBound(df)
     val it = PartitionFetch(limited)
     try consume(
       if (maxRows <= 0) it
@@ -273,11 +203,8 @@ object Governance {
         private var taken = 0L
         override def hasNext: Boolean =
           if (taken < maxRows) it.hasNext
-          else if (overflow == "break") false
-          else if (it.hasNext) throw new IllegalArgumentException(
-            s"Limit for result rows exceeded: read ${taken + 1}+ rows, " +
-              s"maximum $maxRows. TOO_MANY_ROWS (set $ResultOverflowMode = " +
-              "'break' to truncate instead)")
+          else if (break) false
+          else if (it.hasNext) throw tooManyRows(maxRows)
           else false
         override def next(): Row = {
           if (!hasNext) throw new NoSuchElementException("drained")
@@ -287,4 +214,17 @@ object Governance {
       })
     finally it.close()
   }
+
+  /** `df` bounded by the session's `max_result_rows` as limit+1, so an
+    * overflow shows, with the bound (0 = none) and whether
+    * `result_overflow_mode` is `break`. */
+  private[service] def resultBound(df: DataFrame): (DataFrame, Long, Boolean) = {
+    val max = Settings.MaxResultRows(df.sparkSession)
+    (if (max > 0 && max < Int.MaxValue - 1) df.limit(max.toInt + 1) else df,
+      max, Settings.ResultOverflowMode(df.sparkSession) == "break")
+  }
+
+  private[service] def tooManyRows(max: Long) = new IllegalArgumentException(
+    s"Limit for result rows exceeded: read ${max + 1}+ rows, maximum $max. " +
+      "TOO_MANY_ROWS (set result_overflow_mode = 'break' to truncate instead)")
 }

@@ -487,6 +487,9 @@ class QueryServer(
               if !committed =>
             errorsTotal.increment()
             log.info(s"request_id=$reqId status=400")
+            // a settings refusal names its CH code, as CH's header does
+            Settings.code(e).foreach(c =>
+              ex.getResponseHeaders.set("X-ClickHouse-Exception-Code", c.toString))
             val (ct, b) = err(e.getMessage)
             (400, ct, b)
           case e: java.net.ProtocolException if !committed =>

@@ -103,14 +103,9 @@ object QueryService {
         .createTempDirectory("graft_http_parquet").toFile
       try {
         Governance.checkScanBudget(df)
-        val maxRows = spark.conf.getOption(Governance.MaxResultRows)
-          .map(_.trim).filter(_.nonEmpty).map(_.toLong).getOrElse(0L)
-        val overflow = spark.conf.getOption(Governance.ResultOverflowMode)
-          .map(_.trim.toLowerCase).getOrElse("throw")
+        val (limited, maxRows, break) = Governance.resultBound(df)
         val out = new java.io.File(tmp, "out")
-        (if (maxRows > 0 && maxRows < Int.MaxValue - 1)
-          df.limit(maxRows.toInt + 1) else df)
-          .coalesce(1).write.parquet(out.toString)
+        limited.coalesce(1).write.parquet(out.toString)
         def partIn(dir: java.io.File): java.io.File =
           dir.listFiles().find(_.getName.endsWith(".parquet"))
             .getOrElse(throw new IllegalStateException(
@@ -119,11 +114,7 @@ object QueryService {
           if (maxRows > 0 &&
               spark.read.parquet(out.toString).count() > maxRows) {
             // footer-served count; overflow surfaces per CH semantics
-            if (overflow != "break")
-              throw new IllegalArgumentException(
-                s"Limit for result rows exceeded: read ${maxRows + 1}+ " +
-                  s"rows, maximum $maxRows. TOO_MANY_ROWS (set " +
-                  "result_overflow_mode = 'break' to truncate instead)")
+            if (!break) throw Governance.tooManyRows(maxRows)
             // break: re-write truncated (bounded by maxRows, still a job)
             val cut = new java.io.File(tmp, "cut")
             spark.read.parquet(out.toString).limit(maxRows.toInt)
@@ -234,8 +225,9 @@ class QueryService(spark: SparkSession) {
         }
       }
     }
-    // session init: CH `SET k=v` maps to Spark SQL SET verbatim; ATTACH
-    // TABLE routes to the catalog; everything else through the rewriter.
+    // session init: CH `SET k = v, …` applies through the settings
+    // table; ATTACH TABLE routes to the catalog; everything else through
+    // the rewriter.
     // Eager collect mirrors the reference's serial init loop (`:302-310`).
     req.initQueries.foreach { q =>
       ChSql.sql(spark, q, req.macros).collect()

@@ -8,16 +8,11 @@ import javax.net.ssl.{KeyManagerFactory, SSLContext, TrustManagerFactory}
 /** TLS material for the SECURE native door (CH's port 9440 /
   * `remoteSecure()` surface, r18): standard JSSE over a PKCS12
   * keystore. Certificates are deployment configuration — a real
-  * cluster points `spark.graft.tls.keystore`/`truststore` at its CA-
-  * issued material; tests generate a self-signed pair with the JDK's
-  * own `keytool` (offline, no extra deps). A client trusts exactly
+  * server reads its keystore from `GRAFT_TLS_KEYSTORE`, and
+  * `remoteSecure()` trusts `spark.graft.tls.truststore`; tests
+  * generate a self-signed pair with the JDK's own `keytool` (offline, no extra deps). A client trusts exactly
   * what its truststore holds — there is no trust-all mode. */
 object Tls {
-
-  val KeystoreConf = "spark.graft.tls.keystore"
-  val KeystorePasswordConf = "spark.graft.tls.keystorePassword"
-  val TruststoreConf = "spark.graft.tls.truststore"
-  val TruststorePasswordConf = "spark.graft.tls.truststorePassword"
 
   private def load(path: String, password: String): KeyStore = {
     val ks = KeyStore.getInstance("PKCS12")

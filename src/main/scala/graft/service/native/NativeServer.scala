@@ -539,10 +539,7 @@ class NativeServer(spark: SparkSession, port: Int = 0,
     // batch becomes a part, materialized views fire per batch), so a
     // connection dying mid-load keeps the already-flushed parts — and
     // the driver holds one flush buffer, never the whole payload.
-    val flushRows = session.conf
-      .getOption(graft.service.Governance.MaxInsertBlockSize)
-      .map(_.trim.toLong).filter(_ > 0)
-      .getOrElse(graft.service.Governance.DefaultInsertBlockSize)
+    val flushRows = graft.service.Settings.MaxInsertBlockSize(session)
       .min(Int.MaxValue - 1L).toInt
     val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
     peakInsertBufferRows = 0
@@ -658,7 +655,8 @@ class NativeServer(spark: SparkSession, port: Int = 0,
     val timeout = e.isInstanceOf[java.util.concurrent.TimeoutException]
     NativeWire.writeVarUInt(out, ServerException)
     val b = new WireOut
-    b.writeIntLE(if (timeout) ErrTimeoutExceeded else ErrGeneric)
+    b.writeIntLE(graft.service.Settings.code(e).getOrElse(
+      if (timeout) ErrTimeoutExceeded else ErrGeneric))
     b.writeString("DB::Exception")
     b.writeString(Option(e.getMessage).getOrElse(e.getClass.getName))
     b.writeString("") // stack trace — message carries the cause

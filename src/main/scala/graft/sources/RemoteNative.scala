@@ -97,11 +97,10 @@ object RemoteNative {
     val trust: Option[(String, String)] =
       if (!secure) None
       else Some((
-        spark.conf.getOption(graft.service.Tls.TruststoreConf).getOrElse(
+        Some(graft.service.Settings.TlsTruststore(spark)).filter(_.nonEmpty).getOrElse(
           throw new IllegalArgumentException(
-            s"remoteSecure() needs ${graft.service.Tls.TruststoreConf} set")),
-        spark.conf.getOption(graft.service.Tls.TruststorePasswordConf)
-          .getOrElse("")))
+            s"remoteSecure() needs ${graft.service.Settings.TlsTruststore.name} set")),
+        graft.service.Settings.TlsTruststorePassword(spark)))
     def ctx(): Option[javax.net.ssl.SSLContext] =
       trust.map { case (p, pw) => graft.service.Tls.clientContext(p, pw) }
 
@@ -159,11 +158,10 @@ object RemoteNative {
     val trust: Option[(String, String)] =
       if (!secure) None
       else Some((
-        spark.conf.getOption(graft.service.Tls.TruststoreConf).getOrElse(
+        Some(graft.service.Settings.TlsTruststore(spark)).filter(_.nonEmpty).getOrElse(
           throw new IllegalArgumentException(
-            s"remoteSecure() needs ${graft.service.Tls.TruststoreConf} set")),
-        spark.conf.getOption(graft.service.Tls.TruststorePasswordConf)
-          .getOrElse("")))
+            s"remoteSecure() needs ${graft.service.Settings.TlsTruststore.name} set")),
+        graft.service.Settings.TlsTruststorePassword(spark)))
     def ctx(): Option[javax.net.ssl.SSLContext] =
       trust.map { case (p, pw) => graft.service.Tls.clientContext(p, pw) }
 

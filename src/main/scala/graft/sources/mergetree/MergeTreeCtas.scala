@@ -23,7 +23,8 @@ import org.apache.spark.sql.types._
   *     the rename or deletes its duplicate);
   *   - the driver only assembles the http `.index` afterwards.
   * Part size targets ceil(rows/parallelism) clamped to [128k, 1M] rows
-  * ([[PartRowsConf]] pins it — CH's own ~1M part-per-INSERT shape);
+  * (`spark.graft.mergeTreePartRows` pins it — CH's own ~1M
+  * part-per-INSERT shape);
   * a heavily skewed ORDER BY key can exceed the target (range
   * partitioning can't split one key value), exactly as a CH part can.
   * Targets route through [[TreeFs]]: plain/`file:` paths take the
@@ -35,9 +36,6 @@ import org.apache.spark.sql.types._
   */
 object MergeTreeCtas {
 
-  /** Target rows per written part (default: sized from the data and
-    * the session's parallelism, clamped to [128k, 1M]). */
-  val PartRowsConf = "spark.graft.mergeTreePartRows"
   private val MaxPartRows = 1L << 20
   private val MinPartRows = 1L << 17
   private val Granularity = 8192
@@ -508,12 +506,12 @@ object MergeTreeCtas {
     (total, cols)
   }
 
-  /** Rows per part: [[PartRowsConf]], or ceil(total/parallelism)
-    * clamped to [128k, 1M] — small frames land in one part, big ones
-    * use the whole machine without dropping below a granule-amortizing
-    * floor or above CH's ~1M part shape. */
+  /** Rows per part: `spark.graft.mergeTreePartRows`, or
+    * ceil(total/parallelism) clamped to [128k, 1M] — small frames land
+    * in one part, big ones use the whole machine without dropping below
+    * a granule-amortizing floor or above CH's ~1M part shape. */
   private def partRows(spark: SparkSession, total: Long): Long =
-    spark.conf.getOption(PartRowsConf).map(_.toLong).getOrElse {
+    Some(graft.service.Settings.MergeTreePartRows(spark)).filter(_ > 0).getOrElse {
       val par = math.max(spark.sparkContext.defaultParallelism, 1)
       math.min(math.max((total + par - 1) / par, MinPartRows), MaxPartRows)
     }
@@ -563,7 +561,6 @@ object MergeTreeCtas {
       fs: TreeFs = NioTreeFs): Seq[(String, Long)] = {
     import org.apache.spark.sql.functions.col
     val perPart = partRows(spark, total)
-    require(perPart > 0, s"$PartRowsConf out of range: $perPart")
     val nParts = math.max(1L, (total + perPart - 1) / perPart).toInt
     val orderCols = orderBy.map(c => col(s"`$c`"))
     val width = cols.size

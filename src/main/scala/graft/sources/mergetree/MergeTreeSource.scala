@@ -93,10 +93,6 @@ object MergeTree {
     * endpoints by. */
   def localPath(endpoint: String): String = TableFiles.localPath(endpoint)
 
-  /** Session knob routing even local tree writes through the Hadoop
-    * FileSystem API (`hadoop`) — see [[TreeFs.ForceHadoopConf]]. */
-  val FsConf: String = TreeFs.ForceHadoopConf
-
   /** Validate a CH type string against the decodable MergeTree subset
     * (throws with the subset description) — the schema-evolution DDL
     * check, surfaced here because [[ChType]] is package-private. */

@@ -235,11 +235,6 @@ private[mergetree] final class HadoopTreeFs(
 
 private[mergetree] object TreeFs {
 
-  /** Session conf: set to `hadoop` to route even local/`file:` tree
-    * writes through the Hadoop FileSystem API (test/diagnostic knob —
-    * proves the protocol is FS-portable without a real remote FS). */
-  val ForceHadoopConf = "spark.graft.mergeTreeFs"
-
   /** The endpoint's scheme when it is a REMOTE Hadoop filesystem —
     * `file:`/plain paths and http(s) (read-only web disks) are None. */
   def hadoopScheme(endpoint: String): Option[String] = {
@@ -259,15 +254,17 @@ private[mergetree] object TreeFs {
   def serializableConf(): SerializableHadoopConf =
     new SerializableHadoopConf(sessionConf())
 
+  /** `spark.graft.mergeTreeFs = hadoop` routes even local/`file:` tree
+    * writes through the Hadoop FileSystem API (test/diagnostic knob —
+    * proves the protocol is FS-portable without a real remote FS). */
   private def forced(): Boolean =
     org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(_.conf.getOption(ForceHadoopConf))
-      .exists(_.trim.equalsIgnoreCase("hadoop"))
+      .exists(graft.service.Settings.MergeTreeFs(_) == "hadoop")
 
   /** Resolve a write-side endpoint to (normalized dir, fs). Remote
     * schemes route through Hadoop; `file:`/plain normalize to a local
     * path on the nio fast path (or the Hadoop local FS under
-    * [[ForceHadoopConf]]). The normalized dir doubles as the tree-lock
+    * `spark.graft.mergeTreeFs`). The normalized dir doubles as the tree-lock
     * key. */
   def forWrite(endpoint: String): (String, TreeFs) =
     hadoopScheme(endpoint) match {

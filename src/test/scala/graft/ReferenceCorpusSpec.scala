@@ -323,7 +323,7 @@ SETTINGS disk = disk(type = web, endpoint = '$endpoint')"""
       // filtered slice into a table on the "remote" server, read it
       // back through the same door
       val wh = java.nio.file.Files.createTempDirectory("graft_refcorp_rw").toString
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       try {
         svc.execute(QueryService.QueryRequest(
           query = "SELECT 1 AS ok",
@@ -340,7 +340,7 @@ SETTINGS disk = disk(type = web, endpoint = '$endpoint')"""
             s"remote('127.0.0.1:$port', default.ge_pushes)"))
         assert(back.rows.head(1) == 8L, back.rows.toString)
         svc.execute(QueryService.QueryRequest("DROP TABLE ge_pushes"))
-      } finally spark.conf.unset(graft.dialect.ChWrites.WarehouseConf)
+      } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
     } finally native.stop()
   }
 

@@ -30,11 +30,11 @@ class CatalogSpec extends AnyFunSuite {
       ChSql.sql(spark, attachDdl).collect()
     }
     assert(e.getMessage.contains("clickhouse-public-datasets"))
-    assert(e.getMessage.contains(Catalog.AllowEmptyConf))
+    assert(e.getMessage.contains(graft.service.Settings.AttachAllowEmpty.name))
   }
 
   test("ATTACH TABLE registers schema-only under the explicit escape hatch") {
-    spark.conf.set(Catalog.AllowEmptyConf, "true")
+    spark.conf.set(graft.service.Settings.AttachAllowEmpty.name, "true")
     try {
       val res = ChSql.sql(spark, attachDdl).collect()
       assert(res.head.getString(1) == "attached")
@@ -44,7 +44,7 @@ class CatalogSpec extends AnyFunSuite {
       assert(spark.table("gh_mini").count() == 0) // schema-only by request
       // ORDER BY key retained as the sorted-layout contract (W7)
       assert(Catalog.sortKey("gh_mini") == Seq("event_type", "repo_name"))
-    } finally spark.conf.unset(Catalog.AllowEmptyConf)
+    } finally spark.conf.unset(graft.service.Settings.AttachAllowEmpty.name)
   }
 
   test("ATTACH over a readable local endpoint serves data") {

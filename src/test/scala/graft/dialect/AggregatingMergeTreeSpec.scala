@@ -18,7 +18,7 @@ class AggregatingMergeTreeSpec extends AnyFunSuite {
   test("state rows round-trip; -Merge reads subsume FINAL; FINAL refuses with guidance") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_aggmt").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       Seq((1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0), (4L, "a", 5.0))
         .toDF("id", "k", "v").createOrReplaceTempView("asrc")
@@ -59,6 +59,6 @@ class AggregatingMergeTreeSpec extends AnyFunSuite {
         .collect().head.getString(0)
       assert(create.contains("AggregatingMergeTree"), create)
       ChSql.sql(spark, "DROP TABLE agg_t").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 }

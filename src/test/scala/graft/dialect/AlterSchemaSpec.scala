@@ -21,7 +21,7 @@ class AlterSchemaSpec extends AnyFunSuite {
   test("ADD COLUMN: metadata cost, old parts read NULL, INSERT fills new parts") {
     fresh()
     val wh = Files.createTempDirectory("graft_alter").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark,
         "CREATE TABLE alt_t ENGINE = MergeTree ORDER BY (id) AS " +
@@ -59,13 +59,13 @@ class AlterSchemaSpec extends AnyFunSuite {
       assert(ChSql.sql(spark, "SELECT * FROM alt_t LIMIT 1").columns.toSeq ==
         Seq("id", "mid", "k", "v", "tag"))
       ChSql.sql(spark, "DROP TABLE alt_t").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("DROP COLUMN: metadata now, physical at OPTIMIZE; key/partition columns refuse") {
     fresh()
     val wh = Files.createTempDirectory("graft_alter2").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark,
         "CREATE TABLE alt_d ENGINE = MergeTree ORDER BY (id) AS " +
@@ -94,13 +94,13 @@ class AlterSchemaSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("sorting key"), e.getMessage)
       ChSql.sql(spark, "DROP TABLE alt_d").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("MODIFY and RENAME COLUMN rewrite the tree; RENAME TABLE re-keys the catalog") {
     fresh()
     val wh = Files.createTempDirectory("graft_alter3").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark,
         "CREATE TABLE alt_m ENGINE = MergeTree ORDER BY (id) AS " +
@@ -126,12 +126,12 @@ class AlterSchemaSpec extends AnyFunSuite {
         .collect().head.getString(0)
       assert(create.contains("alt_renamed") && create.contains("amount"), create)
       ChSql.sql(spark, "DROP TABLE alt_renamed").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("empty CREATE TABLE DDL + INSERT VALUES: CH's create-then-load flow") {
     val wh = Files.createTempDirectory("graft_alter4").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark,
         """CREATE TABLE plain_t (`id` Int64, `k` LowCardinality(String),
@@ -180,12 +180,12 @@ class AlterSchemaSpec extends AnyFunSuite {
       }
       assert(e2.getMessage.contains("Nullable"), e2.getMessage)
       ChSql.sql(spark, "DROP TABLE plain_t").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("INSERT INTO t (cols) SELECT: listed columns positional, the rest NULL") {
     val wh = Files.createTempDirectory("graft_alter6").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark,
         "CREATE TABLE ins_cols (`id` Int64, `k` String, `v` Nullable(Float64)) " +
@@ -195,13 +195,13 @@ class AlterSchemaSpec extends AnyFunSuite {
       val r = ChSql.sql(spark, "SELECT id, k, v FROM ins_cols").collect().head
       assert(r.getLong(0) == 7L && r.getString(1) == "x" && r.isNullAt(2), r.toString)
       ChSql.sql(spark, "DROP TABLE ins_cols").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("RENAME TABLE follows through MV and dictionary references") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_alter7").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark,
         "CREATE TABLE ref_src (`id` Int64, `v` Float64) " +
@@ -225,14 +225,14 @@ class AlterSchemaSpec extends AnyFunSuite {
       ChSql.sql(spark, "DROP DICTIONARY ref_dict").collect()
       Seq("ref_src2", "ref_tgt").foreach(t =>
         ChSql.sql(spark, s"DROP TABLE $t").collect())
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("EXCHANGE TABLES swaps two catalog tables atomically") {
     import spark.implicits._
     fresh()
     val wh = Files.createTempDirectory("graft_alter5").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark,
         "CREATE TABLE ex_a ENGINE = MergeTree ORDER BY (id) AS " +
@@ -247,6 +247,6 @@ class AlterSchemaSpec extends AnyFunSuite {
         .collect().head.getLong(0) == 1L)
       Seq("ex_a", "ex_b").foreach(t =>
         ChSql.sql(spark, s"DROP TABLE $t").collect())
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 }

@@ -39,6 +39,17 @@ class ChSqlSpec extends AnyFunSuite {
     assert(ChSql.extractSettings(q2) == ((q2, Map.empty)))
   }
 
+  test("a table DDL's engine SETTINGS are not query settings; a CTAS's trailing SETTINGS are") {
+    val attach = ChSql.statement("ATTACH TABLE lineitem_mt (l_orderkey Int64, " +
+      "l_returnflag String, l_linestatus String) ENGINE = MergeTree " +
+      "ORDER BY (l_returnflag, l_linestatus) " +
+      "SETTINGS disk = disk(type = local, endpoint = '/data/lineitem_mt')")
+    assert(ChSql.statementSettings(attach).isEmpty)
+    assert(ChSql.statementSettings(ChSql.statement("CREATE TABLE t ENGINE = " +
+      "MergeTree ORDER BY k AS SELECT 1 AS k SETTINGS max_threads = 2")) ==
+      Map("max_threads" -> "2"))
+  }
+
   test("quoted setting values unquote") {
     val (_, s) = ChSql.extractSettings(
       "SELECT 1 SETTINGS cluster_for_parallel_replicas='{cluster}'")
@@ -482,7 +493,7 @@ class ChSqlSpec extends AnyFunSuite {
   test("DROP TABLE deletes CTAS-owned storage; DETACH keeps data and re-ATTACHes") {
     val spark = graft.TestSpark.spark
     val wh = java.nio.file.Files.createTempDirectory("graft_drop_wh").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
       .createOrReplaceTempView("drop_nation_src")
     // CTAS-owned table: DROP removes the view, the catalog entry, AND
@@ -582,7 +593,7 @@ class ChSqlSpec extends AnyFunSuite {
     // a MergeTree CTAS table renders its TRUE column list — the ORDER
     // BY key must NOT print as Nullable (the Spark schema marks
     // everything nullable; no CH table could declare a Nullable key)
-    spark.conf.set(ChWrites.WarehouseConf,
+    spark.conf.set(graft.service.Settings.WarehouseDir.name,
       java.nio.file.Files.createTempDirectory("graft_show_wh").toString)
     try {
       import spark.implicits._
@@ -593,7 +604,7 @@ class ChSqlSpec extends AnyFunSuite {
         .collect().head.getString(0)
       assert(mt.contains("`k` Int64") && !mt.contains("`k` Nullable"), mt)
       assert(mt.contains("ORDER BY (k)"), mt)
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("CH bracket array literals rewrite; element access becomes 1-based try_element_at") {
@@ -678,13 +689,13 @@ class ChSqlSpec extends AnyFunSuite {
       .execute(graft.service.QueryService.QueryRequest(insert))
     assert(spark.read.parquet(out).collect().map(_.getInt(0)).toSeq == Seq(1))
     val wh = java.nio.file.Files.createTempDirectory("graft_cmt_wh").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark, "/* c */ CREATE TABLE cmt_ctas ENGINE = MergeTree " +
         "ORDER BY a AS SELECT 7 AS a").collect()
       assert(ChSql.sql(spark, "SELECT a FROM cmt_ctas").collect()
         .map(_.getInt(0)).toSeq == Seq(7))
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("rewrites never fire inside comments") {
@@ -704,7 +715,7 @@ class ChSqlSpec extends AnyFunSuite {
   test("INSERT … FORMAT CSV inline data with -- and /* reaches the table unchanged") {
     val spark = graft.TestSpark.spark
     val wh = java.nio.file.Files.createTempDirectory("graft_cmt_csv").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark, "CREATE TABLE cmt_csv (id Int64, s String) " +
         "ENGINE = MergeTree ORDER BY id")
@@ -714,6 +725,6 @@ class ChSqlSpec extends AnyFunSuite {
       val got = ChSql.sql(spark, "SELECT id, s FROM cmt_csv ORDER BY id")
         .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
       assert(got == Seq((1L, "a -- b"), (2L, "/* c */"), (3L, "d/*e")), got)
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 }

@@ -54,7 +54,7 @@ class ChWritesSpec extends AnyFunSuite {
   test("CREATE TABLE … ENGINE=MergeTree ORDER BY … AS SELECT writes REAL parts") {
     freshView()
     val wh = Files.createTempDirectory("graft_wh").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       val st = ChSql.sql(spark,
         "CREATE TABLE ctas_t ENGINE = MergeTree ORDER BY (k) AS SELECT k, v FROM wsrc")
@@ -90,13 +90,13 @@ class ChWritesSpec extends AnyFunSuite {
         "CREATE TABLE ctas_pq ORDER BY (k) AS SELECT k, v FROM wsrc").collect()
       assert(new java.io.File(s"$wh/ctas_pq").listFiles()
         .exists(_.getName.endsWith(".parquet")))
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("INSERT INTO a local MergeTree table appends parts (CH's part-per-batch write model)") {
     freshView()
     val wh = Files.createTempDirectory("graft_wh_ins").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark,
         "CREATE TABLE ins_mt ENGINE = MergeTree ORDER BY (k) AS SELECT k, v FROM wsrc")
@@ -131,12 +131,12 @@ class ChWritesSpec extends AnyFunSuite {
         ChSql.sql(spark, "INSERT INTO ins_mt_k SELECT 'q'")
       }
       assert(ev.getMessage.contains("own columns"), ev.getMessage)
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("INSERT INTO t FORMAT <fmt> with INLINE data: CSV/TSV/JSONEachRow/Values (CH's HTTP bulk-load)") {
     val wh = Files.createTempDirectory("graft_wh_inline").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark, "CREATE TABLE inline_mt (id Int64, s String, " +
         "v Float64) ENGINE = MergeTree ORDER BY id")
@@ -209,12 +209,12 @@ class ChWritesSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("inline data supports"), e.getMessage)
       ChSql.sql(spark, "DROP TABLE inline_mt")
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("CREATE TABLE t2 AS t1 clones schema, engine, keys, partitioning — empty") {
     val wh = Files.createTempDirectory("graft_wh_clone").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark, "CREATE TABLE clone_src (d Date, k Int64, " +
         "v Float64 DEFAULT 1.5) ENGINE = ReplacingMergeTree(k) " +
@@ -252,12 +252,12 @@ class ChWritesSpec extends AnyFunSuite {
       assert(e.getMessage.contains("clone"), e.getMessage)
       ChSql.sql(spark, "DROP TABLE clone_dst")
       ChSql.sql(spark, "DROP TABLE clone_src")
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("DEFAULT column expressions: declared in DDL, applied by column-subset INSERTs") {
     val wh = Files.createTempDirectory("graft_wh_default").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark, "CREATE TABLE def_mt (id Int64, " +
         "s String DEFAULT 'none' COMMENT 'label', " +
@@ -290,7 +290,7 @@ class ChWritesSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("MATERIALIZED"), e.getMessage)
       ChSql.sql(spark, "DROP TABLE def_mt")
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("INSERT INTO a view/table name refuses with guidance; s3 http refuses") {

@@ -17,7 +17,7 @@ class CollapsingMergeTreeSpec extends AnyFunSuite {
   test("FINAL cancels +1/-1 pairs per (key, version); OPTIMIZE collapses physically") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_coll").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       // id=1: state v0, cancel v0, new state v1  -> survives (1, v1)
       // id=2: state v0 only                      -> survives (2, v0)
@@ -51,13 +51,13 @@ class CollapsingMergeTreeSpec extends AnyFunSuite {
         .collect().head.getString(0)
       assert(create.contains("VersionedCollapsingMergeTree"), create)
       ChSql.sql(spark, "DROP TABLE coll_t").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("unbalanced multiplicities survive |sum(sign)| deep; partitions cancel independently") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_coll2").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       // id=1 p1: two states, one cancel at v0 -> ONE +1 row survives
       // id=1 p2: one state at v0              -> survives (partitions
@@ -75,13 +75,13 @@ class CollapsingMergeTreeSpec extends AnyFunSuite {
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       assert(fin == Seq(("p1", 1L), ("p2", 1L)), fin.mkString(", "))
       ChSql.sql(spark, "DROP TABLE coll_p").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("versionless CollapsingMergeTree: raw reads fine, FINAL and OPTIMIZE FINAL refuse") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_coll3").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       Seq((1L, 1, 10.0), (1L, -1, 10.0), (2L, 1, 20.0))
         .toDF("id", "sign", "v").createOrReplaceTempView("cvsrc")
@@ -104,6 +104,6 @@ class CollapsingMergeTreeSpec extends AnyFunSuite {
         "SELECT CAST(round(sum(v * sign)) AS BIGINT) AS s FROM coll_nv")
         .collect().head.getLong(0) == 20L)
       ChSql.sql(spark, "DROP TABLE coll_nv").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 }

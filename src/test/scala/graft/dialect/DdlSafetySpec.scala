@@ -17,12 +17,12 @@ class DdlSafetySpec extends AnyFunSuite {
 
   private def withWarehouse[A](f: String => A): A = {
     val wh = Files.createTempDirectory("graft_ddl_safety").toString
-    val prev = spark.conf.getOption(ChWrites.WarehouseConf)
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    val prev = spark.conf.getOption(graft.service.Settings.WarehouseDir.name)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try f(wh)
     finally prev match {
-      case Some(p) => spark.conf.set(ChWrites.WarehouseConf, p)
-      case None => spark.conf.unset(ChWrites.WarehouseConf)
+      case Some(p) => spark.conf.set(graft.service.Settings.WarehouseDir.name, p)
+      case None => spark.conf.unset(graft.service.Settings.WarehouseDir.name)
     }
   }
 

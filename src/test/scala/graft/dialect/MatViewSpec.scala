@@ -15,7 +15,7 @@ class MatViewSpec extends AnyFunSuite {
   test("TO form: batches flow through the trigger; pre-existing rows do not") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_mv").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       Seq((1L, "a", 10.0)).toDF("id", "k", "v").createOrReplaceTempView("mvsrc")
       ChSql.sql(spark,
@@ -57,13 +57,13 @@ class MatViewSpec extends AnyFunSuite {
         .collect().head.getLong(0) == 3L)
       Seq("mv_src", "mv_tgt").foreach(t =>
         ChSql.sql(spark, s"DROP TABLE $t").collect())
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("plain CREATE VIEW: lazy, CH-dialect body, replayed across requests, SHOW CREATE") {
     import graft.service.QueryService
     val wh = Files.createTempDirectory("graft_pview").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       val svc = new QueryService(spark)
       svc.executeToDf(QueryService.QueryRequest(
@@ -104,13 +104,13 @@ class MatViewSpec extends AnyFunSuite {
         ChSql.sql(spark, s"DROP VIEW $v").collect())
       ChSql.sql(spark, "DROP TABLE pv_src").collect()
       assert(graft.core.MatViews.allPlain.isEmpty)
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("views survive across HTTP-style requests (fresh sessions): trigger and reads") {
     import graft.service.QueryService
     val wh = Files.createTempDirectory("graft_mv3").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       val svc = new QueryService(spark)
       // request 1: create tables + view
@@ -137,13 +137,13 @@ class MatViewSpec extends AnyFunSuite {
       ChSql.sql(spark, "DROP VIEW mvr_v").collect()
       Seq("mvr_src", "mvr_tgt").foreach(t =>
         ChSql.sql(spark, s"DROP TABLE $t").collect())
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("ENGINE form owns its inner table; POPULATE backfills; chained views cascade") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_mv2").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       Seq((1L, "x", 3.0), (2L, "y", 4.0))
         .toDF("id", "k", "v").createOrReplaceTempView("mv2src")
@@ -178,6 +178,6 @@ class MatViewSpec extends AnyFunSuite {
       ChSql.sql(spark, "DROP VIEW mv2_chain").collect()
       Seq("mv2_src", "mv2_final").foreach(t =>
         ChSql.sql(spark, s"DROP TABLE $t").collect())
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 }

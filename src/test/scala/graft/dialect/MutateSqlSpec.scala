@@ -78,7 +78,7 @@ class MutateSqlSpec extends AnyFunSuite {
   }
 
   test("named CTAS table: mutation re-sorts and re-binds the view") {
-    spark.conf.set(ChWrites.WarehouseConf,
+    spark.conf.set(graft.service.Settings.WarehouseDir.name,
       Files.createTempDirectory("graft_mut_wh").toString)
     ChSql.sql(spark,
       """CREATE TABLE mut_ctas ORDER BY (o_orderkey) AS

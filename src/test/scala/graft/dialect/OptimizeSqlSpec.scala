@@ -24,7 +24,7 @@ class OptimizeSqlSpec extends AnyFunSuite {
   }
 
   test("named CTAS table: sort key restored, view re-bound") {
-    spark.conf.set(ChWrites.WarehouseConf,
+    spark.conf.set(graft.service.Settings.WarehouseDir.name,
       Files.createTempDirectory("graft_opt_wh").toString)
     ChSql.sql(spark,
       """CREATE TABLE opt_ctas ORDER BY (o_orderkey) AS

@@ -23,7 +23,7 @@ class ReplacingMergeTreeSpec extends AnyFunSuite {
   test("FINAL dedups by sorting key on the highest version; raw reads stay multiversion") {
     fresh()
     val wh = Files.createTempDirectory("graft_repl").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark,
         "CREATE TABLE repl_t ENGINE = ReplacingMergeTree(ver) ORDER BY (id) AS " +
@@ -54,13 +54,13 @@ class ReplacingMergeTreeSpec extends AnyFunSuite {
         .collect().head.getString(0)
       assert(create.contains("ReplacingMergeTree(ver)"), create)
       ChSql.sql(spark, "DROP TABLE repl_t").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("an independently ATTACHed Replacing tree carries the engine; versionless FINAL refuses") {
     fresh()
     val wh = Files.createTempDirectory("graft_repl2").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark,
         "CREATE TABLE repl_src ENGINE = ReplacingMergeTree(ver) ORDER BY (id) AS " +
@@ -87,13 +87,13 @@ class ReplacingMergeTreeSpec extends AnyFunSuite {
         graft.core.Catalog.detach(n); spark.catalog.dropTempView(n)
       }
       ChSql.sql(spark, "DROP TABLE repl_src").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("ReplacingMergeTree(ver, is_deleted): FINAL hides deleted rows; OPTIMIZE keeps them") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_repl3").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       Seq((1L, 0L, 0L, 10.0), (2L, 0L, 0L, 20.0))
         .toDF("id", "ver", "del", "v").createOrReplaceTempView("rdsrc")
@@ -118,13 +118,13 @@ class ReplacingMergeTreeSpec extends AnyFunSuite {
       assert(ChSql.sql(spark, "SELECT count() AS n FROM repl_del FINAL")
         .collect().head.getLong(0) == 1L)
       ChSql.sql(spark, "DROP TABLE repl_del").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("bare ORDER BY in ATTACH carries the dedup key; FINAL composes with SAMPLE") {
     fresh()
     val wh = Files.createTempDirectory("graft_repl4").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark,
         "CREATE TABLE repl_s2 ENGINE = ReplacingMergeTree(ver) ORDER BY (id) AS " +
@@ -173,13 +173,13 @@ class ReplacingMergeTreeSpec extends AnyFunSuite {
       graft.core.Catalog.detach("repl_bare")
       spark.catalog.dropTempView("repl_bare")
       ChSql.sql(spark, "DROP TABLE repl_s2").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("FINAL READS on a PARTITIONED Replacing table dedup within partitions only") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_repl6").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       // id=1 lives in two partitions: the read-side FINAL must keep one
       // row PER PARTITION, like CH's per-partition merge — a key-only
@@ -195,13 +195,13 @@ class ReplacingMergeTreeSpec extends AnyFunSuite {
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       assert(rows == Seq(("p1", 12L), ("p2", 11L)), rows.mkString(", "))
       ChSql.sql(spark, "DROP TABLE repl_pread").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("versionless Replacing: the payload-max tiebreak opt-in unblocks FINAL and OPTIMIZE") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_repl7").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       Seq((1L, "a", 10.0), (1L, "b", 12.0), (2L, "c", 20.0))
         .toDF("id", "k", "v").createOrReplaceTempView("rvsrc")
@@ -214,7 +214,7 @@ class ReplacingMergeTreeSpec extends AnyFunSuite {
       }
       assert(e.getMessage.contains("finalTiebreak"), e.getMessage)
       // with it: deterministic payload-max row per key
-      spark.conf.set(ChSql.FinalTiebreakConf, "payload")
+      spark.conf.set(graft.service.Settings.FinalTiebreak.name, "payload")
       try {
         val fin = ChSql.sql(spark, "SELECT id, k FROM repl_nv FINAL ORDER BY id")
           .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
@@ -222,15 +222,15 @@ class ReplacingMergeTreeSpec extends AnyFunSuite {
         ChSql.sql(spark, "OPTIMIZE TABLE repl_nv FINAL").collect()
         assert(ChSql.sql(spark, "SELECT count() AS n FROM repl_nv")
           .collect().head.getLong(0) == 2L)
-      } finally spark.conf.unset(ChSql.FinalTiebreakConf)
+      } finally spark.conf.unset(graft.service.Settings.FinalTiebreak.name)
       ChSql.sql(spark, "DROP TABLE repl_nv").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("OPTIMIZE FINAL on a PARTITIONED Replacing table dedups within partitions only") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_repl5").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       // the same sorting key (id=1) lives in TWO partitions — CH merges
       // never cross partitions, so both rows must survive the collapse
@@ -246,6 +246,6 @@ class ReplacingMergeTreeSpec extends AnyFunSuite {
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
       assert(rows == Seq(("p1", 12L), ("p2", 11L)), rows.mkString(", "))
       ChSql.sql(spark, "DROP TABLE repl_part").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 }

@@ -23,7 +23,7 @@ class SummingMergeTreeSpec extends AnyFunSuite {
   test("FINAL sums the declared tuple per key; raw reads stay unmerged; payload takes max") {
     fresh()
     val wh = Files.createTempDirectory("graft_summ").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark,
         "CREATE TABLE summ_t ENGINE = SummingMergeTree((cnt, amt)) " +
@@ -57,13 +57,13 @@ class SummingMergeTreeSpec extends AnyFunSuite {
         .collect().head.getString(0)
       assert(create.contains("SummingMergeTree"), create)
       ChSql.sql(spark, "DROP TABLE summ_t").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("no engine tuple: every numeric non-key column sums; all-zero rows vanish from FINAL") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_summ2").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       Seq((1L, 4L, 2.0), (1L, -4L, -2.0), (2L, 1L, 0.5))
         .toDF("id", "a", "b").createOrReplaceTempView("szsrc")
@@ -80,13 +80,13 @@ class SummingMergeTreeSpec extends AnyFunSuite {
       assert(ChSql.sql(spark, "SELECT count() AS n FROM summ_z")
         .collect().head.getLong(0) == 1L)
       ChSql.sql(spark, "DROP TABLE summ_z").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("FINAL and OPTIMIZE merge within partitions only; ATTACH carries the engine") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_summ3").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       // the same sorting key (id=1) lives in TWO partitions — CH merges
       // never cross partitions, so FINAL keeps one summed row PER
@@ -115,13 +115,13 @@ class SummingMergeTreeSpec extends AnyFunSuite {
       graft.core.Catalog.detach("summ_back")
       spark.catalog.dropTempView("summ_back")
       ChSql.sql(spark, "DROP TABLE summ_p").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("guardrails: expression key refuses FINAL; key column in the tuple refuses at CTAS") {
     fresh()
     val wh = Files.createTempDirectory("graft_summ4").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark,
         "CREATE TABLE summ_g ENGINE = SummingMergeTree((cnt)) " +
@@ -148,6 +148,6 @@ class SummingMergeTreeSpec extends AnyFunSuite {
       }
       assert(e2.getMessage.contains("sorting key"), e2.getMessage)
       ChSql.sql(spark, "DROP TABLE summ_g").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 }

@@ -15,7 +15,7 @@ class TtlSpec extends AnyFunSuite {
   test("OPTIMIZE applies TTL; MATERIALIZE TTL applies it on demand; SHOW CREATE renders it") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_ttl").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       Seq(
         (1L, java.sql.Timestamp.valueOf("2000-01-01 00:00:00"), 10.0),
@@ -73,13 +73,13 @@ class TtlSpec extends AnyFunSuite {
             "SELECT id, exp FROM tsrc").collect()
       }
       assert(e2.getMessage.contains("MergeTree-family"), e2.getMessage)
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("ATTACH DDL carries TTL; the engine-collapse OPTIMIZE pairs with it") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_ttl2").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       Seq(
         (1L, java.sql.Timestamp.valueOf("2000-01-01 00:00:00"), 0L),
@@ -106,6 +106,6 @@ class TtlSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(rows == Seq((1L, 1L)), rows.mkString(", "))
       ChSql.sql(spark, "DROP TABLE ttl_r").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 }

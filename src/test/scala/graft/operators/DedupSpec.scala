@@ -133,7 +133,7 @@ class DedupSpec extends AnyFunSuite {
     val spark2 = spark
     import spark2.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
-    spark.conf.set(Dedup.CheckpointDirConf, dir)
+    spark.conf.set(graft.service.Settings.CheckpointDir.name, dir)
     try {
       val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
       val labels = Dedup.connectedComponents(pairs)
@@ -147,7 +147,7 @@ class DedupSpec extends AnyFunSuite {
         }.sum
       assert(rddFiles(new java.io.File(dir)) > 0,
         s"no rdd-* checkpoint dirs under $dir")
-    } finally spark.conf.unset(Dedup.CheckpointDirConf)
+    } finally spark.conf.unset(graft.service.Settings.CheckpointDir.name)
   }
 
   test("component size histogram counts clusters plus singletons") {

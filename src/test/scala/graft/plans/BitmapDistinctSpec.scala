@@ -33,8 +33,8 @@ class BitmapDistinctSpec extends AnyFunSuite {
   }
 
   private def withDisabled[T](f: => T): T = {
-    spark.conf.set(BitmapDistinct.EnabledKey, "false")
-    try f finally spark.conf.unset(BitmapDistinct.EnabledKey)
+    spark.conf.set(graft.service.Settings.BitmapDistinct.name, "false")
+    try f finally spark.conf.unset(graft.service.Settings.BitmapDistinct.name)
   }
 
   private def rows(df: DataFrame): Seq[String] =
@@ -89,7 +89,7 @@ class BitmapDistinctSpec extends AnyFunSuite {
 
   test("ATTACHed MergeTree tables engage too (r16)") {
     val wh = java.nio.file.Files.createTempDirectory("graft_bmd_mt").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     val svc = new graft.service.QueryService(spark)
     try {
       svc.execute(graft.service.QueryService.QueryRequest(
@@ -105,7 +105,7 @@ class BitmapDistinctSpec extends AnyFunSuite {
       assert(fast == Seq("[321,77]"))
       assert(fast == withDisabled(rows(q())))
       svc.execute(graft.service.QueryService.QueryRequest("DROP TABLE bmd_mt"))
-    } finally spark.conf.unset(graft.dialect.ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("dense-domain bitset and Roaring agree; plan is single-stage driver merge") {
@@ -115,9 +115,9 @@ class BitmapDistinctSpec extends AnyFunSuite {
     // 2^24 dense gate → dense engages by default; forcing the gate to
     // 0 falls back to Roaring — answers must be identical
     val dense = rows(q())
-    spark.conf.set(BitmapDistinct.DenseMaxRangeKey, "0")
+    spark.conf.set(graft.service.Settings.BitmapDistinctDenseMaxRange.name, "0")
     val roaring = try rows(q())
-    finally spark.conf.unset(BitmapDistinct.DenseMaxRangeKey)
+    finally spark.conf.unset(graft.service.Settings.BitmapDistinctDenseMaxRange.name)
     assert(dense == roaring)
     // the optimized plan is the single-stage driver-merge leaf — no
     // Aggregate, no exchange (the r17 lever made visible)

@@ -58,16 +58,16 @@ class DictAggSpec extends AnyFunSuite {
     df.collect().map(_.toString).sorted.toSeq
 
   private def withDisabled[T](f: => T): T = {
-    spark.conf.set(DictAgg.EnabledKey, "false")
-    try f finally spark.conf.unset(DictAgg.EnabledKey)
+    spark.conf.set(graft.service.Settings.DictAgg.name, "false")
+    try f finally spark.conf.unset(graft.service.Settings.DictAgg.name)
   }
 
   /** Runs `f` with `maxTotalRows` sized from `path`'s scan partition
     * count so the kernel's per-partition group cap is exactly `cap`. */
   private def withCap[T](path: String, cap: Int)(f: => T): T = {
     val parts = spark.read.parquet(path).rdd.getNumPartitions
-    spark.conf.set(DriverMerge.MaxTotalRowsKey, (cap.toLong * parts).toString)
-    try f finally spark.conf.unset(DriverMerge.MaxTotalRowsKey)
+    spark.conf.set(graft.service.Settings.DriverMergeMaxTotalRows.name, (cap.toLong * parts).toString)
+    try f finally spark.conf.unset(graft.service.Settings.DriverMergeMaxTotalRows.name)
   }
 
   /** `f`'s result, asserting that the driver merge overflowed and its
@@ -439,7 +439,7 @@ class DictAggSpec extends AnyFunSuite {
 
   test("ATTACHed MergeTree tables engage too — dictionary-backed LC vectors (r16)") {
     val wh = java.nio.file.Files.createTempDirectory("graft_dictagg_mt").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     val svc = new graft.service.QueryService(spark)
     try {
       svc.execute(graft.service.QueryService.QueryRequest(
@@ -457,7 +457,7 @@ class DictAggSpec extends AnyFunSuite {
         "dictAgg did not engage on the MergeTree DSv2 relation")
       assert(fast == withDisabled(collectSorted(q())))
       svc.execute(graft.service.QueryService.QueryRequest("DROP TABLE dictagg_mt"))
-    } finally spark.conf.unset(graft.dialect.ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("the dialect front door (ChSql) engages too — the q2 bench spelling") {

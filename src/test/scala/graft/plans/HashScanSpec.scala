@@ -17,8 +17,8 @@ class HashScanSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
   private def withDisabled[T](f: => T): T = {
-    spark.conf.set(HashScan.EnabledKey, "false")
-    try f finally spark.conf.unset(HashScan.EnabledKey)
+    spark.conf.set(graft.service.Settings.HashScan.name, "false")
+    try f finally spark.conf.unset(graft.service.Settings.HashScan.name)
   }
 
   private def rows(df: DataFrame): Seq[String] =
@@ -128,7 +128,7 @@ class HashScanSpec extends AnyFunSuite {
   test("ATTACHed MergeTree tables ride the kernel too (the reference's table format)") {
     graft.core.Tables.registerViews(spark, sfDir)
     val wh = java.nio.file.Files.createTempDirectory("graft_hs_mt").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     graft.dialect.ChSql.sql(spark,
       """CREATE TABLE hs_mt ENGINE = MergeTree ORDER BY (okey) AS
         |SELECT l_orderkey AS okey, l_quantity AS q, l_returnflag AS rf

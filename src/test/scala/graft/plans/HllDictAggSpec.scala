@@ -17,8 +17,8 @@ class HllDictAggSpec extends AnyFunSuite {
   private val sfDir = "/root/testdata/sf0.001"
 
   private def withDisabled[T](f: => T): T = {
-    spark.conf.set(DictAgg.EnabledKey, "false")
-    try f finally spark.conf.unset(DictAgg.EnabledKey)
+    spark.conf.set(graft.service.Settings.DictAgg.name, "false")
+    try f finally spark.conf.unset(graft.service.Settings.DictAgg.name)
   }
 
   private def rows(df: DataFrame): Seq[String] =
@@ -79,7 +79,7 @@ class HllDictAggSpec extends AnyFunSuite {
 
   test("uniq over an ATTACHed MergeTree table matches native (LC strings decode)") {
     val wh = java.nio.file.Files.createTempDirectory("graft_hll_mt").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     ch("""CREATE TABLE hll_mt ENGINE = MergeTree ORDER BY (okey) AS
         |SELECT o_orderkey AS okey, o_orderstatus AS st, o_custkey AS ck
         |FROM orders""".stripMargin).collect()
@@ -165,13 +165,13 @@ class HllDictAggSpec extends AnyFunSuite {
     // budget caps ~76 slots/partition — the conf scales it
     val words17 = HllRegisters.forRsd(HllRegisters.rsdForPrecision(17)).numWords
     assert(words17 == 13108)
-    spark.conf.set(DictAgg.HllGatherBytesKey, (1L << 20).toString)
+    spark.conf.set(graft.service.Settings.DictAggHllGatherBytes.name, (1L << 20).toString)
     try {
       // 1 MB budget → cap < 16 floor → grouped shape falls back to the
       // native plan via overflow yet still answers correctly
       def q() = ch("SELECT o_orderstatus, uniqCombined(o_custkey) AS u " +
         "FROM orders GROUP BY o_orderstatus")
       assert(rows(q()) == withDisabled(rows(q())))
-    } finally spark.conf.unset(DictAgg.HllGatherBytesKey)
+    } finally spark.conf.unset(graft.service.Settings.DictAggHllGatherBytes.name)
   }
 }

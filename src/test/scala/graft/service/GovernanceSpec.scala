@@ -19,8 +19,8 @@ class GovernanceSpec extends AnyFunSuite {
       "FROM numbers(20000000000)"
 
   private def clear(): Unit =
-    Seq(Governance.MaxExecutionTime, Governance.MaxResultRows,
-      Governance.ResultOverflowMode).foreach(spark.conf.unset)
+    Seq(Settings.MaxExecutionTime.name, Settings.MaxResultRows.name,
+      Settings.ResultOverflowMode.name).foreach(spark.conf.unset)
 
   test("max_execution_time kills the query at the deadline; session stays usable") {
     val svc = new QueryService(spark)
@@ -50,8 +50,8 @@ class GovernanceSpec extends AnyFunSuite {
       // cap of 16 groups/partition: GROUP BY l_orderkey (hundreds of
       // groups) overflows the partial immediately and takes the
       // fallback path with the driver merge ENGAGED
-      spark.conf.set(DriverMerge.MaxTotalRowsKey, "16")
-      spark.conf.set(Governance.MaxExecutionTime, "1")
+      spark.conf.set(graft.service.Settings.DriverMergeMaxTotalRows.name, "16")
+      spark.conf.set(Settings.MaxExecutionTime.name, "1")
       // stretch the fallback window past the 1 s deadline so the cancel
       // deterministically lands while the fallback is in flight
       DriverMerge.onFallbackStart = () => {
@@ -76,7 +76,7 @@ class GovernanceSpec extends AnyFunSuite {
         "fallback ran to clean completion PAST the deadline — kill did not land")
     } finally {
       DriverMerge.onFallbackStart = () => ()
-      spark.conf.unset(DriverMerge.MaxTotalRowsKey)
+      spark.conf.unset(graft.service.Settings.DriverMergeMaxTotalRows.name)
       spark.catalog.dropTempView("gov_fallback_li")
       clear()
     }
@@ -88,13 +88,13 @@ class GovernanceSpec extends AnyFunSuite {
   test("max_result_rows: throw errors, break truncates (limit reaches the plan)") {
     val svc = new QueryService(spark)
     try {
-      spark.conf.set(Governance.MaxResultRows, "10")
+      spark.conf.set(Settings.MaxResultRows.name, "10")
       val e = intercept[IllegalArgumentException] {
         svc.execute(QueryRequest(
           "SELECT number FROM numbers(100) ORDER BY number"))
       }
       assert(e.getMessage.contains("TOO_MANY_ROWS"), e.getMessage)
-      spark.conf.set(Governance.ResultOverflowMode, "break")
+      spark.conf.set(Settings.ResultOverflowMode.name, "break")
       val r = svc.execute(QueryRequest(
         "SELECT number FROM numbers(100) ORDER BY number"))
       assert(r.rows.size == 10)
@@ -108,12 +108,12 @@ class GovernanceSpec extends AnyFunSuite {
 
   test("the deadline also governs write statements (runaway INSERT SELECT)") {
     val wh = java.nio.file.Files.createTempDirectory("graft_gov_write").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     val svc = new QueryService(spark)
     try {
       svc.execute(QueryRequest(
         "CREATE TABLE gov_w (h Int64) ENGINE = MergeTree ORDER BY h"))
-      spark.conf.set(Governance.MaxExecutionTime, "1")
+      spark.conf.set(Settings.MaxExecutionTime.name, "1")
       val started = System.nanoTime()
       val e = intercept[java.util.concurrent.TimeoutException] {
         svc.execute(QueryRequest(
@@ -131,7 +131,7 @@ class GovernanceSpec extends AnyFunSuite {
       svc.execute(QueryRequest("DROP TABLE gov_w"))
     } finally {
       clear()
-      spark.conf.unset(graft.dialect.ChWrites.WarehouseConf)
+      spark.conf.unset(graft.service.Settings.WarehouseDir.name)
     }
   }
 
@@ -164,7 +164,7 @@ class GovernanceSpec extends AnyFunSuite {
       // estimate before any job runs
       val scanQ = "SELECT sum(l_quantity) AS n FROM " +
         "parquet.`/root/testdata/sf0.001/lineitem.parquet`"
-      spark.conf.set(Governance.MaxBytesToRead, "1024")
+      spark.conf.set(Settings.MaxBytesToRead.name, "1024")
       val e = intercept[IllegalArgumentException] {
         svc.execute(QueryRequest(scanQ))
       }
@@ -175,35 +175,35 @@ class GovernanceSpec extends AnyFunSuite {
         "parquet.`/root/testdata/sf0.001/lineitem.parquet`"))
       assert(cnt.rows == Seq(Seq(6000L)), cnt.rows)
       // a generous budget lets the scan run
-      spark.conf.set(Governance.MaxBytesToRead, "1000000000")
+      spark.conf.set(Settings.MaxBytesToRead.name, "1000000000")
       val ok = svc.execute(QueryRequest(scanQ))
       assert(ok.rows.nonEmpty)
-      spark.conf.unset(Governance.MaxBytesToRead)
+      spark.conf.unset(Settings.MaxBytesToRead.name)
       // max_memory_usage is ACCEPTED but does NOT gate the scan (r15,
       // ADVICE: CH's RAM cap is routinely far below a legitimate scan
       // size — aliasing it to the bytes-READ gate refused mainstream
       // workloads CH runs fine)
-      spark.conf.set(Governance.MaxMemoryUsage, "1024")
+      spark.conf.set(Settings.MaxMemoryUsage.name, "1024")
       val memOk = svc.execute(QueryRequest(scanQ))
       assert(memOk.rows.nonEmpty)
-      spark.conf.unset(Governance.MaxMemoryUsage)
+      spark.conf.unset(Settings.MaxMemoryUsage.name)
       // stats-less leaves (defaultSizeInBytes) are SKIPPED from the
       // estimate — a temp view over local data must not refuse under a
       // budget its real file scan fits (r15, ADVICE: defaultSizeInBytes
       // is Long.MaxValue, which refused every such query)
       import spark.implicits._
       Seq(1, 2, 3).toDF("x").createOrReplaceTempView("gov_local_v")
-      spark.conf.set(Governance.MaxBytesToRead, "1000000000")
+      spark.conf.set(Settings.MaxBytesToRead.name, "1000000000")
       val lv = svc.execute(QueryRequest("SELECT sum(x) AS s FROM gov_local_v"))
       assert(lv.rows == Seq(Seq(6L)), lv.rows)
       spark.catalog.dropTempView("gov_local_v")
-      spark.conf.unset(Governance.MaxBytesToRead)
+      spark.conf.unset(Settings.MaxBytesToRead.name)
       // the budget also governs WRITE-driving scans (review r14: the
       // gate only fired at result iteration, so INSERT … SELECT / CTAS
       // bypassed it)
-      spark.conf.set(Governance.MaxBytesToRead, "1024")
+      spark.conf.set(Settings.MaxBytesToRead.name, "1024")
       val wh = java.nio.file.Files.createTempDirectory("graft_gov_scan").toString
-      spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       try {
         val e3 = intercept[IllegalArgumentException] {
           svc.execute(QueryRequest(
@@ -220,9 +220,9 @@ class GovernanceSpec extends AnyFunSuite {
             "parquet.`/root/testdata/sf0.001/lineitem.parquet`"))
         assert(v.rows.nonEmpty)
         svc.execute(QueryRequest("DROP VIEW gov_scan_view"))
-      } finally spark.conf.unset(graft.dialect.ChWrites.WarehouseConf)
+      } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
     } finally {
-      Seq(Governance.MaxBytesToRead, Governance.MaxMemoryUsage)
+      Seq(Settings.MaxBytesToRead.name, Settings.MaxMemoryUsage.name)
         .foreach(spark.conf.unset)
       clear()
     }
@@ -277,7 +277,7 @@ class GovernanceSpec extends AnyFunSuite {
   test("readonly: level 1 refuses writes and SETs; level 2 allows SETs but not writes or SET readonly") {
     val svc = new QueryService(spark)
     try {
-      spark.conf.set(Governance.Readonly, "1")
+      spark.conf.set(Settings.Readonly.name, "1")
       val e1 = intercept[IllegalArgumentException] {
         svc.execute(QueryRequest(
           "CREATE TABLE ro_t (id Int64) ENGINE = MergeTree ORDER BY id"))
@@ -296,9 +296,9 @@ class GovernanceSpec extends AnyFunSuite {
       }
       assert(e3.getMessage.contains("READONLY"), e3.getMessage)
       // level 2: CH's GET-mode semantics — settings may change…
-      spark.conf.set(Governance.Readonly, "2")
+      spark.conf.set(Settings.Readonly.name, "2")
       svc.execute(QueryRequest("SET max_result_rows = 0"))
-      spark.conf.unset(Governance.MaxResultRows)
+      spark.conf.unset(Settings.MaxResultRows.name)
       // …but readonly itself is protected and writes still refuse
       val e4 = intercept[IllegalArgumentException] {
         svc.execute(QueryRequest("SET readonly = 0"))
@@ -313,20 +313,20 @@ class GovernanceSpec extends AnyFunSuite {
         }
         assert(e.getMessage.contains("protected"), s"$q: ${e.getMessage}")
       }
-      assert(spark.conf.get(Governance.Readonly) == "2")
+      assert(spark.conf.get(Settings.Readonly.name) == "2")
       val e5 = intercept[IllegalArgumentException] {
         svc.execute(QueryRequest("INSERT INTO whatever VALUES (1)"))
       }
       assert(e5.getMessage.contains("READONLY"), e5.getMessage)
     } finally {
-      spark.conf.unset(Governance.Readonly)
+      spark.conf.unset(Settings.Readonly.name)
       clear()
     }
   }
 
   test("max_concurrent_queries refuses at the cap (TOO_MANY_SIMULTANEOUS_QUERIES)") {
     val svc = new QueryService(spark)
-    spark.conf.set(Governance.MaxConcurrentQueries, "1")
+    spark.conf.set(Settings.MaxConcurrentQueries.name, "1")
     Processes.register(Processes.Proc("gov-conc-dummy", "SELECT 1",
       "default", "sql", System.currentTimeMillis(), "gov-conc-group", spark))
     try {
@@ -341,7 +341,7 @@ class GovernanceSpec extends AnyFunSuite {
     // back under the cap: the same query answers
     try assert(svc.execute(QueryRequest("SELECT 1 AS x")).rows == Seq(Seq(1)))
     finally {
-      spark.conf.unset(Governance.MaxConcurrentQueries)
+      spark.conf.unset(Settings.MaxConcurrentQueries.name)
       clear()
     }
   }
@@ -464,6 +464,73 @@ class GovernanceSpec extends AnyFunSuite {
         "SELECT number FROM numbers(100)")
       assert(r.statusCode() == 200, r.body())
       assert(r.body().linesIterator.size == 5, r.body())
+    }
+  }
+
+  // a SET that poisoned its session: every later query failed with
+  // the stored value's NumberFormatException
+  private val all100 = "SELECT number FROM numbers(100)"
+
+  test("a multi-key SET applies each key at both doors") {
+    val set = "SET max_result_rows = 5, result_overflow_mode = 'break'"
+    withNative { c =>
+      c.exec(set)
+      assert(c.query(all100).rows.size == 5)
+    }
+    withHttp { port =>
+      val sid = "gov_multi_set_" + System.nanoTime()
+      val r = post(port, s"session_id=$sid", set)
+      assert(r.statusCode() == 200, r.body())
+      val five = post(port, s"session_id=$sid&default_format=TSV", all100)
+      assert(five.statusCode() == 200 && five.body().linesIterator.size == 5,
+        five.body())
+    }
+  }
+
+  /** `q` refuses naming `name` and its bad value `abc` — not a raw
+    * NumberFormatException — and the same connection or pinned session
+    * answers next. */
+  private def refusesBadValue(q: String, name: String): Unit = {
+    withNative { c =>
+      val e = intercept[graft.service.native.NativeClient.ServerSideException](
+        c.query(q))
+      assert(e.getMessage.contains(name) && e.getMessage.contains("abc") &&
+        !e.getMessage.contains("NumberFormatException"), e.getMessage)
+      assert(c.query("SELECT 1 AS ok").rows == Seq(Seq(1)))
+    }
+    withHttp { port =>
+      val sid = "gov_bad_value_" + System.nanoTime()
+      val r = post(port, s"session_id=$sid", q)
+      assert(r.statusCode() == 400 && r.body().contains(name) &&
+        r.body().contains("abc") &&
+        !r.body().contains("NumberFormatException"), r.body())
+      val ok = post(port, s"session_id=$sid&default_format=CSV", "SELECT 1")
+      assert(ok.statusCode() == 200 && ok.body() == "1\n", ok.body())
+    }
+  }
+
+  test("SET max_execution_time = abc refuses by name at both doors; the session answers next") {
+    refusesBadValue("SET max_execution_time = abc", "max_execution_time")
+  }
+
+  test("SETTINGS max_result_rows = abc refuses by name at both doors; the session answers next") {
+    refusesBadValue("SELECT 1 SETTINGS max_result_rows = abc", "max_result_rows")
+  }
+
+  test("a table's engine SETTINGS are not query settings: ATTACH … SETTINGS disk = disk(…) runs at both doors") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_gov_attach").toString + "/t"
+    spark.range(3).toDF("id").write.parquet(dir)
+    def attach(name: String) = s"ATTACH TABLE $name (id Int64) ENGINE = MergeTree " +
+      s"ORDER BY (id) SETTINGS disk = disk(type = local, endpoint = '$dir')"
+    withNative { c =>
+      c.exec(attach("gov_attach_native"))
+      assert(c.query("SELECT count() FROM gov_attach_native").rows == Seq(Seq(3L)))
+    }
+    withHttp { port =>
+      val r = post(port, "", attach("gov_attach_http"))
+      assert(r.statusCode() == 200, r.body())
+      assert(post(port, "default_format=CSV",
+        "SELECT count() FROM gov_attach_http").body() == "3\n")
     }
   }
 }

@@ -247,7 +247,7 @@ class NativeProtocolSpec extends AnyFunSuite {
 
   test("reference init-then-query flow: SET + ATTACH init, then the query, LZ4 on") {
     val wh = Files.createTempDirectory("graft_native").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       import spark.implicits._
       Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("id", "v")
@@ -289,7 +289,7 @@ class NativeProtocolSpec extends AnyFunSuite {
       }
     } finally {
       graft.dialect.ChSql.sql(spark, "DROP TABLE IF EXISTS native_back").collect()
-      spark.conf.unset(graft.dialect.ChWrites.WarehouseConf)
+      spark.conf.unset(graft.service.Settings.WarehouseDir.name)
     }
   }
 
@@ -369,7 +369,7 @@ class NativeProtocolSpec extends AnyFunSuite {
 
   test("streaming INSERT: flushes at max_insert_block_size — bounded buffer, parts per flush") {
     val wh = Files.createTempDirectory("graft_native_stream_ins").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     val srv = new NativeServer(spark)
     val port = srv.start()
     try {
@@ -410,7 +410,7 @@ class NativeProtocolSpec extends AnyFunSuite {
       }
     } finally {
       srv.stop()
-      spark.conf.unset(graft.dialect.ChWrites.WarehouseConf)
+      spark.conf.unset(graft.service.Settings.WarehouseDir.name)
     }
   }
 
@@ -430,7 +430,7 @@ class NativeProtocolSpec extends AnyFunSuite {
 
   test("native batch INSERT: header block out, client blocks in, MergeTree append") {
     val wh = Files.createTempDirectory("graft_native_ins").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       withServer { port =>
         val c = new NativeClient("127.0.0.1", port)
@@ -447,7 +447,7 @@ class NativeProtocolSpec extends AnyFunSuite {
           c.exec("DROP TABLE native_ins")
         } finally c.close()
       }
-    } finally spark.conf.unset(graft.dialect.ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("native INSERT opener: backtick-quoted column names containing ')' and ',' parse correctly") {
@@ -455,7 +455,7 @@ class NativeProtocolSpec extends AnyFunSuite {
     // split mis-parsed quoted names with `,` or `)` — the opener is
     // now tokenized quote-aware
     val wh = Files.createTempDirectory("graft_native_ins_q").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       withServer { port =>
         val c = new NativeClient("127.0.0.1", port)
@@ -479,7 +479,7 @@ class NativeProtocolSpec extends AnyFunSuite {
           c.exec("DROP TABLE native_ins_q")
         } finally c.close()
       }
-    } finally spark.conf.unset(graft.dialect.ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("INSERT openers: comments stripped, quoted names unquoted, empty list refused") {
@@ -521,7 +521,7 @@ class NativeProtocolSpec extends AnyFunSuite {
       val b = new NativeClient("127.0.0.1", port, compression = false)
       try {
         // conn-scoped state: a SET on conn A is invisible on conn B
-        a.exec("SET spark.graft.isolation_probe = 'conn_a'")
+        a.exec("SET log_comment = 'conn_a'")
         val seenA = a.query(
           "SELECT 1 FROM system.one SETTINGS max_threads = 2")
         assert(seenA.rows.nonEmpty)
@@ -544,7 +544,7 @@ class NativeProtocolSpec extends AnyFunSuite {
 
   test("LowCardinality client blocks: external data + INSERT header pass-through") {
     val wh = Files.createTempDirectory("graft_native_lc").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       withServer { port =>
         val c = new NativeClient("127.0.0.1", port)
@@ -571,12 +571,12 @@ class NativeProtocolSpec extends AnyFunSuite {
           c.exec("DROP TABLE native_lc")
         } finally c.close()
       }
-    } finally spark.conf.unset(graft.dialect.ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("LowCardinality OUT: the server emits the LC transport for declared-LC columns (r15)") {
     val wh = Files.createTempDirectory("graft_native_lc_out").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       withServer { port =>
         val c = new NativeClient("127.0.0.1", port)
@@ -606,12 +606,12 @@ class NativeProtocolSpec extends AnyFunSuite {
           c.exec("DROP TABLE native_lc_out")
         } finally c.close()
       }
-    } finally spark.conf.unset(graft.dialect.ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("LowCardinality(Nullable(String)) OUT with real NULLs: slot-0 null marker, '' stays distinct (r16)") {
     val wh = Files.createTempDirectory("graft_native_lcn_out").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       withServer { port =>
         val c = new NativeClient("127.0.0.1", port)
@@ -638,7 +638,7 @@ class NativeProtocolSpec extends AnyFunSuite {
           c.exec("DROP TABLE native_lcn_out")
         } finally c.close()
       }
-    } finally spark.conf.unset(graft.dialect.ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("native per-query settings: a readonly session refuses the block without desyncing the conn (r15)") {
@@ -667,7 +667,7 @@ class NativeProtocolSpec extends AnyFunSuite {
 
   test("Cancel during external data aborts before execution (EndOfStream, no side effect)") {
     val wh = Files.createTempDirectory("graft_native_extcancel").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       withServer { port =>
         val c = new NativeClient("127.0.0.1", port)
@@ -688,12 +688,12 @@ class NativeProtocolSpec extends AnyFunSuite {
           assert(ok.rows == Seq(Seq(1)))
         } finally c.close()
       }
-    } finally spark.conf.unset(graft.dialect.ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("Cancel mid-INSERT keeps flushed batches, discards the unflushed tail") {
     val wh = Files.createTempDirectory("graft_native_inscancel").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       withServer { port =>
         val c = new NativeClient("127.0.0.1", port)
@@ -714,7 +714,7 @@ class NativeProtocolSpec extends AnyFunSuite {
           c.exec("DROP TABLE native_ins_cancel")
         } finally c.close()
       }
-    } finally spark.conf.unset(graft.dialect.ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("errors arrive as CH Exception frames and the conn stays usable") {

@@ -130,7 +130,7 @@ class QuotasSpec extends AnyFunSuite {
   test("a concurrency-cap refusal never burns quota budget (review r16)") {
     withCleanQuotas {
       run("CREATE QUOTA q_cc FOR INTERVAL 1 hour MAX queries = 2")
-      spark.conf.set(Governance.MaxConcurrentQueries, "1")
+      spark.conf.set(Settings.MaxConcurrentQueries.name, "1")
       try {
         // saturate the single slot with a long-running streamed query,
         // then hit the cap: the refusal must not consume the quota
@@ -148,7 +148,7 @@ class QuotasSpec extends AnyFunSuite {
         gate.countDown(); t.join()
         // budget: 1 consumed by the long query; this one must still run
         run("SELECT 2")
-      } finally spark.conf.unset(Governance.MaxConcurrentQueries)
+      } finally spark.conf.unset(Settings.MaxConcurrentQueries.name)
     }
   }
 

@@ -85,8 +85,8 @@ class TlsSpec extends AnyFunSuite {
   }
 
   test("remoteSecure() reads over TLS end-to-end; the plain spelling refuses") {
-    spark.conf.set(Tls.TruststoreConf, keystore)
-    spark.conf.set(Tls.TruststorePasswordConf, password)
+    spark.conf.set(graft.service.Settings.TlsTruststore.name, keystore)
+    spark.conf.set(graft.service.Settings.TlsTruststorePassword.name, password)
     try {
       val r = graft.dialect.ChSql.sql(spark,
         s"SELECT count() AS n FROM remoteSecure('127.0.0.1:$securePort', default.nation_tls)")
@@ -99,16 +99,16 @@ class TlsSpec extends AnyFunSuite {
           .collect()
       }
     } finally {
-      spark.conf.unset(Tls.TruststoreConf)
-      spark.conf.unset(Tls.TruststorePasswordConf)
+      spark.conf.unset(graft.service.Settings.TlsTruststore.name)
+      spark.conf.unset(graft.service.Settings.TlsTruststorePassword.name)
     }
   }
 
   test("INSERT INTO FUNCTION remoteSecure(…) writes over TLS from executor tasks (r19)") {
     val wh = java.nio.file.Files.createTempDirectory("graft_tls_rw").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
-    spark.conf.set(Tls.TruststoreConf, keystore)
-    spark.conf.set(Tls.TruststorePasswordConf, password)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
+    spark.conf.set(graft.service.Settings.TlsTruststore.name, keystore)
+    spark.conf.set(graft.service.Settings.TlsTruststorePassword.name, password)
     val svc = new QueryService(spark)
     try {
       svc.executeToDf(QueryService.QueryRequest(
@@ -129,9 +129,9 @@ class TlsSpec extends AnyFunSuite {
       }
       svc.executeToDf(QueryService.QueryRequest("DROP TABLE tls_rw"))
     } finally {
-      spark.conf.unset(graft.dialect.ChWrites.WarehouseConf)
-      spark.conf.unset(Tls.TruststoreConf)
-      spark.conf.unset(Tls.TruststorePasswordConf)
+      spark.conf.unset(graft.service.Settings.WarehouseDir.name)
+      spark.conf.unset(graft.service.Settings.TlsTruststore.name)
+      spark.conf.unset(graft.service.Settings.TlsTruststorePassword.name)
     }
   }
 }

@@ -19,7 +19,7 @@ class ManifestCommitSpec extends AnyFunSuite {
 
   private def withTable[A](name: String)(f: (String, String) => A): A = {
     val wh = Files.createTempDirectory("graft_manifest").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       sql(s"CREATE TABLE $name (id Int64, s String) ENGINE = MergeTree " +
         "ORDER BY id").collect()
@@ -27,7 +27,7 @@ class ManifestCommitSpec extends AnyFunSuite {
       f(wh, s"$wh/$name")
     } finally {
       sql(s"DROP TABLE IF EXISTS $name").collect()
-      spark.conf.unset(graft.dialect.ChWrites.WarehouseConf)
+      spark.conf.unset(graft.service.Settings.WarehouseDir.name)
     }
   }
 

@@ -35,7 +35,7 @@ class MergeTreePartitionSpec extends AnyFunSuite {
   test("partitioned CTAS writes per-year parts with partition sidecars; DROP PARTITION retains") {
     freshSrc()
     val wh = Files.createTempDirectory("graft_pwh").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       val st = ChSql.sql(spark,
         "CREATE TABLE part_t ENGINE = MergeTree PARTITION BY toYear(d) " +
@@ -113,13 +113,13 @@ class MergeTreePartitionSpec extends AnyFunSuite {
       assert(create.contains("PARTITION BY toYear(d)"), create)
 
       ChSql.sql(spark, "DROP TABLE part_t").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("a partitioned tree ATTACHes independently with PARTITION BY in the DDL") {
     freshSrc()
     val wh = Files.createTempDirectory("graft_pwh2").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark,
         "CREATE TABLE part_a ENGINE = MergeTree PARTITION BY toYear(d) " +
@@ -140,13 +140,13 @@ class MergeTreePartitionSpec extends AnyFunSuite {
       ChSql.sql(spark, "DROP TABLE part_a").collect()
       graft.core.Catalog.detach("part_b")
       spark.catalog.dropTempView("part_b")
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("string partition ids: safe values verbatim, NULL partition keys refuse") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_pwh3").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       Seq((1L, "alpha"), (2L, "beta"), (3L, "alpha"))
         .toDF("id", "cat").createOrReplaceTempView("psrc_s")
@@ -184,13 +184,13 @@ class MergeTreePartitionSpec extends AnyFunSuite {
       assert(ChSql.sql(spark, "SELECT count() AS n FROM part_all")
         .collect().head.getLong(0) == 2L)
       ChSql.sql(spark, "DROP TABLE part_all").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("date partitions: raw Date keys render yyyyMMdd and DROP PARTITION takes a date literal") {
     import spark.implicits._
     val wh = Files.createTempDirectory("graft_pwh4").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       Seq(
         (1L, java.sql.Date.valueOf("1994-01-01")),
@@ -220,14 +220,14 @@ class MergeTreePartitionSpec extends AnyFunSuite {
       assert(partNames(s"$wh/part_tup").forall(_.startsWith("all_")))
       assert(graft.core.Catalog.lookup("part_tup").flatMap(_.partitionBy).isEmpty)
       ChSql.sql(spark, "DROP TABLE part_tup").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("OPTIMIZE TABLE PARTITION merges one partition; the rest never rewrites") {
     import spark.implicits._
     freshSrc()
     val wh = Files.createTempDirectory("graft_popt").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       ChSql.sql(spark,
         "CREATE TABLE popt_t ENGINE = ReplacingMergeTree(ver) " +
@@ -257,14 +257,14 @@ class MergeTreePartitionSpec extends AnyFunSuite {
       assert(ChSql.sql(spark, "OPTIMIZE TABLE popt_t PARTITION 2001")
         .collect().head.getInt(1) == 0)
       ChSql.sql(spark, "DROP TABLE popt_t").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("ATTACH PARTITION FROM copies a partition; DROP+ATTACH = move; REPLACE swaps") {
     import spark.implicits._
     freshSrc()
     val wh = Files.createTempDirectory("graft_pattach").toString
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       Seq((100L, java.sql.Date.valueOf("1995-05-05"), 50.0),
         (101L, java.sql.Date.valueOf("1998-01-01"), 60.0))
@@ -326,6 +326,6 @@ class MergeTreePartitionSpec extends AnyFunSuite {
         .collect().head.getLong(0) == 3L)
       Seq("att_src", "att_dst", "att_other").foreach(t =>
         ChSql.sql(spark, s"DROP TABLE $t").collect())
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 }

@@ -508,7 +508,7 @@ class MergeTreeSpec extends AnyFunSuite {
     val src = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
       .selectExpr("CAST(o_orderkey AS BIGINT) AS o_orderkey", "o_totalprice")
     val total = src.count()
-    spark.conf.set(MergeTreeCtas.PartRowsConf, "400")
+    spark.conf.set(graft.service.Settings.MergeTreePartRows.name, "400")
     try {
       val (rows, _) = MergeTreeCtas.write(spark, src, dir, Seq("o_orderkey"))
       assert(rows == total)
@@ -541,7 +541,7 @@ class MergeTreeSpec extends AnyFunSuite {
       assert(after.size >= parts.size + 2,
         s"a 1000-row INSERT at 400 rows/part should append >1 part: ${after.map(_._1)}")
       assert(MergeTree.read(spark, dir, ddl, Seq("o_orderkey")).count() == total + 1000)
-    } finally spark.conf.unset(MergeTreeCtas.PartRowsConf)
+    } finally spark.conf.unset(graft.service.Settings.MergeTreePartRows.name)
   }
 
   test("empty MergeTree tables exist: empty CTAS scans as zero rows, INSERT refills; no marker still refuses") {

@@ -102,7 +102,7 @@ class RemoteNativeSpec extends AnyFunSuite {
 
   test("write-side federation: INSERT INTO FUNCTION remote(…) SELECT streams rows out") {
     val wh = java.nio.file.Files.createTempDirectory("graft_rw_wh").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     val svc = new graft.service.QueryService(spark)
     try {
       svc.executeToDf(graft.service.QueryService.QueryRequest(
@@ -132,7 +132,7 @@ class RemoteNativeSpec extends AnyFunSuite {
         "SELECT count() AS c FROM rw_target").collect()(0).getLong(0) == 50L)
       svc.executeToDf(graft.service.QueryService.QueryRequest(
         "DROP TABLE rw_target"))
-    } finally spark.conf.unset(graft.dialect.ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("cluster() read spelling resolves to the local table (the session IS the cluster)") {

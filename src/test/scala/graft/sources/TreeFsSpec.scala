@@ -34,7 +34,7 @@ class TreeFsSpec extends AnyFunSuite {
     fresh()
     val local = Files.createTempDirectory("graft_hfs").toString
     val wh = s"graftfs://$local"
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       // CTAS writes the tree THROUGH graftfs:// (executor-parallel path)
       val created = ChSql.sql(spark,
@@ -62,7 +62,7 @@ class TreeFsSpec extends AnyFunSuite {
       val crcs = NioTreeFsProbe.walk(s"$local/hfs_t").filter(_.endsWith(".crc"))
       assert(crcs.isEmpty, crcs.mkString(", "))
       ChSql.sql(spark, "DROP TABLE hfs_t").collect()
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 
   test("forced-hadoop knob: the q179-shaped CTAS round trip matches the nio path") {
@@ -70,7 +70,7 @@ class TreeFsSpec extends AnyFunSuite {
     val whA = Files.createTempDirectory("graft_hfs_nio").toString
     val whB = Files.createTempDirectory("graft_hfs_had").toString
     def roundTrip(wh: String, table: String): Seq[(Long, String, Double)] = {
-      spark.conf.set(ChWrites.WarehouseConf, wh)
+      spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
       try {
         ChSql.sql(spark,
           s"CREATE TABLE $table ENGINE = MergeTree ORDER BY (id) AS " +
@@ -79,13 +79,13 @@ class TreeFsSpec extends AnyFunSuite {
           .collect().map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq
         ChSql.sql(spark, s"DROP TABLE $table").collect()
         r
-      } finally spark.conf.unset(ChWrites.WarehouseConf)
+      } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
     }
     val viaNio = roundTrip(whA, "hfs_nio")
-    spark.conf.set(graft.sources.mergetree.MergeTree.FsConf, "hadoop")
+    spark.conf.set(graft.service.Settings.MergeTreeFs.name, "hadoop")
     val viaHadoop =
       try roundTrip(whB, "hfs_had")
-      finally spark.conf.unset(graft.sources.mergetree.MergeTree.FsConf)
+      finally spark.conf.unset(graft.service.Settings.MergeTreeFs.name)
     assert(viaNio == viaHadoop, s"$viaNio vs $viaHadoop")
   }
 
@@ -93,7 +93,7 @@ class TreeFsSpec extends AnyFunSuite {
     import spark.implicits._
     val local = Files.createTempDirectory("graft_hfs_part").toString
     val wh = s"graftfs://$local"
-    spark.conf.set(ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     try {
       Seq((1L, "p1", 1.0), (2L, "p2", 2.0), (3L, "p1", 3.0))
         .toDF("id", "p", "v").createOrReplaceTempView("hfp_src")
@@ -113,7 +113,7 @@ class TreeFsSpec extends AnyFunSuite {
       assert(ids == Seq(1L, 3L), ids.mkString(", "))
       Seq("hfp_a", "hfp_b").foreach(t =>
         ChSql.sql(spark, s"DROP TABLE $t").collect())
-    } finally spark.conf.unset(ChWrites.WarehouseConf)
+    } finally spark.conf.unset(graft.service.Settings.WarehouseDir.name)
   }
 }
 

@@ -18,11 +18,11 @@ import graft.dialect.ChSql
   * }}}
   *
   * It refuses, before timing anything:
-  *  - a key the session cannot change per query. Spark's
-  *    `conf.isModifiable` decides, except for graft's own `spark.graft.*`
-  *    switches, which Spark's registry does not know and the rules read
-  *    from the session at plan time. A static SQL conf or a SparkContext
-  *    conf (off-heap, say) needs two processes.
+  *  - a key the session cannot change per query: one graft's settings
+  *    table ([[graft.service.Settings]]) does not declare and Spark's
+  *    `conf.isModifiable` does not know — a typo'd `spark.graft.*`
+  *    switch, a static SQL conf, a SparkContext conf (off-heap, say:
+  *    that needs two processes). A value the table refuses refuses too.
   *  - a run whose A and B answers differ, compared on the collected rows.
   *
   * Then one warm-up per side and N pairs, each a `noop` write per side,
@@ -64,10 +64,13 @@ object Ab {
     case p :: _ => throw new IllegalArgumentException(s"unexpected '$p'. $Usage")
   }
 
-  /** The keys [[main]] refuses: those a per-query `SET` cannot change. */
-  private def staticKeys(spark: SparkSession, keys: Iterable[String]): Seq[String] =
-    keys.filterNot(k => k.startsWith("spark.graft.") || spark.conf.isModifiable(k))
-      .toSeq.distinct.sorted
+  /** The keys [[main]] refuses: those a per-query `SET` cannot change.
+    * A declared row's value is checked here too. */
+  private def staticKeys(spark: SparkSession,
+      sides: Seq[(String, String)]): Seq[String] =
+    sides.collect { case (k, v) if graft.service.Settings.find(k)
+        .map(_.normalise(v)).isEmpty && !spark.conf.isModifiable(k) => k }
+      .distinct.sorted
 
   private def quantile(sorted: Seq[Double], p: Double): Double = {
     val x = p * (sorted.size - 1)
@@ -94,7 +97,7 @@ object Ab {
     require(args.pairs > 0, Usage)
     val spark = Engine.session("graft-ab")
     try {
-      val static = staticKeys(spark, args.a.keys ++ args.b.keys)
+      val static = staticKeys(spark, args.a.toSeq ++ args.b.toSeq)
       require(static.isEmpty, s"not a runtime SQL conf: ${static.mkString(", ")} " +
         "(a static or SparkContext conf needs two processes)")
       Tables.registerViews(spark, args.sfDir)

@@ -77,7 +77,7 @@ class DecimalSpec extends AnyFunSuite {
   test("MergeTree part codec: Decimal128 extremes round-trip through CTAS") {
     import graft.service.QueryService
     val wh = java.nio.file.Files.createTempDirectory("graft_dec_x_wh").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     val svc = new QueryService(spark)
     val back = svc.executeToDf(QueryService.QueryRequest(
       query = "SELECT CAST(hi AS STRING) AS hi, CAST(lo AS STRING) AS lo FROM dec_mt_x",
@@ -109,7 +109,7 @@ class DecimalSpec extends AnyFunSuite {
   test("MergeTree CTAS with decimal columns: write, ATTACH, read back hash-equal") {
     import graft.service.QueryService
     val wh = java.nio.file.Files.createTempDirectory("graft_dec_wh").toString
-    spark.conf.set(graft.dialect.ChWrites.WarehouseConf, wh)
+    spark.conf.set(graft.service.Settings.WarehouseDir.name, wh)
     graft.core.Tables.registerViews(spark, "/root/testdata/sf0.001")
     val svc = new QueryService(spark)
     svc.executeToDf(QueryService.QueryRequest(
